@@ -28,6 +28,7 @@ import base64
 import hashlib
 import hmac
 import json
+import logging
 import threading
 import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -38,6 +39,8 @@ from tantalus_spark.operators.services import (
     FILTERSETS, UnknownFilterError, api_list)
 
 _RESERVED = {"page", "page_size", "expand"}
+
+log = logging.getLogger(__name__)
 
 
 def _b64url_decode(seg: str) -> bytes:
@@ -126,14 +129,15 @@ class _Handler(BaseHTTPRequestHandler):
         return None, {}
 
     def _safely(self, fn) -> None:
-        """Catch-all: malformed requests get structured 4xx, anything
-        unexpected a 500 JSON body — never a dropped connection."""
+        """Catch-all: the handlers answer client errors with 4xx
+        themselves, so anything that escapes is an engine fault. It is
+        logged with its traceback and answered with an opaque 500 JSON
+        body — never a dropped connection, never a leaked message."""
         try:
             fn()
-        except (ValueError, KeyError) as exc:
-            self._send(400, {"detail": str(exc)})
-        except Exception as exc:  # noqa: BLE001
-            self._send(500, {"detail": f"internal error: {exc}"})
+        except Exception:  # noqa: BLE001
+            log.exception("%s %s failed", self.command, self.path)
+            self._send(500, {"detail": "internal server error"})
 
     def do_POST(self) -> None:  # noqa: N802 - create (reference DRF create)
         self._safely(lambda: self._mutate(create_only=True))
@@ -286,8 +290,12 @@ class _Handler(BaseHTTPRequestHandler):
             pk = srv.db.catalog.pk(endpoint)
             ids = [r[pk] for r in rows]
             page_root = srv.db.table(endpoint).filter(F.col(pk).isin(ids))
-            expanded = expand_related(srv.db, endpoint, accessors,
-                                      root=page_root)
+            try:
+                expanded = expand_related(srv.db, endpoint, accessors,
+                                          root=page_root)
+            except ValueError as exc:  # unknown accessor
+                self._send(400, {"detail": str(exc)})
+                return
             by_id = {r[pk]: r for r in expanded.collect()}
             # tolerate a concurrent delete between the two collects: a pk
             # from the first page read may be gone on the expanded read —

@@ -389,7 +389,7 @@ class QuerySet:
             else:
                 running = frame.df.select(*cols)
 
-        if self._distinct:
+        if self._distinct and self._rows_can_repeat():
             running = running.dropDuplicates()
 
         if self._order and not order_applied:
@@ -423,6 +423,17 @@ class QuerySet:
         if self._limit is not None:
             running = running.limit(self._limit)
         return running
+
+    def _rows_can_repeat(self) -> bool:
+        """Whether ``distinct()`` can change the answer. Up to the
+        projection, root rows never fan out: forward FK hops are
+        many-to-one, multi-valued filters are semi/anti-join match-sets and
+        annotations group by pk. So with a unique root pk and no
+        ``values()`` every row is already distinct and the dedup shuffle
+        is skipped. (Ordering through a relation is applied after the
+        distinct, so it never mattered here.)"""
+        return (self._values is not None
+                or not self.db.catalog.pk_unique(self.root))
 
     def _apply_filter(self, running: DataFrame, pk: str, negated: bool, q: Q,
                       annot_cols: dict[str, Column]) -> DataFrame:

@@ -8,16 +8,17 @@ keys with an error naming the filter (api/views.py:75-80), pins
 
 FILTERSETS reproduces ``tantalus/api/filters.py`` (13 filtersets) — each
 entry maps a queryable param to its allowed lookups; ``exact`` is implied.
-Duplicate-row semantics are endpoint-specific (SURVEY.md §7 hard part 2):
-``distinct`` is pre-applied on most endpoints but deliberately NOT on
-file_resource / file_instance (api/views.py:112-118, 206-212) — mirrored
-via the DISTINCT set. (Our match-set compilation never fans out, so
-distinct-vs-not only matters if base tables hold duplicate rows — the flag
-is kept for fidelity.)"""
+The reference pre-applies ``distinct`` on most endpoints (SURVEY.md §7 hard
+part 2) to undo Django's join fan-out. Match-set compilation never fans out
+and every endpoint's pk is unique, so there is nothing to undo: no endpoint
+asks for ``distinct``, and a list request plans no dedup shuffle.
+
+A list request is one Spark action: ``paginate`` collects the page and
+observes the total in the same scan, and ``Page.rows`` is that list."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import json
 
 from tantalus_spark.catalog.loader import Database
 from tantalus_spark.operators.pagination import Page, paginate
@@ -72,9 +73,6 @@ FILTERSETS: dict[str, dict[str, list[str]]] = {
     "curation": {"id": [], "name": [], "version": []},
 }
 
-# endpoints WITHOUT pre-applied distinct (api/views.py:112-118, 206-212)
-NO_DISTINCT = {"file_resource", "file_instance"}
-
 
 def allowed_params(endpoint: str) -> set[str]:
     spec = FILTERSETS[endpoint]
@@ -100,8 +98,6 @@ def filtered_queryset(db: Database, endpoint: str, params: dict[str, object]):
             raise UnknownFilterError(
                 f"no filter {key!r} on {endpoint!r}; legal: {sorted(legal)}")
         qs = qs.filter(**{key: value})
-    if endpoint not in NO_DISTINCT:
-        qs = qs.distinct()
     return qs
 
 
@@ -116,9 +112,10 @@ def api_list(db: Database, endpoint: str, params: dict[str, object],
 
 
 def to_json_rows(page: Page) -> list[str]:
-    """Serialization boundary (df.toJSON) — driver-side only for page-sized
-    results."""
-    return page.rows.toJSON().collect()
+    """Serialization boundary: one compact JSON object per page row, encoded
+    driver-side from the collected page like the HTTP facade's bodies."""
+    return [json.dumps(r.asDict(recursive=True), default=str,
+                       separators=(",", ":")) for r in page.rows.collect()]
 
 
 def datatables_list(

@@ -55,6 +55,46 @@ def test_unknown_param_is_400_naming_legal_set(server):
     assert "no filter" in json.loads(e.value.read())["detail"]
 
 
+def test_list_request_runs_one_spark_job(tdb):
+    """A list request is one Spark action: the page and its total come
+    from the same scan, so a second count() cannot creep back in."""
+    group = "one-job-list"
+
+    class Grouped(ApiServer):
+        def process_request_thread(self, request, client_address):
+            tdb.spark.sparkContext.setJobGroup(group, "list request")
+            super().process_request_thread(request, client_address)
+
+    srv = Grouped(tdb)
+    host, port = srv.serve_background()
+    try:
+        _, body = get(f"http://{host}:{port}", "/api/sample/?tissue=breast")
+    finally:
+        srv.shutdown()
+    assert body["count"] == 1 and body["results"][0]["id"] == 1
+    jobs = tdb.spark.sparkContext.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) == 1, jobs
+
+
+def test_engine_fault_is_logged_500(server, monkeypatch, caplog):
+    """An engine fault inside the list path is a logged 500 whose body
+    leaks nothing; a ValueError from the engine is not a client 400."""
+    from tantalus_spark.operators import services
+
+    def broken(*a, **k):
+        raise ValueError("secret engine state")
+
+    monkeypatch.setattr(services, "paginate", broken)
+    with caplog.at_level("ERROR", logger="tantalus_spark.api"):
+        with pytest.raises(urllib.error.HTTPError) as e:
+            get(server, "/api/sample/")
+    assert e.value.code == 500
+    assert "secret" not in e.value.read().decode()
+    (record,) = [r for r in caplog.records if r.name == "tantalus_spark.api"]
+    assert record.levelname == "ERROR" and "/api/sample/" in record.getMessage()
+    assert record.exc_info[0] is ValueError
+
+
 def test_unknown_endpoint_is_404(server):
     with pytest.raises(urllib.error.HTTPError) as e:
         get(server, "/api/nope/")

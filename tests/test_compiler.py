@@ -327,3 +327,37 @@ def test_avg_min_annotations_preagg(tdb):
     assert rows[1][0] == 1500.0          # (1000 + 2000) / 2
     assert rows[4][0] is None            # no file resources -> NULL
     assert rows[1][1] is not None
+
+
+def _dedup_ops(qs) -> int:
+    plan = qs.to_df()._jdf.queryExecution().optimizedPlan().toString()
+    return plan.count("Aggregate") + plan.count("Deduplicate")
+
+
+def test_distinct_elided_when_rows_cannot_repeat(tdb):
+    """A unique-pk root without values() cannot repeat rows, so
+    distinct() adds no dedup operator; the answer is unchanged."""
+    for qs in (tdb.query("sample"),
+               tdb.query("sequence_dataset").filter(tags__name="prod"),
+               tdb.query("dna_library").filter(sequencedataset__sample=4),
+               tdb.query("sequence_dataset").annotate(
+                   n=Count("sequence_lanes")).filter(n__gte=1)):
+        assert _dedup_ops(qs.distinct()) == _dedup_ops(qs)
+        assert ids(qs.distinct()) == ids(qs)
+
+
+def test_distinct_kept_on_nonunique_pk_root(spark):
+    """lineitem's declared pk (l_orderkey) is not unique, so distinct()
+    must still collapse repeated rows there."""
+    from tantalus_spark.catalog.loader import Database
+    from tantalus_spark.catalog.tpch_model import tpch_catalog
+
+    db = Database(spark, tpch_catalog())
+    db.add("lineitem", spark.createDataFrame(
+        [(1, 1, 5.0), (1, 1, 5.0), (1, 2, 7.0), (2, 1, 5.0)],
+        "l_orderkey long, l_linenumber int, l_quantity double"))
+    qs = db.query("lineitem").filter(l_quantity__gte=5.0)
+    assert qs.to_df().count() == 4
+    assert _dedup_ops(qs.distinct()) > _dedup_ops(qs)
+    assert sorted(map(tuple, qs.distinct().to_df().collect())) == [
+        (1, 1, 5.0), (1, 2, 7.0), (2, 1, 5.0)]

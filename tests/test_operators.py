@@ -35,7 +35,8 @@ def test_pagination_stable_and_complete(tdb):
 
 def test_pagination_no_pagination_escape(tdb):
     p = paginate(tdb.table("tag"), ["id"], no_pagination=True)
-    assert p.rows.count() == p.total == 3
+    assert p.total == p.page_size == 3
+    assert [r["id"] for r in p.rows] == [1, 2, 3]
 
 
 def test_filepath_polymorphic_dispatch(tdb):

@@ -21,7 +21,7 @@ def test_pagination_partitions_exactly(tdb, page_size):
     page_no = 1
     while True:
         page = paginate(df, ["id"], page=page_no, page_size=page_size)
-        ids = [r["id"] for r in page.rows.select("id").collect()]
+        ids = [r["id"] for r in page.rows]
         if not ids:
             break
         seen.extend(ids)
