@@ -356,13 +356,18 @@ class ApiServer(ThreadingHTTPServer):
                 have_ids = [r[pk] for r in rows if pk in r]
                 if len(have_ids) != len(set(have_ids)):
                     raise ValueError(f"duplicate {pk} values within the batch")
+                # the next free id and any taken id in one job: over one
+                # partition the global aggregate needs no shuffle, which
+                # adaptive execution would run as a job of its own
+                taken_ids = [F.max(pk)]
                 if have_ids:
-                    dup = (table.filter(F.col(pk).isin(have_ids))
-                           .select(pk).limit(1).take(1))
-                    if dup:
-                        raise ValueError(
-                            f"{endpoint!r} {pk}={dup[0][0]} already exists")
-                next_id = (table.agg(F.max(pk)).first()[0] or 0) + 1
+                    taken_ids.append(F.min(F.when(
+                        F.col(pk).isin(have_ids), F.col(pk))))
+                top, *dup = table.coalesce(1).agg(*taken_ids).first()
+                if dup and dup[0] is not None:
+                    raise ValueError(
+                        f"{endpoint!r} {pk}={dup[0]} already exists")
+                next_id = (top or 0) + 1
                 taken = set(have_ids)
                 for r in rows:
                     if pk not in r:
@@ -376,7 +381,7 @@ class ApiServer(ThreadingHTTPServer):
                     raise ValueError(f"PUT rows must carry the pk {pk!r}")
                 put_ids = [r[pk] for r in rows]
                 if len(put_ids) != len(set(put_ids)):
-                    # mirror the POST check: upsert anti-joins then unions
+                    # mirror the POST check: upsert filters then unions
                     # ALL incoming rows, so an intra-batch duplicate pk
                     # would leave two rows with that pk in the table
                     raise ValueError(f"duplicate {pk} values within the batch")
@@ -387,7 +392,8 @@ class ApiServer(ThreadingHTTPServer):
                 if any(p != sorted(known) for p in provided):
                     rows = self._merge_partial(table, pk, rows, provided)
             try:
-                new_rows = self.db.spark.createDataFrame(
+                new_rows = mutations.local_rows(
+                    self.db.spark,
                     [tuple(r.get(c) for c in table.columns) for r in rows],
                     table.schema)
             except Exception as exc:
@@ -396,7 +402,7 @@ class ApiServer(ThreadingHTTPServer):
             if create_only:
                 new_table = mutations.append_rows(table, new_rows)
             else:
-                new_table = mutations.upsert(table, new_rows, [pk])
+                new_table = mutations.upsert(table, new_rows, pk, put_ids)
             self.db.add(endpoint, self._bound_lineage(endpoint, new_table))
             return {"written": len(rows), "endpoint": endpoint,
                     "ids": [r[pk] for r in rows]}
@@ -421,12 +427,13 @@ class ApiServer(ThreadingHTTPServer):
         return merged
 
     def _bound_lineage(self, endpoint: str, table):
-        """Every N mutations, cut the anti-join+union lineage chain with an
-        eager localCheckpoint: a long-lived server otherwise accumulates
-        one plan layer per write and analysis cost grows without bound.
-        (A production deployment would write-through to the parquet
-        snapshot via sources.sink instead; checkpointing keeps the facade
-        self-contained.)"""
+        """Every N mutations, cut the table's write lineage with an eager
+        localCheckpoint. Each write adds a constant-size plan layer (a key
+        filter, or a union with a local relation), so the plan grows
+        linearly, but a long-lived server would still accumulate layers and
+        analysis cost without bound. (A production deployment would
+        write-through to the parquet snapshot via sources.sink instead;
+        checkpointing keeps the facade self-contained.)"""
         n = self._mutations_since_checkpoint.get(endpoint, 0) + 1
         if n >= self.CHECKPOINT_EVERY:
             table = table.localCheckpoint(eager=True)
@@ -435,6 +442,9 @@ class ApiServer(ThreadingHTTPServer):
         return table
 
     def apply_delete(self, endpoint: str, pk_value: str) -> int:
+        """DELETE by pk (M7): *pk_value* is parsed to the pk's type once
+        (non-canonical spellings match nothing), then one pushed-down
+        filtered job counts the matches; the table keeps every other row."""
         from pyspark.sql import functions as F
 
         from tantalus_spark.operators import mutations
@@ -442,13 +452,13 @@ class ApiServer(ThreadingHTTPServer):
         with self._write_lock:
             table = self.db.table(endpoint)
             pk = self.db.catalog.pk(endpoint)
-            keys = table.filter(F.col(pk).cast("string") == pk_value) \
-                .select(pk)
-            n = keys.count()
+            key = mutations.parse_key(pk_value, table.schema[pk].dataType)
+            if key is None:
+                return 0
+            # collecting the matched keys is one job; count() would be two
+            # (a shuffle-map stage, then the final aggregate)
+            n = len(table.filter(F.col(pk) == key).select(pk).collect())
             if n:
-                # same lineage bound as apply_mutation: each delete is an
-                # anti-join layer; unbounded DELETE traffic must not grow
-                # the plan forever
                 self.db.add(endpoint, self._bound_lineage(
-                    endpoint, mutations.delete_by_key(table, keys, [pk])))
+                    endpoint, mutations.delete_by_key(table, pk, [key])))
             return n

@@ -17,6 +17,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from tantalus_spark.operators.mutations import local_rows
 
 PATIENT_SHEET_COLS = ["external patient id", "reference id", "sa id", "case id"]
 SAMPLE_SHEET_COLS = ["reference id", "suffix", "submitter", "researcher",
@@ -40,8 +43,9 @@ def read_excel_sheets(spark: SparkSession, filename: str,
             tuple(None if v is None else _cell_str(v) for v in r)
             for r in grid[1:]
         ]
-        schema = ", ".join(f"`{h}` string" for h in header)
-        yield name, spark.createDataFrame(rows, schema)
+        schema = T.StructType([T.StructField(h, T.StringType())
+                               for h in header])
+        yield name, local_rows(spark, rows, schema)
 
 
 def _cell_str(v) -> str:

@@ -317,6 +317,132 @@ def test_facade_write_lineage_bounded(tdb):
         srv.shutdown()
 
 
+def _parquet_copy(tdb, name: str, path, extra=()):
+    """Swap table *name* for a parquet copy of itself plus *extra* rows, a
+    table whose plan starts as a file scan like a loaded catalog's, not
+    as a Python-RDD scan; returns the original for the caller to
+    restore."""
+    from tantalus_spark.operators.mutations import local_rows
+
+    orig = tdb.table(name)
+    local_rows(tdb.spark, [tuple(r) for r in orig.collect()] + list(extra),
+               orig.schema).write.parquet(str(path))
+    tdb.add(name, tdb.spark.read.parquet(str(path)))
+    return orig
+
+
+def delete(base, path):
+    req = urllib.request.Request(base + path, method="DELETE")
+    with urllib.request.urlopen(req, timeout=60) as resp:
+        return json.loads(resp.read())
+
+
+def test_facade_writes_run_one_job_and_plan_locally(tdb, tmp_path):
+    """Each facade write is at most one Spark job: POST one aggregate (next
+    id and taken ids), a partial PUT one collect of the rows it merges
+    into, a full-row PUT none, a DELETE one filtered collect. The written
+    table's plan has no shuffle, no join and no Python-RDD scan."""
+
+    class Grouped(ApiServer):
+        group = ""
+
+        def process_request_thread(self, request, client_address):
+            tdb.spark.sparkContext.setJobGroup(self.group, "facade write")
+            super().process_request_thread(request, client_address)
+
+    orig = _parquet_copy(tdb, "tag", tmp_path / "tag")
+    srv = Grouped(tdb)
+    srv.CHECKPOINT_EVERY = 100
+    host, port = srv.serve_background()
+    base = f"http://{host}:{port}"
+    tracker = tdb.spark.sparkContext.statusTracker()
+
+    def jobs(name, write):
+        srv.group = f"facade-write-{name}"
+        write()
+        return len(tracker.getJobIdsForGroup(srv.group))
+
+    try:
+        assert jobs("post", lambda: post(base, "/api/tag/",
+                                         {"name": "new"})) == 1
+        assert jobs("partial-put", lambda: post(
+            base, "/api/tag/", {"id": 2, "name": "qc2"}, method="PUT")) == 1
+        assert jobs("full-put", lambda: post(
+            base, "/api/tag/", {"id": 3, "name": "used", "owner_id": 7},
+            method="PUT")) == 0
+        assert jobs("delete", lambda: delete(base, "/api/tag/?id=4")) == 1
+        table = tdb.table("tag")
+        plan = table._jdf.queryExecution().executedPlan().toString()
+        for node in ("Exchange", "SortMergeJoin", "ExistingRDD"):
+            assert node not in plan, plan
+        assert sorted(tuple(r) for r in table.collect()) == [
+            (1, "prod", None), (2, "qc2", None), (3, "used", 7)]
+    finally:
+        tdb.add("tag", orig)
+        srv.shutdown()
+
+
+def test_facade_delete_plan_grows_linearly(tdb, tmp_path):
+    """Each DELETE adds a constant-size layer to the table's plan; a key
+    side that embeds the table itself would double it per DELETE."""
+    orig = _parquet_copy(tdb, "tag", tmp_path / "tag",
+                         [(i, f"gone{i}", None) for i in range(10, 18)])
+    srv = ApiServer(tdb)
+    srv.CHECKPOINT_EVERY = 100
+    host, port = srv.serve_background()
+    base = f"http://{host}:{port}"
+    try:
+        sizes = []
+        for i in range(10, 18):
+            assert delete(base, f"/api/tag/?id={i}")["deleted"] == 1
+            sizes.append(len(tdb.table("tag")._jdf.queryExecution()
+                             .logical().treeString().splitlines()))
+        steps = {b - a for a, b in zip(sizes, sizes[1:])}
+        assert len(steps) == 1 and 0 < steps.pop() <= 2, sizes
+        assert sorted(r["id"] for r in tdb.table("tag").collect()) == [1, 2, 3]
+    finally:
+        tdb.add("tag", orig)
+        srv.shutdown()
+
+
+def test_delete_matches_canonical_pk_only(tdb):
+    """DELETE compares the pk's canonical spelling: ``05``, `` 5`` and
+    ``abc`` name no row, and the table is left as it was."""
+    srv = ApiServer(tdb)
+    host, port = srv.serve_background()
+    base = f"http://{host}:{port}"
+    before = tdb.table("sample")
+    try:
+        for raw in ("abc", "05", "%205", "%2B5", "5.0", "5_0", ""):
+            out = delete(base, f"/api/sample/?id={raw}")
+            assert out["deleted"] == 0, raw
+        assert tdb.table("sample") is before
+        assert sorted(r["id"] for r in before.collect()) == [1, 2, 3, 4, 5]
+    finally:
+        srv.shutdown()
+
+
+def test_write_that_does_not_fit_schema_is_400(tdb):
+    """A POST or PUT value of the wrong type is a client error naming the
+    schema, and the table is left as it was."""
+    srv = ApiServer(tdb)
+    host, port = srv.serve_background()
+    base = f"http://{host}:{port}"
+    before = tdb.table("tag")
+    try:
+        for method, body in (("POST", {"name": "x", "owner_id": "abc"}),
+                             ("PUT", {"id": 2, "owner_id": "abc"}),
+                             ("PUT", {"id": 2, "name": "x",
+                                      "owner_id": "abc"})):
+            with pytest.raises(urllib.error.HTTPError) as e:
+                post(base, "/api/tag/", body, method=method)
+            assert e.value.code == 400
+            assert "rows do not fit" in json.loads(e.value.read())["detail"]
+        assert tdb.table("tag") is before
+    finally:
+        srv.shutdown()
+
+
 def test_expand_nested_serialization(server):
     """?expand= returns the reference read-serializer shape (nested
     sample/library objects, sequence_lanes list, is_complete) from one

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -137,8 +138,45 @@ def test_mutations_roundtrip(tdb, spark):
     assert t2.count() == 4
     t3 = mut.get_or_create(t2, new, ["name"])       # idempotent
     assert t3.count() == 4
-    t4 = mut.delete_by_key(t3, new.select("id"), ["id"])
+    t4 = mut.delete_by_key(t3, "id", [4])
     assert sorted(r["name"] for r in t4.collect()) == ["prod", "qc", "unused"]
+
+
+def test_key_merges_keep_null_key_rows(spark):
+    """upsert/delete_by_key keep a NULL-key row, as a left_anti join
+    does, and a NULL among the key values matches nothing."""
+    schema = T.StructType([T.StructField("id", T.LongType()),
+                           T.StructField("name", T.StringType())])
+    table = mut.local_rows(spark, [(1, "a"), (None, "orphan"), (2, "b")],
+                           schema)
+
+    def rows(df):
+        return sorted(((r["id"], r["name"]) for r in df.collect()), key=str)
+
+    new = mut.local_rows(spark, [(2, "B"), (3, "c")], schema)
+    assert rows(mut.upsert(table, new, "id", [2, 3])) == rows(
+        mut.local_rows(spark, [(1, "a"), (None, "orphan"), (2, "B"),
+                               (3, "c")], schema))
+    assert rows(mut.delete_by_key(table, "id", [1, None])) == [
+        (2, "b"), (None, "orphan")]
+    assert rows(mut.delete_by_key(table, "id", [None])) == rows(table)
+
+
+def test_local_rows_plan_locally_and_verify(spark):
+    """local_rows plans a LocalTableScan, not a Python-RDD scan, and
+    rejects a misfit row with the createDataFrame verifier's error."""
+    schema = T.StructType([T.StructField("id", T.LongType(), False),
+                           T.StructField("at", T.TimestampType())])
+    at = dt.datetime(2019, 1, 1, 3, 4, 5, 6)
+    df = mut.local_rows(spark, [(1, at), (2, None)], schema)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+    assert [tuple(r) for r in df.orderBy("id").collect()] == [
+        (1, at), (2, None)]
+    with pytest.raises(TypeError):
+        mut.local_rows(spark, [("abc", None)], schema)
+    with pytest.raises(ValueError):
+        mut.local_rows(spark, [(None, None)], schema)
 
 
 def test_m2m_add_remove_idempotent(tdb, spark):
