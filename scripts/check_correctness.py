@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Local mirror of the driver's t2 correctness gate.
+"""The oracle gate.
 
 Runs every inventory query on Spark and its DuckDB oracle on the same
 parquet dir, then compares row count, schema (column names sorted), and
@@ -27,11 +27,11 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
 def norm_cell(v):
     """Dtype-tagged cell normalization.
 
-    The grading driver's value hash is rendering-sensitive: a DuckDB
+    A value hash over rendered cells is rendering-sensitive: a DuckDB
     HUGEINT renders to pandas as float64 ("748750.0") while Spark's long
     renders int64 ("748750"), and Python ``==`` would hide that (the r4
-    q71 miss). Tag numeric kinds so int-vs-float divergence FAILS locally
-    exactly as it fails on the driver.
+    q71 miss). Tag numeric kinds so int-vs-float divergence FAILS here
+    exactly as it fails such a hash.
     """
     import numpy as np
 
@@ -40,10 +40,10 @@ def norm_cell(v):
     if isinstance(v, (float, np.floating)):
         if math.isnan(v):
             return ("f", "NaN")
-        # sign-of-zero strict: the driver's value hash renders "-0.0" vs
-        # "0.0" differently (the r8 q133 miss), but Python == says
-        # -0.0 == 0.0 — tag the sign so the local gate fails exactly
-        # where the driver fails.
+        # sign-of-zero strict: a value hash renders "-0.0" vs "0.0"
+        # differently (the r8 q133 miss), but Python == says
+        # -0.0 == 0.0 — tag the sign so the gate fails exactly where
+        # such a hash fails.
         return ("f", float(v), math.copysign(1.0, v))
     if isinstance(v, (int, np.integer)):
         return ("i", int(v))
@@ -70,25 +70,14 @@ def norm_rows(df_pandas):
 
 
 def main() -> int:
-    args = [a for a in sys.argv[1:] if a != "--bare"]
-    bare = "--bare" in sys.argv[1:]
+    args = sys.argv[1:]
     sf_dir = args[0] if args else "/root/testdata/sf0.001"
     only = args[1:]
 
+    from tantalus_spark import get_spark
     from tantalus_spark.inventory import ORACLES, QUERIES
 
-    if bare:
-        # exactly what the grading driver does: a vanilla session with none
-        # of tantalus_spark.session's configs (round 1 died on this)
-        from pyspark.sql import SparkSession
-
-        spark = (SparkSession.builder.master("local[32]")
-                 .config("spark.sql.shuffle.partitions", "32")
-                 .appName("correctness-bare").getOrCreate())
-    else:
-        from tantalus_spark import get_spark
-
-        spark = get_spark("correctness")
+    spark = get_spark("correctness")
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")

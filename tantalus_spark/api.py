@@ -25,6 +25,7 @@ plane — bulk egress goes through the parquet/CSV sinks.
 from __future__ import annotations
 
 import base64
+import contextlib
 import hashlib
 import hmac
 import json
@@ -95,6 +96,17 @@ def _coerce(key: str, value: str) -> object:
     if value.lower() in ("true", "false"):
         return value.lower() == "true"
     return value
+
+
+@contextlib.contextmanager
+def _rows_must_fit(endpoint: str):
+    """A written value the table's schema does not accept is the client's
+    error: re-raise the verifier's complaint as the facade's 400."""
+    try:
+        yield
+    except (TypeError, ValueError) as exc:
+        raise ValueError(f"rows do not fit {endpoint!r} schema: "
+                         f"{exc}") from exc
 
 
 class _Handler(BaseHTTPRequestHandler):
@@ -339,6 +351,7 @@ class ApiServer(ThreadingHTTPServer):
         reference DRF ModelViewSet create/update (M1/M4). Serialized: one
         writer mutates a table at a time."""
         from pyspark.sql import functions as F
+        from pyspark.sql import types as T
 
         from tantalus_spark.operators import mutations
 
@@ -352,6 +365,11 @@ class ApiServer(ThreadingHTTPServer):
                     raise ValueError(
                         f"unknown columns {sorted(bad)} for {endpoint!r}; "
                         f"legal: {sorted(known)}")
+            # the pks feed Spark probes below, where a value of the wrong
+            # type fails a cast: check them before any probe runs
+            with _rows_must_fit(endpoint):
+                mutations.verify_rows([(r[pk],) for r in rows if pk in r],
+                                      T.StructType([table.schema[pk]]))
             if create_only:
                 have_ids = [r[pk] for r in rows if pk in r]
                 if len(have_ids) != len(set(have_ids)):
@@ -391,14 +409,11 @@ class ApiServer(ThreadingHTTPServer):
                 provided = [sorted(set(r) & known) for r in rows]
                 if any(p != sorted(known) for p in provided):
                     rows = self._merge_partial(table, pk, rows, provided)
-            try:
+            with _rows_must_fit(endpoint):
                 new_rows = mutations.local_rows(
                     self.db.spark,
                     [tuple(r.get(c) for c in table.columns) for r in rows],
                     table.schema)
-            except Exception as exc:
-                raise ValueError(f"rows do not fit {endpoint!r} schema: "
-                                 f"{exc}") from exc
             if create_only:
                 new_table = mutations.append_rows(table, new_rows)
             else:

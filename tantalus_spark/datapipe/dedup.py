@@ -45,32 +45,15 @@ def _md5_long(col):
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def _minhash_perm(shingle_col, i: int, hash_family: str):
-    """Permutation-i hash of an (already long-hashed) shingle."""
-    if hash_family == "md5":
-        if i >= len(_MD5_A):
-            raise ValueError(
-                f"hash_family='md5' supports at most {len(_MD5_A)} "
-                f"permutations (got permutation index {i}); extend "
-                f"_MD5_A/_MD5_B or use hash_family='xxhash64'")
-        a, b = _MD5_A[i], _MD5_B[i]
-        return F.pmod(
-            F.pmod(shingle_col, F.lit(_MD5_MOD)) * F.lit(a) + F.lit(b),
-            F.lit(_MD5_MOD),
-        )
-    return F.xxhash64(shingle_col, F.lit(i))
-
-
 def _minhash_perm_sql(var: str, i: int, hash_family: str) -> str:
-    """SQL-text twin of :func:`_minhash_perm` over the expression text
-    ``var`` — used to render whole signature/band expression trees as ONE
-    parsed string instead of ~30 py4j round trips per permutation (the
-    r13 ivf_assign/simhash lesson: object-by-object Column construction
-    is pure driver latency, ~0.4 s per minhash_bands call, paid on EVERY
-    band-store commit). All literals are ints (exact in SQL text), parens
-    pin the precedence the Column operators had, so the parsed tree is
-    identical to the object-built one (A/B'd bit-identical both
-    families)."""
+    """Permutation-i hash of an (already long-hashed) shingle, as SQL text
+    over the expression text ``var``: the md5 family is the universal hash
+    ``(a_i*H + b_i) mod M``, xxhash64 is seeded by ``i``. Every signature
+    and band builder renders its expression tree as ONE parsed string
+    instead of ~30 py4j round trips per permutation (object-by-object
+    Column construction is pure driver latency, ~0.4 s per minhash_bands
+    call, paid on EVERY band-store commit). All literals are ints (exact
+    in SQL text) and parens pin the precedence."""
     if hash_family == "md5":
         if i >= len(_MD5_A):
             raise ValueError(
@@ -493,7 +476,7 @@ def simhash_signatures(df: DataFrame, text_col: str = "text",
     :func:`simhash_near_pairs`). ``hash_family="xxhash64"`` is the
     production default a user runs: one native JVM hash per token, no
     hex round-trip — same operator semantics, different (still
-    deterministic) signature values; bench.py times this family.
+    deterministic) signature values.
     """
     if not 1 <= hash_hex_chars <= 16:
         raise ValueError(f"hash_hex_chars must be in [1, 16], got {hash_hex_chars}")
@@ -1230,7 +1213,8 @@ def minhash_calibration(
     sh = shingles(df, n=shingle_n, text_col=text_col, id_col=id_col,
                   hashed=True, hash_family=hash_family).persist()
     aggs = [
-        F.min(_minhash_perm(F.col("shingle"), i, hash_family)).alias(f"h{i}")
+        F.expr(f"min({_minhash_perm_sql('shingle', i, hash_family)})")
+        .alias(f"h{i}")
         for i in range(n_perm)
     ]
     sig = sh.groupBy(id_col).agg(*aggs).persist()

@@ -311,7 +311,7 @@ def _token_hash_fast(tok) -> "F.Column":
     """Production token hash: JVM-native xxhash64 mod M. One codegen'd
     long op per token vs md5's hex string round-trip (md5 + substring +
     conv + cast) — the same two-family split as the MinHash permutations
-    (dedup._minhash_perm). pmod keeps the negative xxhash64 range in
+    (dedup._minhash_perm_sql). pmod keeps the negative xxhash64 range in
     [0, M) so the polynomial gram hash sees the same domain."""
     return F.pmod(F.xxhash64(tok), F.lit(_WIN_M))
 

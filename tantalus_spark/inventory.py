@@ -1,7 +1,7 @@
 """The correctness-gated query inventory.
 
 One entry per operator class from SURVEY.md §2 (parity with the reference's
-Django-ORM query surface, re-expressed on the driver's TPC-H-ish testdata)
+Django-ORM query surface, re-expressed on the TPC-H-ish testdata)
 plus the beyond-parity LLM-data-pipeline operators (dedup / similarity /
 text analysis / event-stream analytics).
 
@@ -31,8 +31,8 @@ _DB_CACHE: dict[tuple[int, str], Database] = {}
 
 
 def db_for(spark: SparkSession, sf_dir: str) -> Database:
-    # Pin UTC on whatever session the caller brings (the grading driver
-    # uses a vanilla one): timestamp literals in queries parse in session
+    # Pin UTC on whatever session the caller brings (it may be a
+    # vanilla one): timestamp literals in queries parse in session
     # TZ, and the DuckDB oracle is TZ-naive — same environment-coupling
     # class as the round-1 nanosAsLong bug, fixed at the same seam.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
@@ -696,8 +696,7 @@ def q53_winnowing(spark, sf_dir):
     """Winnowing rolling-hash fingerprints (positional near-dup detection),
     aggregated per doc for a stable signature. Gated with the md5-derived
     portable token hash so the oracle replays it bit-for-bit; the
-    production default is xxhash64 (bench.py times that path — same
-    two-family split as q45)."""
+    production default is xxhash64 (same two-family split as q45)."""
     docs = db_for(spark, sf_dir).table("documents")
     fps = textstats.winnowing_fingerprints(docs, k=5, window=4,
                                            hash_family="md5")
@@ -3014,292 +3013,11 @@ def q165_release_follow_serve(spark, sf_dir):
     return spark.read.parquet(root + "/served/batch-1")
 
 
-_ALL_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
+QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     name[1:]: fn
     for name, fn in list(globals().items())
     if name.startswith("q") and name[1:3].isdigit() and callable(fn)
 }
-
-# The correctness driver checks the FIRST 50 entries in insertion order
-# (CORRECTNESS_r01.json recorded exactly that prefix), so QUERIES is
-# explicitly ordered.
-#
-# r10 ROTATION (same protocol as r4-r9): the five r9 tail additions —
-# 147 hybrid_serve_batch, 148 ivf_index_health, 149 maintained_ann_serve,
-# 150 maintained_novel_serve, 151 ann_serve_batch — had only local-gate
-# evidence (LOCALGATE_r09.md plus the r9 judge's independent 143-entry
-# re-run, 0 failures) and take their official driver rows. The 5
-# swapped OUT all carry green CORRECTNESS_r09 rows and stay
-# family-covered in-window: 133 jl_distortion -> 51 embedding_near_dup
-# (the projection family's consumer; the window test documents 51 as
-# covering 69 + 133); 136 ivf_recall -> 148 ivf_index_health (the
-# recall leg is composed off the same shared-assign pass) + 47/74 ANN
-# anchors; 137 lang_confusion -> 41 doc_profile (same marker-word
-# language-ID pass; the confusion matrix is a 1-groupBy composition);
-# 145 score_calibration -> 122 minhash_calibration (calibration-curve
-# family); 146 ivf_balance -> 148 ivf_index_health (the balance leg,
-# same imbalance-factor expression tree).
-#
-# r9 ROTATION (history, same protocol as r4-r8): the four r8 tail additions —
-# 143 pruned_index_serve, 144 merged_dense_serve, 145 score_calibration,
-# 146 ivf_balance — had only local-gate evidence (LOCALGATE_r08.md plus
-# the r8 judge's independent 138-entry re-run, 0 failures) and take
-# their official driver rows. The 4 swapped OUT all carry green
-# CORRECTNESS_r08 rows and stay family-covered in-window:
-# 131 hybrid_rrf -> 141 hybrid_serve (bit-identity parity-tested
-# serving twin of the same RRF fusion); 135 js_drift ->
-# 132 source_divergence (same JS-sketch expression tree; drift adds
-# only the baseline broadcast join); 139 bpe_compression ->
-# 102 bpe_encode (same frozen-merge BPE encoder, compression is a
-# 1-agg composition); 140 group_split -> 142 group_split_clustered
-# (composes the same hash splitter plus the cluster map). 133 stays IN
-# to earn its green row after the r8 signed-zero oracle fix
-# (round(x) + 0.0 kills DuckDB's -0.0; Spark's F.round emits +0.0).
-#
-# r8 ROTATION (history, same protocol as r4-r7): the ten r7 additions —
-# 131 hybrid_rrf, 132 source_divergence, 133 jl_distortion,
-# 134 dedup_funnel, 135 js_drift, 136 ivf_recall, 137 lang_confusion,
-# 138 pq_recall, 139 bpe_compression, 140 group_split — had only
-# local-gate evidence (LOCALGATE_r07.md, 0 failures at three SFs,
-# independently re-run by the r7 judge) and take their official driver
-# rows, alongside the new r8 serving-lifecycle entries 141/142. The 12
-# swapped OUT all carry green CORRECTNESS_r07 rows and stay
-# family-covered in-window: 124 tfidf_cosine -> 123 bm25_indexed +
-# 131 hybrid_rrf (term-weighted ranking); 125 weighted_sample ->
-# 71 weighted_mix + 140 group_split (sampling/splits);
-# 126 budget_select -> 106 dsir_select (histogram-threshold selection);
-# 127 hard_negatives -> 47 ann_cosine + 136 ivf_recall (similarity
-# ranking); 128 retrieval_metrics -> 136 + 138 (recall audits);
-# 129 normalized_dedup -> 40 dedup_exact + 134 dedup_funnel (the funnel
-# composes the NFC stage); 130 hashed_features -> 131 + 141 (both
-# consume the hashed-feature table); 53 winnowing -> 44 ngram_jaccard +
-# 134 (shingle fingerprints); 69 embedding_lsh -> 51 near_dup +
-# 133 jl_distortion (random projections); 72 chunk_documents ->
-# 90 packed_text (composes chunk+pack+write); 109 media_dedup ->
-# 40 dedup_exact (binary-digest dedup; multimodal plumbing stays
-# unit-tested); 121 bm25_rank -> 123 bm25_indexed + 131/141 (same
-# scorer expression tree, bit-identity differential-tested).
-#
-# r7 ROTATION (history, same protocol as r4/r5/r6): the seven r6 additions —
-# 124 tfidf_cosine, 125 weighted_sample, 126 budget_select,
-# 127 hard_negatives, 128 retrieval_metrics, 129 normalized_dedup,
-# 130 hashed_features — had only local-gate evidence (LOCALGATE_r06.md,
-# 0 failures) and take their official driver rows. The 7 swapped OUT
-# all carry green CORRECTNESS_r06 rows and stay family-covered
-# in-window: 84 pack_sequences -> 90 packed_text (packing pipeline,
-# 90 composes chunk+pack+write); 107 centroid_affinity ->
-# 47 ann_cosine + 51 embedding_near_dup (cosine family);
-# 112 length_outliers -> 41 doc_profile + 117 gopher (per-doc stats);
-# 114 source_overlap -> 45 minhash_lsh + 122 calibration (band
-# family); 118 c4_filters -> 117 gopher_rules + 58 clean_corpus
-# (quality-rule gates); 119 sq8_quantize -> 74 pq_ann (quantization);
-# 120 zipf_fit -> 121 bm25_rank + 53 winnowing (term statistics).
-#
-# r6 ROTATION (history, same protocol as r4/r5): 14 entries that had only
-# local-gate evidence take their official driver rows — the five r5
-# late additions plus Gopher/C4 (117 gopher, 118 c4, 119 sq8_quantize,
-# 120 zipf_fit, 121 bm25_rank, 122 minhash_calibration,
-# 123 bm25_indexed) and the never-driver-green tail flagships
-# (84 pack_sequences, 90 packed_text, 102 bpe_encode — full-value
-# frozen-merge oracle, 104 bigram_lm, 107 centroid_affinity,
-# 112 length_outliers, 114 source_overlap). The 14 swapped OUT all
-# carry green CORRECTNESS_r05 rows and stay family-covered in-window:
-# 49 tumbling window -> 50 sessionization + 56 funnel (event windows);
-# 79 scrub_pii -> 41 profile + 58 clean_corpus (text cleaning);
-# 85 exact_sample -> 71 weighted_mix (sampling); 86 novel_docs ->
-# 45 minhash-LSH + 122 calibration (band-index family); 93 keep_best ->
-# 40 + 45 (dedup apply); 96 split_leakage -> 70 decontaminate;
-# 97 lm_score + 101 perplexity_buckets -> 104 bigram_lm (LM scoring,
-# higher-order twin); 98 dsir_weights + 113 quota_select ->
-# 106 dsir_select (DSIR family, select composes weights);
-# 110 grouping_sets -> 29 rollup (one Expand family); 111 fuzzy_pairs ->
-# 44 ngram_jaccard (fuzzy ER); 115 gap_fill -> 30 frames + 50
-# (window family); 116 encoding_noise -> 41 + 117/118 (quality gates).
-#
-# r5 ROTATION (history): the 16 r4-era pipeline
-# flagships that had only local-gate evidence (LOCALGATE_r04.md, 0
-# failures) are now IN the window — 79 scrub_pii, 85 exact_sample,
-# 86 novel_docs, 93 keep_best, 96 split_leakage, 97 lm_score,
-# 98 dsir_weights, 101 perplexity_buckets, 106 dsir_select,
-# 108 build_corpus, 109 media_dedup, 110 grouping_sets, 111 fuzzy_pairs,
-# 113 quota_select, 115 gap_fill, 116 encoding_noise. The 16 swapped OUT
-# all carry green CORRECTNESS_r04 rows and are family-redundant with
-# in-window gates: 02 point lookup (S2 recorded r4) -> 01/04 scans;
-# 03 distinct -> 13 count-distinct; 06 token-OR -> 26 search-union (F1);
-# 16 pagination -> 18 top-k (ordered limit); 17 lag -> 30 frames +
-# 50 sessionization + 115 gap-fill (window family); 19 union-dedup ->
-# 20 set ops; 23 date funcs -> 22 scalars + 115 (date_format);
-# 28 pivot -> 29 rollup + 110 grouping sets; 33 collect_set ->
-# 37 explode (array funcs); 34 percentiles -> 101 perplexity buckets
-# (grouped quantile thresholds); 36 first_last -> 30; 46 simhash ->
-# 45 minhash-LSH (banded near-dup); 52 ivf -> 47 + 74 (ANN family);
-# 63 tfidf -> 97/98 (term-statistic scoring); 65 media features ->
-# 109 media dedup (multimodal); 73 repetition -> 41 profile +
-# 116 encoding-noise (textstats). 71 stays IN to earn its green row
-# after the r4 oracle-typing fix (CAST(sum) AS BIGINT).
-#
-# r4 ROTATION (history): 02/03/16/19/28/29/33/34/36/37/55/70/71/72/73/74
-# rotated in (never driver-green before r4; all went green in r4);
-# 05/08/09/11/24/38/54/57/59/60/61/62/64/66/67/68 rotated out on green
-# r2+r3 rows with in-window family twins (05 -> 04+55; 08/09 -> 10+12+70;
-# 11 -> 10; 24 -> 22/23/37; 38 -> 29+28; 54 -> 23; 57 -> 56; 59 -> 49;
-# 60 -> 45; 61 -> 71; 62 -> 45/46; 64 -> 19/20; 66 -> 30/34; 67 -> 18;
-# 68 -> 32). Every tail entry stays fully oracled and covered by tests/.
-_QUERY_ORDER = [
-    # §2 core: scans, filters, joins, aggregates, windows, set ops
-    "01_pricing_summary", "04_range_in_filter", "07_region_revenue",
-    "10_exists_same_child", "12_exclude_not_exists", "13_count_distinct",
-    "15_cross_agg_eq", "18_topk_per_group",
-    "22_scalar_functions", "26_search_union", "29_rollup",
-    "30_window_frames", "31_asof_join", "32_range_join",
-    "37_explode_tokens", "39_dashboard_counts", "55_regex_lookup",
-    # datapipe: dedup, text, similarity, events
-    "40_dedup_exact", "41_doc_profile", "44_ngram_jaccard",
-    "45_minhash_lsh", "47_ann_cosine",
-    "50_sessionization", "51_embedding_near_dup",
-    "56_funnel", "58_clean_corpus",
-    "70_decontaminate",
-    "74_pq_ann",
-    # r5/r6 rotation survivors (family anchors kept in-window)
-    "106_dsir_select", "108_build_corpus",
-    "123_bm25_indexed",
-    # r8/r9 rotation survivors (family anchors kept in-window; 132
-    # anchors the JS-sketch family for out-of-window 135)
-    "132_source_divergence", "134_dedup_funnel",
-    "142_group_split_clustered",
-    # r10/r11 rotation survivors (batched hybrid + IVFPQ serving, the
-    # LSM store serve, both-stores-maintained hybrid serve, consistent
-    # cross-store as-of, audit-gated snapshot promotion)
-    "147_hybrid_serve_batch", "151_ann_serve_batch",
-    "152_segmented_store_serve", "155_maintained_hybrid_serve",
-    "157_consistent_asof_serve", "159_snapshot_promote_serve",
-    # r12 survivors that keep their window slots: the band-store
-    # snapshot lifecycle (whose EXPORT changed this round — the
-    # postings artifact now folds the maintained leaf) and the
-    # cross-family release serve that q165 composes with.
-    "162_band_store_novel_serve", "163_release_serve",
-    # r13 ROTATION: q164 (the live postings-leaf band serve — r12's
-    # flagship, gate-green at FOUR SFs and green in the r12 judge's
-    # independent re-run, never driver-checked) and the NEW q165
-    # deploy-loop composition (query stream → follow_releases →
-    # served sink across a mid-stream release swap; oracle = q163's)
-    # take driver rows, plus six more of the never-driver-checked
-    # q75-q105 tail (oldest-first per the r12 verdict): semantic
-    # dedup, markup strip, rare tokens, domain stats, dup spans,
-    # vocab coverage. All gate-green at four SFs (LOCALGATE_r12);
-    # 81/82/87/88/89/92 also green in the r12 judge's independent
-    # re-run.
-    "164_band_store_live_serve", "165_release_follow_serve",
-    "81_semantic_dedup",
-    # r14 ROTATION (the backlog drain the r12/r13 verdicts scheduled):
-    # the LAST five never-driver-checked full-value entries take their
-    # official rows — per-source sign-off report, paragraph-level
-    # dedup, seeded corpus shuffle, temperature-weighted mixing, and
-    # per-gate attribution. All four-SF gate-green (LOCALGATE_r13) and
-    # green in the r12 judge's independent re-run. After this window
-    # the never-driver-checked backlog is exactly the two rows-only
-    # entries {75, 100} (iterative trainers — not SQL-expressible by
-    # design).
-    "94_source_report", "95_paragraph_dedup", "99_corpus_shuffle",
-    "103_temperature_mix", "105_gate_attribution",
-    # ---- 50-entry line: families below are all gated above (see the
-    # rotation notes), carry green r2-r13 driver rows, and are
-    # unit-tested.
-    # r14 ROTATED OUT (all green r13 driver rows, in-window family
-    # anchors): 82 strip-markup -> 58 clean-corpus (rule family) + 41
-    # doc-profile; 87 rare-tokens -> 123 bm25-indexed (the same
-    # term-stats tree) + 41; 88 domain-stats -> 39 dashboard-counts +
-    # 94 source-report (the incoming per-source rollup family); 89
-    # dup-spans -> 40 exact dedup + 44 ngram (shingle family) + 95
-    # paragraph-dedup (the incoming span-digest twin); 92
-    # vocab-coverage -> 37 explode-tokens + 41.
-    "82_strip_markup", "87_rare_tokens", "88_domain_stats",
-    "89_dup_spans", "92_vocab_coverage",
-    # r13 ROTATED OUT (all green r12 driver rows, in-window family
-    # anchors): 160 snapshot-hybrid-serve -> 155 maintained hybrid +
-    # 163 release serve (whose export runs the same two audited
-    # snapshot promotions) + 159 promotion; 161 snapshot-ann-serve ->
-    # 151 batched IVFPQ serve + 74 pq-ann + 159 (promotion family);
-    # 76 line-dedup -> 40 exact dedup + 134 dedup-funnel (same
-    # digest-groupBy family); 77 contamination-frac ->
-    # 70 decontaminate + incoming 91-family containment arithmetic
-    # already anchored by 44/45; 78 quality-classifier ->
-    # 58 clean-corpus + 41 doc-profile (rule-feature family);
-    # 80 knn-graph -> 47 ann-cosine + 51 embedding-near-dup +
-    # incoming 81 semantic-dedup (its direct consumer); 83
-    # corpus-report -> 39 dashboard-counts + 41 profile; 91
-    # containment -> 70 decontaminate + 44 ngram-jaccard (the same
-    # shingle-intersection tree).
-    "160_snapshot_hybrid_serve", "161_snapshot_ann_serve",
-    "76_line_dedup", "77_contamination_frac", "78_quality_classifier",
-    "80_knn_graph", "83_corpus_report", "91_containment",
-    # r12 ROTATED OUT (all green r11 driver rows, in-window family
-    # anchors): 117 gopher-rules -> 58 clean-corpus + 78
-    # quality-classifier (same rule-feature family); 141 hybrid-serve
-    # -> 147 batched twin + 155 maintained hybrid; 143
-    # pruned-index-serve -> 152 tombstoned LSM serve + 123 bm25-indexed;
-    # 148 ivf-index-health -> 151 batched IVFPQ serve + 74 pq-ann +
-    # 161; 149 maintained-ann-serve -> 161 (same
-    # maintained store through promotion) + 151; 150
-    # maintained-novel-serve -> 162 (band family on the
-    # versioned store) + 45 minhash-LSH; 153/154 eval-tabular legs ->
-    # 147/151 servers they mirror; 156 time-travel -> 157 consistent
-    # as-of (the two-store composition of the same pin); 158
-    # stats-audit -> 159 promotion (whose export runs the audit gate).
-    "117_gopher_rules", "141_hybrid_serve", "143_pruned_index_serve",
-    "148_ivf_index_health", "149_maintained_ann_serve",
-    "150_maintained_novel_serve",
-    "153_hybrid_eval_tabular", "154_ann_eval_tabular",
-    "156_index_time_travel", "158_store_stats_audit",
-    # r11 ROTATED OUT (all green driver rows, in-window family anchors):
-    # 20 set-ops -> 19(green r2)/26 search-union; 71 weighted-mix ->
-    # 61 hash-split(green)/103 temperature-mix family + green r4 row;
-    # 90 packed-text -> 84 pack-sequences(green r5 family)/41 profile;
-    # 102 bpe-encode -> 104's twin, both green r6, tokenizer unit-tested;
-    # 104 bigram-lm -> 102/97 lm-score family greens; 122 minhash
-    # calibration -> 45 minhash-LSH anchor; 138 pq-recall ->
-    # 148 ivf-health + 151 batched IVFPQ serve; 144 merged-dense-serve
-    # -> 149 maintained-ANN serve + incoming 155/157 maintained-dense
-    # family.
-    "20_set_ops", "71_weighted_mix", "90_packed_text",
-    "102_bpe_encode", "104_bigram_lm", "122_minhash_calibration",
-    "138_pq_recall", "144_merged_dense_serve",
-    "133_jl_distortion", "136_ivf_recall", "137_lang_confusion",
-    "145_score_calibration", "146_ivf_balance",
-    "131_hybrid_rrf", "135_js_drift", "139_bpe_compression",
-    "140_group_split",
-    "124_tfidf_cosine", "125_weighted_sample", "126_budget_select",
-    "127_hard_negatives", "128_retrieval_metrics",
-    "129_normalized_dedup", "130_hashed_features",
-    "53_winnowing", "69_embedding_lsh", "72_chunk_documents",
-    "109_media_dedup", "121_bm25_rank",
-    "84_pack_sequences", "107_centroid_affinity", "112_length_outliers",
-    "114_source_overlap", "118_c4_filters", "119_sq8_quantize",
-    "120_zipf_fit",
-    "49_tumbling_window", "79_scrub_pii", "85_exact_sample",
-    "86_novel_docs", "93_keep_best", "96_split_leakage", "97_lm_score",
-    "98_dsir_weights", "101_perplexity_buckets", "110_grouping_sets",
-    "111_fuzzy_pairs", "113_quota_select", "115_gap_fill",
-    "116_encoding_noise",
-    "02_point_lookup", "03_distinct_projection", "06_token_or_search",
-    "16_pagination", "17_window_lag", "19_union_dedup", "23_date_format",
-    "28_pivot", "33_collect_set", "34_percentiles", "36_first_last",
-    "46_simhash", "52_ivf_ann", "63_tfidf", "65_media_features",
-    "73_repetition",
-    "05_string_predicates", "08_semi_join", "09_anti_join",
-    "11_exists_diff_child", "24_event_scalars", "38_cube",
-    "54_date_lookups", "57_retention", "59_sliding_window",
-    "60_minhash_signatures", "61_hash_split", "62_dup_clusters",
-    "64_full_outer", "66_ntile", "67_latest_per_key", "68_range_join",
-    "75_ann_trained",
-    "100_bpe_merges",
-]
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    name: _ALL_QUERIES[name] for name in _QUERY_ORDER
-}
-assert set(QUERIES) == set(_ALL_QUERIES), (
-    sorted(set(_ALL_QUERIES) ^ set(QUERIES)))
 
 
 ORACLES: dict[str, str] = {

@@ -27,22 +27,28 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def local_rows(spark: SparkSession, rows: Sequence[tuple],
-               schema: T.StructType) -> DataFrame:
-    """Python rows → a DataFrame that plans as a ``LocalTableScan``.
-
-    Each row is checked by the same type verifier ``createDataFrame`` runs
-    (a misfit raises its TypeError/ValueError) and converted with the
-    schema's own ``toInternal``, so values mean what they meant through
-    ``createDataFrame(list)``; the rows then reach the JVM as one Arrow
-    table."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
+def verify_rows(rows: Sequence[tuple], schema: T.StructType) -> None:
+    """Check each row with the type verifier ``createDataFrame`` runs; a
+    misfit raises its TypeError/ValueError."""
     from pyspark.sql.types import _make_type_verifier
 
     verify = _make_type_verifier(schema)
     for r in rows:
         verify(r)
+
+
+def local_rows(spark: SparkSession, rows: Sequence[tuple],
+               schema: T.StructType) -> DataFrame:
+    """Python rows → a DataFrame that plans as a ``LocalTableScan``.
+
+    Each row is checked by :func:`verify_rows` and converted with the
+    schema's own ``toInternal``, so values mean what they meant through
+    ``createDataFrame(list)``; the rows then reach the JVM as one Arrow
+    table."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    verify_rows(rows, schema)
     internal = [schema.toInternal(r) for r in rows]
     arrow = to_arrow_schema(schema)
     columns = [pa.array([r[i] for r in internal], type=f.type)

