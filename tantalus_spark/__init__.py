@@ -14,7 +14,7 @@ Spark-first:
 - ``sources``   — Excel/TSV/CSV ingest & export with validation frames
 - ``datapipe``  — beyond-parity, LLM-training-data operators: dedup
                   (exact/minhash/simhash/jaccard), similarity search,
-                  text analysis, multimodal column plumbing
+                  text analysis
 - ``streaming`` — Structured Streaming ingest of event logs
 
 Everything is declarative DataFrame/SQL so Catalyst owns physical planning

@@ -731,22 +731,6 @@ def q55_regex_lookup(spark, sf_dir):
     )
 
 
-def q56_funnel(spark, sf_dir):
-    """Ordered conversion funnel view -> click -> purchase."""
-    from tantalus_spark.datapipe.funnel import funnel
-
-    e = db_for(spark, sf_dir).table("events")
-    return funnel(e, ["view", "click", "purchase"])
-
-
-def q57_retention(spark, sf_dir):
-    """Weekly cohort retention over the events stream."""
-    from tantalus_spark.datapipe.funnel import retention
-
-    e = db_for(spark, sf_dir).table("events")
-    return retention(e, period="week")
-
-
 def q58_clean_corpus(spark, sf_dir):
     """End-to-end corpus cleaning pipeline (quality -> language -> exact
     dedup) as one Catalyst plan."""
@@ -844,27 +828,6 @@ def q64_full_outer(spark, sf_dir):
         .agg(F.count(F.lit(1)).alias("n"),
              F.sum(F.coalesce("n_orders", F.lit(0))).alias("total_orders"))
     )
-
-
-def q65_media_features(spark, sf_dir):
-    """Multimodal binary-column plumbing under the oracle gate: documents'
-    UTF-8 bytes stand in for media payloads, and the mapInPandas feature
-    pass (byte count + content digest) must match SQL on the same bytes.
-    The decoder stays a stub; this proves the Arrow batch plumbing."""
-    from tantalus_spark.datapipe import multimodal as mm
-
-    docs = db_for(spark, sf_dir).table("documents")
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.when(F.pmod("doc_id", F.lit(3)) == 0, "image")
-        .when(F.pmod("doc_id", F.lit(3)) == 1, "audio")
-        .otherwise("video").alias("kind"),
-        F.lit(None).cast("string").alias("mime"),
-        F.encode("text", "UTF-8").alias("payload"),
-        F.lit(None).cast("string").alias("meta"),
-    )
-    return mm.media_features(media).select(
-        "media_id", "kind", "n_bytes", "payload_xxh")
 
 
 def q66_ntile(spark, sf_dir):
@@ -1404,19 +1367,6 @@ def q99_corpus_shuffle(spark, sf_dir):
     return corpus_shuffle(docs, seed="epoch0", n_shards=16)
 
 
-def q100_bpe_merges(spark, sf_dir):
-    """BPE tokenizer-vocabulary induction (Sennrich et al. 2016): the
-    corpus collapses to a (word, freq) table in ONE corpus-scale pass,
-    then 8 merge iterations run on that vocabulary-sized table only.
-    Iterative argmax + sequential rewrite is not SQL-expressible —
-    rows-only gate (q74 precedent); exactness is proven in
-    tests/test_tokenizer.py against a pure-Python reference trainer."""
-    from tantalus_spark.datapipe.tokenizer import bpe_train
-
-    docs = db_for(spark, sf_dir).table("documents")
-    return bpe_train(docs, n_merges=8)
-
-
 def q101_perplexity_buckets(spark, sf_dir):
     """CCNet head/middle/tail stratification: every doc bucketed by exact
     corpus terciles of its unigram-LM cost; keep-head-and-middle is the
@@ -1427,36 +1377,6 @@ def q101_perplexity_buckets(spark, sf_dir):
 
     docs = db_for(spark, sf_dir).table("documents")
     return perplexity_buckets(docs)
-
-
-# Frozen merge list for the q102 gate (the q74 fixed-codebook pattern):
-# encoding with a FIXED, deterministic rule list is pure left-to-right
-# non-overlapping rewriting — replayable in DuckDB as a replace() chain
-# over a U+001F-wrapped symbol string — so the apply step gets a FULL
-# value oracle while the iterative trainer (q100) stays rows-only.
-FIXED_BPE_MERGES: list[tuple[str, str]] = [
-    ("e", "</w>"), ("t", "h"), ("th", "e</w>"), ("s", "</w>"),
-    ("d", "</w>"), ("i", "n"), ("a", "n"), ("o", "r"),
-]
-
-
-def q102_bpe_encode(spark, sf_dir):
-    """The tokenizer APPLY step: encode every document with a frozen
-    8-rule BPE merge list (production trains one with q100's
-    ``bpe_train`` and freezes it — encoding against a versioned frozen
-    vocabulary IS the production shape); real subword token counts per
-    doc (what a packing stage consumes). Pure map stage — rules
-    broadcast in the Arrow-UDF closure, zero shuffles. Full value
-    oracle: one merge pass is a left-to-right non-overlapping rewrite,
-    exactly ``replace()`` semantics over a symbol string whose units are
-    wrapped in U+001F (so a rule can only match whole symbols), and the
-    frozen list replays the 8 replaces in rank order in DuckDB.
-    Trained-rules apply stays differential-tested in
-    tests/test_tokenizer.py."""
-    from tantalus_spark.datapipe.tokenizer import bpe_apply
-
-    docs = db_for(spark, sf_dir).table("documents")
-    return bpe_apply(docs, FIXED_BPE_MERGES).select("doc_id", "n_units")
 
 
 def q103_temperature_mix(spark, sf_dir):
@@ -1536,21 +1456,6 @@ def q108_build_corpus(spark, sf_dir):
     return build_corpus(docs, F.col("doc_id") < 5, shingle_n=5)
 
 
-def q109_media_dedup(spark, sf_dir):
-    """Exact duplicate media by payload digest (multimodal family, q65's
-    byte-payload stand-in): groupBy the 16-byte md5 of the BINARY
-    payload — the payload itself never shuffles. Returns one row per
-    distinct payload with the kept id and copy count."""
-    from tantalus_spark.datapipe import multimodal as mm
-
-    docs = db_for(spark, sf_dir).table("documents")
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.encode("text", "UTF-8").alias("payload"),
-    )
-    return mm.exact_media_dedup(media)
-
-
 def q110_grouping_sets(spark, sf_dir):
     """Explicit GROUPING SETS (beyond q28 pivot / q29 rollup / q38 cube):
     per-(flag,status), per-flag, and grand-total aggregates in ONE scan
@@ -1615,22 +1520,6 @@ def q114_source_overlap(spark, sf_dir):
     docs = db_for(spark, sf_dir).table("documents")
     return dedup.source_overlap_matrix(
         docs, n_perm=16, bands=4, threshold=0.2, hash_family="md5")
-
-
-def q115_gap_fill(spark, sf_dir):
-    """Hypertable-style gap-fill + forward-fill: per user, a complete
-    daily grid over their event span, zero-event gap rows, and the last
-    observed daily total carried forward (TimescaleDB
-    time_bucket_gapfill + locf shape). Integer-cents sums keep the gate
-    float-order-proof; the fill window is per-user, never global."""
-    from tantalus_spark.datapipe.funnel import gap_fill_daily
-
-    ev = db_for(spark, sf_dir).table("events")
-    out = gap_fill_daily(ev)
-    # gate projection: DATE as ISO string — pandas renders DuckDB DATE as
-    # Timestamp but Spark DateType as datetime.date, so the raw type
-    # can't hash-compare even when values agree
-    return out.withColumn("day", F.date_format("day", "yyyy-MM-dd"))
 
 
 def q116_encoding_noise(spark, sf_dir):
@@ -1959,19 +1848,6 @@ def q138_pq_recall(spark, sf_dir):
     emb = db_for(spark, sf_dir).table("embeddings")
     return similarity.pq_recall(emb, m=8, n_codes=16, k=10,
                                 n_queries=10)
-
-
-def q139_bpe_compression(spark, sf_dir):
-    """Per-source tokenizer compression rate under the frozen q102
-    merge list: chars per BPE unit — the vocabulary-fit metric that
-    flags domains a tokenizer shreds into char pieces (more compute
-    per byte) before a training run. One Arrow encode map pass + one
-    |sources|-row integer aggregate; exact BIGINT division, full
-    oracle."""
-    from tantalus_spark.datapipe.tokenizer import bpe_compression
-
-    docs = db_for(spark, sf_dir).table("documents")
-    return bpe_compression(docs, FIXED_BPE_MERGES)
 
 
 def q140_group_split(spark, sf_dir):
@@ -3407,33 +3283,6 @@ ORACLES: dict[str, str] = {
           AND regexp_matches(p_type, '(?i)^econ')
         GROUP BY p_brand
     """,
-    "56_funnel": """
-        WITH s0 AS (
-          SELECT user_id, min(ts) AS t FROM events
-          WHERE event_type = 'view' GROUP BY 1),
-        s1 AS (
-          SELECT e.user_id, min(e.ts) AS t
-          FROM events e JOIN s0 ON e.user_id = s0.user_id AND e.ts > s0.t
-          WHERE e.event_type = 'click' GROUP BY 1),
-        s2 AS (
-          SELECT e.user_id, min(e.ts) AS t
-          FROM events e JOIN s1 ON e.user_id = s1.user_id AND e.ts > s1.t
-          WHERE e.event_type = 'purchase' GROUP BY 1)
-        SELECT 'view' AS step, 0 AS step_idx, count(*) AS n_users FROM s0
-        UNION ALL SELECT 'click', 1, count(*) FROM s1
-        UNION ALL SELECT 'purchase', 2, count(*) FROM s2
-    """,
-    "57_retention": """
-        WITH act AS (
-          SELECT DISTINCT user_id AS u, date_trunc('week', ts) AS p
-          FROM events),
-        cohort AS (SELECT u, min(p) AS cohort FROM act GROUP BY u)
-        SELECT cohort,
-               CAST(date_diff('day', cohort, p) / 7 AS INTEGER) AS k,
-               count(DISTINCT u) AS n_users
-        FROM act JOIN cohort USING (u)
-        GROUP BY 1, 2
-    """,
     "58_clean_corpus": """
         WITH q AS (
           SELECT doc_id,
@@ -3578,15 +3427,6 @@ ORACLES: dict[str, str] = {
                CAST(SUM(coalesce(n_orders, 0)) AS BIGINT) AS total_orders
         FROM buyers FULL OUTER JOIN cust USING (custkey)
         GROUP BY 1
-    """,
-    "65_media_features": """
-        SELECT doc_id AS media_id,
-               CASE WHEN doc_id % 3 = 0 THEN 'image'
-                    WHEN doc_id % 3 = 1 THEN 'audio'
-                    ELSE 'video' END AS kind,
-               CAST(octet_length(CAST(text AS BLOB)) AS INTEGER) AS n_bytes,
-               substr(md5(text), 1, 16) AS payload_xxh
-        FROM documents
     """,
     "66_ntile": """
         WITH b AS (
@@ -4742,13 +4582,6 @@ ORACLES: dict[str, str] = {
         FROM kept k JOIN documents d USING (doc_id)
         GROUP BY d.source
     """,
-    "109_media_dedup": """
-        SELECT md5(text) AS payload_md5,
-               min(doc_id) AS keep_id,
-               count(*) AS n_copies
-        FROM documents
-        GROUP BY md5(text)
-    """,
     "110_grouping_sets": """
         SELECT l_returnflag, l_linestatus,
                SUM(l_quantity) AS sum_qty,
@@ -4893,34 +4726,6 @@ ORACLES: dict[str, str] = {
         FROM withsrc
         GROUP BY src_a, src_b
     """,
-    "115_gap_fill": """
-        WITH ev AS (
-          SELECT user_id, CAST(ts AS DATE) AS day,
-                 CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-          FROM events),
-        daily AS (
-          SELECT user_id, day, count(*) AS n_events,
-                 CAST(sum(cents) AS BIGINT) AS day_cents
-          FROM ev GROUP BY user_id, day),
-        bounds AS (SELECT user_id, min(day) AS d0, max(day) AS d1
-                   FROM ev GROUP BY user_id),
-        grid AS (
-          SELECT b.user_id, CAST(u.d AS DATE) AS day
-          FROM bounds b,
-               UNNEST(generate_series(b.d0, b.d1, INTERVAL 1 DAY))
-                 AS u(d)),
-        j AS (
-          SELECT g.user_id, g.day,
-                 coalesce(d.n_events, 0) AS n_events, d.day_cents
-          FROM grid g LEFT JOIN daily d USING (user_id, day))
-        SELECT user_id, strftime(day, '%Y-%m-%d') AS day, n_events,
-               day_cents,
-               last_value(day_cents IGNORE NULLS) OVER (
-                 PARTITION BY user_id ORDER BY day
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                 AS filled_cents
-        FROM j
-    """,
     "116_encoding_noise": """
         WITH c AS (
           SELECT doc_id,
@@ -4939,85 +4744,6 @@ ORACLES: dict[str, str] = {
     """,
 }
 
-
-def _bpe_encode_oracle(merges: list[tuple[str, str]]) -> str:
-    """Generate the q102 oracle from the SAME frozen rule list the Spark
-    query encodes with. Representation: every symbol is wrapped in
-    U+001F (chr(31)) — ``§s1§§s2§…§sk§`` — so a merge pattern
-    ``§left§§right§`` can only match whole adjacent symbols (symbols
-    never contain chr(31); a boundary-straddling match is impossible).
-    One ``replace()`` is exactly one left-to-right non-overlapping merge
-    pass (``tokenizer.merge_word`` semantics); the 8 replaces run in
-    rank order. n_units per word = pieces split on the chr(31)-pair."""
-    expr = ("regexp_replace(w, '(.)', chr(31) || '\\1' || chr(31), 'g')"
-            " || chr(31) || '</w>' || chr(31)")
-    for left, right in merges:
-        pat = (f"chr(31) || '{left}' || chr(31) || "
-               f"chr(31) || '{right}' || chr(31)")
-        rep = f"chr(31) || '{left}{right}' || chr(31)"
-        expr = f"replace({expr}, {pat}, {rep})"
-    return f"""
-        WITH words AS (
-          SELECT doc_id,
-                 unnest(string_split_regex(trim(lower(text)), '\\s+')) AS w
-          FROM documents),
-        enc AS (
-          SELECT doc_id,
-                 len(string_split({expr}, chr(31) || chr(31))) AS k
-          FROM words WHERE w <> ''),
-        agg AS (
-          SELECT doc_id, CAST(sum(k) AS INTEGER) AS n_units
-          FROM enc GROUP BY doc_id)
-        SELECT d.doc_id, COALESCE(a.n_units, 0) AS n_units
-        FROM documents d LEFT JOIN agg a USING (doc_id)
-    """
-
-
-ORACLES["102_bpe_encode"] = _bpe_encode_oracle(FIXED_BPE_MERGES)
-
-
-def _bpe_compression_oracle(merges: list[tuple[str, str]]) -> str:
-    """q139: the q102 encode replay aggregated per source — exact
-    BIGINT char/unit sums, chars/unit divides the exact integers.
-    Every document row participates (bpe_apply returns n_units=0 for
-    empty/null text; null n_chars is skipped by SUM in both engines)."""
-    expr = ("regexp_replace(w, '(.)', chr(31) || '\\1' || chr(31), 'g')"
-            " || chr(31) || '</w>' || chr(31)")
-    for left, right in merges:
-        pat = (f"chr(31) || '{left}' || chr(31) || "
-               f"chr(31) || '{right}' || chr(31)")
-        rep = f"chr(31) || '{left}{right}' || chr(31)"
-        expr = f"replace({expr}, {pat}, {rep})"
-    return f"""
-        WITH words AS (
-          SELECT doc_id,
-                 unnest(string_split_regex(trim(lower(text)), '\\s+')) AS w
-          FROM documents),
-        enc AS (
-          SELECT doc_id,
-                 len(string_split({expr}, chr(31) || chr(31))) AS k
-          FROM words WHERE w <> ''),
-        agg AS (
-          SELECT doc_id, CAST(sum(k) AS BIGINT) AS n_units
-          FROM enc GROUP BY doc_id),
-        meta AS (
-          SELECT d.doc_id, d.source AS grp,
-                 CAST(length(d.text) AS BIGINT) AS n_chars,
-                 COALESCE(a.n_units, 0) AS n_units
-          FROM documents d LEFT JOIN agg a USING (doc_id)),
-        g AS (
-          SELECT grp, CAST(count(*) AS BIGINT) AS n_docs,
-                 CAST(sum(n_chars) AS BIGINT) AS n_chars,
-                 CAST(sum(n_units) AS BIGINT) AS n_units
-          FROM meta GROUP BY grp)
-        SELECT grp AS source, n_docs, n_chars, n_units,
-               round(CAST(n_chars AS DOUBLE) / CAST(n_units AS DOUBLE),
-                     4) AS chars_per_unit
-        FROM g WHERE n_units > 0
-    """
-
-
-ORACLES["139_bpe_compression"] = _bpe_compression_oracle(FIXED_BPE_MERGES)
 
 # q140: the q129 NFC-digest family canonical + the q61 md5 bucket
 # ranges, hashed on the CANONICAL id so families move as one unit.

@@ -87,13 +87,13 @@ HEADLINE = [
     "31_asof_join", "68_range_join", "40_dedup_exact", "41_doc_profile",
     "44_ngram_jaccard", "45_minhash_lsh", "47_ann_cosine",
     "49_tumbling_window", "50_sessionization", "51_embedding_near_dup",
-    "53_winnowing", "56_funnel", "58_clean_corpus", "97_lm_score",
+    "53_winnowing", "58_clean_corpus", "97_lm_score",
     "98_dsir_weights", "101_perplexity_buckets", "108_build_corpus",
     "46_simhash", "111_fuzzy_pairs", "113_quota_select",
     "116_encoding_noise", "120_zipf_fit", "121_bm25_rank",
     "123_bm25_indexed", "124_tfidf_cosine", "131_hybrid_rrf",
     "132_source_divergence", "134_dedup_funnel", "135_js_drift",
-    "139_bpe_compression", "141_hybrid_serve",
+    "141_hybrid_serve",
     "142_group_split_clustered", "147_hybrid_serve_batch",
     "151_ann_serve_batch", "152_segmented_store_serve",
     "159_snapshot_promote_serve", "161_snapshot_ann_serve",

@@ -84,12 +84,11 @@ def test_end_to_end_crawl_to_snapshot(spark, tmp_path):
 def test_journey_curated_corpus_to_training_order(spark):
     """Stage 2 of the journey: a cleaned corpus → LM quality filter
     (drop the tail tercile) → leak-free hash split → deterministic epoch
-    order → BPE token budget. Every stage is the public operator a
+    order. Every stage is the public operator a
     training-data pipeline composes after cleaning."""
     from tantalus_spark.datapipe.scoring import (
         corpus_shuffle, perplexity_labels)
     from tantalus_spark.datapipe.sampling import hash_split
-    from tantalus_spark.datapipe.tokenizer import bpe_apply, bpe_train
 
     rows = [(i, f"{GOOD} marker{i}") for i in range(20)]
     rows += [(100 + i, f"qzx{i}v wplk{i} mnvb{i}x zzq{i}") for i in range(10)]
@@ -114,11 +113,6 @@ def test_journey_curated_corpus_to_training_order(spark):
         d for d, s in by_split.items() if s == "train"}
     for shard, n in [(r.shard, r.position) for r in got]:
         assert n >= 1
-
-    rules = bpe_train(kept, n_merges=6)
-    enc = bpe_apply(kept, rules)
-    counts = {r.doc_id: r.n_units for r in enc.collect()}
-    assert all(counts[d] > 0 for d in kept_ids)
 
 
 def test_journey_build_corpus_to_packed_sequences(spark):
