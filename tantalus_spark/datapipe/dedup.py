@@ -902,8 +902,7 @@ def duplicated_spans(
     frequency is a groupBy on the 8-byte shingle hash (map-side
     partials), and only spans meeting the duplication bar join back —
     per-key fan-out equals that span's doc count, so a pathological
-    mega-span (every doc shares a header) is the only skew source and
-    is exactly what `operators/skew.py` salting handles if it appears.
+    mega-span (every doc shares a header) is the only skew source.
     Returns (id, n_spans, n_dup_spans, dup_frac) for every doc with at
     least one span; docs shorter than *n* tokens are absent.
     """

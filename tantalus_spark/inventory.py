@@ -319,45 +319,6 @@ def q30_window_frames(spark, sf_dir):
     )
 
 
-def q31_asof_join(spark, sf_dir):
-    """As-of join (union + window carry-forward — one shuffle, no pair
-    explosion): each error event picks up the most recent prior-or-same
-    click by the same user. Custom operator Spark lacks natively."""
-    from tantalus_spark.operators.joins import asof_join
-
-    e = db_for(spark, sf_dir).table("events")
-    errs = e.filter(F.col("event_type") == "error").select(
-        "event_id", "user_id", "ts")
-    # dedupe right side per (key, time) so ties are deterministic
-    clicks = (
-        e.filter(F.col("event_type") == "click")
-        .groupBy("user_id", F.col("ts").alias("click_ts"))
-        .agg(F.max("value").alias("click_value"))
-    )
-    return asof_join(errs, clicks, on="user_id",
-                     left_time="ts", right_time="click_ts")
-
-
-def q32_range_join(spark, sf_dir):
-    """Point-in-band range join against a broadcast band dimension."""
-    from tantalus_spark.operators.joins import range_join
-
-    o = db_for(spark, sf_dir).table("orders")
-    spark_bands = o.sparkSession.createDataFrame(
-        [("low", 0.0, 50_000.0), ("mid", 50_000.0, 150_000.0),
-         ("high", 150_000.0, 300_000.0), ("whale", 300_000.0, 1e12)],
-        "band string, lo double, hi double",
-    )
-    joined = range_join(o, spark_bands, "o_totalprice")
-    return (
-        joined.groupBy("band")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            _dec_sum(F.col("o_totalprice"), 2, "band_total"),
-        )
-    )
-
-
 def q33_collect_set(spark, sf_dir):
     """Sorted distinct value list per group (SURVEY §2.10 D2
     get_storage_names; reference models.py:380-385,567-572)."""
@@ -376,7 +337,7 @@ def q34_percentiles(spark, sf_dir):
     doubles, so the oracle is exact with no rounding mask. At 100 TB
     exact quantiles hold full per-group value lists — swap in
     ``approx_percentile`` (mergeable sketch, map-side partials;
-    accuracy-tested in tests/test_skew.py) and keep this as the
+    accuracy-tested in tests/test_operators.py) and keep this as the
     verifier."""
     li = db_for(spark, sf_dir).table("lineitem")
     return li.groupBy("l_returnflag").agg(
@@ -3078,27 +3039,6 @@ ORACLES: dict[str, str] = {
                  ORDER BY l_shipdate, l_orderkey, l_linenumber, l_partkey
                  ROWS BETWEEN 3 PRECEDING AND CURRENT ROW), 4) AS ma4_qty
         FROM lineitem
-    """,
-    "31_asof_join": """
-        WITH clicks AS (
-          SELECT user_id, ts AS click_ts, max(value) AS click_value
-          FROM events WHERE event_type = 'click' GROUP BY 1, 2),
-        errs AS (SELECT event_id, user_id, ts FROM events
-                 WHERE event_type = 'error')
-        SELECT e.event_id, e.user_id, e.ts, c.click_ts, c.click_value
-        FROM errs e ASOF LEFT JOIN clicks c
-          ON e.user_id = c.user_id AND e.ts >= c.click_ts
-    """,
-    "32_range_join": """
-        WITH bands(band, lo, hi) AS (VALUES
-          ('low', 0.0, 50000.0), ('mid', 50000.0, 150000.0),
-          ('high', 150000.0, 300000.0), ('whale', 300000.0, 1e12))
-        SELECT band, count(*) AS n,
-               CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE)
-                 AS band_total
-        FROM orders LEFT JOIN bands
-          ON o_totalprice >= lo AND o_totalprice < hi
-        GROUP BY band
     """,
     "33_collect_set": """
         SELECT o_custkey,

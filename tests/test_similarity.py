@@ -115,6 +115,23 @@ def test_embedding_lsh_pairs_subset_of_exact(emb):
     assert recall >= 0.2, f"recall {recall:.2f} too low for 2 hyperplanes"
 
 
+def test_embedding_lsh_near_dup_subset_of_exact(spark):
+    from tantalus_spark.catalog.loader import read_parquet
+    from tantalus_spark.datapipe.similarity import embedding_near_dup_pairs
+
+    emb = read_parquet(spark, "/root/testdata/sf0.001/embeddings.parquet")
+    exact = {(r["id_a"], r["id_b"])
+             for r in embedding_near_dup_pairs(emb, 0.45).collect()}
+    lsh = {(r["id_a"], r["id_b"])
+           for r in embedding_near_dup_pairs(
+               emb, 0.45, n_hyperplanes=2).collect()}
+    assert lsh <= exact                   # LSH never invents pairs
+    assert len(exact) > 0
+    # with 2 hyperplanes recall should be well above random (1/4 of pairs
+    # survive bucketing at random; similar pairs survive far more often)
+    assert len(lsh) >= len(exact) // 4
+
+
 def test_pq_exact_on_prototype_vectors(spark):
     """On a corpus whose subvectors come from a tiny prototype set, PQ
     with k >= #prototypes reconstructs losslessly: ADC scores equal the
