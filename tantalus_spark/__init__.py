@@ -15,7 +15,8 @@ Spark-first:
 - ``datapipe``  — beyond-parity, LLM-training-data operators: dedup
                   (exact/minhash/simhash/jaccard), similarity search,
                   text analysis
-- ``streaming`` — Structured Streaming ingest of event logs
+- ``streaming`` — versioned serving-index maintenance from a document
+                  stream (foreachBatch maintainers, snapshots, releases)
 
 Everything is declarative DataFrame/SQL so Catalyst owns physical planning
 (broadcast joins for dimensions, AQE, pushdown, whole-stage codegen).

@@ -771,8 +771,8 @@ def novel_documents(
     already-indexed corpus, without re-deduplicating the corpus.
 
     ``index_df`` is a persisted band table as produced by
-    :func:`minhash_bands` over the existing corpus — the batch twin of
-    the streaming near-dup state (`streaming/neardup.py`). Each new
+    :func:`minhash_bands` over the existing corpus (or a band store
+    that :mod:`tantalus_spark.streaming.maintenance` keeps). Each new
     document is banded with the SAME parameters and flagged non-novel
     iff any of its band hashes collides with an index bucket (the
     standard LSH candidate rule; run the survivors through

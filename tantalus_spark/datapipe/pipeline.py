@@ -38,15 +38,13 @@ def _gated_features(
     docs: DataFrame,
     text_col: str,
     id_col: str,
-    passthrough: list[str] | None = None,
 ) -> DataFrame:
     """The shared one-projection feature stage: (id, n_tokens,
-    alpha_ratio, __md5, lang_pred [, passthrough...]). Heavy text
+    alpha_ratio, __md5, lang_pred). Heavy text
     expressions live in ONE projection; the language argmax derives from
     their output columns in a second (see module docstring for why
     CollapseProject keeps them single-evaluated). Batch inputs that land
-    parallelism-starved (single-row-group parquet) are spread first;
-    streaming inputs pass through untouched."""
+    parallelism-starved (single-row-group parquet) are spread first."""
     # The fused pipeline runs several token-explode stages over this one
     # scan — shingle-class per-row CPU, so the spread shuffle pays for
     # itself well below the cheap-projection 2 MB floor (q108: 3.6 s ->
@@ -63,7 +61,6 @@ def _gated_features(
         score_exprs[lang] = expr
     features = docs.select(
         F.col(id_col),
-        *[F.col(c) for c in (passthrough or [])],
         F.size(tokens(text)).alias("n_tokens"),
         F.round(
             F.length(F.regexp_replace(text, "[^a-zA-Z]", ""))
@@ -110,45 +107,6 @@ def clean_corpus(
             (F.col(id_col) == F.col("__keep_id"))
             & _gate_predicate(min_tokens, max_tokens, min_alpha_ratio, langs)
         )
-        .select(id_col, "n_tokens", "lang_pred")
-    )
-
-
-def clean_corpus_stream(
-    docs: DataFrame,
-    ts_col: str = "ts",
-    watermark: str = "2 hours",
-    min_tokens: int = 10,
-    max_tokens: int = 100_000,
-    min_alpha_ratio: float = 0.5,
-    langs: tuple[str, ...] = ("en",),
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """The same gate composition on a continuously-fed corpus: quality +
-    language gates are stateless projections (identical code path to
-    batch via ``_gated_features``), and the exact-dup gate becomes
-    ``dropDuplicatesWithinWatermark`` on the content digest — the stream
-    keeps the FIRST-SEEN document per content within the watermark
-    horizon (batch keeps min-id; identical when arrival follows id
-    order, and identical survivor CONTENT always, since duplicate groups
-    share gate outcomes). State is O(digests per horizon), evicted as the
-    watermark advances."""
-    features = _gated_features(
-        docs, text_col, id_col, passthrough=[ts_col])
-    # gates BEFORE the dedup state, unlike batch: streaming state is the
-    # scarce resource — on a dirty corpus, deduping first would hold a
-    # digest for every arriving document instead of only gate-passing
-    # ones. The survivor CONTENT is identical either way (duplicate
-    # groups share gate outcomes); the cost is predicate pushdown re-
-    # evaluating some feature expressions at the filter — map-stage CPU,
-    # bounded, vs state growth, unbounded.
-    return (
-        features
-        .filter(_gate_predicate(min_tokens, max_tokens, min_alpha_ratio,
-                                langs))
-        .withWatermark(ts_col, watermark)
-        .dropDuplicatesWithinWatermark(["__md5"])
         .select(id_col, "n_tokens", "lang_pred")
     )
 

@@ -179,9 +179,8 @@ def unigram_lm_score(
     back on term.  The (N, V) scalars fold in as plan literals via one
     single-row action over the vocabulary aggregate.  Nothing driver-side
     grows with corpus size; the vocabulary table is the only reused
-    intermediate and is persisted once.  The streaming twin
-    (``streaming/scoring.py lm_score_stream``) reuses the SAME
-    :func:`lm_cost_table` + per-doc reduction against a frozen table.
+    intermediate and is persisted once.  Scoring new text against a
+    frozen table is :func:`lm_cost_table` + :func:`score_with_cost_table`.
     """
     # LAZY end to end: the cost table's (N, V) scalars ride the plan as
     # a broadcast aggregate (_lm_cost_table_lazy) instead of a separate

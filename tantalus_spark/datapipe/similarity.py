@@ -1304,9 +1304,8 @@ def train_quantized_centroid(
 ) -> list[int]:
     """The offline training step for affinity scoring: the integer sum
     vector of the target slice, as a d-element Python list (O(d) driver
-    state — the IVF-centroid precedent). Freeze and version it; the
-    streaming scorer (``streaming/scoring.py affinity_score_stream``)
-    replays it against arriving vectors with zero state."""
+    state — the IVF-centroid precedent). Freeze and version it to score
+    arriving vectors against the same centroid."""
     rows = (df.filter(F.col(vec_col).isNotNull())
               .filter(target_cond)
               .select(F.posexplode(_quantize_expr(vec_col, scale))

@@ -36,8 +36,8 @@ _WS_ASCII = re.compile(r"\s+", re.ASCII)
 
 def py_tokens(text: str) -> list[str]:
     """Exact Python twin of ``tokens(F.lower(col))`` for Arrow-UDF code
-    paths (SimHash, streaming decontamination): Spark ``trim`` strips
-    only ASCII spaces and Java ``\\s`` is ASCII-only, so the twin uses
+    paths: Spark ``trim`` strips only ASCII spaces and Java ``\\s`` is
+    ASCII-only, so the twin uses
     ``strip(" ")`` + an ``re.ASCII`` pattern — NOT ``str.split()``,
     which drops boundary empty tokens and splits on Unicode whitespace.
     Verified equal to the Spark expression (Java ``\\s`` =
@@ -1360,10 +1360,9 @@ def _bm25_score_nano_expr(n_docs: int, avgdl: float,
                           k1: float, b: float) -> Column:
     """The BM25 per-(doc, term) score as an exact nano-integer column
     expression over (tf, dl, df) columns — ONE expression tree shared
-    by the batch scan path (:func:`bm25_rank`), the indexed serving
-    path (:func:`bm25_rank_indexed`), and the streaming serving twin
-    (``streaming/scoring.py bm25_serve_stream``), so all three are
-    bit-identical to one oracle."""
+    by the batch scan path (:func:`bm25_rank`) and the indexed serving
+    path (:func:`bm25_rank_indexed`), so both are bit-identical to one
+    oracle."""
     idf = F.log(F.lit(1.0) + (F.lit(float(n_docs)) - F.col("df") + F.lit(0.5))
                 / (F.col("df") + F.lit(0.5)))
     s = idf * (F.col("tf") * F.lit(k1 + 1.0)) / (
@@ -1945,8 +1944,7 @@ def _dense_leg_scored(
     Norm lookup, best to worst:
 
     * ENRICHED feats (a ``norm`` column on every (id, bucket) row —
-      build once with ``feats.join(hashed_norms(feats), id)``, the same
-      pre-join ``dense_serve_stream`` plans statically): the dots
+      build once with ``feats.join(hashed_norms(feats), id)``): the dots
       aggregate carries ``first(norm)`` and the serving plan has ZERO
       norm joins — the deployment posture.
     * ``norms`` sidecar table: joined onto the bucket-pruned dots side
@@ -2122,9 +2120,7 @@ def hybrid_serve_indexed(
     :func:`hashed_norms` sidecar; fusion = the same
     :func:`_rrf_fuse` as :func:`hybrid_rank_rrf`, so on the same corpus
     the two are bit-identical (parity test in tests/test_textstats.py).
-    This is the batch twin of running ``bm25_serve_stream`` +
-    ``dense_serve_stream`` and fusing consumer-side, and the
-    index-backed upgrade of the reference's free-text search
+    This is the index-backed upgrade of the reference's free-text search
     (search_util/search_helper.py:27-49).
 
     Serving plan shape (plan-contract tested): the postings scan is
@@ -2269,8 +2265,7 @@ def hybrid_serve_topk_batch(
             # merge two requests into one garbled union query
             # (duplicate qterms rows, fanned qnorm join, multiplied
             # fusion rows). Loud contract beats silent corruption;
-            # callers with duplicate request ids re-key rows first
-            # (hybrid_serve_batches does).
+            # callers with duplicate request ids re-key rows first.
             raise ValueError(
                 "hybrid_serve_topk_batch: duplicate query ids")
         all_terms = sorted({t for _, ts in norm_q for t in ts})

@@ -3,7 +3,7 @@
 One entry per operator class from SURVEY.md §2 (parity with the reference's
 Django-ORM query surface, re-expressed on the TPC-H-ish testdata)
 plus the beyond-parity LLM-data-pipeline operators (dedup / similarity /
-text analysis / event-stream analytics).
+text analysis / event-window analytics).
 
 Every query has a DuckDB oracle in ORACLES unless genuinely not
 SQL-expressible (MinHash-LSH, SimHash — rows-only checks).
@@ -1764,8 +1764,7 @@ def q135_js_drift(spark, sf_dir):
     source's hashed-unigram distribution scored by Jensen-Shannon
     divergence against a baseline built from the accepted slice
     (src0-src4) — the per-batch monitor of a production ingestion
-    pipeline (streaming twin: streaming/scoring.py
-    drift_monitor_batches, parity-tested). Exact integer counts,
+    pipeline. Exact integer counts,
     nano-quantized contributions, full oracle."""
     from tantalus_spark.datapipe.textstats import (
         js_against_baseline, token_bucket_counts)

@@ -32,8 +32,7 @@ window is ``keep_versions`` wide and costs O(keep·batch) extra bytes
 (manifests share segments; history is deltas, never index copies).
 
 Serving sessions (:func:`~tantalus_spark.datapipe.textstats.
-bm25_rank_indexed`, ``hybrid_serve_indexed``, ``bm25_serve_stream``)
-read one manifest and keep it for the whole query/run — a swap mid-run
+bm25_rank_indexed`, ``hybrid_serve_indexed``) read one manifest and keep it for the whole query/run — a swap mid-run
 is invisible to them, which is the point of version-swap over in-place
 mutation. The served view is the lazy union of the manifest's segments
 with superseded postings masked by a broadcast tombstone anti-join;
@@ -1514,8 +1513,8 @@ def feats_refresh_batches(
 ):
     """The foreachBatch maintainer for the DENSE hashed-feature table —
     the fourth serving family's streaming maintainer, closing the set
-    (BM25 postings, IVFPQ codes, LSH-band state in
-    streaming/neardup.py, and now the dense leg): the delta is the
+    (BM25 postings, IVFPQ codes, LSH-band state, and now the dense
+    leg): the delta is the
     batch's :func:`~tantalus_spark.datapipe.textstats.hashed_features`
     ENRICHED with its own O(batch)
     :func:`~tantalus_spark.datapipe.textstats.hashed_norms` (norms are

@@ -478,8 +478,8 @@ def test_hybrid_serving_never_aggregates_feature_table(spark, tmp_path):
         r"HashAggregate\(keys=\[doc_id[^,\]]*\],\s*functions=\[\]",
         plan), "full-index distinct(doc_id) in serving plan"
 
-    # ENRICHED layout (norm column written into the feature table —
-    # the dense_serve_stream pre-join posture): the dense leg carries
+    # ENRICHED layout (norm column written into the feature table, the
+    # pre-join posture): the dense leg carries
     # first(norm) through the dots aggregate, so the serving plan has
     # exactly TWO parquet scans (postings + feats) and ZERO norm joins
     (feats_df.join(hashed_norms(feats), "doc_id")

@@ -51,6 +51,35 @@ def test_lm_score_matches_hand_computation(spark):
     assert out[2]["total_millibits"] == cost_a
 
 
+def test_frozen_cost_table_charges_oov_tokens(spark):
+    """A cost table trained on one corpus, frozen, scores NEW text:
+    known tokens cost their trained millibits and every unseen token
+    costs ``oov_cost_mb`` (score_with_cost_table's left-join branch,
+    which unigram_lm_score never takes)."""
+    from tantalus_spark.datapipe.scoring import (
+        lm_cost_table, score_with_cost_table)
+
+    # counts a=3, b=1, N=4, V=2, alpha=1
+    train = spark.createDataFrame([(1, "a a b"), (2, "a")],
+                                  "doc_id long, text string")
+    cost, oov = lm_cost_table(train)
+
+    def mb(c):
+        return math.floor(-math.log2((c + 1) / (4 + 2)) * 1000 + 0.5)
+
+    assert oov == mb(0)
+    assert {r["term"]: r["cost_mb"] for r in cost.collect()} == {
+        "a": mb(3), "b": mb(1)}
+
+    new = spark.createDataFrame([(10, "A zz b zz"), (11, "qq")],
+                                "doc_id long, text string")
+    got = {r["doc_id"]: (r["n_tokens"], r["total_millibits"],
+                         r["mean_cost_millibits"])
+           for r in score_with_cost_table(new, cost, oov).collect()}
+    total = mb(3) + mb(1) + 2 * oov
+    assert got == {10: (4, total, total // 4), 11: (1, oov, oov)}
+
+
 def test_dsir_prefers_target_like_docs(docs):
     out = {
         r["doc_id"]: r
@@ -113,56 +142,6 @@ def test_corpus_shuffle_is_a_deterministic_permutation(spark):
     key = lambda rows: sorted((r["doc_id"], r["shard"], r["position"])
                               for r in rows)
     assert key(out1) == key(out2)
-
-
-def test_lm_score_stream_matches_batch(spark, tmp_path):
-    """The streaming scorer replaying a static corpus against a frozen
-    cost table is bit-identical to the batch scorer (shared cost table,
-    shared integer-millibit reduction)."""
-    import datetime as dt
-
-    from tantalus_spark.datapipe.scoring import (
-        lm_cost_table, score_with_cost_table)
-    from tantalus_spark.streaming.scoring import lm_score_stream
-
-    base = dt.datetime(2024, 1, 1, 12, 0)
-    rows = [
-        (i, f"the cat sat on mat number {i} with oovtok{i}",
-         base + dt.timedelta(minutes=2 * i))
-        for i in range(12)
-    ]
-    # flush sentinel: a doc far in the future pushes the watermark past
-    # every real window so append mode emits them all under availableNow
-    rows.append((999, "flush", base + dt.timedelta(days=2)))
-    schema = "doc_id long, text string, ts timestamp"
-    train = spark.createDataFrame(
-        [(i, "the cat sat on the mat") for i in range(5)],
-        "doc_id long, text string")
-    cost, oov = lm_cost_table(train)
-
-    src = str(tmp_path / "src")
-    batch_df = spark.createDataFrame(rows, schema)
-    batch_df.repartition(2).write.parquet(src)
-    stream = (spark.readStream.format("parquet").schema(schema)
-              .option("maxFilesPerTrigger", 1).load(src))
-    q = (
-        lm_score_stream(stream, cost, oov, watermark="1 second")
-        .writeStream.format("memory").queryName("lm_scores")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    got = {r["doc_id"]: (r["n_tokens"], r["total_millibits"],
-                         r["mean_cost_millibits"])
-           for r in spark.sql("SELECT * FROM lm_scores").collect()
-           if r["doc_id"] != 999}
-    want = {r["doc_id"]: (r["n_tokens"], r["total_millibits"],
-                          r["mean_cost_millibits"])
-            for r in score_with_cost_table(
-                batch_df.drop("ts"), cost, oov).collect()
-            if r["doc_id"] != 999}
-    assert got == want and len(got) == 12
-    # OOV tokens actually charged: every doc has one unseen token
-    assert all(v[1] > 0 for v in got.values())
 
 
 def test_temperature_mix_upweights_small_sources(spark):

@@ -437,38 +437,6 @@ def test_centroid_affinity_skips_null_vectors_and_empty_target_raises(spark):
         centroid_affinity(df, F.col("label") == 99)
 
 
-def test_affinity_score_stream_matches_batch(spark, tmp_path):
-    """Stateless streaming affinity scoring against a frozen centroid is
-    bit-identical to the batch scorer (shared quantization + integer dot,
-    no state, no watermark)."""
-    import numpy as np
-    from pyspark.sql import functions as F
-    from tantalus_spark.datapipe.similarity import (
-        centroid_affinity, train_quantized_centroid)
-    from tantalus_spark.streaming.scoring import affinity_score_stream
-
-    rng = np.random.RandomState(11)
-    vecs = rng.uniform(-0.5, 0.5, size=(30, 6)).astype("float32")
-    rows = [(i, [float(x) for x in vecs[i]], i % 3) for i in range(30)]
-    schema = "vec_id long, embedding array<float>, label int"
-    batch = spark.createDataFrame(rows, schema)
-    centroid = train_quantized_centroid(batch, F.col("label") == 0)
-
-    src = str(tmp_path / "vecs")
-    batch.repartition(2).write.parquet(src)
-    stream = (spark.readStream.format("parquet").schema(schema)
-              .option("maxFilesPerTrigger", 1).load(src))
-    q = (affinity_score_stream(stream, centroid)
-         .writeStream.format("memory").queryName("affinity_scores")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = {r["vec_id"]: r["affinity_q"]
-           for r in spark.sql("SELECT * FROM affinity_scores").collect()}
-    want = {r["vec_id"]: r["affinity_q"]
-            for r in centroid_affinity(batch, F.col("label") == 0).collect()}
-    assert got == want and len(got) == 30
-
-
 def test_sq8_reconstruction_exact_integer_diagnostics(spark):
     from tantalus_spark.datapipe.similarity import (
         sq8_reconstruction, sq8_train_stats)

@@ -964,57 +964,6 @@ def test_bm25_indexed_matches_scan_path(spark):
     assert scan == again
 
 
-def test_bm25_serve_stream_matches_indexed_batch(spark, tmp_path):
-    """The streaming serving twin replaying a static query set against
-    the frozen postings index + build-time corpus stats emits exactly
-    the batch serving path's scores (shared nano-integer scorer
-    expression) — the stream-batch parity guarantee for retrieval."""
-    import datetime as dt
-
-    from tantalus_spark.datapipe.textstats import (
-        bm25_rank_indexed, build_term_index)
-    from tantalus_spark.streaming.scoring import bm25_serve_stream
-
-    filler = " ".join(["pad"] * 25)
-    docs = spark.createDataFrame(
-        [(i, f"apple banana {filler} " + "apple " * (i % 4))
-         for i in range(1, 11)] + [(11, "banana cherry " + filler)],
-        "doc_id long, text string")
-    idx, (n_docs, avgdl) = build_term_index(docs, with_stats=True)
-    terms = ["Apple", "banana", "cherry"]
-
-    base = dt.datetime(2024, 1, 1, 12, 0)
-    qschema = "query_id long, terms array<string>, ts timestamp"
-    src = str(tmp_path / "queries")
-    # two separate writes so the flush sentinel lands in a LATER
-    # micro-batch (FileStreamSource orders files by modification time):
-    # the sentinel pushes the watermark past the real query's window so
-    # append mode emits it under availableNow
-    spark.createDataFrame([(7, terms, base)], qschema) \
-        .coalesce(1).write.mode("append").parquet(src)
-    import time
-    time.sleep(1.1)
-    spark.createDataFrame(
-        [(999, ["zzz"], base + dt.timedelta(days=2))], qschema
-    ).coalesce(1).write.mode("append").parquet(src)
-    stream = (spark.readStream.format("parquet")
-              .schema("query_id long, terms array<string>, ts timestamp")
-              .option("maxFilesPerTrigger", 1).load(src))
-    q = (bm25_serve_stream(stream, idx, n_docs, avgdl,
-                           watermark="1 second")
-         .writeStream.format("memory").queryName("bm25_served")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = {r["doc_id"]: (r["score_nano"], r["n_terms_hit"], r["bm25"])
-           for r in spark.sql(
-               "SELECT * FROM bm25_served WHERE query_id = 7").collect()}
-    # batch twin: k large enough to return every matched doc
-    want = {r["doc_id"]: (r["score_nano"], r["n_terms_hit"], r["bm25"])
-            for r in bm25_rank_indexed(
-                idx, terms, k=100, n_docs=n_docs, avgdl=avgdl).collect()}
-    assert got == want and len(got) == 11
-
-
 def test_tfidf_cosine_pairs_identical_docs_score_one(spark):
     """Two identical documents share every term with equal weights:
     cosine must be exactly 1.0; a disjoint doc must produce no pair.
@@ -1463,111 +1412,6 @@ def test_source_js_divergence_bounds_and_symmetry(spark):
     assert abs(out[("s2", "s3")] - 1.0) < 1e-6
 
 
-def test_dense_serve_stream_matches_batch_dense_leg(spark, tmp_path):
-    """The streaming dense leg replaying a static query set against the
-    frozen hashed-feature table emits exactly the batch q131/q141
-    dense leg (_dense_leg_scored — the ACTUAL shared code path, not a
-    test-local recomputation): same doc set — including any net-dot-0
-    docs, which the batch leg emits with cos_nano 0 and which can
-    occupy within-depth rank slots — and bit-identical nano-cosines."""
-    import datetime as dt
-    import time
-
-    from tantalus_spark.datapipe.textstats import (
-        _dense_leg_scored, _query_hashed_features, hashed_features)
-    from tantalus_spark.streaming.scoring import dense_serve_stream
-
-    filler = " ".join(f"pad{i}" for i in range(20))
-    docs = spark.createDataFrame(
-        [(i, f"apple banana {filler} " + "cherry " * (i % 3))
-         for i in range(1, 9)],
-        "doc_id long, text string")
-    dim, terms = 16, ["Apple", "banana", "cherry"]
-    feats = hashed_features(docs, dim=dim).persist()
-
-    base = dt.datetime(2024, 1, 1, 12, 0)
-    qschema = "query_id long, terms array<string>, ts timestamp"
-    src = str(tmp_path / "dense_queries")
-    spark.createDataFrame([(7, terms, base)], qschema) \
-        .coalesce(1).write.mode("append").parquet(src)
-    time.sleep(1.1)
-    spark.createDataFrame(
-        [(999, ["zzz"], base + dt.timedelta(days=2))], qschema
-    ).coalesce(1).write.mode("append").parquet(src)
-    stream = (spark.readStream.format("parquet").schema(qschema)
-              .option("maxFilesPerTrigger", 1).load(src))
-    q = (dense_serve_stream(stream, feats, dim=dim, watermark="1 second")
-         .writeStream.format("memory").queryName("dense_served")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = {r["doc_id"]: r["cos_nano"]
-           for r in spark.sql(
-               "SELECT * FROM dense_served WHERE query_id = 7").collect()}
-
-    # the ACTUAL batch dense leg (depth > corpus so the limit is inert)
-    qf = _query_hashed_features([t.lower() for t in terms], dim)
-    want = {r["doc_id"]: r["cos_nano"]
-            for r in _dense_leg_scored(feats, qf, depth=100,
-                                       id_col="doc_id",
-                                       norms=None).collect()}
-    feats.unpersist()
-    assert got == want and len(got) >= 4, (got, want)
-
-
-def test_hybrid_serve_batches_matches_batch_operator(spark, tmp_path):
-    """Each query served through the foreachBatch hybrid server equals
-    hybrid_serve_indexed run directly on the same frozen artifacts —
-    the callback IS the batch operator, so parity is bit-exact."""
-    import datetime as dt
-
-    from tantalus_spark.datapipe.textstats import (
-        build_term_index, hashed_features, hashed_norms,
-        hybrid_serve_indexed)
-    from tantalus_spark.streaming.scoring import hybrid_serve_batches
-
-    filler = " ".join(f"pad{i}" for i in range(20))
-    docs = spark.createDataFrame(
-        [(i, f"apple banana {filler} " + "cherry " * (i % 3))
-         for i in range(1, 9)],
-        "doc_id long, text string")
-    idx, (n_docs, avgdl) = build_term_index(docs, with_stats=True)
-    idx = idx.persist()
-    feats = hashed_features(docs, dim=16).persist()
-    norms = hashed_norms(feats).persist()
-    norms.count()
-
-    base = dt.datetime(2024, 1, 1, 12, 0)
-    qschema = "query_id long, terms array<string>, ts timestamp"
-    src = str(tmp_path / "hybrid_queries")
-    spark.createDataFrame(
-        [(1, ["apple", "cherry"], base), (2, ["banana"], base)],
-        qschema).coalesce(1).write.parquet(src)
-
-    got: list[dict] = []
-    stream = (spark.readStream.format("parquet").schema(qschema)
-              .load(src))
-    cb = hybrid_serve_batches(idx, n_docs, avgdl, feats, norms,
-                              sink=got.extend, k=5, depth=8, dim=16)
-    q = (stream.writeStream.foreachBatch(cb)
-         .trigger(availableNow=True)
-         .option("checkpointLocation", str(tmp_path / "ck"))
-         .start())
-    q.awaitTermination(120)
-
-    for qid, terms in [(1, ["apple", "cherry"]), (2, ["banana"])]:
-        want = sorted(
-            (r["doc_id"], r["rank_bm25"], r["rank_dense"], r["rrf"])
-            for r in hybrid_serve_indexed(
-                idx, terms, feats, k=5, depth=8, dim=16,
-                n_docs=n_docs, avgdl=avgdl, norms=norms).collect())
-        have = sorted(
-            (r["doc_id"], r["rank_bm25"], r["rank_dense"], r["rrf"])
-            for r in got if r["query_id"] == qid)
-        assert have == want and len(have) == 5, (qid, have, want)
-    for df in (idx, feats, norms):
-        df.unpersist()
-
-
 def test_index_refresh_batches_rebuild_equal_with_version_swap(
         spark, tmp_path):
     """Streaming index maintenance end to end: after N micro-batches
@@ -1807,59 +1651,6 @@ def test_index_refresh_compaction_and_gc(spark, tmp_path):
     assert segs == referenced, (segs, referenced)
 
 
-def test_drift_monitor_foreachbatch_matches_batch_operator(spark, tmp_path):
-    """Each micro-batch's drift rows equal js_against_baseline run on
-    that batch's rows — the foreachBatch twin IS the batch operator, so
-    parity is bit-exact. Also: a slice identical to the baseline mix
-    scores lower than a disjoint-vocabulary slice."""
-    import time
-
-    from tantalus_spark.datapipe.textstats import (
-        js_against_baseline, token_bucket_counts)
-    from tantalus_spark.streaming.scoring import drift_monitor_batches
-
-    ref_rows = [(i, "alpha beta gamma delta epsilon", "ok") for i in range(8)]
-    ref = spark.createDataFrame(ref_rows,
-                                "doc_id long, text string, source string")
-    baseline = token_bucket_counts(ref, n_buckets=32).persist()
-    baseline.count()
-
-    b1 = [(100 + i, "alpha beta gamma delta epsilon", "same")
-          for i in range(4)]
-    b2 = [(200 + i, "zz qq ww ee rr", "drifted") for i in range(4)]
-    schema = "doc_id long, text string, source string"
-    src = str(tmp_path / "drift_docs")
-    spark.createDataFrame(b1, schema).coalesce(1) \
-        .write.mode("append").parquet(src)
-    time.sleep(1.1)
-    spark.createDataFrame(b2, schema).coalesce(1) \
-        .write.mode("append").parquet(src)
-
-    emitted: list[list[dict]] = []
-    stream = (spark.readStream.format("parquet").schema(schema)
-              .option("maxFilesPerTrigger", 1).load(src))
-    q = (stream.writeStream
-         .foreachBatch(drift_monitor_batches(baseline, emitted.append,
-                                             n_buckets=32))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-
-    got = {r["source"]: (r["js_bits"], r["n_tokens"])
-           for batch in emitted for r in batch}
-    assert set(got) == {"same", "drifted"}
-    # batch-operator parity on each slice
-    for rows in (b1, b2):
-        bdf = spark.createDataFrame(rows, schema)
-        out = js_against_baseline(bdf, baseline, n_buckets=32)
-        for r in out.collect():
-            assert got[r["source"]] == (r["js_bits"], r["n_tokens"])
-        out.unpersist()
-    # identical mix ~0 drift; disjoint vocabulary ~1 bit
-    assert got["same"][0] == 0.0
-    assert abs(got["drifted"][0] - 1.0) < 1e-6
-    baseline.unpersist()
-
-
 def test_js_against_baseline_rejects_empty_baseline(spark):
     from tantalus_spark.datapipe.textstats import (
         js_against_baseline, token_bucket_counts)
@@ -1996,8 +1787,8 @@ def test_hybrid_serve_indexed_matches_scan_path(spark):
     served2 = hybrid_serve_indexed(idx, ["apple", "cherry"], feats,
                                    k=6, depth=8, dim=16)
     assert sorted(map(tuple, served2.collect())) == a
-    # ENRICHED layout (norm column pre-joined at build, the
-    # dense_serve_stream posture): identical too, with zero norm joins
+    # ENRICHED layout (norm column pre-joined at build): identical too,
+    # with zero norm joins
     enriched = feats.join(norms, "doc_id")
     served3 = hybrid_serve_indexed(idx, ["apple", "cherry"], enriched,
                                    k=6, depth=8, dim=16,
@@ -2250,118 +2041,6 @@ def test_hybrid_serve_topk_batch_rejects_duplicate_qids(spark):
     with pytest.raises(ValueError, match="duplicate query ids"):
         hybrid_serve_topk_batch(idx, [(7, ["apple"]), (7, ["banana"])],
                                 feats, dim=16, n_docs=n, avgdl=avg)
-
-
-def test_hybrid_serve_batches_duplicate_and_string_qids(spark, tmp_path):
-    """Regression (r9 review): the foreachBatch server re-keys rows on
-    a surrogate index, so a micro-batch with a REPEATED query_id and a
-    STRING-typed id column serves each row independently (the r8
-    per-query-loop semantics) — each row's results equal the scalar
-    server's for its own terms, tagged with the original id."""
-    import datetime as dt
-
-    from tantalus_spark.datapipe.textstats import (
-        build_term_index, hashed_features, hashed_norms,
-        hybrid_serve_indexed)
-    from tantalus_spark.streaming.scoring import hybrid_serve_batches
-
-    filler = " ".join(f"pad{i}" for i in range(20))
-    docs = spark.createDataFrame(
-        [(i, f"apple banana {filler} " + "cherry " * (i % 3))
-         for i in range(1, 9)],
-        "doc_id long, text string")
-    idx, (n_docs, avgdl) = build_term_index(docs, with_stats=True)
-    idx = idx.persist()
-    feats = hashed_features(docs, dim=16).persist()
-    norms = hashed_norms(feats).persist()
-    norms.count()
-
-    base = dt.datetime(2024, 1, 1, 12, 0)
-    qschema = "query_id string, terms array<string>, ts timestamp"
-    src = str(tmp_path / "dup_queries")
-    spark.createDataFrame(
-        [("req-A", ["apple", "cherry"], base),
-         ("req-A", ["banana"], base)],     # same id, different request
-        qschema).coalesce(1).write.parquet(src)
-
-    got: list[dict] = []
-    stream = (spark.readStream.format("parquet").schema(qschema)
-              .load(src))
-    cb = hybrid_serve_batches(idx, n_docs, avgdl, feats, norms,
-                              sink=got.extend, k=5, depth=8, dim=16)
-    q = (stream.writeStream.foreachBatch(cb)
-         .trigger(availableNow=True)
-         .option("checkpointLocation", str(tmp_path / "ck"))
-         .start())
-    q.awaitTermination(120)
-
-    assert all(r["query_id"] == "req-A" for r in got)
-    assert len(got) == 10  # two independent requests x k=5
-    per_terms = []
-    for terms in (["apple", "cherry"], ["banana"]):
-        per_terms.append(sorted(
-            (r["doc_id"], r["rank_bm25"], r["rank_dense"], r["rrf"])
-            for r in hybrid_serve_indexed(
-                idx, terms, feats, k=5, depth=8, dim=16,
-                n_docs=n_docs, avgdl=avgdl, norms=norms).collect()))
-    have = sorted((r["doc_id"], r["rank_bm25"], r["rank_dense"],
-                   r["rrf"]) for r in got)
-    want = sorted(per_terms[0] + per_terms[1])
-    assert have == want
-    for df in (idx, feats, norms):
-        df.unpersist()
-
-
-def test_hybrid_serve_batches_sink_order_deterministic(spark, tmp_path):
-    """Regression (r9 advice): the batched server must hand ``sink``
-    rows in the r8 per-query-loop order — per-request blocks in
-    request order, (rrf desc, doc_id asc) within each block — not the
-    shuffle order of one unordered collect. Sinks appending to ordered
-    logs depend on it."""
-    import datetime as dt
-
-    from tantalus_spark.datapipe.textstats import (
-        build_term_index, hashed_features, hashed_norms)
-    from tantalus_spark.streaming.scoring import hybrid_serve_batches
-
-    filler = " ".join(f"pad{i}" for i in range(20))
-    docs = spark.createDataFrame(
-        [(i, f"apple banana {filler} " + "cherry " * (i % 3))
-         for i in range(1, 9)],
-        "doc_id long, text string")
-    idx, (n_docs, avgdl) = build_term_index(docs, with_stats=True)
-    idx = idx.persist()
-    feats = hashed_features(docs, dim=16).persist()
-    norms = hashed_norms(feats).persist()
-    norms.count()
-
-    base = dt.datetime(2024, 1, 1, 12, 0)
-    qschema = "query_id long, terms array<string>, ts timestamp"
-    src = str(tmp_path / "ordered_queries")
-    spark.createDataFrame(
-        [(7, ["apple", "cherry"], base), (3, ["banana"], base)],
-        qschema).coalesce(1).write.parquet(src)
-
-    got: list[dict] = []
-    stream = (spark.readStream.format("parquet").schema(qschema)
-              .load(src))
-    cb = hybrid_serve_batches(idx, n_docs, avgdl, feats, norms,
-                              sink=got.extend, k=5, depth=8, dim=16)
-    q = (stream.writeStream.foreachBatch(cb)
-         .trigger(availableNow=True)
-         .option("checkpointLocation", str(tmp_path / "ck"))
-         .start())
-    q.awaitTermination(120)
-
-    assert len(got) == 10
-    # request order (7 first — row order, not id order), contiguous
-    # blocks
-    assert [r["query_id"] for r in got] == [7] * 5 + [3] * 5
-    for block in (got[:5], got[5:]):
-        keys = [(-r["rrf"], r["doc_id"]) for r in block]
-        assert keys == sorted(keys), keys
-    for df in (idx, feats, norms):
-        df.unpersist()
 
 
 def test_gc_enforces_keep_versions_floor(spark, tmp_path):
