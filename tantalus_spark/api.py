@@ -87,14 +87,13 @@ def verify_jwt(token: str, secret: str) -> dict | None:
 
 
 def _coerce(key: str, value: str) -> object:
-    """Query-string params arrive as strings; give the lookups their
-    natural Python types (Spark casts scalars against column types)."""
+    """Query-string params arrive as strings: split ``__in`` lists and
+    read ``__isnull`` flags; Spark casts every other value to its
+    column's type (``services.filtered_queryset`` checks it fits)."""
     if key.endswith("__in"):
         return value.split(",")
     if key.endswith("__isnull"):
         return value.lower() in ("1", "true", "yes")
-    if value.lower() in ("true", "false"):
-        return value.lower() == "true"
     return value
 
 

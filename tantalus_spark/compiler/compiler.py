@@ -33,6 +33,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from tantalus_spark.catalog.relations import Step
 from tantalus_spark.compiler.lookups import LOOKUPS, TRANSFORMS
@@ -282,6 +283,18 @@ class QuerySet:
             f"cannot resolve {path!r}: {head!r} is neither a relation of "
             f"{table!r}, a column ({sorted(columns)[:8]}...), nor a lookup"
         )
+
+    def field_type(self, path: str) -> tuple[T.DataType, str]:
+        """(type of the value a filter on ``path`` is compared with, the
+        path's lookup name): the final column's type, or the type a
+        datetime transform yields."""
+        res = self._resolve_path(path)
+        if res.transform:
+            return (T.DateType() if res.transform == "date"
+                    else T.IntegerType()), res.lookup
+        table = (self.root if res.fk_shortcircuit or not res.steps
+                 else res.steps[-1].dst)
+        return self.db.table(table).schema[res.column].dataType, res.lookup
 
     # ---- compilation -----------------------------------------------------
 

@@ -18,7 +18,11 @@ observes the total in the same scan, and ``Page.rows`` is that list."""
 
 from __future__ import annotations
 
+import calendar
 import json
+import re
+
+from pyspark.sql import types as T
 
 from tantalus_spark.catalog.loader import Database
 from tantalus_spark.operators.pagination import Page, paginate
@@ -26,6 +30,45 @@ from tantalus_spark.operators.pagination import Page, paginate
 
 class UnknownFilterError(Exception):
     """api/views.py:75-80 APIException('no filter ...') analog."""
+
+
+# Lookups whose value Spark casts to the compared column's type; under
+# ANSI a value the type cannot take fails the request's Spark job.
+_CAST_LOOKUPS = {"exact", "in", "gt", "gte", "lt", "lte"}
+_CAST_TRIM = "".join(map(chr, range(33)))  # what Spark's string casts strip
+_INTEGRAL_BITS = {T.ByteType: 8, T.ShortType: 16, T.IntegerType: 32,
+                  T.LongType: 64}
+_INTEGRAL = re.compile(r"[+-]?[0-9]+")
+_BOOLEAN = {"t", "true", "y", "yes", "1", "f", "false", "n", "no", "0"}
+# a date, optionally followed by a time part (not checked), or a bare time
+_DATETIME = re.compile(
+    r"[+-]?([0-9]{4,7})(?:-([0-9]{1,2})(?:-([0-9]{1,2}))?)?(?:[ T]|$)"
+    r"|T[0-9]{1,2}|[0-9]{1,2}:")
+
+
+def _castable(value: str, dtype: T.DataType) -> bool:
+    """Whether Spark's cast of the string ``value`` to ``dtype`` can
+    succeed. Exact for integral and boolean types; for dates and
+    timestamps only the date part is checked."""
+    v = value.strip(_CAST_TRIM)
+    bits = _INTEGRAL_BITS.get(type(dtype))
+    if bits:
+        return (_INTEGRAL.fullmatch(v) is not None
+                and -(1 << bits - 1) <= int(v) < 1 << bits - 1)
+    if isinstance(dtype, T.BooleanType):
+        return v.lower() in _BOOLEAN
+    if isinstance(dtype, (T.DateType, T.TimestampType, T.TimestampNTZType)):
+        m = _DATETIME.match(v)
+        if m is None or m.group(2) is None:
+            return m is not None
+        year, month = int(m.group(1)), int(m.group(2))
+        if not 1 <= month <= 12:
+            return False
+        if m.group(3) is None:
+            return True
+        days = calendar.mdays[month] + (month == 2 and calendar.isleap(year))
+        return 1 <= int(m.group(3)) <= days
+    return True
 
 
 # param -> extra lookups beyond exact (api/filters.py:55-298)
@@ -97,6 +140,13 @@ def filtered_queryset(db: Database, endpoint: str, params: dict[str, object]):
         if key not in legal:
             raise UnknownFilterError(
                 f"no filter {key!r} on {endpoint!r}; legal: {sorted(legal)}")
+        dtype, lookup = qs.field_type(key)
+        if lookup in _CAST_LOOKUPS:
+            for v in value if isinstance(value, (list, tuple)) else [value]:
+                if isinstance(v, str) and not _castable(v, dtype):
+                    raise UnknownFilterError(
+                        f"filter {key!r} on {endpoint!r}: {v!r} is not a "
+                        f"{dtype.simpleString()} value")
         qs = qs.filter(**{key: value})
     return qs
 

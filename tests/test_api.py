@@ -11,6 +11,8 @@ import urllib.request
 import pytest
 
 from tantalus_spark.api import ApiServer
+from tantalus_spark.catalog.loader import Database
+from tantalus_spark.catalog.tantalus_model import SCHEMAS, tantalus_catalog
 
 
 @pytest.fixture(scope="module")
@@ -53,6 +55,45 @@ def test_unknown_param_is_400_naming_legal_set(server):
         get(server, "/api/sample/?bogus=1")
     assert e.value.code == 400
     assert "no filter" in json.loads(e.value.read())["detail"]
+
+
+def test_filter_value_the_column_cannot_take_is_400(server):
+    """A filter value its column's type cannot take is a client error
+    naming the param, not an engine fault inside the list job."""
+    for path, param in (
+            ("/api/tag/?id=abc", "id"),
+            ("/api/tag/?id=1.5", "id"),
+            ("/api/file_instance/?is_deleted=maybe", "is_deleted"),
+            ("/api/file_instance/?file_resource__in=a,b",
+             "file_resource__in"),
+            ("/api/sequence_dataset/?last_updated__gte=abc",
+             "last_updated__gte")):
+        with pytest.raises(urllib.error.HTTPError) as e:
+            get(server, path)
+        assert e.value.code == 400, path
+        assert repr(param) in json.loads(e.value.read())["detail"], path
+    # values the types take still filter
+    assert get(server, "/api/tag/?id=2")[1]["count"] == 1
+    assert get(server, "/api/file_instance/?is_deleted=True")[0] == 200
+    assert get(server, "/api/file_instance/?file_resource__in=1,2")[0] == 200
+
+
+def test_string_filter_takes_boolean_words_literally(spark):
+    """?name=true on a string column matches the tag named "true", not
+    a boolean."""
+    db = Database(spark, tantalus_catalog())
+    db.add("tag", spark.createDataFrame(
+        [(1, "prod", None), (2, "true", None), (3, "True", None),
+         (4, "false", None)], SCHEMAS["tag"]))
+    srv = ApiServer(db)
+    host, port = srv.serve_background()
+    try:
+        for word, pk in (("true", 2), ("True", 3), ("false", 4)):
+            status, body = get(f"http://{host}:{port}", f"/api/tag/?name={word}")
+            assert status == 200
+            assert [r["id"] for r in body["results"]] == [pk], word
+    finally:
+        srv.shutdown()
 
 
 def test_list_request_runs_one_spark_job(tdb):
