@@ -20,6 +20,29 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def replay_stream(spark, tmp_path):
+    """Replay static frames as a parquet file stream, one file per
+    micro-batch, through a ``foreachBatch`` callback; returns once the
+    backlog is processed (availableNow). Calling it again with the same
+    ``name`` appends the new frames and restarts from the same
+    checkpoint, so only the new files are processed."""
+    def run(frames, on_batch, name="replay"):
+        src, ckpt = tmp_path / name / "src", tmp_path / name / "ckpt"
+        for f in frames:
+            f.coalesce(1).write.mode("append").parquet(str(src))
+        q = (spark.readStream.format("parquet").schema(frames[0].schema)
+             .option("maxFilesPerTrigger", 1).load(str(src))
+             .writeStream.foreachBatch(on_batch)
+             .option("checkpointLocation", str(ckpt))
+             .trigger(availableNow=True).start())
+        if not q.awaitTermination(120):
+            q.stop()
+            raise TimeoutError(f"stream {name!r} did not finish in 120 s")
+
+    return run
+
+
 def _ts(y, m, d, h=0):
     return dt.datetime(y, m, d, h)
 

@@ -1,4 +1,3 @@
-from pyspark.sql import functions as F
 
 
 def test_dedup_funnel_stage_attribution(spark):
@@ -297,53 +296,3 @@ def test_band_store_pre_postings_segment_migration(spark, tmp_path):
         probe, live_post, index_layout="postings").collect())) == \
         sorted(map(tuple, novel_documents(
             probe, minhash_bands(survivors)).collect()))
-
-
-def test_novel_documents_matches_driver_side_band_reference(spark):
-    """A new doc is non-novel exactly when one of its (band, bucket)
-    pairs appears among the corpus's collected minhash_bands rows; a doc
-    too short to band has no row and is novel."""
-    from tantalus_spark.catalog.loader import read_parquet
-    from tantalus_spark.datapipe.dedup import minhash_bands, novel_documents
-
-    docs = read_parquet(spark, "/root/testdata/sf0.001/documents.parquet") \
-        .select("doc_id", "text")
-    corpus = docs.filter(F.col("doc_id") % 2 == 0)
-    new = docs.filter(F.col("doc_id") % 2 == 1)
-
-    flags = {r["doc_id"]: r["is_novel"]
-             for r in novel_documents(new, minhash_bands(corpus)).collect()}
-
-    indexed = {(band, h) for r in minhash_bands(corpus).collect()
-               for band, h in enumerate(r["bands"])}
-    new_bands = {r["doc_id"]: r["bands"]
-                 for r in minhash_bands(new).collect()}
-    expected = {
-        d: not any((band, h) in indexed
-                   for band, h in enumerate(new_bands.get(d, [])))
-        for d in (r["doc_id"] for r in new.select("doc_id").collect())
-    }
-    assert flags == expected
-    assert any(not v for v in flags.values())     # fixture has real dups
-
-
-def test_novel_documents_from_persisted_index(spark, tmp_path_factory):
-    """The docstring's claimed workflow end to end: band the corpus,
-    PERSIST the index as parquet, reload in a fresh frame, and probe a
-    new batch against it — flags must match the in-memory path."""
-    from tantalus_spark.catalog.loader import read_parquet
-    from tantalus_spark.datapipe.dedup import minhash_bands, novel_documents
-
-    docs = read_parquet(spark, "/root/testdata/sf0.001/documents.parquet") \
-        .select("doc_id", "text")
-    corpus = docs.filter(F.col("doc_id") % 2 == 0)
-    new = docs.filter(F.col("doc_id") % 2 == 1)
-    want = {r["doc_id"]: r["is_novel"]
-            for r in novel_documents(new, minhash_bands(corpus)).collect()}
-
-    idx_path = str(tmp_path_factory.mktemp("bandidx") / "index.parquet")
-    minhash_bands(corpus).write.mode("overwrite").parquet(idx_path)
-    reloaded = spark.read.parquet(idx_path)
-    got = {r["doc_id"]: r["is_novel"]
-           for r in novel_documents(new, reloaded).collect()}
-    assert got == want and any(not v for v in got.values())

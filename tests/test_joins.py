@@ -1,139 +1,8 @@
-"""Tests for the custom join operators (as-of, range, bucketed-range) and
-the embedding near-dup LSH path."""
+"""Join-key and similarity-join helpers: ``epoch_expr`` (the event-time
+key q50 sessionizes on) and the embedding near-dup pair self-join with
+its LSH-banded form."""
 
 from __future__ import annotations
-
-import datetime as dt
-
-import pytest
-
-from pyspark.sql import functions as F
-
-from tantalus_spark.operators.joins import (
-    asof_join,
-    bucketed_range_join,
-    range_join,
-)
-
-
-def _t(m):
-    return dt.datetime(2024, 1, 1, 0, m)
-
-
-@pytest.fixture(scope="module")
-def trades_quotes(spark):
-    trades = spark.createDataFrame(
-        [("A", _t(5), 100), ("A", _t(10), 101), ("B", _t(7), 200),
-         ("C", _t(1), 300)],
-        "sym string, t timestamp, trade_id int",
-    )
-    quotes = spark.createDataFrame(
-        [("A", _t(4), 9.0), ("A", _t(10), 10.0), ("A", _t(12), 11.0),
-         ("B", _t(9), 20.0)],
-        "sym string, qt timestamp, px double",
-    )
-    return trades, quotes
-
-
-def test_asof_backward_inclusive(trades_quotes):
-    trades, quotes = trades_quotes
-    out = {r["trade_id"]: r for r in asof_join(
-        trades, quotes, on="sym", left_time="t", right_time="qt").collect()}
-    assert out[100]["px"] == 9.0          # most recent prior quote
-    assert out[101]["px"] == 10.0         # equal timestamp matches (inclusive)
-    assert out[200]["px"] is None         # B's only quote is later
-    assert out[300]["px"] is None         # C has no quotes
-    assert len(out) == 4                  # left join keeps all rows
-
-
-def test_asof_forward(trades_quotes):
-    trades, quotes = trades_quotes
-    out = {r["trade_id"]: r for r in asof_join(
-        trades, quotes, on="sym", left_time="t", right_time="qt",
-        direction="forward").collect()}
-    assert out[100]["px"] == 10.0         # next quote at/after 0:05 is 0:10
-    assert out[101]["px"] == 10.0         # inclusive
-    assert out[200]["px"] == 20.0
-    assert out[300]["px"] is None
-
-
-def test_asof_tolerance(trades_quotes):
-    trades, quotes = trades_quotes
-    out = {r["trade_id"]: r for r in asof_join(
-        trades, quotes, on="sym", left_time="t", right_time="qt",
-        tolerance_seconds=90).collect()}
-    assert out[100]["px"] == 9.0          # 60s back, within tolerance
-    assert out[101]["px"] == 10.0         # exact
-    # B/C unmatched stay null
-    assert out[200]["px"] is None and out[300]["px"] is None
-
-
-def test_asof_tolerance_excludes_stale(spark):
-    left = spark.createDataFrame([("A", _t(30), 1)],
-                                 "k string, t timestamp, lid int")
-    right = spark.createDataFrame([("A", _t(0), 5.0)],
-                                  "k string, rt timestamp, v double")
-    out = asof_join(left, right, on="k", left_time="t", right_time="rt",
-                    tolerance_seconds=60).collect()
-    assert out[0]["v"] is None            # 30 min stale > 60s tolerance
-
-
-def test_asof_name_collision_suffix(spark):
-    left = spark.createDataFrame([("A", _t(5), 1.0)],
-                                 "k string, t timestamp, v double")
-    right = spark.createDataFrame([("A", _t(1), 2.0)],
-                                  "k string, rt timestamp, v double")
-    out = asof_join(left, right, on="k", left_time="t", right_time="rt")
-    # right_time ('rt') is carried through like any other right column
-    assert set(out.columns) == {"k", "t", "v", "rt", "v_right"}
-    row = out.collect()[0]
-    assert row["v"] == 1.0 and row["v_right"] == 2.0
-
-
-def test_asof_single_shuffle_plan(trades_quotes):
-    trades, quotes = trades_quotes
-    plan = asof_join(trades, quotes, on="sym", left_time="t",
-                     right_time="qt")._jdf.queryExecution() \
-        .executedPlan().toString()
-    # no join operator at all: union + one window
-    assert "Join" not in plan
-
-
-@pytest.fixture(scope="module")
-def points_bands(spark):
-    points = spark.createDataFrame(
-        [(1, 5.0), (2, 15.0), (3, 25.0), (4, 999.0)], "pid int, x double")
-    bands = spark.createDataFrame(
-        [("a", 0.0, 10.0), ("b", 10.0, 20.0), ("c", 20.0, 30.0)],
-        "band string, lo double, hi double")
-    return points, bands
-
-
-def test_range_join_left(points_bands):
-    points, bands = points_bands
-    out = {r["pid"]: r["band"] for r in
-           range_join(points, bands, "x").collect()}
-    assert out == {1: "a", 2: "b", 3: "c", 4: None}
-
-
-def test_bucketed_range_join_matches_naive(points_bands):
-    points, bands = points_bands
-    naive = range_join(points, bands, "x").filter(
-        F.col("band").isNotNull()).select("pid", "band")
-    bucketed = bucketed_range_join(points, bands, "x", bucket_width=7.0) \
-        .select("pid", "band")
-    assert sorted(map(tuple, naive.collect())) == \
-           sorted(map(tuple, bucketed.collect()))
-
-
-def test_bucketed_range_join_wide_intervals(spark):
-    # interval spanning many buckets still matches every contained point
-    points = spark.createDataFrame(
-        [(i, float(i)) for i in range(0, 100, 10)], "pid int, x double")
-    iv = spark.createDataFrame([("wide", 5.0, 95.0)],
-                               "band string, lo double, hi double")
-    out = bucketed_range_join(points, iv, "x", bucket_width=10.0).collect()
-    assert sorted(r["pid"] for r in out) == [10, 20, 30, 40, 50, 60, 70, 80, 90]
 
 
 def test_embedding_lsh_near_dup_subset_of_exact(spark):
@@ -151,37 +20,6 @@ def test_embedding_lsh_near_dup_subset_of_exact(spark):
     # with 2 hyperplanes recall should be well above random (1/4 of pairs
     # survive bucketing at random; similar pairs survive far more often)
     assert len(lsh) >= len(exact) // 4
-
-
-def test_asof_join_matches_pandas_merge_asof(spark):
-    # independent oracle: pandas merge_asof over a deterministic dataset
-    import datetime as _dt
-
-    import pandas as pd
-
-    base = _dt.datetime(2024, 1, 1)
-    lrows = [(f"K{i % 5}", base + _dt.timedelta(minutes=(i * 7) % 97), i)
-             for i in range(60)]
-    rrows = [(f"K{i % 5}", base + _dt.timedelta(minutes=(i * 11) % 89),
-              float(i)) for i in range(40)]
-    # dedupe right per (key, time) like the operator requires
-    seen = {}
-    for k, t, v in rrows:
-        seen[(k, t)] = max(seen.get((k, t), -1.0), v)
-    rrows = [(k, t, v) for (k, t), v in seen.items()]
-
-    left = spark.createDataFrame(lrows, "k string, t timestamp, lid int")
-    right = spark.createDataFrame(rrows, "k string, rt timestamp, v double")
-    got = {r["lid"]: r["v"] for r in asof_join(
-        left, right, on="k", left_time="t", right_time="rt").collect()}
-
-    lp = pd.DataFrame(lrows, columns=["k", "t", "lid"]).sort_values("t")
-    rp = pd.DataFrame(rrows, columns=["k", "rt", "v"]).sort_values("rt")
-    merged = pd.merge_asof(lp, rp, left_on="t", right_on="rt", by="k",
-                           direction="backward")
-    want = {int(r.lid): (None if pd.isna(r.v) else r.v)
-            for r in merged.itertuples()}
-    assert got == want
 
 
 def test_epoch_expr_all_type_branches(spark):

@@ -1,532 +1,116 @@
-"""Tests for the multimodal binary-column plumbing (mapInPandas) and the
-Structured Streaming event analytics (batch/stream parity)."""
+"""Incremental near-dup and decontamination over a document stream,
+built from the batch operators a ``foreachBatch`` sink calls: each
+micro-batch is probed with ``novel_documents`` against the band index of
+the batches before it, or run through ``decontaminate``, and the stream's
+answer must equal the batch operator's on the whole corpus."""
 
 from __future__ import annotations
 
-import datetime as dt
-
-import pytest
+import os
 
 from pyspark.sql import functions as F
 
-from tantalus_spark.datapipe import multimodal as mm
-from tantalus_spark.streaming import events as se
+from tantalus_spark.catalog.loader import read_parquet
+from tantalus_spark.datapipe.dedup import (
+    decontaminate,
+    minhash_bands,
+    minhash_lsh_pairs,
+    novel_documents,
+)
+
+DOCS = "/root/testdata/sf0.001/documents.parquet"
 
 
-@pytest.fixture(scope="module")
-def media(spark):
-    rows = [
-        (1, "image", "image/png", b"\x89PNG" + b"a" * 100, None),
-        (2, "image", "image/png", b"\x89PNG" + b"a" * 100, None),  # dup payload
-        (3, "audio", "audio/wav", b"RIFF" + b"b" * 50, '{"sr": 44100}'),
-        (4, "video", "video/mp4", b"\x00\x00ftyp" + b"c" * 200, None),
-        (5, "image", None, None, None),                            # null payload
-    ]
-    return spark.createDataFrame(rows, schema=mm.MEDIA_SCHEMA)
-
-
-def test_media_features_schema_and_values(media):
-    feats = {r["media_id"]: r for r in mm.media_features(media).collect()}
-    assert set(feats) == {1, 2, 3, 4, 5}
-    assert feats[1]["n_bytes"] == 104
-    assert feats[1]["payload_xxh"] == feats[2]["payload_xxh"]
-    assert feats[1]["width"] is not None and feats[1]["duration_ms"] is None
-    assert feats[3]["duration_ms"] is not None and feats[3]["width"] is None
-    assert feats[5]["n_bytes"] == 0 and feats[5]["payload_xxh"] is None
-
-
-def test_media_features_plan_prunes_and_avoids_shuffle(media):
-    plan = mm.media_features(media)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan  # map-only: binary payloads never shuffle
-
-
-def test_custom_decoder_hook(media):
-    mm.set_decoder(lambda payload, kind: {
-        "width": 1, "height": 2, "duration_ms": 3})
-    try:
-        row = mm.media_features(media).filter("media_id = 1").collect()[0]
-        assert (row["width"], row["height"], row["duration_ms"]) == (1, 2, 3)
-    finally:
-        mm.set_decoder(None)
-
-
-def test_frame_sample_plan(media):
-    frames = mm.frame_sample_plan(media, every_ms=60000).collect()
-    assert frames and all(r["media_id"] == 4 for r in frames)
-    idxs = sorted(r["frame_idx"] for r in frames)
-    assert idxs == list(range(len(idxs)))
-    assert all(r["frame_ts_ms"] == r["frame_idx"] * 60000 for r in frames)
-
-
-def test_exact_media_dedup(media):
-    groups = {r["payload_md5"]: r for r in mm.exact_media_dedup(media).collect()}
-    dup = [g for g in groups.values() if g["n_copies"] == 2]
-    assert len(dup) == 1 and dup[0]["keep_id"] == 1
-
-
-# ---------------------------------------------------------------------------
-# Structured Streaming
-# ---------------------------------------------------------------------------
-
-@pytest.fixture(scope="module")
-def event_dir(spark, tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("events"))
-
-    def ts(h, m=0):
-        return dt.datetime(2024, 1, 1, h, m)
-
-    rows = [
-        (1, ts(0, 5), 10, "click", 1.0, None),
-        (2, ts(0, 20), 10, "click", 2.0, None),
-        (3, ts(0, 40), 11, "view", 3.0, None),
-        (4, ts(1, 10), 10, "click", 4.0, None),   # >30min gap => new session
-        (5, ts(2, 30), 11, "error", 5.0, None),
-        (6, ts(2, 45), 11, "error", 6.0, None),
-    ]
-    df = spark.createDataFrame(rows, schema=se.EVENT_SCHEMA)
-    df.coalesce(2).write.mode("overwrite").parquet(path)
-    return path
-
-
-def test_windowed_counts_stream_matches_batch(spark, event_dir):
-    stream = se.read_event_stream(spark, event_dir)
-    assert stream.isStreaming
-    # complete mode: append would hold back windows the watermark has not
-    # passed yet (the tail of a bounded stream never finalizes)
-    got = se.run_to_completion(
-        se.windowed_counts(stream), "t_windowed",
-        output_mode="complete").collect()
-    batch = (
-        spark.read.parquet(event_dir)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("sum_value"))
-        .select(F.col("w.start").alias("ws"), "event_type", "n", "sum_value")
-        .collect()
-    )
-    key = lambda r: (r["ws"], r["event_type"])
-    assert sorted(map(key, got)) == sorted(map(key, batch))
-    assert {key(r): (r["n"], r["sum_value"]) for r in got} == \
-           {key(r): (r["n"], r["sum_value"]) for r in batch}
-
-
-def test_stateful_totals_ttl_eviction_logic():
-    """The TTL state transition, unit-tested with a stub GroupState: a
-    timed-out group evicts and emits nothing; a live group accumulates,
-    re-arms its timeout, and emits. (A real processing-time timeout
-    cannot fire deterministically in a bounded replay — registered
-    timeouts keep availableNow/processAllAvailable from settling, which
-    is why user_running_totals documents TTL as continuous-trigger-only.)"""
-    import pandas as pd
-
-    from tantalus_spark.streaming.events import _totals_update_fn
-
-    class StubState:
-        def __init__(self, existing=None, timed_out=False):
-            self._v, self.hasTimedOut = existing, timed_out
-            self.removed, self.timeout_ms = False, None
-
-        exists = property(lambda s: s._v is not None)
-        get = property(lambda s: s._v)
-
-        def update(self, v):
-            self._v = v
-
-        def remove(self):
-            self.removed, self._v = True, None
-
-        def setTimeoutDuration(self, ms):
-            self.timeout_ms = ms
-
-    fn = _totals_update_fn(idle_ttl_minutes=60)
-    # timed-out group: state evicted, nothing emitted
-    st = StubState(existing=(5, 9.0), timed_out=True)
-    assert list(fn((10,), iter([]), st)) == []
-    assert st.removed and not st.exists
-    # live group: accumulates over prior state, re-arms the timeout
-    st = StubState(existing=(2, 3.0))
-    batch = pd.DataFrame({"value": [1.0, None]})
-    out = list(fn((10,), iter([batch]), st))
-    assert st.get == (4, 4.0)            # +2 events, +1.0 (None -> 0)
-    assert st.timeout_ms == 60 * 60 * 1000
-    assert out[0].iloc[0]["n_events"] == 4
-    # no-TTL variant must not arm a timeout (NoTimeout would throw)
-    st = StubState()
-    list(_totals_update_fn(None)((11,), iter([batch]), st))
-    assert st.timeout_ms is None
-
-
-def test_stateful_running_totals(spark, event_dir):
-    # one file per trigger -> state must survive across micro-batches
-    stream = se.read_event_stream(spark, event_dir, max_files_per_trigger=1)
-    rows = se.run_to_completion(
-        se.user_running_totals(stream), "t_state",
-        output_mode="update").collect()
-    finals = {}
-    for r in rows:                      # last emitted row per user wins
-        finals[r["user_id"]] = (r["n_events"], r["total_value"])
-    batch = {
-        r["user_id"]: (r["n"], r["tv"])
-        for r in spark.read.parquet(event_dir)
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("tv"))
-        .collect()
-    }
-    assert finals == batch
-    # state actually accumulated across batches: more emissions than users
-    assert len(rows) > len(finals)
-
-
-def test_session_windows(spark, event_dir):
-    stream = se.read_event_stream(spark, event_dir)
-    rows = se.run_to_completion(
-        se.session_windows(stream, gap="30 minutes"), "t_sessions",
-        output_mode="complete").collect()
-    by_user = {}
-    for r in rows:
-        by_user.setdefault(r["user_id"], []).append(r)
-    # user 10: events at 0:05,0:20 then 1:10 -> 2 sessions
-    assert len(by_user[10]) == 2
-    assert sorted(r["n_events"] for r in by_user[10]) == [1, 2]
-    # user 11: 0:40 alone, then 2:30+2:45 together -> 2 sessions
-    assert len(by_user[11]) == 2
-    assert sorted(r["session_value"] for r in by_user[11]) == [3.0, 11.0]
-
-
-def test_stream_history_capture(spark, event_dir, tmp_path_factory):
-    from tantalus_spark.streaming.ingest import stream_history_capture
-
-    out = str(tmp_path_factory.mktemp("hist_out"))
-    ckpt = str(tmp_path_factory.mktemp("hist_ckpt"))
-    stream = se.read_event_stream(spark, event_dir, max_files_per_trigger=1)
-    q = stream_history_capture(stream, out, ckpt)
-    q.awaitTermination()
-    back = spark.read.parquet(out)
-    src = spark.read.parquet(event_dir)
-    assert back.count() == src.count()
-    # date-partitioned layout + history typing applied
-    assert "__event_date" in back.columns
-    types = {r["history_type"] for r in back.select("history_type").collect()}
-    assert types <= {"+", "-", "~"}
-    n_err = src.filter("event_type = 'error'").count()
-    assert back.filter("history_type = '-'").count() == n_err
-    # restart with same checkpoint: no new data -> no duplicates
-    q2 = stream_history_capture(
-        se.read_event_stream(spark, event_dir, max_files_per_trigger=1),
-        out, ckpt)
-    q2.awaitTermination()
-    assert spark.read.parquet(out).count() == src.count()
-
-
-def test_resize_images_stub_plumbing(media):
-    out = {r["media_id"]: r for r in
-           mm.resize_images(media, 224, 224).collect()}
-    # only images pass the gate; payloads pass through the stub
-    assert set(out) == {1, 2, 5}
-    assert out[1]["width"] == 224 and out[1]["resized"]
-    assert out[1]["payload"] is not None
-    assert out[5]["width"] is None and not out[5]["resized"]
-
-
-def test_jsonl_event_stream(spark, event_dir, tmp_path_factory):
-    jdir = str(tmp_path_factory.mktemp("events_jsonl"))
-    src = spark.read.parquet(event_dir)
-    src.coalesce(1).write.mode("overwrite").json(jdir)
-    stream = se.read_event_stream(spark, jdir, fmt="json")
-    got = se.run_to_completion(
-        se.windowed_counts(stream), "t_jsonl",
-        output_mode="complete").collect()
-    assert sum(r["n"] for r in got) == src.count()
-
-
-def test_dedup_stream_drops_redelivered_events(spark, tmp_path_factory):
-    """At-least-once redelivery: the same event_id arriving twice within
-    the watermark horizon must survive exactly once, and downstream counts
-    must match the batch dedup of the same data."""
-    path = str(tmp_path_factory.mktemp("events_dup"))
-    t0 = dt.datetime(2024, 1, 1, 0)
-
-    def ts(m):
-        return t0 + dt.timedelta(minutes=m)
-
-    rows = [
-        (1, ts(5), 10, "click", 1.0, None),
-        (2, ts(6), 10, "click", 2.0, None),
-        (1, ts(5), 10, "click", 1.0, None),    # exact redelivery
-        (3, ts(40), 11, "view", 3.0, None),
-        (2, ts(6), 10, "click", 2.0, None),    # redelivery in later file
-    ]
-    df = spark.createDataFrame(rows, schema=se.EVENT_SCHEMA)
-    df.coalesce(3).write.mode("overwrite").parquet(path)
-
-    stream = se.read_event_stream(spark, path, max_files_per_trigger=1)
-    got = se.run_to_completion(
-        se.dedup_stream(stream, watermark="2 hours"), "dedup_stream_t")
-    ids = sorted(r["event_id"] for r in got.collect())
-    assert ids == [1, 2, 3]
-
-
-def test_stdlib_media_probe_real_formats(spark):
-    """media_features must extract REAL dimensions/durations from actual
-    file headers (stdlib probe) — not the deterministic fake — for PNG,
-    GIF, BMP, JPEG, and WAV payloads."""
-    import io
-    import struct
-    import wave
-
-    from tantalus_spark.datapipe import multimodal as mm
-
-    png = (b"\x89PNG\r\n\x1a\n" + struct.pack(">I", 13) + b"IHDR"
-           + struct.pack(">II", 640, 480) + b"\x08\x02\x00\x00\x00" + b"\0" * 8)
-    gif = b"GIF89a" + struct.pack("<HH", 320, 200) + b"\0" * 6
-    bmp = (b"BM" + b"\0" * 16 + struct.pack("<Ii", 800, 600) + b"\0" * 8)
-    jpeg = (b"\xff\xd8"
-            + b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\0" + b"\0" * 9
-            + b"\xff\xc0" + struct.pack(">H", 11) + b"\x08"
-            + struct.pack(">HH", 1080, 1920) + b"\x03" + b"\0" * 2)
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(8000)
-        w.writeframes(b"\0\0" * 4000)   # 4000 frames @ 8kHz = 500ms
-    wav = buf.getvalue()
-
-    rows = [
-        (1, "image", None, png, None),
-        (2, "image", None, gif, None),
-        (3, "image", None, bmp, None),
-        (4, "image", None, jpeg, None),
-        (5, "audio", None, wav, None),
-    ]
-    media = spark.createDataFrame(rows, schema=mm.MEDIA_SCHEMA)
-    got = {r["media_id"]: r for r in mm.media_features(media).collect()}
-    assert (got[1]["width"], got[1]["height"]) == (640, 480)
-    assert (got[2]["width"], got[2]["height"]) == (320, 200)
-    assert (got[3]["width"], got[3]["height"]) == (800, 600)
-    assert (got[4]["width"], got[4]["height"]) == (1920, 1080)
-    assert got[5]["duration_ms"] == 500
-
-
-def test_incremental_lsh_stream_matches_batch(spark, tmp_path_factory):
-    """Stream-vs-batch parity for incremental MinHash-LSH: replaying a
-    corpus file-by-file through the stateful band index yields exactly
-    the candidate-pair set the batch band self-join produces, and every
-    batch-VERIFIED near-dup pair is among the stream candidates."""
-    from tantalus_spark.catalog.loader import read_parquet
-    from tantalus_spark.datapipe.dedup import minhash_bands, minhash_lsh_pairs
-    from tantalus_spark.streaming.neardup import lsh_candidate_stream
-
-    docs = read_parquet(spark, "/root/testdata/sf0.001/documents.parquet") \
-        .select("doc_id", "text")
-    # batch truth: same row-local band hashes, bucket self-join
+def test_incremental_lsh_stream_matches_batch(spark, tmp_path,
+                                              replay_stream):
+    """Replaying the corpus as a three-file stream, a doc is flagged
+    non-novel exactly when the batch (band, bucket) self-join pairs it
+    with a doc of an EARLIER micro-batch, and every batch-VERIFIED
+    near-dup pair that spans two micro-batches flags its later doc."""
+    docs = read_parquet(spark, DOCS).select("doc_id", "text")
+    # batch truth: same row-local band hashes, (band, bucket) self-join
     b = minhash_bands(docs).select(
-        "doc_id", F.explode("bands").alias("bucket"))
+        "doc_id", F.posexplode("bands").alias("band", "bucket"))
     x, y = b.alias("x"), b.alias("y")
-    batch_pairs = {
+    band_pairs = [
         (r["d1"], r["d2"])
-        for r in x.join(y, (F.col("x.bucket") == F.col("y.bucket"))
+        for r in x.join(y, (F.col("x.band") == F.col("y.band"))
+                        & (F.col("x.bucket") == F.col("y.bucket"))
                         & (F.col("x.doc_id") < F.col("y.doc_id")))
         .select(F.col("x.doc_id").alias("d1"), F.col("y.doc_id").alias("d2"))
         .distinct().collect()
-    }
+    ]
 
-    # replay the corpus as a 3-file stream, one file per micro-batch, so
-    # candidates must bridge batches through the band-bucket state
-    ddir = str(tmp_path_factory.mktemp("docstream"))
-    docs.repartition(3).write.mode("overwrite").parquet(ddir)
-    stream = (
-        spark.readStream.format("parquet")
-        .schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .load(ddir)
-    )
-    import tantalus_spark.streaming.events as se2
-    got = se2.run_to_completion(
-        lsh_candidate_stream(stream), "t_lsh_stream")
-    stream_pairs = {(r["d1"], r["d2"]) for r in got.collect()}
+    index = str(tmp_path / "band_index")
+    batch_of, flags = {}, {}
 
-    assert stream_pairs == batch_pairs
-    assert len(batch_pairs) > 0
+    def on_batch(batch_df, batch_id):
+        ids = [r["doc_id"] for r in batch_df.select("doc_id").collect()]
+        batch_of.update(dict.fromkeys(ids, batch_id))
+        if os.path.exists(index):
+            probe = novel_documents(batch_df, spark.read.parquet(index))
+            flags.update((r["doc_id"], r["is_novel"])
+                         for r in probe.collect())
+        else:                                   # nothing indexed yet
+            flags.update(dict.fromkeys(ids, True))
+        minhash_bands(batch_df).write.mode("append").parquet(index)
+
+    replay_stream([docs.filter(F.col("doc_id") % 3 == k) for k in range(3)],
+                  on_batch)
+
+    assert len(set(batch_of.values())) == 3
+    assert set(flags) == set(batch_of)
+    hit = set()
+    for d1, d2 in band_pairs:
+        if batch_of[d1] != batch_of[d2]:
+            hit.add(d1 if batch_of[d1] > batch_of[d2] else d2)
+    assert flags == {d: d not in hit for d in batch_of}
+    assert hit, "fixture must have near-dups across micro-batches"
     # candidate recall vs the full batch operator's verified output
-    verified = {(r["d1"], r["d2"])
-                for r in minhash_lsh_pairs(docs, threshold=0.2).collect()}
-    assert verified <= stream_pairs
+    verified = [(r["d1"], r["d2"])
+                for r in minhash_lsh_pairs(docs, threshold=0.2).collect()]
+    for d1, d2 in verified:
+        if batch_of[d1] != batch_of[d2]:
+            later = d1 if batch_of[d1] > batch_of[d2] else d2
+            assert not flags[later], (d1, d2)
 
 
-def test_stdlib_probe_golden_files():
-    """Golden-file decode: REAL minimal files built byte-by-byte in-test
-    (the sources/xlsx.py fixture approach) — the probe must return exact
-    header metadata, not fake plumbing values."""
-    import io
-    import struct
-    import wave
-
-    from tantalus_spark.datapipe.multimodal import stdlib_media_probe
-
-    # PNG: signature + IHDR (width=640, height=480)
-    png = (b"\x89PNG\r\n\x1a\n"
-           + struct.pack(">I", 13) + b"IHDR"
-           + struct.pack(">II", 640, 480) + b"\x08\x02\x00\x00\x00"
-           + b"\x00\x00\x00\x00")
-    assert stdlib_media_probe(png, "image") == {
-        "width": 640, "height": 480, "duration_ms": None}
-
-    # GIF89a: logical screen 320x200 (little-endian)
-    gif = b"GIF89a" + struct.pack("<HH", 320, 200) + b"\x00\x00\x00"
-    assert stdlib_media_probe(gif, "image") == {
-        "width": 320, "height": 200, "duration_ms": None}
-
-    # BMP: BITMAPINFOHEADER, 100x50, top-down (negative height -> 50 tall)
-    bmp = (b"BM" + struct.pack("<IHHI", 122, 0, 0, 54)
-           + struct.pack("<IiiHH", 40, 100, -50, 1, 24) + b"\x00" * 24)
-    assert stdlib_media_probe(bmp, "image")["width"] == 100
-    assert stdlib_media_probe(bmp, "image")["height"] == -50
-
-    # JPEG: SOI, APP0(JFIF), a 0xFF fill byte + RST standalone marker
-    # before SOF0 (height=480, width=640) — exercises the marker scan
-    app0 = b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00\x01\x01" + b"\x00" * 7
-    sof0 = (b"\xff\xff\xd0"                   # fill byte + RST0 (standalone)
-            + b"\xff\xc0" + struct.pack(">H", 17) + b"\x08"
-            + struct.pack(">HH", 480, 640) + b"\x03" + b"\x00" * 9)
-    jpeg = b"\xff\xd8" + app0 + sof0
-    assert stdlib_media_probe(jpeg, "image") == {
-        "height": 480, "width": 640, "duration_ms": None}
-
-    # WAV written by the stdlib writer itself: 1000 frames @ 8 kHz = 125 ms
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(8000)
-        w.writeframes(b"\x00\x00" * 1000)
-    assert stdlib_media_probe(buf.getvalue(), "audio") == {
-        "width": None, "height": None, "duration_ms": 125}
-
-    # unrecognized bytes -> None (caller falls back), never an exception
-    assert stdlib_media_probe(b"\x00\x01garbage", "image") is None
-    assert stdlib_media_probe(b"", "image") is None
-
-
-def test_clean_corpus_stream_matches_batch(spark, tmp_path_factory):
-    """Streaming corpus cleaning parity: same gates, same survivors as
-    the batch pipeline when documents arrive in id order (the stream
-    keeps first-seen per content digest; batch keeps min-id)."""
-    from tantalus_spark.catalog.loader import read_parquet
-    from tantalus_spark.datapipe.pipeline import clean_corpus, clean_corpus_stream
-
-    docs = (
-        read_parquet(spark, "/root/testdata/sf0.001/documents.parquet")
-        .select("doc_id", "text")
-        .withColumn("ts", F.timestamp_micros(
-                    (F.lit(1_700_000_000) + F.col("doc_id")) * 1000000))
-        # base offset: epoch-0 event time sits exactly on the initial
-        # watermark and would be dropped as late
-    )
-    def content_groups(out):
-        # the dedup gate keeps ONE representative per content digest —
-        # batch picks min-id, the stream picks first-seen (arbitrary
-        # inside a micro-batch), so parity is on surviving CONTENT
-        return {(r["__md5"], r["n_tokens"], r["lang_pred"])
-                for r in out.join(docs.select(
-                    "doc_id", F.md5("text").alias("__md5")),
-                    "doc_id").collect()}
-
-    batch_out = clean_corpus(docs)
-    batch = content_groups(batch_out)
-
-    ddir = str(tmp_path_factory.mktemp("cleanstream"))
-    docs.orderBy("doc_id").coalesce(1).write.mode("overwrite").parquet(ddir)
-    stream = (
-        spark.readStream.format("parquet")
-        .schema("doc_id long, text string, ts timestamp")
-        .load(ddir)
-    )
-    import tantalus_spark.streaming.events as se2
-    got = se2.run_to_completion(
-        clean_corpus_stream(stream), "t_clean_stream")
-    assert got.count() == batch_out.count()   # one survivor per group
-    assert content_groups(got) == batch
-    assert len(batch) > 0
-
-
-def test_decontaminate_stream_matches_batch(spark, tmp_path_factory):
-    """Streaming decontamination parity: per-doc shared-13-gram counts on
-    a replayed corpus equal the batch broadcast-probe exactly."""
-    from tantalus_spark.catalog.loader import read_parquet
-    from tantalus_spark.datapipe.dedup import decontaminate, shingles
-    from tantalus_spark.streaming.neardup import decontaminate_stream
-
-    docs = read_parquet(spark, "/root/testdata/sf0.001/documents.parquet") \
-        .select("doc_id", "text")
+def test_decontaminate_stream_matches_batch(spark, replay_stream):
+    """Decontamination is per document: running ``decontaminate`` on each
+    micro-batch of a two-file corpus stream flags exactly the batch
+    run's docs with the same shared-13-gram counts, and the clean sets
+    agree."""
+    docs = read_parquet(spark, DOCS).select("doc_id", "text")
     bench = docs.filter(F.col("doc_id") < 5)
     corpus = docs.filter(F.col("doc_id") >= 5)
     _, hits = decontaminate(corpus, bench, n=13)
     batch_hits = {r["doc_id"]: r["n_hits"] for r in hits.collect()}
     assert batch_hits, "fixture must contain contamination"
 
-    shingle_list = [r["shingle"] for r in
-                    shingles(bench, n=13).select("shingle")
-                    .distinct().collect()]
-    ddir = str(tmp_path_factory.mktemp("decontstream"))
-    corpus.repartition(2).write.mode("overwrite").parquet(ddir)
-    stream = (spark.readStream.format("parquet")
-              .schema("doc_id long, text string")
-              .option("maxFilesPerTrigger", 1).load(ddir))
-    import tantalus_spark.streaming.events as se2
-    got = se2.run_to_completion(
-        decontaminate_stream(stream, shingle_list, n=13), "t_decont")
-    stream_hits = {r["doc_id"]: r["n_bench_hits"]
-                   for r in got.filter(F.col("n_bench_hits") > 0).collect()}
+    stream_hits, n_clean = {}, []
+
+    def on_batch(batch_df, batch_id):
+        clean, hits = decontaminate(batch_df, bench, n=13)
+        for r in hits.collect():
+            assert r["doc_id"] not in stream_hits
+            stream_hits[r["doc_id"]] = r["n_hits"]
+        n_clean.append(clean.count())
+
+    replay_stream([corpus.filter(F.col("doc_id") % 2 == k) for k in (0, 1)],
+                  on_batch)
+    assert len(n_clean) == 2
     assert stream_hits == batch_hits
-    # and the clean sets agree
-    assert got.filter(F.col("n_bench_hits") == 0).count() \
-        == corpus.count() - len(batch_hits)
-
-
-def test_lsh_stream_bucket_cap(spark, tmp_path_factory):
-    """max_bucket bounds streaming state: members beyond the cap pair
-    against the retained docs when they ARRIVE (cluster still
-    connectable) but are not retained as probe targets for later docs."""
-    from tantalus_spark.streaming.neardup import lsh_candidate_stream
-
-    text = "the quick brown fox jumps over the lazy dog again and again"
-    ddir = str(tmp_path_factory.mktemp("capstream"))
-    spark.createDataFrame([(i, text) for i in (1, 2, 3, 4)],
-                          "doc_id long, text string") \
-        .coalesce(1).write.mode("overwrite").parquet(ddir + "/f1")
-    spark.createDataFrame([(5, text)], "doc_id long, text string") \
-        .coalesce(1).write.mode("overwrite").parquet(ddir + "/f2")
-    import os
-    import shutil
-    for i, sub in enumerate(("f1", "f2")):
-        src = [f for f in os.listdir(f"{ddir}/{sub}")
-               if f.endswith(".parquet")][0]
-        shutil.move(f"{ddir}/{sub}/{src}", f"{ddir}/part-{i}.parquet")
-        shutil.rmtree(f"{ddir}/{sub}")
-
-    stream = (spark.readStream.format("parquet")
-              .schema("doc_id long, text string")
-              .option("maxFilesPerTrigger", 1).load(ddir))
-    got = se.run_to_completion(
-        lsh_candidate_stream(stream, max_bucket=3), "t_lsh_cap")
-    pairs = {(r["d1"], r["d2"]) for r in got.collect()}
-    # batch 1 (docs 1-4): all in-batch pairs emitted regardless of cap
-    batch1 = {(a, b) for a in (1, 2, 3, 4) for b in (1, 2, 3, 4) if a < b}
-    # batch 2 (doc 5): probes only the retained [1,2,3] — never doc 4
-    assert pairs == batch1 | {(1, 5), (2, 5), (3, 5)}
-    assert (4, 5) not in pairs
+    assert sum(n_clean) == corpus.count() - len(batch_hits)
 
 
 def test_novel_documents_is_the_batch_twin_of_the_stream_index(spark):
-    """Batch novel_documents must agree with the incremental stream
-    index: a new doc is non-novel exactly when the streamed band state
-    (corpus batch 1, new docs batch 2) emits an old-x-new candidate
-    pair for it."""
-    import tempfile
-
+    """Batch novel_documents must agree with the state an incremental
+    band index keeps, the set of (band, bucket) pairs of every indexed
+    doc, here collected from the corpus's minhash_bands rows: a new doc
+    is non-novel exactly when one of its pairs is in that set; a doc
+    too short to band has no row and is novel."""
     from tantalus_spark.catalog.loader import read_parquet
     from tantalus_spark.datapipe.dedup import minhash_bands, novel_documents
-    from tantalus_spark.streaming.neardup import lsh_candidate_stream
 
     docs = read_parquet(spark, "/root/testdata/sf0.001/documents.parquet") \
         .select("doc_id", "text")
@@ -536,26 +120,15 @@ def test_novel_documents_is_the_batch_twin_of_the_stream_index(spark):
     flags = {r["doc_id"]: r["is_novel"]
              for r in novel_documents(new, minhash_bands(corpus)).collect()}
 
-    with tempfile.TemporaryDirectory() as ddir:
-        corpus.coalesce(1).write.mode("overwrite").parquet(f"{ddir}/b0")
-        new.coalesce(1).write.mode("append").parquet(f"{ddir}/b0")
-        stream = (
-            spark.readStream.format("parquet")
-            .schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .load(f"{ddir}/b0")
-        )
-        import tantalus_spark.streaming.events as se2
-        pairs = se2.run_to_completion(
-            lsh_candidate_stream(stream), "t_novel_twin").collect()
-
-    indexed = {r["doc_id"] for r in corpus.select("doc_id").collect()}
-    hit_via_stream = set()
-    for r in pairs:
-        a, b = r["d1"], r["d2"]
-        if (a in indexed) != (b in indexed):      # old x new pairs only
-            hit_via_stream.add(b if a in indexed else a)
-    expected = {d: d not in hit_via_stream for d in flags}
+    indexed = {(band, h) for r in minhash_bands(corpus).collect()
+               for band, h in enumerate(r["bands"])}
+    new_bands = {r["doc_id"]: r["bands"]
+                 for r in minhash_bands(new).collect()}
+    expected = {
+        d: not any((band, h) in indexed
+                   for band, h in enumerate(new_bands.get(d, [])))
+        for d in (r["doc_id"] for r in new.select("doc_id").collect())
+    }
     assert flags == expected
     assert any(not v for v in flags.values())     # fixture has real dups
 

