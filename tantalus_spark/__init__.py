@@ -15,8 +15,9 @@ Spark-first:
 - ``datapipe``  — beyond-parity, LLM-training-data operators: dedup
                   (exact/minhash/simhash/jaccard), similarity search,
                   text analysis
-- ``streaming`` — versioned serving-index maintenance from a document
-                  stream (foreachBatch maintainers, snapshots, releases)
+- ``streaming`` — versioned BM25 serving-index maintenance from a
+                  document stream (a foreachBatch maintainer, as-of
+                  reads, audits and snapshots)
 
 Everything is declarative DataFrame/SQL so Catalyst owns physical planning
 (broadcast joins for dimensions, AQE, pushdown, whole-stage codegen).

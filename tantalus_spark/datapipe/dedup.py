@@ -771,8 +771,7 @@ def novel_documents(
     already-indexed corpus, without re-deduplicating the corpus.
 
     ``index_df`` is a persisted band table as produced by
-    :func:`minhash_bands` over the existing corpus (or a band store
-    that :mod:`tantalus_spark.streaming.maintenance` keeps). Each new
+    :func:`minhash_bands` over the existing corpus. Each new
     document is banded with the SAME parameters and flagged non-novel
     iff any of its band hashes collides with an index bucket (the
     standard LSH candidate rule; run the survivors through
@@ -795,10 +794,9 @@ def novel_documents(
     )
     # index_layout: 'bands' = one row per doc with a "bands" array
     # (minhash_bands output / a live band-table view); 'postings' =
-    # pre-exploded DISTINCT (band, h) rows (export_band_snapshot's
-    # postings leaf, or load_band_index(..., layout="postings")) —
-    # the corpus-scale explode+dedup shuffle is paid once at
-    # export/commit instead of per serve. 'auto' keeps the old
+    # pre-exploded DISTINCT (band, h) rows — the corpus-scale
+    # explode+dedup shuffle is paid once when the postings are
+    # written instead of per serve. 'auto' keeps the old
     # sniffing for callers that pass raw frames, but only engages
     # the postings path when the frame is EXACTLY (band, h) — a
     # joined/enriched band table that happens to carry those names

@@ -2203,63 +2203,6 @@ def q154_ann_eval_tabular(spark, sf_dir):
     return ivf_pq_topk_batch(codes, cents, books, qdf, k=10, nprobe=3)
 
 
-def q155_maintained_hybrid_serve(spark, sf_dir):
-    """The full production serving posture in one oracled entry: BOTH
-    index families maintained INCREMENTALLY on their segmented stores
-    — the BM25 postings store (index_refresh_batches: delta segments,
-    tombstones, exact manifest stats) and the ENRICHED dense-feature
-    store (feats_refresh_batches: bucket-partitioned segments) — fed
-    the same three CDC batches (q152's adds / deletes + same-batch
-    delete-re-add / adds, max_segments=2 so both stores compact), then
-    ONE hybrid_serve_topk_batch job off load_term_index +
-    load_feats_index: term- and bucket-pruned scans, manifest stats,
-    zero norm joins, zero raw-text scans. Bit-identical to a rebuild
-    over the survivors — exactly what the oracle computes (the q147
-    CTEs over the survivor predicate)."""
-    import atexit
-    import shutil
-    import tempfile
-
-    from tantalus_spark.datapipe.textstats import hybrid_serve_topk_batch
-    from tantalus_spark.streaming.maintenance import (
-        _run_parallel, feats_refresh_batches, index_refresh_batches,
-        load_feats_index, load_term_index)
-
-    docs = db_for(spark, sf_dir).table("documents").select("doc_id",
-                                                           "text")
-    root = tempfile.mkdtemp(prefix="tantalus_q155_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
-    cb_ix = index_refresh_batches(root + "/ix", op_col="op",
-                                  max_segments=2)
-    cb_ft = feats_refresh_batches(root + "/feats", dim=64, op_col="op",
-                                  max_segments=2)
-    add = lambda df: df.withColumn("op", F.lit("add"))  # noqa: E731
-    dels = (docs.filter(F.col("doc_id") % 21 == 0)
-                .select("doc_id",
-                        F.lit(None).cast("string").alias("text"))
-                .withColumn("op", F.lit("delete")))
-    batches = [
-        add(docs.filter(F.col("doc_id") % 3 == 0)),
-        (add(docs.filter(F.col("doc_id") % 3 == 1))
-         .unionByName(dels)
-         .unionByName(add(docs.filter(F.col("doc_id") % 42 == 0)))),
-        add(docs.filter(F.col("doc_id") % 3 == 2)),
-    ]
-    # the two stores are fed by SEPARATE foreachBatch sinks — their
-    # commit chains are independent (disjoint dirs, own manifests), so
-    # run the chains concurrently (guide §2.6); commit order WITHIN
-    # each store stays strict.
-    _run_parallel(lambda: [cb_ix(b, i) for i, b in enumerate(batches)],
-                  lambda: [cb_ft(b, i) for i, b in enumerate(batches)])
-    postings, (n, avgdl) = load_term_index(spark, root + "/ix")
-    feats = load_feats_index(spark, root + "/feats")
-    return hybrid_serve_topk_batch(
-        postings, [(1, ["customer", "sort", "hash"]),
-                   (2, ["merge", "join"]),
-                   (3, ["hash", "table"])],
-        feats, k=10, depth=40, rrf_k=60, dim=64, n_docs=n, avgdl=avgdl)
-
-
 def q156_index_time_travel(spark, sf_dir):
     """Time-travel reads on the segmented store: q152's three CDC
     commits (adds; deletes + same-batch delete/re-add + adds; adds,
@@ -2300,66 +2243,6 @@ def q156_index_time_travel(spark, sf_dir):
     postings, (n, avgdl) = load_term_index(spark, ix, as_of=1)
     return bm25_rank_indexed(postings, ["customer", "merge", "sort"],
                              k=15, n_docs=n, avgdl=avgdl)
-
-
-def q157_consistent_asof_serve(spark, sf_dir):
-    """Cross-store snapshot isolation: the BM25 postings store and the
-    ENRICHED dense-feature store are maintained by the SAME CDC
-    batches through separate foreachBatch sinks — and the postings
-    store has committed batch 2 while the feats store stopped at
-    batch 1 (maintainer lag, or a crash between the two commits; the
-    at-least-once contract says feats batch 2 will replay later).
-    Serving both CURRENTs would fuse two different corpus states;
-    instead the serve pins every store to
-    ``as_of=common_batch_id(ix, feats)`` — the newest batch BOTH have
-    committed — so one hybrid job reads one consistent snapshot.
-    Bit-identical to the q147-shape rebuild over the batch-0/1
-    survivors, which is what the oracle computes."""
-    import atexit
-    import shutil
-    import tempfile
-
-    from tantalus_spark.datapipe.textstats import hybrid_serve_topk_batch
-    from tantalus_spark.streaming.maintenance import (
-        _run_parallel, common_batch_id, feats_refresh_batches,
-        index_refresh_batches, load_feats_index, load_term_index)
-
-    docs = db_for(spark, sf_dir).table("documents").select("doc_id",
-                                                           "text")
-    root = tempfile.mkdtemp(prefix="tantalus_q157_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
-    cb_ix = index_refresh_batches(root + "/ix", op_col="op",
-                                  max_segments=2, keep_versions=4)
-    cb_ft = feats_refresh_batches(root + "/feats", dim=64, op_col="op",
-                                  max_segments=2, keep_versions=4)
-    add = lambda df: df.withColumn("op", F.lit("add"))  # noqa: E731
-    dels = (docs.filter(F.col("doc_id") % 21 == 0)
-                .select("doc_id",
-                        F.lit(None).cast("string").alias("text"))
-                .withColumn("op", F.lit("delete")))
-    batches = [
-        add(docs.filter(F.col("doc_id") % 3 == 0)),
-        (add(docs.filter(F.col("doc_id") % 3 == 1))
-         .unionByName(dels)
-         .unionByName(add(docs.filter(F.col("doc_id") % 42 == 0)))),
-        add(docs.filter(F.col("doc_id") % 3 == 2)),
-    ]
-    # separate foreachBatch sinks: the two commit chains are
-    # independent (disjoint dirs, own manifests) — run them
-    # concurrently (guide §2.6); order WITHIN each store stays strict,
-    # and the feats maintainer still stops one batch behind.
-    _run_parallel(
-        lambda: [cb_ix(b, i) for i, b in enumerate(batches)],
-        lambda: [cb_ft(b, i) for i, b in enumerate(batches[:2])])
-    b = common_batch_id(root + "/ix", root + "/feats")
-    postings, (n, avgdl) = load_term_index(spark, root + "/ix",
-                                           as_of=b)
-    feats = load_feats_index(spark, root + "/feats", as_of=b)
-    return hybrid_serve_topk_batch(
-        postings, [(1, ["customer", "sort", "hash"]),
-                   (2, ["merge", "join"]),
-                   (3, ["hash", "table"])],
-        feats, k=10, depth=40, rrf_k=60, dim=64, n_docs=n, avgdl=avgdl)
 
 
 def q158_store_stats_audit(spark, sf_dir):
@@ -2445,408 +2328,6 @@ def q159_snapshot_promote_serve(spark, sf_dir):
     postings, (n, avgdl) = load_term_snapshot(spark, root + "/snap")
     return bm25_rank_indexed(postings, ["customer", "merge", "sort"],
                              k=15, n_docs=n, avgdl=avgdl)
-
-
-def q160_snapshot_hybrid_serve(spark, sf_dir):
-    """r11: snapshot promotion completed for the HYBRID pair — q155's
-    both-stores-maintained lifecycle (BM25 postings store + ENRICHED
-    dense-feature store fed the same three CDC batches, both
-    compacting), then BOTH stores promoted: export_term_snapshot
-    (audit-gated, term-sorted) and export_feats_snapshot (duplicate-
-    key-gated, bucket-partitioned) fold each masked LSM view into one
-    immutable artifact, and ONE hybrid_serve_topk_batch job runs off
-    load_term_snapshot + load_feats_snapshot — zero segment unions,
-    zero tombstone joins (plan-contract test in tests/test_plans.py),
-    the LSM-for-writes / snapshot-for-reads split now covering both
-    serving families of the hybrid tier. Bit-identical to q155's
-    live-store serve, so the oracle is q155's rebuild verbatim."""
-    import atexit
-    import shutil
-    import tempfile
-
-    from tantalus_spark.datapipe.textstats import hybrid_serve_topk_batch
-    from tantalus_spark.streaming.maintenance import (
-        _run_parallel, export_feats_snapshot, export_term_snapshot,
-        feats_refresh_batches, index_refresh_batches,
-        load_feats_snapshot, load_term_snapshot)
-
-    docs = db_for(spark, sf_dir).table("documents").select("doc_id",
-                                                           "text")
-    root = tempfile.mkdtemp(prefix="tantalus_q160_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
-    cb_ix = index_refresh_batches(root + "/ix", op_col="op",
-                                  max_segments=2)
-    cb_ft = feats_refresh_batches(root + "/feats", dim=64, op_col="op",
-                                  max_segments=2)
-    add = lambda df: df.withColumn("op", F.lit("add"))  # noqa: E731
-    dels = (docs.filter(F.col("doc_id") % 21 == 0)
-                .select("doc_id",
-                        F.lit(None).cast("string").alias("text"))
-                .withColumn("op", F.lit("delete")))
-    batches = [
-        add(docs.filter(F.col("doc_id") % 3 == 0)),
-        (add(docs.filter(F.col("doc_id") % 3 == 1))
-         .unionByName(dels)
-         .unionByName(add(docs.filter(F.col("doc_id") % 42 == 0)))),
-        add(docs.filter(F.col("doc_id") % 3 == 2)),
-    ]
-    # separate foreachBatch sinks: the two commit chains are
-    # independent (disjoint dirs, own manifests) — run them
-    # concurrently (guide §2.6); order WITHIN each store stays strict.
-    # The two promotions are independent too (each reads its own store,
-    # writes its own snapshot dir), so they overlap the same way.
-    _run_parallel(lambda: [cb_ix(b, i) for i, b in enumerate(batches)],
-                  lambda: [cb_ft(b, i) for i, b in enumerate(batches)])
-    _run_parallel(
-        lambda: export_term_snapshot(spark, root + "/ix",
-                                     root + "/snap_ix", partitions=8),
-        lambda: export_feats_snapshot(spark, root + "/feats",
-                                      root + "/snap_ft"))
-    postings, (n, avgdl) = load_term_snapshot(spark, root + "/snap_ix")
-    feats = load_feats_snapshot(spark, root + "/snap_ft")
-    return hybrid_serve_topk_batch(
-        postings, [(1, ["customer", "sort", "hash"]),
-                   (2, ["merge", "join"]),
-                   (3, ["hash", "table"])],
-        feats, k=10, depth=40, rrf_k=60, dim=64, n_docs=n, avgdl=avgdl)
-
-
-def q161_snapshot_ann_serve(spark, sf_dir):
-    """r11: snapshot promotion for the IVFPQ family, driver-visible —
-    the ANN code-table store maintained through three CDC batches
-    (adds %3==0; deletes 21|id + same-batch delete/re-add 42|id +
-    adds %3==1; adds %3==2, max_segments=2 so the fold fires) with
-    the frozen q151 quantizer/codebooks, then export_ann_snapshot
-    promotes CURRENT (duplicate-vec_id audit gate, tombstones applied
-    physically, one ivf_list-partitioned artifact, snapshot.json
-    last) and ivf_pq_topk_batch serves THREE queries off
-    load_ann_snapshot in one job — one partition-pruned code scan,
-    zero segment unions, zero tombstone joins (plan-contract test in
-    tests/test_plans.py). Bit-identical to a rebuild over the
-    survivors with the same artifacts, which is what the oracle
-    computes (q151's CTEs over the survivor population)."""
-    import atexit
-    import shutil
-    import tempfile
-
-    from tantalus_spark.datapipe.similarity import ivf_pq_topk_batch
-    from tantalus_spark.streaming.maintenance import (
-        ann_refresh_batches, export_ann_snapshot, load_ann_snapshot)
-
-    emb = db_for(spark, sf_dir).table("embeddings")
-    iv = (emb.filter(F.col("embedding").isNotNull())
-             .select("vec_id",
-                     F.transform("embedding",
-                                 lambda x: F.floor(x.cast("double")
-                                                   * F.lit(32.0))
-                                 .cast("double")).alias("embedding")))
-    # unordered collect (by_id is a dict — row order is immaterial);
-    # the old orderBy planned a range-exchange job per call (r14)
-    head = iv.filter(F.col("vec_id") <= 16).collect()
-    by_id = {r["vec_id"]: [float(x) for x in r["embedding"]]
-             for r in head}
-    cents = [by_id[i] for i in range(8)]
-    books = [[by_id[c + 1][j * 8:(j + 1) * 8] for c in range(16)]
-             for j in range(8)]
-    root = tempfile.mkdtemp(prefix="tantalus_q161_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
-    cb = ann_refresh_batches(root + "/ann", cents, books, op_col="op",
-                             max_segments=2)
-    add = lambda df: df.withColumn("op", F.lit("add"))  # noqa: E731
-    dels = (iv.filter(F.col("vec_id") % 21 == 0)
-              .select("vec_id",
-                      F.lit(None).cast("array<double>")
-                       .alias("embedding"))
-              .withColumn("op", F.lit("delete")))
-    cb(add(iv.filter(F.col("vec_id") % 3 == 0)), 0)
-    cb(add(iv.filter(F.col("vec_id") % 3 == 1))
-       .unionByName(dels)
-       .unionByName(add(iv.filter(F.col("vec_id") % 42 == 0))), 1)
-    cb(add(iv.filter(F.col("vec_id") % 3 == 2)), 2)  # fold fires
-    export_ann_snapshot(spark, root + "/ann", root + "/snap")
-    codes = load_ann_snapshot(spark, root + "/snap")
-    return ivf_pq_topk_batch(
-        codes, cents, books,
-        [(0, by_id[0]), (5, by_id[5]), (9, by_id[9])],
-        k=10, nprobe=3)
-
-
-def q162_band_store_novel_serve(spark, sf_dir):
-    """r11: the LSH band index joins the segmented store — the FOURTH
-    serving family gets the full lifecycle q152/q159 gave the BM25
-    postings (and q160/q161 gave feats/IVFPQ): three CDC batches
-    through band_refresh_batches (adds %4==0; deletes 20|id + a
-    same-batch delete/re-add 40|id + adds %4==1; adds %4==2, with
-    max_segments=2 so the fold fires), then export_band_snapshot
-    promotes CURRENT (duplicate-id audit gate, tombstones applied
-    physically, one id-distributed artifact, snapshot.json last) and
-    novel_documents serves the %4==3 probe batch off
-    load_band_snapshot — zero segment unions, zero tombstone joins.
-    Bit-identical to q150-style novelty against minhash_bands over
-    the survivors, which is what the oracle computes (md5 hash family
-    so DuckDB can replay the banding exactly). Upgrades the
-    reference's per-request dedup scan
-    (search_util/search_helper.py:27-49 re-queries per search) into a
-    maintained, versioned, promotable dedup state."""
-    import atexit
-    import shutil
-    import tempfile
-
-    from tantalus_spark.datapipe.dedup import novel_documents
-    from tantalus_spark.streaming.maintenance import (
-        band_refresh_batches, export_band_snapshot, load_band_snapshot)
-
-    docs = db_for(spark, sf_dir).table("documents").select("doc_id",
-                                                           "text")
-    root = tempfile.mkdtemp(prefix="tantalus_q162_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
-    cb = band_refresh_batches(root + "/bands", hash_family="md5",
-                              op_col="op", max_segments=2)
-    add = lambda df: df.withColumn("op", F.lit("add"))  # noqa: E731
-    dels = (docs.filter(F.col("doc_id") % 20 == 0)
-                .select("doc_id",
-                        F.lit(None).cast("string").alias("text"))
-                .withColumn("op", F.lit("delete")))
-    cb(add(docs.filter(F.col("doc_id") % 4 == 0)), 0)
-    cb(add(docs.filter(F.col("doc_id") % 4 == 1))
-       .unionByName(dels)
-       .unionByName(add(docs.filter(F.col("doc_id") % 40 == 0))), 1)
-    cb(add(docs.filter(F.col("doc_id") % 4 == 2)), 2)  # fold fires
-    export_band_snapshot(spark, root + "/bands", root + "/snap")
-    # serve off the PRE-EXPLODED distinct postings layout: the
-    # index-side explode+dedup shuffle was paid once at export
-    postings = load_band_snapshot(spark, root + "/snap",
-                                  layout="postings")
-    return novel_documents(docs.filter(F.col("doc_id") % 4 == 3),
-                           postings, hash_family="md5")
-
-
-def q163_release_serve(spark, sf_dir):
-    """r11 capstone: export_release cuts ONE consistent serving
-    RELEASE across independently-maintained stores — q157's diverged
-    maintainers (the postings store committed batch 2, the feats
-    store stopped at batch 1), but instead of serving the live LSM
-    views at an as-of pin, one export_release call pins
-    common_batch_id, promotes BOTH stores at that batch with their
-    audit gates, commits release.json, and swaps the release pointer;
-    the serve then runs off load_release's folded artifacts — zero
-    segment unions, zero tombstone joins, and cross-family
-    consistency by construction (the deploy artifact a training run
-    or serving fleet actually ships). Bit-identical to q157's
-    live-store as-of serve, so the oracle is q157's rebuild over the
-    common-prefix survivors verbatim."""
-    import atexit
-    import shutil
-    import tempfile
-
-    from tantalus_spark.datapipe.textstats import hybrid_serve_topk_batch
-    from tantalus_spark.streaming.maintenance import (
-        _run_parallel, export_release, feats_refresh_batches,
-        index_refresh_batches, load_release)
-
-    docs = db_for(spark, sf_dir).table("documents").select("doc_id",
-                                                           "text")
-    root = tempfile.mkdtemp(prefix="tantalus_q163_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
-    cb_ix = index_refresh_batches(root + "/ix", op_col="op",
-                                  max_segments=2, keep_versions=4)
-    cb_ft = feats_refresh_batches(root + "/feats", dim=64, op_col="op",
-                                  max_segments=2, keep_versions=4)
-    add = lambda df: df.withColumn("op", F.lit("add"))  # noqa: E731
-    dels = (docs.filter(F.col("doc_id") % 21 == 0)
-                .select("doc_id",
-                        F.lit(None).cast("string").alias("text"))
-                .withColumn("op", F.lit("delete")))
-    batches = [
-        add(docs.filter(F.col("doc_id") % 3 == 0)),
-        (add(docs.filter(F.col("doc_id") % 3 == 1))
-         .unionByName(dels)
-         .unionByName(add(docs.filter(F.col("doc_id") % 42 == 0)))),
-        add(docs.filter(F.col("doc_id") % 3 == 2)),
-    ]
-    # separate foreachBatch sinks: the two commit chains are
-    # independent (disjoint dirs, own manifests) — run them
-    # concurrently (guide §2.6); order WITHIN each store stays strict,
-    # and the feats maintainer still stops one batch behind.
-    _run_parallel(
-        lambda: [cb_ix(b, i) for i, b in enumerate(batches)],
-        lambda: [cb_ft(b, i) for i, b in enumerate(batches[:2])])
-    export_release(spark, {"postings": ("term", root + "/ix"),
-                           "dense": ("feats", root + "/feats")},
-                   root + "/releases")
-    rel = load_release(spark, root + "/releases")
-    postings, (n, avgdl) = rel["stores"]["postings"]
-    feats = rel["stores"]["dense"]
-    return hybrid_serve_topk_batch(
-        postings, [(1, ["customer", "sort", "hash"]),
-                   (2, ["merge", "join"]),
-                   (3, ["hash", "table"])],
-        feats, k=10, depth=40, rrf_k=60, dim=64, n_docs=n, avgdl=avgdl)
-
-
-def q164_band_store_live_serve(spark, sf_dir):
-    """r12: the LIVE band-store novelty serve off the INCREMENTALLY
-    MAINTAINED postings leaf — the freshness read between promotions.
-    Same CDC script as q162 (adds %4==0; deletes 20|id + same-batch
-    delete/re-add 40|id + adds %4==1; adds %4==2 with max_segments=2
-    so the fold fires), but no snapshot export: novel_documents probes
-    load_band_index(layout='postings') — the (id, band, h) leaf each
-    commit derives O(batch) from its own band rows and compaction
-    folds under the same tombstone mask. The serve plan carries ONE
-    Generate (the probe batch's posexplode) and zero index-side
-    explode/DISTINCT shuffles — the live twin of q162's snapshot
-    serve, closing r11's one flagged scale wart (the per-serve
-    corpus-scale explode+dedup the bands layout pays). Bit-identical
-    to q162 (same survivor population at CURRENT), so the oracle is
-    q162's verbatim. Upgrades the reference's per-request dedup scan
-    (search_util/search_helper.py:27-49) into a maintained store whose
-    SERVE layout is maintained too, not just its state."""
-    import atexit
-    import shutil
-    import tempfile
-
-    from tantalus_spark.datapipe.dedup import novel_documents
-    from tantalus_spark.streaming.maintenance import (
-        band_refresh_batches, load_band_index)
-
-    docs = db_for(spark, sf_dir).table("documents").select("doc_id",
-                                                           "text")
-    root = tempfile.mkdtemp(prefix="tantalus_q164_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
-    cb = band_refresh_batches(root + "/bands", hash_family="md5",
-                              op_col="op", max_segments=2)
-    add = lambda df: df.withColumn("op", F.lit("add"))  # noqa: E731
-    dels = (docs.filter(F.col("doc_id") % 20 == 0)
-                .select("doc_id",
-                        F.lit(None).cast("string").alias("text"))
-                .withColumn("op", F.lit("delete")))
-    cb(add(docs.filter(F.col("doc_id") % 4 == 0)), 0)
-    cb(add(docs.filter(F.col("doc_id") % 4 == 1))
-       .unionByName(dels)
-       .unionByName(add(docs.filter(F.col("doc_id") % 40 == 0))), 1)
-    cb(add(docs.filter(F.col("doc_id") % 4 == 2)), 2)  # fold fires
-    postings = load_band_index(spark, root + "/bands",
-                               layout="postings")
-    return novel_documents(docs.filter(F.col("doc_id") % 4 == 3),
-                           postings, hash_family="md5",
-                           index_layout="postings")
-
-
-def q165_release_follow_serve(spark, sf_dir):
-    """r13: the DEPLOY LOOP end to end under one oracle — maintainers
-    → release → FOLLOWER → served sink. q163 proved export_release
-    cuts a consistent artifact set; this entry adds the serving
-    fleet's read side: a query stream driven through follow_releases,
-    with the maintainers absorbing CDC and a NEW release cut
-    MID-STREAM. Micro-batch 0 serves off release v0 (both maintainers
-    at batch 0) and sinks its results; then the postings store commits
-    batches 1 and 2 while the feats store commits only batch 1 (q163's
-    maintainer divergence), export_release pins common_batch_id=1 and
-    swaps the pointer; micro-batch 1 observes the moved pointer,
-    reloads ONCE pinned to the observed release (swap-race safe), and
-    re-serves the same page-sized query set off the new artifacts.
-    The post-swap sunk results are the entry's output — bit-identical
-    to q163's release serve (same pinned batch-0/1 survivor state), so
-    the oracle is q163's (= q157's common-prefix rebuild) verbatim.
-    The per-batch collect is the page-sized QUERY set, never the
-    corpus; the serve is one hybrid job off the release's folded
-    snapshots. Reference anchor: the reference's serve side re-queries
-    live Postgres per request (search_util/search_helper.py:27-49);
-    the engine's is a versioned release pointer a follower hot-swaps
-    between micro-batches, with zero reload cost while it is stable."""
-    import atexit
-    import shutil
-    import tempfile
-
-    from tantalus_spark.datapipe.textstats import hybrid_serve_topk_batch
-    from tantalus_spark.streaming.maintenance import (
-        _run_parallel, export_release, feats_refresh_batches,
-        follow_releases, index_refresh_batches)
-
-    docs = db_for(spark, sf_dir).table("documents").select("doc_id",
-                                                           "text")
-    root = tempfile.mkdtemp(prefix="tantalus_q165_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
-    cb_ix = index_refresh_batches(root + "/ix", op_col="op",
-                                  max_segments=2, keep_versions=4)
-    cb_ft = feats_refresh_batches(root + "/feats", dim=64, op_col="op",
-                                  max_segments=2, keep_versions=4)
-    add = lambda df: df.withColumn("op", F.lit("add"))  # noqa: E731
-    dels = (docs.filter(F.col("doc_id") % 21 == 0)
-                .select("doc_id",
-                        F.lit(None).cast("string").alias("text"))
-                .withColumn("op", F.lit("delete")))
-    batches = [
-        add(docs.filter(F.col("doc_id") % 3 == 0)),
-        (add(docs.filter(F.col("doc_id") % 3 == 1))
-         .unionByName(dels)
-         .unionByName(add(docs.filter(F.col("doc_id") % 42 == 0)))),
-        add(docs.filter(F.col("doc_id") % 3 == 2)),
-    ]
-    stores = {"postings": ("term", root + "/ix"),
-              "dense": ("feats", root + "/feats")}
-    # release v0: both maintainers have committed batch 0. The two
-    # stores are independent (disjoint dirs, own manifests), so their
-    # commits are sequential only because the driver would call them
-    # sequentially — overlap them (guide §2.6); the release export
-    # still happens only after BOTH have landed.
-    _run_parallel(lambda: cb_ix(batches[0], 0),
-                  lambda: cb_ft(batches[0], 0))
-    # the v0 export pins as_of=0 over immutable, retained manifests
-    # (keep_versions=4), so the batch-1 commits — which only write NEW
-    # segment/tombstone dirs and a v1 manifest — can run concurrently
-    # with it (guide §2.6); the exported bytes are identical either
-    # way and the follower below still observes the pointer only after
-    # this export lands.
-    _run_parallel(lambda: export_release(spark, stores,
-                                         root + "/releases"),
-                  lambda: cb_ix(batches[1], 1),
-                  lambda: cb_ft(batches[1], 1))
-
-    qdf = spark.createDataFrame(
-        [(1, ["customer", "sort", "hash"]), (2, ["merge", "join"]),
-         (3, ["hash", "table"])],
-        "query_id long, terms array<string>")
-
-    def _serve(release, batch_df, batch_id):
-        # the page-sized query set of THIS micro-batch (bounded
-        # collect), served in one hybrid job off the follower's
-        # pinned release artifacts, sunk per batch. The collect is
-        # unordered + a driver-side sort: an orderBy on the page-sized
-        # batch plans a range-partitioning exchange job (~0.7 s of
-        # scheduling for 3 rows, measured) where the bare collect of
-        # the local batch costs ~0.3 s — same rows, same order.
-        qs = sorted((int(r["query_id"]), list(r["terms"]))
-                    for r in batch_df.collect())
-        postings, (n, avgdl) = release["stores"]["postings"]
-        feats = release["stores"]["dense"]
-        # one output file: the served page is <= |queries|·k rows, and
-        # the sink's reader (and the downstream re-read here) should
-        # not pay per-file open cost for a page-sized result (guide §6)
-        (hybrid_serve_topk_batch(postings, qs, feats, k=10, depth=40,
-                                 rrf_k=60, dim=64, n_docs=n,
-                                 avgdl=avgdl)
-         .coalesce(1)
-         .write.mode("overwrite")
-         .parquet(root + f"/served/batch-{batch_id}"))
-
-    fol = follow_releases(root + "/releases", _serve)
-    # micro-batch 0 is served UNDER live CDC traffic — the serve reads
-    # release v0's immutable artifacts and the pointer cannot move
-    # until export_release below (both batch-1 commits already landed,
-    # so the pointer stays at v0 for exactly this window), while the
-    # ix maintainer's batch-2 commit writes only its own store's new
-    # segments; the two are independent driver-blocking chains, so
-    # overlap them (guide §2.6). Commit order within the store stays
-    # strict (batch 1 landed above, batch 2 here).
-    _run_parallel(lambda: fol(qdf, 0),  # served off v0; pointer stable
-                  lambda: cb_ix(batches[2], 2))
-    # a new release is cut at common_batch_id=1 (the feats store is
-    # one batch behind — q163's maintainer divergence) and the pointer
-    # swaps under the follower
-    export_release(spark, stores, root + "/releases")
-    fol(qdf, 1)  # pointer moved -> one pinned reload -> re-serve
-    return spark.read.parquet(root + "/served/batch-1")
 
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
@@ -4980,115 +4461,6 @@ ORACLES["153_hybrid_eval_tabular"] = """
 ORACLES["154_ann_eval_tabular"] = ORACLES["151_ann_serve_batch"]
 
 
-# q155: the q147 hybrid CTEs over the q152 survivor set — both
-# maintained stores are rebuild-equal by contract, so the oracle for a
-# serve off them IS the q147 rebuild restricted to the survivors.
-ORACLES["155_maintained_hybrid_serve"] = """
-    WITH q AS (
-      SELECT * FROM (VALUES
-        (1, 'customer'), (1, 'sort'), (1, 'hash'),
-        (2, 'merge'), (2, 'join'),
-        (3, 'hash'), (3, 'table')) t(query_id, term)),
-    base AS (
-      SELECT doc_id,
-             string_split_regex(trim(lower(text)), '\\s+') AS toks
-      FROM documents
-      WHERE text IS NOT NULL
-        AND NOT (doc_id % 21 = 0 AND doc_id % 42 <> 0)),
-    dl AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl FROM base),
-    tot AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-                   CAST(sum(dl) AS DOUBLE) / CAST(count(*) AS DOUBLE)
-                     AS avgdl
-            FROM dl),
-    toks AS (SELECT doc_id, unnest(toks) AS term FROM base),
-    tf AS (SELECT doc_id, term, count(*) AS tf
-           FROM toks
-           WHERE term IN (SELECT DISTINCT term FROM q)
-           GROUP BY doc_id, term),
-    dfq AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-    sc AS (
-      SELECT qq.query_id, tf.doc_id,
-             CAST(floor(
-               ln(1.0 + (tot.n - dfq.df + 0.5) / (dfq.df + 0.5))
-               * (tf.tf * 2.2)
-               / (tf.tf + 1.2 * (0.25 + 0.75 * dl.dl / tot.avgdl))
-               * 1e9 + 0.5) AS BIGINT) AS s_nano
-      FROM tf JOIN dfq USING (term) JOIN dl USING (doc_id)
-      JOIN q qq USING (term)
-      CROSS JOIN tot),
-    g AS (SELECT query_id, doc_id,
-                 CAST(sum(s_nano) AS BIGINT) AS score_nano
-          FROM sc GROUP BY query_id, doc_id),
-    leg_s AS (
-      SELECT query_id, doc_id, CAST(rk AS INTEGER) AS rank_bm25
-      FROM (SELECT query_id, doc_id,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY score_nano DESC,
-                                      doc_id ASC) AS rk
-            FROM g)
-      WHERE rk <= 40),
-    sf AS (
-      SELECT doc_id,
-             CAST(('0x' || substr(md5(term), 1, 15))::BIGINT % 64
-                  AS INTEGER) AS bucket,
-             CAST(1 - 2 * (('0x' || substr(md5('s_' || term), 1, 15))
-                           ::BIGINT % 2) AS INTEGER) AS sgn
-      FROM toks),
-    feats AS (SELECT doc_id, bucket, CAST(sum(sgn) AS BIGINT) AS feat
-              FROM sf GROUP BY doc_id, bucket),
-    qf AS (
-      SELECT query_id, bucket, CAST(sum(sgn) AS BIGINT) AS qfeat
-      FROM (
-        SELECT query_id,
-               CAST(('0x' || substr(md5(term), 1, 15))::BIGINT % 64
-                    AS INTEGER) AS bucket,
-               CAST(1 - 2 * (('0x' || substr(md5('s_' || term), 1, 15))
-                             ::BIGINT % 2) AS INTEGER) AS sgn
-        FROM q) s
-      GROUP BY query_id, bucket HAVING sum(sgn) <> 0),
-    qn AS (SELECT query_id, CAST(sum(qfeat * qfeat) AS DOUBLE) AS qnorm
-           FROM qf GROUP BY query_id),
-    dots AS (SELECT qf.query_id, f.doc_id,
-                    CAST(sum(f.feat * qf.qfeat) AS BIGINT) AS dot
-             FROM feats f JOIN qf USING (bucket)
-             GROUP BY qf.query_id, f.doc_id),
-    norms AS (SELECT doc_id, CAST(sum(feat * feat) AS BIGINT) AS norm
-              FROM feats GROUP BY doc_id),
-    scored AS (
-      SELECT d.query_id, d.doc_id,
-             CAST(floor(CAST(d.dot AS DOUBLE)
-                        / sqrt(CAST(n.norm AS DOUBLE) * qn.qnorm)
-                        * 1e9 + 0.5) AS BIGINT) AS cos_nano
-      FROM dots d JOIN norms n USING (doc_id)
-      JOIN qn ON qn.query_id = d.query_id
-      WHERE n.norm > 0),
-    leg_d AS (
-      SELECT query_id, doc_id, CAST(rk AS INTEGER) AS rank_dense
-      FROM (SELECT query_id, doc_id,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY cos_nano DESC,
-                                      doc_id ASC) AS rk
-            FROM scored)
-      WHERE rk <= 40),
-    fused AS (
-      SELECT COALESCE(s.query_id, d.query_id) AS query_id,
-             COALESCE(s.doc_id, d.doc_id) AS doc_id,
-             s.rank_bm25, d.rank_dense,
-             COALESCE(1.0 / (60.0 + s.rank_bm25), 0.0)
-               + COALESCE(1.0 / (60.0 + d.rank_dense), 0.0) AS rrf
-      FROM leg_s s FULL OUTER JOIN leg_d d
-        ON s.query_id = d.query_id AND s.doc_id = d.doc_id)
-    SELECT CAST(query_id AS BIGINT) AS query_id, doc_id,
-           CAST(COALESCE(rank_bm25, 0) AS INTEGER) AS rank_bm25,
-           CAST(COALESCE(rank_dense, 0) AS INTEGER) AS rank_dense,
-           round(rrf, 6) AS rrf
-    FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                                       ORDER BY rrf DESC, doc_id ASC)
-                    AS frk
-          FROM fused)
-    WHERE frk <= 10
-"""
-
 # q152: the q143 BM25-rebuild CTEs over the segmented store's survivor
 # set — every doc except those deleted in batch 1 and not re-added
 # (21|id AND NOT 42|id). The engine side serves off the LSM store's
@@ -6675,117 +6047,6 @@ ORACLES["156_index_time_travel"] = """
     FROM g ORDER BY score_nano DESC, doc_id ASC LIMIT 15
 """
 
-# q157: the q155 hybrid CTEs over the CONSISTENT snapshot's survivor
-# set — batches 0/1 only (doc_id%3 in (0,1) with the delete/re-add
-# rule), because common_batch_id pins both stores to batch 1 even
-# though the postings store's CURRENT already has batch 2.
-ORACLES["157_consistent_asof_serve"] = """
-    WITH q AS (
-      SELECT * FROM (VALUES
-        (1, 'customer'), (1, 'sort'), (1, 'hash'),
-        (2, 'merge'), (2, 'join'),
-        (3, 'hash'), (3, 'table')) t(query_id, term)),
-    base AS (
-      SELECT doc_id,
-             string_split_regex(trim(lower(text)), '\\s+') AS toks
-      FROM documents
-      WHERE text IS NOT NULL
-        AND doc_id % 3 IN (0, 1)
-        AND NOT (doc_id % 21 = 0 AND doc_id % 42 <> 0)),
-    dl AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl FROM base),
-    tot AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-                   CAST(sum(dl) AS DOUBLE) / CAST(count(*) AS DOUBLE)
-                     AS avgdl
-            FROM dl),
-    toks AS (SELECT doc_id, unnest(toks) AS term FROM base),
-    tf AS (SELECT doc_id, term, count(*) AS tf
-           FROM toks
-           WHERE term IN (SELECT DISTINCT term FROM q)
-           GROUP BY doc_id, term),
-    dfq AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-    sc AS (
-      SELECT qq.query_id, tf.doc_id,
-             CAST(floor(
-               ln(1.0 + (tot.n - dfq.df + 0.5) / (dfq.df + 0.5))
-               * (tf.tf * 2.2)
-               / (tf.tf + 1.2 * (0.25 + 0.75 * dl.dl / tot.avgdl))
-               * 1e9 + 0.5) AS BIGINT) AS s_nano
-      FROM tf JOIN dfq USING (term) JOIN dl USING (doc_id)
-      JOIN q qq USING (term)
-      CROSS JOIN tot),
-    g AS (SELECT query_id, doc_id,
-                 CAST(sum(s_nano) AS BIGINT) AS score_nano
-          FROM sc GROUP BY query_id, doc_id),
-    leg_s AS (
-      SELECT query_id, doc_id, CAST(rk AS INTEGER) AS rank_bm25
-      FROM (SELECT query_id, doc_id,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY score_nano DESC,
-                                      doc_id ASC) AS rk
-            FROM g)
-      WHERE rk <= 40),
-    sf AS (
-      SELECT doc_id,
-             CAST(('0x' || substr(md5(term), 1, 15))::BIGINT % 64
-                  AS INTEGER) AS bucket,
-             CAST(1 - 2 * (('0x' || substr(md5('s_' || term), 1, 15))
-                           ::BIGINT % 2) AS INTEGER) AS sgn
-      FROM toks),
-    feats AS (SELECT doc_id, bucket, CAST(sum(sgn) AS BIGINT) AS feat
-              FROM sf GROUP BY doc_id, bucket),
-    qf AS (
-      SELECT query_id, bucket, CAST(sum(sgn) AS BIGINT) AS qfeat
-      FROM (
-        SELECT query_id,
-               CAST(('0x' || substr(md5(term), 1, 15))::BIGINT % 64
-                    AS INTEGER) AS bucket,
-               CAST(1 - 2 * (('0x' || substr(md5('s_' || term), 1, 15))
-                             ::BIGINT % 2) AS INTEGER) AS sgn
-        FROM q) s
-      GROUP BY query_id, bucket HAVING sum(sgn) <> 0),
-    qn AS (SELECT query_id, CAST(sum(qfeat * qfeat) AS DOUBLE) AS qnorm
-           FROM qf GROUP BY query_id),
-    dots AS (SELECT qf.query_id, f.doc_id,
-                    CAST(sum(f.feat * qf.qfeat) AS BIGINT) AS dot
-             FROM feats f JOIN qf USING (bucket)
-             GROUP BY qf.query_id, f.doc_id),
-    norms AS (SELECT doc_id, CAST(sum(feat * feat) AS BIGINT) AS norm
-              FROM feats GROUP BY doc_id),
-    scored AS (
-      SELECT d.query_id, d.doc_id,
-             CAST(floor(CAST(d.dot AS DOUBLE)
-                        / sqrt(CAST(n.norm AS DOUBLE) * qn.qnorm)
-                        * 1e9 + 0.5) AS BIGINT) AS cos_nano
-      FROM dots d JOIN norms n USING (doc_id)
-      JOIN qn ON qn.query_id = d.query_id
-      WHERE n.norm > 0),
-    leg_d AS (
-      SELECT query_id, doc_id, CAST(rk AS INTEGER) AS rank_dense
-      FROM (SELECT query_id, doc_id,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY cos_nano DESC,
-                                      doc_id ASC) AS rk
-            FROM scored)
-      WHERE rk <= 40),
-    fused AS (
-      SELECT COALESCE(s.query_id, d.query_id) AS query_id,
-             COALESCE(s.doc_id, d.doc_id) AS doc_id,
-             s.rank_bm25, d.rank_dense,
-             COALESCE(1.0 / (60.0 + s.rank_bm25), 0.0)
-               + COALESCE(1.0 / (60.0 + d.rank_dense), 0.0) AS rrf
-      FROM leg_s s FULL OUTER JOIN leg_d d
-        ON s.query_id = d.query_id AND s.doc_id = d.doc_id)
-    SELECT CAST(query_id AS BIGINT) AS query_id, doc_id,
-           CAST(COALESCE(rank_bm25, 0) AS INTEGER) AS rank_bm25,
-           CAST(COALESCE(rank_dense, 0) AS INTEGER) AS rank_dense,
-           round(rrf, 6) AS rrf
-    FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                                       ORDER BY rrf DESC, doc_id ASC)
-                    AS frk
-          FROM fused)
-    WHERE frk <= 10
-"""
-
 # q158: both audit sides recomputed from the q152 survivor set — the
 # manifest integers (carried by increment/decrement through the CDC
 # lifecycle) and the live doclens recount must both equal this, and
@@ -6810,168 +6071,3 @@ ORACLES["158_store_stats_audit"] = """
 # parquet, zero tombstone joins), never the values.
 ORACLES["159_snapshot_promote_serve"] = ORACLES[
     "152_segmented_store_serve"]
-
-
-# q160: identical values to q155 — promotion changes the serving
-# ARTIFACTS (one folded term-sorted postings parquet + one folded
-# bucket-partitioned feats parquet, zero segment unions, zero
-# tombstone joins), never the values, so the oracle is q155's
-# survivor-set hybrid rebuild verbatim.
-ORACLES["160_snapshot_hybrid_serve"] = ORACLES[
-    "155_maintained_hybrid_serve"]
-
-
-# q161: q151's IVFPQ CTEs with the INDEX population restricted to the
-# CDC survivor set (NOT (21|id AND NOT 42|id), the q152 predicate —
-# the re-add carries the same original vector, so survivors keep
-# their batch-0 encodings). Centroids/codebooks/queries still come
-# from the full iv head, exactly like the engine's frozen artifacts.
-ORACLES["161_snapshot_ann_serve"] = """
-    WITH iv AS (
-      SELECT vec_id,
-             list_transform(embedding,
-                            x -> floor(CAST(x AS DOUBLE) * 32)) AS v
-      FROM embeddings WHERE embedding IS NOT NULL),
-    pop AS (
-      SELECT * FROM iv
-      WHERE NOT (vec_id % 21 = 0 AND vec_id % 42 <> 0)),
-    cent AS (SELECT vec_id AS cid, v FROM iv WHERE vec_id < 8),
-    js AS (SELECT unnest(range(0, 8)) AS j),
-    cb AS (
-      SELECT js.j, iv.vec_id - 1 AS c,
-             list_slice(iv.v, js.j*8 + 1, js.j*8 + 8) AS bv
-      FROM iv, js WHERE iv.vec_id BETWEEN 1 AND 16),
-    dist AS (
-      SELECT pop.vec_id, cb.j, cb.c,
-             list_sum(list_transform(range(1, 9), i ->
-               (pop.v[cb.j*8 + i] - cb.bv[i])
-               * (pop.v[cb.j*8 + i] - cb.bv[i]))) AS d2
-      FROM pop, cb),
-    code AS (
-      SELECT vec_id, j, c FROM (
-        SELECT vec_id, j, c,
-               ROW_NUMBER() OVER (PARTITION BY vec_id, j
-                                  ORDER BY d2, c) AS rn
-        FROM dist) t WHERE rn = 1),
-    sims AS (
-      SELECT pop.vec_id, c.cid,
-             CASE WHEN isnan(list_cosine_similarity(pop.v, c.v))
-                  THEN -2.0
-                  ELSE list_cosine_similarity(pop.v, c.v) END AS s
-      FROM pop CROSS JOIN cent c),
-    assign AS (
-      SELECT vec_id, cid AS ivf_list FROM (
-        SELECT vec_id, cid,
-               row_number() OVER (PARTITION BY vec_id
-                                  ORDER BY s DESC, cid ASC) AS rn
-        FROM sims) t WHERE rn = 1),
-    q AS (SELECT vec_id AS query_id, v AS qv FROM iv
-          WHERE vec_id IN (0, 5, 9)),
-    probes AS (
-      SELECT query_id, cid FROM (
-        SELECT q.query_id, c.cid,
-               row_number() OVER (PARTITION BY q.query_id
-                 ORDER BY CASE
-                            WHEN isnan(list_cosine_similarity(q.qv, c.v))
-                            THEN 0.0
-                            ELSE list_cosine_similarity(q.qv, c.v) END
-                          DESC,
-                          c.cid ASC) AS rn
-        FROM q CROSS JOIN cent c) t WHERE rn <= 3),
-    adc AS (
-      SELECT q.query_id, cb.j, cb.c,
-             list_sum(list_transform(range(1, 9), i ->
-               q.qv[cb.j*8 + i] * cb.bv[i])) AS dot
-      FROM cb, q),
-    ascore AS (
-      SELECT adc.query_id, code.vec_id, SUM(adc.dot) AS s
-      FROM code
-      JOIN assign a ON a.vec_id = code.vec_id
-      JOIN adc ON code.j = adc.j AND code.c = adc.c
-      JOIN probes p ON p.query_id = adc.query_id
-                   AND p.cid = a.ivf_list
-      GROUP BY adc.query_id, code.vec_id)
-    SELECT query_id, vec_id, round(s, 4) + 0.0 AS adc_dot
-    FROM (SELECT query_id, vec_id, s,
-                 ROW_NUMBER() OVER (PARTITION BY query_id
-                                    ORDER BY s DESC, vec_id ASC) AS rn
-          FROM ascore) t
-    WHERE rn <= 10
-"""
-
-
-# q162: q150's md5 band CTEs with the INDEX population restricted to
-# the band store's CDC survivors — %4 in (0,1,2) minus (20|id AND NOT
-# 40|id); the re-add carries the same text, so survivor bandings are
-# the batch-0 ones. Probe batch is %4==3, exactly q150's serve shape.
-ORACLES["162_band_store_novel_serve"] = """
-    WITH tok AS (
-      SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS t
-      FROM documents),
-    sh0 AS (
-      SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS g
-      FROM tok, UNNEST(range(1, greatest(len(t)-1, 1))) AS u(i)),
-    sh AS (
-      SELECT doc_id, ('0x'||substr(md5(g),1,15))::BIGINT AS hv FROM sh0),
-    sig AS (
-      SELECT doc_id,
-             min(((hv % 1000000007) * 3  + 1)     % 1000000007) AS h0,
-             min(((hv % 1000000007) * 5  + 2)     % 1000000007) AS h1,
-             min(((hv % 1000000007) * 7  + 4)     % 1000000007) AS h2,
-             min(((hv % 1000000007) * 11 + 8)     % 1000000007) AS h3,
-             min(((hv % 1000000007) * 13 + 16)    % 1000000007) AS h4,
-             min(((hv % 1000000007) * 17 + 32)    % 1000000007) AS h5,
-             min(((hv % 1000000007) * 19 + 64)    % 1000000007) AS h6,
-             min(((hv % 1000000007) * 23 + 128)   % 1000000007) AS h7,
-             min(((hv % 1000000007) * 29 + 256)   % 1000000007) AS h8,
-             min(((hv % 1000000007) * 31 + 512)   % 1000000007) AS h9,
-             min(((hv % 1000000007) * 37 + 1024)  % 1000000007) AS h10,
-             min(((hv % 1000000007) * 41 + 2048)  % 1000000007) AS h11,
-             min(((hv % 1000000007) * 43 + 4096)  % 1000000007) AS h12,
-             min(((hv % 1000000007) * 47 + 8192)  % 1000000007) AS h13,
-             min(((hv % 1000000007) * 53 + 16384) % 1000000007) AS h14,
-             min(((hv % 1000000007) * 59 + 32768) % 1000000007) AS h15
-      FROM sh GROUP BY doc_id),
-    bands AS (
-      SELECT doc_id, 0 AS band, h0 AS x0, h1 AS x1, h2 AS x2, h3 AS x3 FROM sig
-      UNION ALL
-      SELECT doc_id, 1, h4, h5, h6, h7 FROM sig
-      UNION ALL
-      SELECT doc_id, 2, h8, h9, h10, h11 FROM sig
-      UNION ALL
-      SELECT doc_id, 3, h12, h13, h14, h15 FROM sig),
-    hit AS (
-      SELECT DISTINCT a.doc_id
-      FROM bands a JOIN bands b
-        ON a.band = b.band AND a.x0 = b.x0 AND a.x1 = b.x1
-       AND a.x2 = b.x2 AND a.x3 = b.x3
-       AND a.doc_id % 4 = 3
-       AND b.doc_id % 4 IN (0, 1, 2)
-       AND NOT (b.doc_id % 20 = 0 AND b.doc_id % 40 <> 0))
-    SELECT n.doc_id, (h.doc_id IS NULL) AS is_novel
-    FROM (SELECT doc_id FROM documents WHERE doc_id % 4 = 3) n
-    LEFT JOIN hit h USING (doc_id)
-"""
-
-
-# q163: identical values to q157 — the release changes the serving
-# ARTIFACTS (two folded audited snapshots pinned at common_batch_id,
-# one release pointer), never the values, so the oracle is q157's
-# common-prefix-survivor hybrid rebuild verbatim.
-ORACLES["163_release_serve"] = ORACLES["157_consistent_asof_serve"]
-
-# q164: identical values to q162 — the live postings-layout serve
-# changes the INDEX-SIDE PLAN (maintained (id, band, h) leaf instead
-# of a per-serve explode+DISTINCT of the band table, or q162's
-# once-at-export snapshot explode), never the candidate rule, and the
-# CDC script and CURRENT population are q162's exactly.
-ORACLES["164_band_store_live_serve"] = ORACLES["162_band_store_novel_serve"]
-
-# q165: identical values to q163 — the follower composition changes
-# WHO loads the artifacts (a pointer-watching foreachBatch consumer
-# that reloads once when the mid-stream release lands, then sinks the
-# served batch) and the entry returns the post-swap sink, whose state
-# pin (common_batch_id=1, batch-0/1 survivors) is exactly q163's
-# release; the values are the same deterministic hybrid serve, so the
-# oracle is q157's common-prefix-survivor rebuild verbatim.
-ORACLES["165_release_follow_serve"] = ORACLES["157_consistent_asof_serve"]

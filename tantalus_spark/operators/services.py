@@ -40,16 +40,86 @@ _INTEGRAL_BITS = {T.ByteType: 8, T.ShortType: 16, T.IntegerType: 32,
                   T.LongType: 64}
 _INTEGRAL = re.compile(r"[+-]?[0-9]+")
 _BOOLEAN = {"t", "true", "y", "yes", "1", "f", "false", "n", "no", "0"}
-# a date, optionally followed by a time part (not checked), or a bare time
-_DATETIME = re.compile(
-    r"[+-]?([0-9]{4,7})(?:-([0-9]{1,2})(?:-([0-9]{1,2}))?)?(?:[ T]|$)"
-    r"|T[0-9]{1,2}|[0-9]{1,2}:")
+# Spark's string -> date/timestamp grammar (DateTimeUtils.stringToDate,
+# parseTimestampString): a date ignores whatever follows a space or T
+# after its day; a time is hour[:minute[:second[.fraction]]], and only a
+# second or a fraction may carry a zone. A bare time (T12, 12:30) is a
+# timestamp on the current date, but no timestamp_ntz.
+_DATE = re.compile(r"([+-]?)([0-9]{4,7})(?:-([0-9]{1,2})(?:-([0-9]{1,2})"
+                   r"(?:[ T][\s\S]*)?)?)?")
+_TIME = (r"([0-9]{1,2})(?::([0-9]{1,2})(?::([0-9]{1,2})(?:\.([0-9]*))?"
+         r"([^0-9][\s\S]*)?)?)?")
+_TIMESTAMP = re.compile(r"([+-]?)([0-9]{4,6})(?:-([0-9]{1,2})"
+                        r"(?:-([0-9]{1,2})(?:[ T]" + _TIME + r")?)?)?")
+_BARE_TIME = re.compile(r"(?:T|(?=[0-9]{1,2}:))" + _TIME)
+# java.time ZoneOffset.of: +h, +hh, +hhmm, +hh:mm, +hhmmss, +hh:mm:ss
+_OFFSET = re.compile(r"[+-]([0-9]{1,2})|[+-]([0-9]{2}):?([0-9]{2})"
+                     r"|[+-]([0-9]{2})(:?)([0-9]{2})\5([0-9]{2})")
+_REGION = re.compile(r"[A-Za-z][A-Za-z0-9~/._+-]+")
+_SHORT_IDS = {"ACT", "AET", "AGT", "ART", "AST", "BET", "BST", "CAT", "CNT",
+              "CST", "CTT", "EAT", "ECT", "EST", "HST", "IET", "IST", "JST",
+              "MIT", "MST", "NET", "NST", "PLT", "PNT", "PRT", "PST", "SST",
+              "VST"}
+_ZONE_IDS: frozenset[str] | None = None  # the JVM's region zone ids
+
+
+def _days(year: int, month: int, day: int) -> int | None:
+    """Days from 1970-01-01 to a proleptic Gregorian date, or None if
+    the date does not exist."""
+    leap = month == 2 and calendar.isleap(year)
+    if not (1 <= month <= 12 and 1 <= day <= calendar.mdays[month] + leap):
+        return None
+    era, yoe = divmod(year - (month <= 2), 400)
+    doy = (153 * (month - 3 if month > 2 else month + 9) + 2) // 5 + day - 1
+    return era * 146097 + yoe * 365 + yoe // 4 - yoe // 100 + doy - 719468
+
+
+def _region_known(zone: str) -> bool:
+    """Whether the driver JVM's time-zone database holds ``zone``; True
+    when no Spark context is up to ask."""
+    global _ZONE_IDS
+    if _ZONE_IDS is None:
+        from pyspark import SparkContext
+
+        sc = SparkContext._active_spark_context
+        if sc is None:
+            return True
+        _ZONE_IDS = frozenset(sc._jvm.java.time.ZoneId.getAvailableZoneIds())
+    return zone in _ZONE_IDS
+
+
+def _zone_offset(zone: str) -> int | None:
+    """The UTC offset in seconds of a timestamp's zone suffix as Spark's
+    getZoneId reads it (a region zone counts as 0), or None if
+    java.time rejects it."""
+    zone = zone.strip(_CAST_TRIM)
+    zone = re.sub(r"([+-])([0-9]):", r"\g<1>0\2:", zone, count=1)
+    zone = re.sub(r"([+-][0-9]{2}):([0-9])$", r"\1:0\2", zone, count=1)
+    for prefix in ("UTC", "GMT", "UT"):
+        if zone.startswith(prefix) and zone[len(prefix):][:1] in ("", "+",
+                                                                  "-"):
+            zone = zone[len(prefix):] or "Z"
+            break
+    if zone == "Z":
+        return 0
+    if zone[:1] in ("+", "-"):
+        m = _OFFSET.fullmatch(zone)
+        if m is None:
+            return None
+        h = int(m.group(1) or m.group(2) or m.group(4))
+        mi, sec = int(m.group(3) or m.group(6) or 0), int(m.group(7) or 0)
+        total = h * 3600 + mi * 60 + sec
+        if mi > 59 or sec > 59 or total > 18 * 3600:
+            return None
+        return -total if zone[0] == "-" else total
+    known = zone in _SHORT_IDS or (_REGION.fullmatch(zone) is not None
+                                   and _region_known(zone))
+    return 0 if known else None
 
 
 def _castable(value: str, dtype: T.DataType) -> bool:
     """Whether Spark's cast of the string ``value`` to ``dtype`` can
-    succeed. Exact for integral and boolean types; for dates and
-    timestamps only the date part is checked."""
+    succeed."""
     v = value.strip(_CAST_TRIM)
     bits = _INTEGRAL_BITS.get(type(dtype))
     if bits:
@@ -57,17 +127,35 @@ def _castable(value: str, dtype: T.DataType) -> bool:
                 and -(1 << bits - 1) <= int(v) < 1 << bits - 1)
     if isinstance(dtype, T.BooleanType):
         return v.lower() in _BOOLEAN
-    if isinstance(dtype, (T.DateType, T.TimestampType, T.TimestampNTZType)):
-        m = _DATETIME.match(v)
-        if m is None or m.group(2) is None:
-            return m is not None
-        year, month = int(m.group(1)), int(m.group(2))
-        if not 1 <= month <= 12:
+    if isinstance(dtype, T.DateType):
+        m = _DATE.fullmatch(v)
+        if m is None:
             return False
-        if m.group(3) is None:
-            return True
-        days = calendar.mdays[month] + (month == 2 and calendar.isleap(year))
-        return 1 <= int(m.group(3)) <= days
+        sign, y, mo, d = m.groups()
+        days = _days(int(sign + y), int(mo or 1), int(d or 1))
+        return days is not None and -(1 << 31) <= days < 1 << 31
+    if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
+        days = 0
+        m = _TIMESTAMP.fullmatch(v)
+        if m is not None:
+            sign, y, mo, d = m.groups()[:4]
+            days = _days(int(sign + y), int(mo or 1), int(d or 1))
+        elif isinstance(dtype, T.TimestampType) and (
+                v[:1] != "T" or value[:1] == "T"):
+            # a leading T counts only when no blank was trimmed before it
+            m = _BARE_TIME.fullmatch(v)
+        if m is None or days is None:
+            return False
+        h, mi, sec, frac, zone = m.groups()[-5:]
+        h, mi, sec = int(h or 0), int(mi or 0), int(sec or 0)
+        offset = 0 if zone is None else _zone_offset(zone)
+        if offset is None or h > 23 or mi > 59 or sec > 59:
+            return False
+        if isinstance(dtype, T.TimestampNTZType):
+            offset = 0  # the zone is checked, then ignored
+        seconds = days * 86400 + h * 3600 + mi * 60 + sec - offset
+        micros = seconds * 10**6 + int((frac or "")[:6].ljust(6, "0"))
+        return -(1 << 63) <= micros < 1 << 63
     return True
 
 

@@ -33,23 +33,6 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        # Scheduler mode is env-parameterized; the LOCAL default stays
-        # FIFO. Store maintainers submit their lifecycle writes from a
-        # thread pool (streaming/maintenance.py _run_parallel) tagged
-        # spark.scheduler.pool=maintenance; on a busy multi-tenant
-        # cluster set SPARK_SCHEDULER_MODE=FAIR so a burst of commit
-        # jobs shares executors with serve traffic instead of queueing
-        # ahead of it — under FIFO the §2.6 overlap only holds while
-        # scheduler slots happen to be free (the 100 TB posture the r13
-        # verdict asked for; pools need no allocation file). Locally,
-        # FAIR was A/B'd at sf0.1 (interleaved, r14): no benefit to the
-        # overlapped lifecycle queries (FIFO backfill already fills the
-        # tails on an idle box) and a consistent ~5% scheduling tax on
-        # sub-second queries — so the bench-comparable local default is
-        # FIFO, per the optimization-round rule that scale-dependent
-        # settings stay parameterized with local defaults.
-        .config("spark.scheduler.mode",
-                os.environ.get("SPARK_SCHEDULER_MODE", "FIFO"))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")

@@ -22,14 +22,12 @@ GC drops manifests older than ``keep_versions`` and any
 segment/tombstone no kept manifest references, bounding storage at
 O(index + keep·batch).
 
-Versions double as TIME TRAVEL: every loader takes ``as_of=<batch
-id>`` (floor-resolved over the retained manifests —
-:func:`_resolve_version`), :func:`index_versions` lists the window,
-and :func:`common_batch_id` gives the newest batch EVERY store of a
-multi-family deployment has committed — the pin that serves one
-consistent snapshot across families when maintainers diverge. The
-window is ``keep_versions`` wide and costs O(keep·batch) extra bytes
-(manifests share segments; history is deltas, never index copies).
+Versions double as TIME TRAVEL: the loader, the audit and the
+snapshot export take ``as_of=<batch id>`` (floor-resolved over the
+retained manifests — :func:`_resolve_version`), and
+:func:`index_versions` lists the window. The window is
+``keep_versions`` wide and costs O(keep·batch) extra bytes (manifests
+share segments; history is deltas, never index copies).
 
 Serving sessions (:func:`~tantalus_spark.datapipe.textstats.
 bm25_rank_indexed`, ``hybrid_serve_indexed``) read one manifest and keep it for the whole query/run — a swap mid-run
@@ -62,7 +60,6 @@ _POINTER = "CURRENT"
 
 
 def _observed_write(df: DataFrame, path: str, metrics: dict[str, "F.Column"],
-                    partition_cols: list[str] | None = None,
                     coalesce: int | None = None,
                     project: list[str] | None = None) -> dict:
     """Write ``df`` as parquet and return aggregate ``metrics`` computed
@@ -83,55 +80,34 @@ def _observed_write(df: DataFrame, path: str, metrics: dict[str, "F.Column"],
         shaped = shaped.select(*project)
     if coalesce is not None:
         shaped = shaped.coalesce(coalesce)
-    w = shaped.write.mode("overwrite")
-    if partition_cols:
-        w = w.partitionBy(*partition_cols)
-    w.parquet(path)
+    shaped.write.mode("overwrite").parquet(path)
     return obs.get
 
 
-def _run_parallel(*thunks, pool: str | None = None):
-    """Run independent driver-blocking Spark actions concurrently from a
-    small thread pool (guide §2.6): Spark's scheduler happily runs
+def _run_parallel(spark: SparkSession, *thunks):
+    """Run independent driver-blocking Spark actions concurrently from
+    a small thread pool (guide §2.6): Spark's scheduler happily runs
     several jobs at once inside one application, and these lifecycle
-    writes (postings ∥ doclens, store ∥ store) are sequential only
+    writes (postings ∥ doclens ∥ tombstones) are sequential only
     because the driver calls them sequentially. Under FIFO the second
-    job back-fills executors the first job's tail frees; ``pool`` tags
-    each worker thread's jobs with ``spark.scheduler.pool`` so that —
-    under ``spark.scheduler.mode=FAIR`` (env-parameterized in the
-    session factory; the multi-tenant production posture) — a burst of
-    maintainer commit jobs shares the cluster fairly with serve
-    traffic in other pools instead of queueing ahead of or behind it.
-    Under the local FIFO default the tag is inert metadata.
-    Local properties are per-thread (pinned-thread mode), and the
-    worker threads are fresh per call, so the tag never leaks to the
-    caller's thread. Results are returned in thunk order; the first
-    exception (if any) propagates after all threads finish."""
-    def _tagged(t):
-        if pool is None:
-            return t
+    job back-fills executors the first job's tail frees.
 
-        def run():
-            # the SparkContext singleton, not getActiveSession():
-            # active sessions are thread-local and a fresh worker
-            # thread has none yet
-            from pyspark import SparkContext
-            sc = SparkContext._active_spark_context
-            if sc is not None:
-                sc.setLocalProperty("spark.scheduler.pool", pool)
-            return t()
-
-        return run
-
-    if len(thunks) == 1:
-        # single action: run on the caller's thread (no pool tag — a
-        # local-property change here would leak past this call)
-        return [thunks[0]()]
+    Local properties are per-thread (pinned-thread mode), so a plain
+    worker thread would submit its jobs outside the caller's job group,
+    description and pool — a caller that counts or cancels its group
+    would miss every commit write. ``inheritable_thread_target`` copies
+    the caller's local properties and job tags into each worker.
+    Results are returned in thunk order; the first exception (if any)
+    propagates after all threads finish."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
+    inherit = inheritable_thread_target(spark)
     with ThreadPoolExecutor(max_workers=len(thunks)) as tp:
-        futs = [tp.submit(_tagged(t)) for t in thunks]
+        futs = [tp.submit(inherit(t)) for t in thunks]
         return [f.result() for f in futs]
+
 
 # committed version directories are exactly v{batch:08d}; everything
 # that parses or SWEEPS v-prefixed names must match this, not a bare
@@ -219,26 +195,6 @@ def _resolve_version(index_dir: str, as_of: int | None) -> str | None:
     return floor[-1]["version"]
 
 
-def common_batch_id(*index_dirs: str) -> int:
-    """The newest batch id EVERY store has committed — the consistent
-    cross-store serve point. Stores maintained by the same CDC stream
-    through separate foreachBatch sinks commit independently, so one
-    can run a batch ahead (maintainer lag, or a crash between the two
-    commits); serving CURRENT from both would mix corpus states.
-    Serving every store ``as_of=common_batch_id(...)`` instead pins
-    one snapshot across families — each store resolves its floor
-    manifest, so they agree on exactly which batches are visible.
-    Raises on an empty store (there is no consistent point yet)."""
-    ids = []
-    for d in index_dirs:
-        cur = _current_version(d)
-        if cur is None:
-            raise ValueError(f"common_batch_id: {d} has no committed "
-                             f"version yet")
-        ids.append(int(cur[1:]))
-    return min(ids)
-
-
 def _masked_union(spark: SparkSession, index_dir: str, manifest: dict,
                   leaf: str) -> DataFrame | None:
     """Lazy live view over the manifest: union of each segment's
@@ -276,57 +232,6 @@ def _masked_union(spark: SparkSession, index_dir: str, manifest: dict,
                 .drop("_seg_seq"))
 
 
-def _segments_missing_leaf(index_dir: str, manifest: dict,
-                           leaf: str) -> list[dict]:
-    """Manifest segments that do not carry ``leaf`` on disk — segments
-    a pre-derived-leaf maintainer wrote (e.g. pre-postings
-    band_refresh_batches). Pure metadata: one isdir per segment."""
-    return [s for s in manifest["segments"]
-            if not os.path.isdir(os.path.join(index_dir, s["name"],
-                                              leaf))]
-
-
-def _masked_union_or_derive(spark: SparkSession, index_dir: str,
-                            manifest: dict, leaf: str, main_leaf: str,
-                            derive) -> DataFrame | None:
-    """Masked view of a DERIVED leaf across the manifest's segments,
-    RE-DERIVING it from ``main_leaf`` for any segment written before
-    the derived leaf existed (a store upgraded mid-life: pre-r12 band
-    segments carry only "bands", no "postings"). Segments that have
-    the stored leaf are read directly (never re-derived — bit-identity
-    with the commit-time derivation is the stored leaf's contract);
-    the missing ones get ``derive(masked main rows)``, which is exact
-    because extra leaves are PER-ROW derived — one main row → its
-    derived rows, no cross-corpus state — so deriving from the masked
-    main view equals masking the would-have-been-stored leaf. Without
-    this fallback, folding or exporting an upgraded store dies on the
-    missing path AFTER earlier writes, wedging the maintainer on every
-    replay of that batch (the r12 advice's failure mode)."""
-    missing = _segments_missing_leaf(index_dir, manifest, leaf)
-    if not missing:
-        return _masked_union(spark, index_dir, manifest, leaf)
-    miss_names = {s["name"] for s in missing}
-    have = [s for s in manifest["segments"]
-            if s["name"] not in miss_names]
-    parts = []
-    if have:
-        v = _masked_union(spark, index_dir,
-                          dict(manifest, segments=have), leaf)
-        if v is not None:
-            parts.append(v)
-    main = _masked_union(spark, index_dir,
-                         dict(manifest, segments=missing), main_leaf)
-    if main is not None:
-        derived = derive(main)
-        # align to the stored leaf's column order so the union (and a
-        # lone-derived write) matches the stored layout exactly
-        parts.append(derived.select(parts[0].columns) if parts
-                     else derived)
-    if not parts:
-        return None
-    return reduce(DataFrame.unionByName, parts)
-
-
 def load_term_index(spark: SparkSession, index_dir: str,
                     as_of: int | None = None):
     """Read one index version: (postings DataFrame, (n_docs, avgdl)).
@@ -340,8 +245,7 @@ def load_term_index(spark: SparkSession, index_dir: str,
     (floor resolution over the retained manifests — see
     :func:`_resolve_version`), with that manifest's stats, not
     CURRENT's. Reproducible training-data builds pin every reader of
-    a run to one ``as_of`` (and cross-store consumers to
-    :func:`common_batch_id`); the maintainer's ``keep_versions`` sets
+    a run to one ``as_of``; the maintainer's ``keep_versions`` sets
     how far back the window reaches."""
     version = _resolve_version(index_dir, as_of)
     if version is None:
@@ -518,12 +422,12 @@ def export_term_snapshot(spark: SparkSession, index_dir: str,
                            if partitions is not None
                            else lens.repartition(F.col(id_col)))
                 live, _ = _run_parallel(
+                    spark,
                     lambda: _observed_write(
                         lshaped, os.path.join(dest, "doclens"),
                         {"n": F.count(F.lit(1)),
                          "s": F.coalesce(F.sum("dl"), F.lit(0))}),
-                    pwrite,
-                    pool="maintenance",
+                    pwrite
                 )
                 if verify:
                     live_n = int(live["n"])
@@ -577,459 +481,6 @@ def load_term_snapshot(spark: SparkSession, dest: str):
         # the loader honest about what the snapshot actually recorded
         return None, (n, avgdl)
     return spark.read.parquet(os.path.join(dest, "postings")), (n, avgdl)
-
-
-def _export_rowwise_snapshot(spark: SparkSession, index_dir: str,
-                             dest: str, leaf: str, fn_name: str,
-                             partition_col: str | None,
-                             unique_cols: list[str],
-                             as_of: int | None, verify: bool,
-                             extra_writes=None) -> dict:
-    """Shared promotion path for the PER-ROW-INDEPENDENT stores (IVFPQ
-    codes, enriched dense feats): fold the masked live view of one
-    pinned version into an immutable hive-partitioned artifact at
-    ``dest`` + a last-committed ``snapshot.json``. Same commit
-    protocol, immutability guard, failure cleanup, and GC-race caveat
-    as :func:`export_term_snapshot`. The audit gate here is the
-    store's own invariant — these manifests carry no corpus stats, but
-    the disjoint-ids merge contract says ``unique_cols`` is a key of
-    the live view, so ``verify=True`` recounts rows vs distinct keys
-    and refuses a store where an upstream double-add slipped through
-    (a duplicated code/feature row silently double-scores a document
-    at serve time — worth one O(rows) aggregate before shipping the
-    artifact to a serving fleet)."""
-    version = _resolve_version(index_dir, as_of)
-    if version is None:
-        raise ValueError(f"{fn_name}: {index_dir} has no committed "
-                         f"version to promote")
-    if os.path.exists(dest) and (not os.path.isdir(dest)
-                                 or os.listdir(dest)):
-        raise ValueError(
-            f"{fn_name}: dest {dest} is not an empty directory — "
-            f"snapshots are immutable; promote to a fresh path")
-    m = _read_manifest(index_dir, version)
-    view = _masked_union(spark, index_dir, m, leaf)
-    n_rows = 0
-    os.makedirs(dest, exist_ok=True)
-    try:
-        if view is not None:
-            # The audit gate is split so nothing serializes behind the
-            # artifact write (guide §1.2/§2.6): the row count and the
-            # NULL-key count ride the artifact write as OBSERVED
-            # metrics; the distinct-key recount runs CONCURRENTLY with
-            # the write, over the same masked view pruned to the key
-            # columns — the export's critical path is max(write,
-            # recount) instead of write + a serialized read-back job
-            # (r13's shape; ~0.45 s of per-export wall at sf0.1, paid
-            # twice per release in the deploy loop). The recount
-            # audits the identical rows the write is landing (the
-            # write's input IS this view), so the refusal condition
-            # is unchanged. count_distinct silently drops rows where
-            # any key column is NULL, so duplicate rows with a NULL
-            # id/bucket would otherwise evade the disjoint-ids check
-            # — a NULL key is itself a contract violation, refused
-            # explicitly. A failed audit raises before snapshot.json
-            # commits; the except-cleanup keeps dest reusable (same
-            # refusal contract as the pre-write audit, detected after
-            # the data write on the rare failure path).
-            metrics = {"n": F.count(F.lit(1))}
-            if verify:
-                null_key = reduce(lambda a, b: a | b,
-                                  [F.col(c).isNull() for c in unique_cols])
-                metrics["nulls"] = F.coalesce(
-                    F.sum(F.when(null_key, 1)), F.lit(0))
-            if partition_col is not None:
-                # one shuffle shapes the artifact: repartition on the
-                # serve-pruning column, then hive-partition the write
-                # so a probe's IN-filter reads only the matching FILES
-                # — the same layout the streamed segments carry, folded
-                # to one artifact with the tombstone mask applied
-                # physically
-                shaped = view.repartition(F.col(partition_col))
-                pcols = [partition_col]
-            else:
-                # no point-probe column to prune on (band tables are
-                # probed by a semi-join over an exploded array) —
-                # distribute by id so the artifact has no single-task
-                # funnel and file sizes stay uniform
-                shaped = view.repartition(F.col(unique_cols[0]))
-                pcols = None
-            thunks = [lambda: _observed_write(
-                shaped, os.path.join(dest, leaf), metrics,
-                partition_cols=pcols)]
-            if extra_writes is not None:
-                # family-specific derived artifacts (e.g. the band
-                # store's pre-exploded postings) — written before the
-                # snapshot.json commit so a torn export stays torn;
-                # independent of the main-leaf write, so the two run
-                # concurrently (guide §2.6)
-                thunks.append(lambda: extra_writes(view, dest))
-            if verify:
-                thunks.append(
-                    lambda: view.select(*unique_cols).agg(
-                        F.count_distinct(
-                            *[F.col(c) for c in unique_cols])
-                        .cast("long").alias("d")).first()["d"])
-            got_all = _run_parallel(*thunks, pool="maintenance")
-            got = got_all[0]
-            n_rows = int(got["n"])
-            if verify:
-                if int(got["nulls"]) != 0:
-                    raise RuntimeError(
-                        f"{fn_name}: refusing to promote {index_dir}@"
-                        f"{version}: {int(got['nulls'])} live rows "
-                        f"have a NULL ({', '.join(unique_cols)}) key "
-                        f"— NULL keys evade the distinct-key audit "
-                        f"and cannot be deduplicated or tombstoned at "
-                        f"serve time")
-                d = got_all[-1]
-                if n_rows != int(d):
-                    raise RuntimeError(
-                        f"{fn_name}: refusing to promote {index_dir}@"
-                        f"{version}: {n_rows} live rows but only "
-                        f"{int(d)} distinct "
-                        f"({', '.join(unique_cols)}) keys — an "
-                        f"upstream double-add broke the disjoint-ids "
-                        f"contract; a promoted duplicate would "
-                        f"double-score its document at serve time")
-        stats = {"id_col": m["id_col"], "leaf": leaf,
-                 "source_version": version,
-                 "source_batch_id": int(version[1:]),
-                 "empty": view is None,
-                 "n_rows": n_rows if verify else None}
-        tmp = os.path.join(dest, _SNAPSHOT_STATS + ".tmp")
-        with open(tmp, "w") as f:
-            json.dump(stats, f)
-        os.replace(tmp, os.path.join(dest, _SNAPSHOT_STATS))
-    except BaseException:
-        # cleanup covers the stats write and rename too — a failure
-        # anywhere before os.replace returns (e.g. ENOSPC) must leave
-        # dest reusable, not torn-and-refused-forever
-        shutil.rmtree(dest, ignore_errors=True)
-        raise
-    return stats
-
-
-def export_ann_snapshot(spark: SparkSession, index_dir: str, dest: str,
-                        as_of: int | None = None,
-                        verify: bool = True) -> dict:
-    """Promote one IVFPQ code-table version (a store maintained by
-    :func:`ann_refresh_batches`) to an immutable snapshot: the masked
-    live view folded into ONE ``ivf_list``-hive-partitioned codes
-    artifact — a snapshot serve (:func:`load_ann_snapshot` →
-    :func:`~tantalus_spark.datapipe.similarity.ivf_pq_topk_batch`)
-    partition-prunes to the probed lists' files and carries zero
-    segment unions and zero tombstone joins in the plan.
-    ``verify=True`` gates on the per-row store's invariant (vec_id is
-    a key of the live view); commit protocol and guards match
-    :func:`export_term_snapshot`."""
-    return _export_rowwise_snapshot(
-        spark, index_dir, dest, "codes", "export_ann_snapshot",
-        "ivf_list", [_read_or_id(index_dir, as_of)], as_of, verify)
-
-
-def export_feats_snapshot(spark: SparkSession, index_dir: str,
-                          dest: str, as_of: int | None = None,
-                          verify: bool = True) -> dict:
-    """Promote one ENRICHED dense-feature version (a store maintained
-    by :func:`feats_refresh_batches`) to an immutable snapshot: the
-    masked live view folded into ONE ``bucket``-hive-partitioned
-    feats artifact — a snapshot serve (:func:`load_feats_snapshot` →
-    ``hybrid_serve_topk_batch``'s dense leg) file-prunes to the query
-    buckets with zero segment unions and zero tombstone joins.
-    ``verify=True`` gates on (id, bucket) being a key of the live
-    view; commit protocol and guards match
-    :func:`export_term_snapshot`."""
-    return _export_rowwise_snapshot(
-        spark, index_dir, dest, "feats", "export_feats_snapshot",
-        "bucket", [_read_or_id(index_dir, as_of), "bucket"], as_of,
-        verify)
-
-
-def _read_or_id(index_dir: str, as_of: int | None) -> str:
-    """The store's id column name off the resolved manifest (empty
-    stores have no manifest to read — the caller's resolve raises
-    first, so a bare default never serves)."""
-    version = _resolve_version(index_dir, as_of)
-    if version is None:
-        return "id"
-    return _read_manifest(index_dir, version)["id_col"]
-
-
-def _load_rowwise_snapshot(spark: SparkSession, dest: str,
-                           fn_name: str) -> DataFrame | None:
-    p = os.path.join(dest, _SNAPSHOT_STATS)
-    if not os.path.exists(p):
-        raise ValueError(
-            f"{fn_name}: {dest} has no {_SNAPSHOT_STATS} — torn or "
-            f"foreign export; re-run the export into a fresh dest")
-    with open(p) as f:
-        s = json.load(f)
-    if s.get("empty"):
-        return None
-    return spark.read.parquet(os.path.join(dest, s["leaf"]))
-
-
-def load_ann_snapshot(spark: SparkSession, dest: str) -> DataFrame | None:
-    """Read a promoted IVFPQ snapshot: the (id, pq_code, ivf_list)
-    codes DataFrame off the single folded artifact — the same
-    contract as :func:`load_ann_index`, with no segment union and no
-    tombstone mask in the plan. Refuses a dest without a committed
-    ``snapshot.json`` (torn export)."""
-    return _load_rowwise_snapshot(spark, dest, "load_ann_snapshot")
-
-
-def load_feats_snapshot(spark: SparkSession,
-                        dest: str) -> DataFrame | None:
-    """Read a promoted dense-feature snapshot: the ENRICHED
-    (id, bucket, feat, norm) DataFrame off the single folded artifact
-    — the same contract as :func:`load_feats_index`, with no segment
-    union and no tombstone mask in the plan. Refuses a dest without a
-    committed ``snapshot.json`` (torn export)."""
-    return _load_rowwise_snapshot(spark, dest, "load_feats_snapshot")
-
-
-_RELEASE_META = "release.json"
-
-_SNAPSHOT_EXPORTERS = {
-    "term": export_term_snapshot,
-    "ann": export_ann_snapshot,
-    "feats": export_feats_snapshot,
-}
-
-
-def export_release(spark: SparkSession, stores: dict[str, tuple[str, str]],
-                   dest_root: str, verify: bool = True) -> dict:
-    """Promote a CONSISTENT cross-family serving release: pin
-    ``batch = common_batch_id(all stores)``, export every store
-    ``as_of=batch`` into ``dest_root/v{batch}/{name}`` with its
-    family's audit-gated exporter, commit ``release.json`` last, then
-    atomically swap ``dest_root/CURRENT`` — one call turns N
-    independently-maintained LSM stores into one immutable, audited,
-    mutually-consistent artifact set (the q157 consistency pin
-    composed with the q159–q162 promotions; the "cut a release of the
-    serving stack" operation a training run or serving fleet deploys
-    from while the maintainers keep absorbing CDC).
-
-    ``stores`` maps a name to ``(family, index_dir)`` with family in
-    ``{"term", "ann", "feats", "bands"}``. Commit-protocol properties
-    carried over from the per-store exporters: per-store data commits
-    before release.json, release.json before the pointer swap; a torn
-    release (crash mid-export) leaves no release.json and is swept
-    and re-exported by the next call; re-promoting an
-    already-released batch is idempotent (returns the committed
-    release, repairing a missing pointer swap); the pointer never
-    regresses. Retire old releases with :func:`gc_releases` (the
-    keep_versions analog at the release tier) after their readers
-    drain."""
-    if not stores:
-        raise ValueError("export_release: no stores given")
-    # export_band_snapshot is defined later in the module; resolved at
-    # call time like the other globals
-    exporters = dict(_SNAPSHOT_EXPORTERS, bands=export_band_snapshot)
-    for name, (family, _ix) in stores.items():
-        if family not in exporters:
-            raise ValueError(
-                f"export_release: store {name!r} has unknown family "
-                f"{family!r} (expected one of {sorted(exporters)})")
-    batch = common_batch_id(*[ix for _f, ix in stores.values()])
-    vname = f"v{batch:08d}"
-    vdir = os.path.join(dest_root, vname)
-    meta_path = os.path.join(vdir, _RELEASE_META)
-    cur = _current_version(dest_root)
-    if os.path.exists(meta_path):
-        # already committed (maybe before a crash that lost the swap):
-        # repair the pointer if needed and return the release —
-        # idempotent under the maintainers' at-least-once posture.
-        # But only if it covers THIS request: re-releasing the same
-        # batch after adding a store (or remapping a family) must not
-        # silently return a release missing that store — load_release
-        # would then serve a partial artifact set. Releases are
-        # immutable, so a mismatch is an operator error to surface.
-        with open(meta_path) as f:
-            release = json.load(f)
-        requested = {name: family for name, (family, _ix)
-                     in stores.items()}
-        if release.get("stores") != requested:
-            raise RuntimeError(
-                f"export_release: batch {batch} is already released "
-                f"with stores {release.get('stores')} but this call "
-                f"requested {requested} — releases are immutable; "
-                f"advance the stores' common batch and cut a new "
-                f"release to change the store set")
-        if cur is None or int(cur[1:]) < batch:
-            _swap_pointer(dest_root, vname)
-        return release
-    if cur is not None and int(cur[1:]) >= batch:
-        raise RuntimeError(
-            f"export_release: CURRENT={cur} already at or past "
-            f"batch {batch} — the stores' common batch has not "
-            f"advanced since the last release")
-    if os.path.isdir(vdir):
-        # torn release: exports ran, release.json never committed —
-        # the per-store immutability guards would refuse the re-export,
-        # so sweep the never-committed debris first
-        shutil.rmtree(vdir)
-    # per-store exports are independent (separate source stores,
-    # separate dest subdirs) — run them concurrently (guide §2.6); a
-    # failure leaves a torn vdir with no release.json, swept and
-    # re-exported by the next call exactly as before
-    _run_parallel(*[
-        (lambda family=family, ix=ix, name=name:
-         exporters[family](spark, ix, os.path.join(vdir, name),
-                           as_of=batch, verify=verify))
-        for name, (family, ix) in sorted(stores.items())],
-        pool="maintenance")
-    release = {"batch_id": batch, "version": vname,
-               "stores": {name: stores[name][0] for name in stores}}
-    tmp = meta_path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(release, f)
-    os.replace(tmp, meta_path)
-    _swap_pointer(dest_root, vname)
-    return release
-
-
-def gc_releases(dest_root: str, keep_releases: int = 2) -> list[str]:
-    """Retire releases older than the newest ``keep_releases``
-    committed ones (floor 2 — the swap window for readers that pinned
-    the previous release, like the store GC), plus any torn release
-    directory at or below CURRENT (never-committed debris a crash
-    left behind; a torn directory AHEAD of CURRENT is the next
-    export's to sweep-and-retry, so it is left alone). Returns the
-    removed directory names. Releases are immutable and independent
-    — an rmtree of a retired one cannot affect a kept one (snapshots
-    never share files the way store manifests share segments)."""
-    keep_releases = max(2, int(keep_releases))
-    cur = _current_version(dest_root)
-    if cur is None:
-        return []
-    cur_id = int(cur[1:])
-    committed = sorted(
-        (d for d in os.listdir(dest_root)
-         if _is_vname(d)
-         and os.path.isdir(os.path.join(dest_root, d))
-         and os.path.exists(os.path.join(dest_root, d, _RELEASE_META))
-         and int(d[1:]) <= cur_id),
-        key=lambda d: int(d[1:]))
-    keep = set(committed[-keep_releases:])
-    removed: list[str] = []
-    for d in os.listdir(dest_root):
-        full = os.path.join(dest_root, d)
-        if (_is_vname(d) and os.path.isdir(full) and d not in keep
-                and int(d[1:]) <= cur_id):
-            shutil.rmtree(full)
-            removed.append(d)
-    return removed
-
-
-def _swap_pointer(root: str, version: str) -> None:
-    tmp = os.path.join(root, _POINTER + ".tmp")
-    with open(tmp, "w") as f:
-        f.write(version)
-    os.replace(tmp, os.path.join(root, _POINTER))
-
-
-def load_release(spark: SparkSession, dest_root: str,
-                 as_of: int | None = None) -> dict:
-    """Read one serving release: ``{"batch_id": N, "stores": {name:
-    loaded artifact}}`` where a ``term`` store loads as the
-    ``(postings, (n_docs, avgdl))`` tuple and the rowwise families
-    load as their DataFrames — each off its single folded snapshot
-    (zero segment unions, zero tombstone joins). ``None`` resolves
-    the CURRENT pointer; ``as_of`` floor-resolves over the retained
-    release directories like the store loaders do. Refuses an empty
-    root or a pre-retention pin."""
-    loaders = {"term": load_term_snapshot, "ann": load_ann_snapshot,
-               "feats": load_feats_snapshot,
-               "bands": load_band_snapshot}
-    if as_of is None:
-        version = _current_version(dest_root)
-        if version is None:
-            raise ValueError(f"load_release: {dest_root} has no "
-                             f"committed release")
-    else:
-        committed = sorted(
-            (d for d in os.listdir(dest_root)
-             if _is_vname(d)
-             and os.path.exists(os.path.join(dest_root, d,
-                                             _RELEASE_META))
-             and int(d[1:]) <= int(as_of)),
-            key=lambda d: int(d[1:])) if os.path.isdir(dest_root) else []
-        if not committed:
-            raise ValueError(
-                f"load_release: no committed release at or before "
-                f"batch {as_of} under {dest_root}")
-        version = committed[-1]
-    vdir = os.path.join(dest_root, version)
-    with open(os.path.join(vdir, _RELEASE_META)) as f:
-        release = json.load(f)
-    return {"batch_id": release["batch_id"],
-            "stores": {name: loaders[family](
-                spark, os.path.join(vdir, name))
-                for name, family in release["stores"].items()}}
-
-
-def follow_releases(dest_root: str, on_batch):
-    """The serving fleet's read side of :func:`export_release`: a
-    ``foreachBatch`` callback that re-resolves ``dest_root/CURRENT``
-    between micro-batches and RELOADS the release artifacts only when
-    the pointer actually moved — wire a query stream as
-    ``query_stream.writeStream.foreachBatch(
-    follow_releases(root, serve_fn)).start()`` and every micro-batch
-    is served off whichever release was CURRENT when it began, with
-    zero per-batch load cost while the pointer is stable (one driver-
-    side file read). ``on_batch(release, batch_df, batch_id)`` gets
-    the same ``{"batch_id": N, "stores": {...}}`` dict
-    :func:`load_release` returns, the micro-batch of queries, and the
-    stream's batch id; it serves and writes results however the
-    deployment sinks them.
-
-    Swap-race safety: the reload pins ``as_of`` to the batch id READ
-    from the pointer, so a release landing between the pointer read
-    and the artifact load cannot tear the view — the batch serves the
-    observed release and the NEXT batch picks up the new pointer.
-    Loaded artifacts are immutable snapshot reads (single folded
-    parquet per store), so holding one across batches never sees
-    in-place change; retire old releases with :func:`gc_releases`
-    only after followers drain past them (the keep_releases window is
-    exactly this grace period). A stream started before the first
-    release refuses loudly rather than serving nothing.
-
-    The callback exposes ``state`` (current version, reload count)
-    for monitoring/tests. Reference anchor: the reference's serve
-    side is always-current by construction (live Postgres per request,
-    search_util/search_helper.py:27-49); the engine's answer is
-    pointer-swap reload with per-batch freshness.
-
-    Reload granularity is the micro-batch interval by design — a
-    tighter bound would re-read artifacts mid-batch and lose the
-    batch's internal consistency."""
-    state = {"version": None, "batch_id": None, "reloads": 0,
-             "release": None}
-
-    def _cb(batch_df: DataFrame, batch_id: int) -> None:
-        cur = _current_version(dest_root)
-        if cur is None:
-            raise ValueError(
-                f"follow_releases: {dest_root} has no committed "
-                f"release — cut one with export_release before "
-                f"starting the serving stream")
-        if cur != state["version"]:
-            spark = batch_df.sparkSession
-            # pin to the OBSERVED pointer (floor-resolve on its batch
-            # id), not CURRENT-at-load-time: a concurrent
-            # export_release between the two reads must not hand this
-            # batch a release newer than the pointer it decided on
-            state["release"] = load_release(spark, dest_root,
-                                            as_of=int(cur[1:]))
-            state["version"] = cur
-            state["batch_id"] = state["release"]["batch_id"]
-            state["reloads"] += 1
-        on_batch(state["release"], batch_df, batch_id)
-
-    _cb.state = state
-    return _cb
 
 
 def _commit_version(index_dir: str, version: str, manifest: dict) -> None:
@@ -1195,543 +646,6 @@ def _select_fold(segments: list[dict], max_segments: int):
             [x for x in segments if x["name"] not in fold])
 
 
-def load_ann_index(spark: SparkSession, index_dir: str,
-                   as_of: int | None = None):
-    """Read one ANN code-table version: the (id, ivf_list, pq_code)
-    DataFrame, or None when no version has been committed. Same
-    manifest/segment layout as the BM25 store (single "codes" leaf
-    per segment; per-row independence means no stats sidecar).
-    ``as_of`` time-travels to the view as of that batch id, like
-    :func:`load_term_index`."""
-    version = _resolve_version(index_dir, as_of)
-    if version is None:
-        return None
-    m = _read_manifest(index_dir, version)
-    return _masked_union(spark, index_dir, m, "codes")
-
-
-def _rowwise_refresh_batches(
-    index_dir: str,
-    leaf: str,
-    delta_fn,
-    id_col: str,
-    op_col: str | None,
-    max_segments: int,
-    keep_versions: int,
-    partition_cols: list[str] | None = None,
-    extra_leaves: dict | None = None,
-):
-    """Generic foreachBatch maintainer for PER-ROW-INDEPENDENT index
-    tables (IVFPQ codes, enriched dense features — anything where a
-    row's value depends only on its own source row plus frozen
-    artifacts) on the segmented store: a commit writes ONLY the batch's
-    ``delta_fn(adds)`` as a new ``leaf`` segment and/or a tombstone id
-    set, plus a manifest — O(batch) bytes per refresh. Serving unions
-    the manifest's segments and masks deletes with the broadcast
-    ``ts_seq > seg_seq`` rule (a delete+re-add CDC batch keeps the NEW
-    rows). Compaction folds the live view into one segment past
-    ``max_segments``; GC bounds storage. Per-row independence means no
-    stats sidecar and no tombstone-intersection guard: a tombstone for
-    a never-indexed id masks nothing and corrupts nothing.
-    Replay-idempotent by batch-id-versioned commits, like the BM25
-    maintainer (whose corpus stats need the richer
-    :func:`index_refresh_batches` machinery).
-
-    ``partition_cols`` hive-partitions every segment write (delta AND
-    compacted) so a serve's static IN / dynamic pruning filter on that
-    column reads only the matching lists' FILES — the same
-    index-once/query-many posture the batch warehouse layout gets from
-    ``partitionBy`` (plan-contract test through :func:`load_ann_index`
-    → ``ivf_pq_topk_batch``). The small-files trade on tiny deltas is
-    bounded: compaction folds them into one partitioned segment every
-    ``max_segments`` batches.
-
-    ``extra_leaves`` maps a leaf name to a derive-from-the-delta
-    function: each segment then carries that DERIVED table alongside
-    the main leaf, maintained at the same O(batch) cost per commit —
-    the derived rows must carry ``id_col`` so the same broadcast
-    tombstone mask governs them, and must be PER-ROW derived from the
-    delta (one source row → its derived rows, no cross-corpus state),
-    so a serve can read the derived layout directly instead of
-    re-deriving it from the corpus-scale main leaf on every query
-    (the band store's pre-exploded (id, band, h) postings — the live
-    twin of the shuffle the snapshot exporter pays once). Compaction
-    folds each extra leaf by masked-union of the STORED leaf (never
-    re-deriving), so fold cost stays one read+write per leaf."""
-    os.makedirs(index_dir, exist_ok=True)
-
-    def _on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        cur = _current_version(index_dir)
-        # GC before the replay check, not only after a commit: a crash
-        # between _commit_version and _gc_versions would otherwise defer
-        # that commit's GC forever on a quiet stream — the replay guard
-        # below returns early and superseded manifests/segments linger.
-        # GC is idempotent and metadata-only, so repairing here is free.
-        if cur is not None:
-            _gc_versions(index_dir, keep_versions)
-        if cur is not None and int(cur[1:].rstrip("c")) >= int(batch_id):
-            return  # replayed batch: already committed
-        spark = batch_df.sparkSession
-        manifest = (_read_manifest(index_dir, cur) if cur is not None
-                    else {"segments": [], "tombstones": [],
-                          "id_col": id_col})
-
-        if op_col is not None:
-            adds = batch_df.filter(F.col(op_col) == "add").drop(op_col)
-            dels = (batch_df.filter(F.col(op_col) == "delete")
-                    .select(id_col).distinct())
-        else:
-            adds, dels = batch_df, None
-
-        seq = int(batch_id)
-        segments = list(manifest["segments"])
-        tombstones = list(manifest["tombstones"])
-        changed = False
-
-        # Emptiness gates ride the writes as OBSERVED row counts (one
-        # job each, the transform computed ONCE — the pre-r13
-        # take(1)-then-write pattern ran delta_fn twice per commit:
-        # once for the gate, once for the write; caching instead would
-        # pin the write's input partitioning and spray |cached
-        # partitions| × |partition values| small files into a
-        # hive-partitioned segment, measured +60% on the
-        # maintained-hybrid lifecycle). The tombstone write and the
-        # delta-segment write are independent and run concurrently
-        # (guide §2.6); an empty result removes its never-registered
-        # dir — nothing is visible until the manifest commits.
-        seg_name = f"seg-{seq:08d}"
-        seg_dir = os.path.join(index_dir, seg_name)
-        ts_name = f"ts-{seq:08d}"
-        ts_path = os.path.join(index_dir, ts_name)
-        delta = delta_fn(adds)
-        if extra_leaves:
-            # Derived-leaf writes join the SAME _run_parallel as the
-            # main-leaf write (guide §2.6) instead of a serialized
-            # read-back job per leaf after it (~0.4 s of extra commit
-            # wall at sf0.1). The delta is persisted so the batch
-            # transform runs ONCE and every leaf write reads the same
-            # cached rows — the bit-identity the read-back provided,
-            # without the extra scheduling round trip (delta_fn is
-            # per-row deterministic by the extra-leaves contract, so
-            # even a cache-evicted recompute yields identical rows).
-            # No hive partitioning on extra-leaf stores (band store:
-            # partition_cols=None), so the r13 cached-write
-            # small-file-spray measurement does not apply here. An
-            # empty delta writes empty leaf dirs into the
-            # never-registered seg dir the rmtree below removes.
-            delta = delta.persist()
-        write_ts = dels is not None and bool(segments)
-        got = _run_parallel(
-            (lambda: _observed_write(dels, ts_path,
-                                     {"n": F.count(F.lit(1))},
-                                     coalesce=1))
-            if write_ts else (lambda: None),
-            lambda: _observed_write(delta, os.path.join(seg_dir, leaf),
-                                    {"n": F.count(F.lit(1))},
-                                    partition_cols=partition_cols),
-            *[
-                (lambda lname=lname, derive=derive:
-                 (derive(delta).write.mode("overwrite")
-                  .parquet(os.path.join(seg_dir, lname))))
-                for lname, derive in (extra_leaves or {}).items()
-            ],
-            pool="maintenance",
-        )
-        got_ts, got_delta = got[0], got[1]
-        if extra_leaves:
-            delta.unpersist()
-        if write_ts:
-            if int(got_ts["n"]) > 0:
-                tombstones.append({"name": ts_name, "seq": seq})
-                changed = True
-            else:
-                shutil.rmtree(ts_path, ignore_errors=True)
-        if int(got_delta["n"]) > 0:
-            segments.append({
-                "name": seg_name, "seq": seq,
-                "bytes": _dir_bytes(
-                    os.path.join(index_dir, seg_name))})
-            changed = True
-        else:
-            shutil.rmtree(seg_dir, ignore_errors=True)
-
-        if not changed:
-            return
-        # compaction: tombstone overflow forces a FULL fold (an
-        # unbounded tombstone list is an ever-wider broadcast mask per
-        # serve, and only folding everything lets it clear — a partial
-        # fold must retain tombstones for the kept older segments);
-        # segment overflow folds the size-tiered minimum (_select_fold)
-        # so a byte is rewritten O(log(index/batch)) times, not every
-        # max_segments batches
-        if len(tombstones) > int(max_segments):
-            fold, keep = list(segments), []
-        else:
-            fold, keep = _select_fold(segments, max_segments)
-        if fold:
-            sub = {"segments": fold, "tombstones": tombstones,
-                   "id_col": id_col}
-            view = _masked_union(spark, index_dir, sub, leaf)
-            folded_n = 0
-            if view is not None:
-                comp = f"seg-{seq:08d}c"
-                # the everything-masked gate is the fold write's own
-                # observed row count (no separate take(1) job — that
-                # gate re-ran the masked union once before the write
-                # re-read it); an all-masked fold removes the
-                # never-registered dir below.
-                #
-                # Extra-leaf folds run CONCURRENTLY with the main fold
-                # write (guide §2.6): the STORED derived leaf is
-                # masked-unioned from the SOURCE segments — never the
-                # new comp dir — so the two jobs share no data
-                # dependency. The derived rows carry id_col, so the
-                # tombstone rule that masked the main leaf masks them
-                # identically; no re-derivation job for segments that
-                # carry the leaf. Segments written BEFORE the leaf
-                # existed (an upgraded store) fall back to deriving
-                # from their masked main rows — per-row derivation
-                # makes that exact, and the fold is precisely how such
-                # a store migrates (each fold backfills the leaf for
-                # the segments it touches) instead of wedging on a
-                # missing path. An all-masked fold writes (at most) an
-                # empty extra leaf into the never-registered dir the
-                # rmtree below removes — same debris class as before.
-                xthunks = []
-                for lname, derive in (extra_leaves or {}).items():
-                    xview = _masked_union_or_derive(
-                        spark, index_dir, sub, lname, leaf, derive)
-                    if xview is not None:
-                        xthunks.append(
-                            lambda xview=xview, lname=lname:
-                            (xview.write.mode("overwrite")
-                             .parquet(os.path.join(index_dir, comp,
-                                                   lname))))
-                got = _run_parallel(
-                    lambda: _observed_write(
-                        view, os.path.join(index_dir, comp, leaf),
-                        {"n": F.count(F.lit(1))},
-                        partition_cols=partition_cols),
-                    *xthunks, pool="maintenance")
-                folded_n = int(got[0]["n"])
-            if folded_n > 0:
-                keep = keep + [{
-                    "name": comp, "seq": seq,
-                    "bytes": _dir_bytes(os.path.join(index_dir, comp))}]
-            elif view is not None:
-                # every folded row was tombstone-masked — drop the
-                # folded segments and the empty (unreadable when
-                # partitioned) never-registered parquet dir
-                shutil.rmtree(os.path.join(index_dir, comp),
-                              ignore_errors=True)
-            segments = keep
-        # prune non-load-bearing tombstones: a tombstone at seq T masks
-        # only rows in segments with seq < T (folded rows carry this
-        # commit's seq, so a fold un-masks them physically). Once no
-        # kept segment is older than T the tombstone masks nothing —
-        # dropping it keeps the serve-time broadcast mask list minimal
-        # and lets GC reclaim the file. A full fold clears the whole
-        # list; a partial fold clears exactly the entries only the
-        # folded-away segments needed.
-        min_seq = min((int(s["seq"]) for s in segments), default=None)
-        tombstones = ([] if min_seq is None else
-                      [t for t in tombstones
-                       if int(t["seq"]) > min_seq])
-        new_manifest = {"segments": segments, "tombstones": tombstones,
-                        "id_col": id_col}
-        _commit_version(index_dir, f"v{seq:08d}", new_manifest)
-        _gc_versions(index_dir, keep_versions)
-
-    return _on_batch
-
-
-def ann_refresh_batches(
-    index_dir: str,
-    centroids: list[list[float]],
-    codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    op_col: str | None = None,
-    max_segments: int = 8,
-    keep_versions: int = 2,
-):
-    """The foreachBatch maintainer for the IVFPQ ANN code table — the
-    third index family's :func:`index_refresh_batches` twin, on the
-    same segmented store via :func:`_rowwise_refresh_batches`: the
-    delta is :func:`~tantalus_spark.datapipe.similarity.merge_ann_index`'s
-    assign+encode over the batch alone (frozen quantizer + codebooks).
-    After any number of batches the CURRENT view is bit-identical to a
-    rebuild over the surviving vectors with the same frozen artifacts
-    (rebuild-equal CDC test in tests/test_similarity.py). Quantizer
-    drift under maintenance is
-    :func:`~tantalus_spark.datapipe.similarity.ivf_index_health`'s
-    department — retraining is a rebuild decision, not a merge.
-
-    Wire it: ``vec_stream.writeStream.foreachBatch(
-    ann_refresh_batches("/path/ann", cents, books)).start()``.
-    """
-    from tantalus_spark.datapipe.similarity import ivf_assign, pq_encode
-
-    def _delta(adds: DataFrame) -> DataFrame:
-        return (ivf_assign(adds.filter(F.col(vec_col).isNotNull()),
-                           centroids, id_col=id_col, vec_col=vec_col)
-                .select(F.col(id_col), F.col("ivf_list"))
-                .join(pq_encode(adds, codebooks, id_col=id_col,
-                                vec_col=vec_col), id_col))
-
-    # hive-partition every codes segment by ivf_list: a serve's probe
-    # filter then PARTITION-prunes each segment scan to the probed
-    # lists' files — the streamed store matches the batch warehouse
-    # layout (q138's plan contract) instead of reading whole segments
-    return _rowwise_refresh_batches(index_dir, "codes", _delta, id_col,
-                                    op_col, max_segments, keep_versions,
-                                    partition_cols=["ivf_list"])
-
-
-def load_feats_index(spark: SparkSession, index_dir: str,
-                     as_of: int | None = None):
-    """Read one dense-feature version: the ENRICHED
-    (id, bucket, feat, norm) DataFrame (zero-norm-join serving
-    posture), or None when no version has been committed. ``as_of``
-    time-travels to the view as of that batch id, like
-    :func:`load_term_index`."""
-    version = _resolve_version(index_dir, as_of)
-    if version is None:
-        return None
-    m = _read_manifest(index_dir, version)
-    return _masked_union(spark, index_dir, m, "feats")
-
-
-def feats_refresh_batches(
-    index_dir: str,
-    dim: int = 64,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    op_col: str | None = None,
-    max_segments: int = 8,
-    keep_versions: int = 2,
-):
-    """The foreachBatch maintainer for the DENSE hashed-feature table —
-    the fourth serving family's streaming maintainer, closing the set
-    (BM25 postings, IVFPQ codes, LSH-band state, and now the dense
-    leg): the delta is the
-    batch's :func:`~tantalus_spark.datapipe.textstats.hashed_features`
-    ENRICHED with its own O(batch)
-    :func:`~tantalus_spark.datapipe.textstats.hashed_norms` (norms are
-    per-document, so enrichment needs no cross-corpus arithmetic) —
-    written as one segment on the segmented store via
-    :func:`_rowwise_refresh_batches`. Serving
-    (:func:`load_feats_index` →
-    :func:`~tantalus_spark.datapipe.textstats.hybrid_serve_topk_batch`
-    or ``_dense_leg_scored``) gets the zero-norm-join ENRICHED layout
-    directly. Rebuild-equal CDC test in tests/test_textstats.py.
-
-    Wire it: ``doc_stream.writeStream.foreachBatch(
-    feats_refresh_batches("/path/feats", dim=64)).start()``.
-    """
-    from tantalus_spark.datapipe.textstats import (hashed_features,
-                                                   hashed_norms)
-
-    def _delta(adds: DataFrame) -> DataFrame:
-        feats = hashed_features(adds, dim=dim, text_col=text_col,
-                                id_col=id_col)
-        return feats.join(hashed_norms(feats, id_col=id_col), id_col)
-
-    # partition by bucket for the same reason the ANN store partitions
-    # by ivf_list: the dense serving leg's `bucket IN (query buckets)`
-    # filter file-prunes each segment (dim buckets bounds the
-    # directory fan-out)
-    return _rowwise_refresh_batches(index_dir, "feats", _delta, id_col,
-                                    op_col, max_segments, keep_versions,
-                                    partition_cols=["bucket"])
-
-
-def load_band_index(spark: SparkSession, index_dir: str,
-                    as_of: int | None = None,
-                    layout: str = "bands"):
-    """Read one LSH band-table version, or None when no version has
-    been committed. ``layout="bands"`` returns the (id, bands
-    array<long>) DataFrame — the audit/re-band shape.
-    ``layout="postings"`` returns the maintained pre-exploded
-    (band, h) postings view — the serve shape
-    :func:`~tantalus_spark.datapipe.dedup.novel_documents` consumes
-    with ``index_layout="postings"``: the same tombstone mask as the
-    band view, but ZERO per-serve Generate/DISTINCT on the index side
-    (the explode was paid O(batch) at each commit, not per query).
-    Postings layout requires every manifest segment to carry the
-    postings leaf; a store with pre-postings segments (written by a
-    pre-r12 :func:`band_refresh_batches`) fails the read with the
-    missing segments named. Migration: compaction BACKFILLS the leaf
-    for the segments it folds (re-deriving from their masked band
-    rows — :func:`_masked_union_or_derive`), so the store migrates as
-    folds touch old segments; partial size-tiered folds do NOT rewrite
-    every segment, so a store that must serve postings immediately
-    should re-ingest (or keep serving ``layout="bands"`` until folds
-    drain the old segments). ``as_of`` time-travels like
-    :func:`load_term_index` — a reproducibility pin for "was this
-    document novel as of batch N"."""
-    if layout not in ("bands", "postings"):
-        raise ValueError(f"load_band_index: unknown layout "
-                         f"{layout!r} (expected 'bands' or 'postings')")
-    version = _resolve_version(index_dir, as_of)
-    if version is None:
-        return None
-    m = _read_manifest(index_dir, version)
-    if layout == "bands":
-        return _masked_union(spark, index_dir, m, "bands")
-    missing = _segments_missing_leaf(index_dir, m, "postings")
-    if missing:
-        raise ValueError(
-            f"load_band_index: segments "
-            f"{sorted(s['name'] for s in missing)} of {index_dir}@"
-            f"{version} carry no postings leaf (written by a "
-            f"pre-postings maintainer) — serve layout='bands' until "
-            f"compaction folds them (folds backfill the leaf), or "
-            f"re-ingest the store")
-    view = _masked_union(spark, index_dir, m, "postings")
-    # mask first (needs id_col), then prune to the exact (band, h)
-    # shape novel_documents' postings path expects
-    return view.select("band", "h") if view is not None else None
-
-
-def band_refresh_batches(
-    index_dir: str,
-    n_perm: int = 16,
-    bands: int = 4,
-    shingle_n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    hash_family: str = "xxhash64",
-    op_col: str | None = None,
-    max_segments: int = 8,
-    keep_versions: int = 2,
-):
-    """The foreachBatch maintainer for the LSH BAND index — the
-    fourth serving family joins the segmented store (BM25 postings,
-    IVFPQ codes, and dense feats have theirs), upgrading
-    :func:`~tantalus_spark.datapipe.dedup.merge_band_index` /
-    ``prune_band_index``'s caller-managed frames into a versioned,
-    GC'd, time-travelable store: the delta is
-    :func:`~tantalus_spark.datapipe.dedup.minhash_bands` over the
-    batch alone (band rows are per-document expressions — no corpus
-    state), deletes tombstone a document's band row so its near-twins
-    become novel again immediately (right-to-be-forgotten for dedup
-    state), and a delete+re-add batch keeps the NEW banding.
-    Band parameters must match across the store's life (the band hash
-    folds them in, so a mismatch makes probes miss rather than
-    silently corrupt). Rebuild-equal + replay-idempotent via
-    :func:`_rowwise_refresh_batches`. No hive partition column: the
-    serve probes by semi-join over the exploded band array, not by a
-    prunable point filter.
-
-    Wire it: ``doc_stream.writeStream.foreachBatch(
-    band_refresh_batches("/path/bands")).start()``.
-    """
-    from tantalus_spark.datapipe.dedup import minhash_bands
-
-    def _delta(adds: DataFrame) -> DataFrame:
-        return minhash_bands(adds, n_perm=n_perm, bands=bands,
-                             shingle_n=shingle_n, text_col=text_col,
-                             id_col=id_col, hash_family=hash_family)
-
-    def _postings(stored: DataFrame) -> DataFrame:
-        # pre-exploded (id, band, h) postings, derived per-row from
-        # the batch's band rows — O(batch) per commit. Keeping id_col
-        # lets the broadcast tombstone mask govern this leaf too; a
-        # live novelty serve then reads the postings view directly
-        # (load_band_index(layout="postings")) with ZERO index-side
-        # Generate/DISTINCT shuffles — the live twin of the corpus-
-        # scale explode export_band_snapshot pays once per promotion.
-        return stored.select(
-            F.col(id_col), F.posexplode("bands").alias("band", "h"))
-
-    return _rowwise_refresh_batches(index_dir, "bands", _delta, id_col,
-                                    op_col, max_segments, keep_versions,
-                                    extra_leaves={"postings": _postings})
-
-
-def export_band_snapshot(spark: SparkSession, index_dir: str,
-                         dest: str, as_of: int | None = None,
-                         verify: bool = True) -> dict:
-    """Promote one LSH band-table version (a store maintained by
-    :func:`band_refresh_batches`) to an immutable snapshot with TWO
-    layouts of the same state: the id-distributed ``bands`` table
-    (the audit/re-band artifact, same shape as the live view) and a
-    pre-exploded DISTINCT ``postings`` (band, h) table — the serve
-    artifact a snapshot novelty serve probes with zero index-side
-    shuffles (probe-explode + one semi-join; plan test in
-    tests/test_plans.py).
-
-    The postings artifact is FOLDED from the store's maintained
-    per-segment postings leaf (masked union, exactly as compaction
-    folds it — the explode was already paid O(batch) at each commit),
-    never re-derived from the corpus-scale bands table; only the
-    cross-segment DISTINCT + layout shuffle happens at export, so the
-    export plan carries no Generate on the index side (plan test).
-    Segments written by a pre-postings maintainer fall back to
-    deriving from their masked band rows (:func:
-    `_masked_union_or_derive` — exact, since postings are per-row).
-    ``verify=True`` gates on id being a key of the live view (a
-    double-banded document would shadow extra band buckets forever);
-    commit protocol and guards match :func:`export_term_snapshot`."""
-    version = _resolve_version(index_dir, as_of)
-    if version is not None and as_of is None:
-        # pin the whole export to ONE version: the bands artifact and
-        # the postings fold resolve the manifest independently, and a
-        # concurrent maintainer commit between the two reads must not
-        # hand them different corpus states
-        as_of = int(version[1:])
-    m = (_read_manifest(index_dir, version)
-         if version is not None else None)
-
-    def _postings(view: DataFrame, d: str) -> None:
-        (_snapshot_postings_view(spark, index_dir, m)
-         .repartition(F.col("h"))
-         .write.mode("overwrite")
-         .parquet(os.path.join(d, "postings")))
-
-    return _export_rowwise_snapshot(
-        spark, index_dir, dest, "bands", "export_band_snapshot",
-        None, [_read_or_id(index_dir, as_of)], as_of, verify,
-        extra_writes=_postings)
-
-
-def _snapshot_postings_view(spark: SparkSession, index_dir: str,
-                            m: dict) -> DataFrame:
-    """The DISTINCT (band, h) frame a band-snapshot export writes:
-    the STORED per-segment postings leaf masked-unioned exactly as
-    compaction folds it, deduplicated across segments — no Generate
-    over the corpus-scale bands table in the plan (plan-contract test
-    in tests/test_plans.py); pre-postings segments fall back to the
-    per-row derive."""
-    id_col = m["id_col"]
-    stored = _masked_union_or_derive(
-        spark, index_dir, m, "postings", "bands",
-        lambda bands: bands.select(
-            F.col(id_col),
-            F.posexplode("bands").alias("band", "h")))
-    return stored.select("band", "h").dropDuplicates()
-
-
-def load_band_snapshot(spark: SparkSession, dest: str,
-                       layout: str = "bands") -> DataFrame | None:
-    """Read a promoted band snapshot. ``layout="bands"`` returns the
-    (id, bands array<long>) table — the same contract as
-    :func:`load_band_index`; ``layout="postings"`` returns the
-    pre-exploded DISTINCT (band, h) table that ``novel_documents``
-    consumes without any index-side explode/dedup shuffle. Both come
-    off single folded artifacts with no segment union and no
-    tombstone mask. Refuses a dest without a committed
-    ``snapshot.json`` (torn export)."""
-    if layout not in ("bands", "postings"):
-        raise ValueError(f"load_band_snapshot: unknown layout "
-                         f"{layout!r} (expected 'bands' or 'postings')")
-    out = _load_rowwise_snapshot(spark, dest, "load_band_snapshot")
-    if out is None or layout == "bands":
-        return out
-    return spark.read.parquet(os.path.join(dest, "postings"))
-
-
 def index_refresh_batches(
     index_dir: str,
     text_col: str = "text",
@@ -1740,7 +654,6 @@ def index_refresh_batches(
     op_col: str | None = None,
     max_segments: int = 8,
     keep_versions: int = 2,
-    sort_folds: bool = True,
 ):
     """The foreachBatch index maintainer: returns the (batch_df,
     batch_id) callback that folds every arriving document micro-batch
@@ -1815,9 +728,11 @@ def index_refresh_batches(
 
     def _on_batch(batch_df: DataFrame, batch_id: int) -> None:
         cur = _current_version(index_dir)
-        # repair deferred GC from a crash between commit and GC (see
-        # _rowwise_refresh_batches for the rationale) before the replay
-        # guard can short-circuit it away
+        # GC before the replay check, not only after a commit: a crash
+        # between _commit_version and _gc_versions would otherwise defer
+        # that commit's GC forever on a quiet stream — the replay guard
+        # below returns early and superseded manifests/segments linger.
+        # GC is idempotent and metadata-only, so repairing here is free.
         if cur is not None:
             _gc_versions(index_dir, keep_versions)
         if cur is not None and int(cur[1:].rstrip("c")) >= int(batch_id):
@@ -1855,8 +770,7 @@ def index_refresh_batches(
             # write itself is DEFERRED into the adds-side _run_parallel
             # below (guide §2.6): the tombstone, doclens and postings
             # jobs touch disjoint dirs and nothing is visible until the
-            # manifest commits, so the rowwise maintainer's ts ∥ delta
-            # overlap applies here too.
+            # manifest commits, so they overlap.
             present = (live_lens
                        .join(F.broadcast(dels), id_col, "left_semi")
                        .groupBy(id_col).agg(F.max("dl").alias("dl")))
@@ -1909,14 +823,14 @@ def index_refresh_batches(
         delta = term_tf(adds, text_col=text_col,
                         id_col=id_col).select("term", id_col, "tf", "dl")
         got = _run_parallel(
+            spark,
             lambda: _observed_write(
                 lens, os.path.join(seg_dir, "doclens"),
                 {"n": F.count(F.lit(1)), "s": F.sum("dl")},
                 coalesce=1),
             lambda: delta.write.mode("overwrite").parquet(
                 os.path.join(seg_dir, "postings")),
-            *([ts_thunk] if ts_thunk is not None else []),
-            pool="maintenance",
+            *([ts_thunk] if ts_thunk is not None else [])
         )
         added = got[0]
         if ts_thunk is not None:
@@ -1972,25 +886,22 @@ def index_refresh_batches(
                 # little and costs a shuffle per commit). The fold
                 # already rewrites these bytes; the sort rides the
                 # same shuffle, trading fold CPU for per-serve IO
-                # (measured in SCALING.md "sorted folds"); set
-                # sort_folds=False for write-heavy/serve-light stores
-                # where the fold CPU never pays back.
+                # (measured in SCALING.md "sorted folds").
                 shaped = (_masked_union(spark, index_dir, sub,
                                         "postings")
-                          .repartition(F.col("term")))
-                if sort_folds:
-                    shaped = shaped.sortWithinPartitions("term")
+                          .repartition(F.col("term"))
+                          .sortWithinPartitions("term"))
                 # both fold writes run concurrently (guide §2.6); the
                 # everything-masked gate is the doclens write's
                 # observed row count (no separate take(1) job) — an
                 # all-masked fold removes the never-registered dir
                 folded, _ = _run_parallel(
+                    spark,
                     lambda: _observed_write(
                         lens_view, os.path.join(cdir, "doclens"),
                         {"n": F.count(F.lit(1))}),
                     lambda: (shaped.write.mode("overwrite")
-                             .parquet(os.path.join(cdir, "postings"))),
-                    pool="maintenance",
+                             .parquet(os.path.join(cdir, "postings")))
                 )
                 if int(folded["n"]) > 0:
                     keep = keep + [{"name": comp, "seq": seq,

@@ -67,6 +67,12 @@ def test_filter_value_the_column_cannot_take_is_400(server):
             ("/api/file_instance/?file_resource__in=a,b",
              "file_resource__in"),
             ("/api/sequence_dataset/?last_updated__gte=abc",
+             "last_updated__gte"),
+            ("/api/sequence_dataset/?last_updated__gte=2019-01-01%2025:00",
+             "last_updated__gte"),
+            ("/api/sequence_dataset/?last_updated__gte=2019-01-01%20abc",
+             "last_updated__gte"),
+            ("/api/sequence_dataset/?last_updated__gte=2019-01-01T",
              "last_updated__gte")):
         with pytest.raises(urllib.error.HTTPError) as e:
             get(server, path)
@@ -76,6 +82,65 @@ def test_filter_value_the_column_cannot_take_is_400(server):
     assert get(server, "/api/tag/?id=2")[1]["count"] == 1
     assert get(server, "/api/file_instance/?is_deleted=True")[0] == 200
     assert get(server, "/api/file_instance/?file_resource__in=1,2")[0] == 200
+    assert get(server, "/api/sequence_dataset/"
+                       "?last_updated__gte=2019-01-01T00:00:00.000Z")[0] == 200
+
+
+# Spark's string casts, by kind: integers and booleans, date forms
+# (what follows the day is ignored), timestamp time parts and bare
+# times, zone suffixes (offsets, prefixed offsets, short and region ids,
+# misspelt ones), and the 64-bit microsecond bounds.
+_CAST_PROBES = [
+    "", " ", "abc", "0", "-1", "+7", "1.5", "1e3", " 42 ", "2147483648",
+    "9223372036854775807", "9223372036854775808", "true", "T", "yes", "no",
+    "maybe", "2019", "2019-1", "2019-01", "2019-1-1", "2019-01-01",
+    "02019-01-01", "201-01-01", "+2019-01-01", "-2019-01-01", "2019-13-01",
+    "2019-02-29", "2020-02-29", "2019-04-31", "2019-01-001", "2019-01 01",
+    "2019-", "2019-01-01x", "2019/01/01", "20190101", "1234567-01-01",
+    "5881580-07-12", "2019-01-01 0", "2019-01-01 000", "2019-01-01 1:2",
+    "2019-01-01 12:", "2019-01-01 12:60", "2019-01-01 23:59:59",
+    "2019-01-01 23:59:60", "2019-01-01 24:00", "2019-01-01 25:00",
+    "2019-01-01 abc", "2019-01-01T", "2019-01-01T12", "2019-01-01T12:00:00.",
+    "2019-01-01T12:00:00.1234567", "2019-01-01T12:00:00..1",
+    "2019-01-01 12:00:001", "2019-01-01  12:00", "2019-01-01 12:00:00:00",
+    "T12", " T12", "12:00", " 12:00", "T25", "12:60", "123:00", "+12:00",
+    "2019-01-01T12:00:00.000Z", "2019-01-01 12:00Z", "2019-01-01 12Z",
+    "2019-01-01 12:00:00z", "2019-01-01 12:00:00+08:00",
+    "2019-01-01 12:00:00+8:00", "2019-01-01 12:00:00+8",
+    "2019-01-01 12:00:00+0800", "2019-01-01 12:00:00+08:0",
+    "2019-01-01 12:00:00+08:00:00", "2019-01-01 12:00:00+18:01",
+    "2019-01-01 12:00:00+19", "2019-01-01 12:00:00-08:00",
+    "2019-01-01 12:00:00+0860", "2019-01-01 12:00:00.5 UTC",
+    "2019-01-01 12:00:00UTC+8", "2019-01-01 12:00:00GMT-5",
+    "2019-01-01 12:00:00UTC+", "2019-01-01 12:00:00UTCX",
+    "2019-01-01 12:00:00 PST", "2019-01-01 12:00:00 America/Los_Angeles",
+    "2019-01-01 12:00:00america/los_angeles", "2019-01-01 12:00:00Foo/Bar",
+    "294247-01-10 04:00:54.775807", "294247-01-10 04:00:54.775808",
+    "294247-01-10 04:00:54-01:00", "-290308-12-21 19:59:05.224191",
+]
+
+
+def test_castable_agrees_with_spark_try_cast(spark):
+    """services._castable, the 400 gate in front of Spark's ANSI cast,
+    accepts exactly the strings Spark's try_cast accepts."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from tantalus_spark.operators.services import _castable
+
+    types = {"bigint": T.LongType(), "int": T.IntegerType(),
+             "boolean": T.BooleanType(), "date": T.DateType(),
+             "timestamp": T.TimestampType(),
+             "timestamp_ntz": T.TimestampNTZType()}
+    probes = spark.range(1).select(
+        F.explode(F.array(*map(F.lit, _CAST_PROBES))).alias("v"))
+    rows = probes.select("v", *[
+        F.expr(f"try_cast(v AS {name}) IS NOT NULL").alias(name)
+        for name in types]).collect()
+    assert len(rows) == len(_CAST_PROBES)
+    wrong = [(r["v"], name) for r in rows for name, dtype in types.items()
+             if _castable(r["v"], dtype) != r[name]]
+    assert not wrong, wrong
 
 
 def test_string_filter_takes_boolean_words_literally(spark):

@@ -62,237 +62,3 @@ def test_band_index_maintenance_rebuild_equal(spark):
         idx2, spark.createDataFrame([(2,)], "doc_id long"))
     after = novel_documents(twin_src, idx3, hash_family="md5").collect()
     assert after[0]["is_novel"] is True
-
-
-def test_band_refresh_batches_rebuild_equal_and_snapshot(spark, tmp_path):
-    """r11: the LSH band index joins the segmented store (the fourth
-    serving family). CDC batches drive adds, deletes, and a
-    delete+re-add with CHANGED text (the re-banding must win); after
-    a replayed batch and a compaction fold the CURRENT view is
-    bit-identical to minhash_bands over the survivors, the novelty
-    serve off the store matches the rebuild's, and snapshot promotion
-    round-trips with the duplicate-id audit gate."""
-    import os
-
-    import pytest
-    from pyspark.sql import functions as F
-
-    from tantalus_spark.catalog.loader import read_parquet
-    from tantalus_spark.datapipe.dedup import (minhash_bands,
-                                               novel_documents)
-    from tantalus_spark.streaming.maintenance import (
-        band_refresh_batches, export_band_snapshot, load_band_index,
-        load_band_snapshot)
-
-    docs = (read_parquet(spark, "/root/testdata/sf0.001/documents.parquet")
-            .select("doc_id", "text"))
-    ix = str(tmp_path / "bands")
-    cb = band_refresh_batches(ix, op_col="op", max_segments=2)
-    add = lambda df: df.withColumn("op", F.lit("add"))  # noqa: E731
-    # re-add doc 8 with doc 401's text: the NEW banding must win
-    readd = (docs.filter("doc_id = 401")
-                 .select(F.lit(8).cast("long").alias("doc_id"), "text"))
-    dels = spark.createDataFrame(
-        [(8, None, "delete"), (16, None, "delete"),
-         (999999, None, "delete")],
-        "doc_id long, text string, op string")
-    cb(add(docs.filter("doc_id % 4 = 0")), 0)
-    b1 = (add(docs.filter("doc_id % 4 = 1"))
-          .unionByName(dels).unionByName(add(readd)))
-    cb(b1, 1)
-    cb(b1, 1)  # replay: no-op
-    cb(add(docs.filter("doc_id % 4 = 2")), 2)  # fold fires
-
-    survivors = (docs.filter(
-        "doc_id % 4 in (0, 1, 2) and doc_id not in (8, 16)")
-        .unionByName(readd))
-    want_bands = minhash_bands(survivors)
-    live = load_band_index(spark, ix)
-    norm = lambda df: sorted(  # noqa: E731
-        (r["doc_id"], tuple(r["bands"])) for r in df.collect())
-    assert norm(live) == norm(want_bands)
-
-    probe = docs.filter("doc_id % 4 = 3")
-    got = sorted(map(tuple, novel_documents(probe, live).collect()))
-    want = sorted(map(tuple,
-                      novel_documents(probe, want_bands).collect()))
-    assert got == want and got
-
-    # r12: the postings leaf is maintained INCREMENTALLY (derived
-    # per-commit from the batch's band rows, folded and tombstone-
-    # masked like the bands leaf) — rebuild-equal: the masked postings
-    # view dedups to exactly the explode of the rebuilt band table,
-    # through the delete, the changed-text re-add, and the fold
-    live_post = load_band_index(spark, ix, layout="postings")
-    assert live_post.columns == ["band", "h"]
-    want_post = sorted(map(tuple, want_bands.select(
-        F.posexplode("bands").alias("band", "h"))
-        .dropDuplicates().collect()))
-    assert sorted(map(tuple,
-                      live_post.dropDuplicates().collect())) == want_post
-    # and the live postings-layout novelty serve is bit-identical
-    got_post = sorted(map(tuple, novel_documents(
-        probe, live_post, index_layout="postings").collect()))
-    assert got_post == want
-
-    snap = str(tmp_path / "snap")
-    stats = export_band_snapshot(spark, ix, snap)
-    assert stats["source_batch_id"] == 2 and not stats["empty"]
-    promoted = load_band_snapshot(spark, snap)
-    assert norm(promoted) == norm(live)
-    # r13: the export now FOLDS the maintained postings leaf (masked
-    # union, like compaction) instead of re-exploding bands — the
-    # promoted postings artifact must stay bit-identical to the live
-    # leaf's distinct view (and hence to the rebuild's explode)
-    snap_post = load_band_snapshot(spark, snap, layout="postings")
-    assert sorted(map(tuple, snap_post.collect())) == want_post
-    with pytest.raises(ValueError, match="not an empty directory"):
-        export_band_snapshot(spark, ix, snap)
-    os.remove(os.path.join(snap, "snapshot.json"))
-    with pytest.raises(ValueError, match="snapshot.json"):
-        load_band_snapshot(spark, snap)
-    # duplicate-id audit gate: double-add breaks disjoint-ids
-    cb(add(docs.filter("doc_id % 4 = 2 and doc_id < 100")), 3)
-    with pytest.raises(RuntimeError, match="disjoint-ids"):
-        export_band_snapshot(spark, ix, str(tmp_path / "snap_dup"))
-
-
-def test_band_snapshot_postings_layout_serve_parity(spark, tmp_path):
-    """r11: the band snapshot's pre-exploded DISTINCT (band, h)
-    postings layout serves novelty bit-identically to the bands-array
-    layout (and to the live store) — the corpus-scale explode+dedup
-    shuffle moves from every serve to the one export."""
-    from pyspark.sql import functions as F
-
-    from tantalus_spark.catalog.loader import read_parquet
-    from tantalus_spark.datapipe.dedup import novel_documents
-    from tantalus_spark.streaming.maintenance import (
-        band_refresh_batches, export_band_snapshot, load_band_index,
-        load_band_snapshot)
-
-    docs = (read_parquet(spark, "/root/testdata/sf0.001/documents.parquet")
-            .select("doc_id", "text"))
-    ix = str(tmp_path / "bands")
-    cb = band_refresh_batches(ix, op_col="op")
-    add = lambda df: df.withColumn("op", F.lit("add"))  # noqa: E731
-    cb(add(docs.filter("doc_id % 4 = 0")), 0)
-    cb(add(docs.filter("doc_id % 4 = 1"))
-       .unionByName(spark.createDataFrame(
-           [(8, None, "delete")],
-           "doc_id long, text string, op string")), 1)
-    snap = str(tmp_path / "snap")
-    export_band_snapshot(spark, ix, snap)
-
-    probe = docs.filter("doc_id % 4 = 3")
-    by_bands = sorted(map(tuple, novel_documents(
-        probe, load_band_snapshot(spark, snap)).collect()))
-    by_postings = sorted(map(tuple, novel_documents(
-        probe, load_band_snapshot(spark, snap,
-                                  layout="postings")).collect()))
-    by_live = sorted(map(tuple, novel_documents(
-        probe, load_band_index(spark, ix)).collect()))
-    by_live_postings = sorted(map(tuple, novel_documents(
-        probe, load_band_index(spark, ix, layout="postings"),
-        index_layout="postings").collect()))
-    assert (by_postings == by_bands == by_live == by_live_postings
-            and by_live)
-
-    import pytest
-    with pytest.raises(ValueError, match="unknown layout"):
-        load_band_snapshot(spark, snap, layout="wat")
-    with pytest.raises(ValueError, match="unknown layout"):
-        load_band_index(spark, ix, layout="wat")
-    with pytest.raises(ValueError, match="index_layout"):
-        novel_documents(probe, load_band_index(spark, ix),
-                        index_layout="wat")
-    # 'postings' demanded of a bands-array frame is refused, and a
-    # frame that merely CARRIES band/h among other columns no longer
-    # auto-sniffs into the postings path (exact-two-column rule)
-    with pytest.raises(ValueError, match="lacks column"):
-        novel_documents(probe, load_band_index(spark, ix),
-                        index_layout="postings")
-    enriched = (load_band_index(spark, ix, layout="postings")
-                .withColumn("extra", F.lit(1)))
-    with pytest.raises(Exception):
-        # auto must NOT sniff an enriched (band, h, extra) frame into
-        # the postings path — it falls to the bands path and fails
-        # loudly on the missing array column instead of silently
-        # probing the wrong data
-        novel_documents(probe, enriched).collect()
-    # but declaring the layout explicitly serves the enriched frame
-    by_enriched = sorted(map(tuple, novel_documents(
-        probe, enriched, index_layout="postings").collect()))
-    assert by_enriched == by_live
-
-
-def test_band_store_pre_postings_segment_migration(spark, tmp_path):
-    """r13 (r12 advice item): a band store UPGRADED mid-life — a
-    segment written by a pre-postings maintainer carries only the
-    bands leaf. The postings read refuses loudly with the missing
-    segment named (never an AnalysisException on a raw path), the
-    snapshot export's stored-leaf fold falls back to deriving that
-    segment's postings from its masked band rows, and COMPACTION
-    backfills the leaf for the segments it folds instead of crashing
-    after the main-leaf write and wedging the maintainer on every
-    replay. After the fold the migrated live postings serve is
-    bit-identical to the rebuild."""
-    import shutil as _sh
-
-    import pytest
-    from pyspark.sql import functions as F
-
-    from tantalus_spark.catalog.loader import read_parquet
-    from tantalus_spark.datapipe.dedup import (minhash_bands,
-                                               novel_documents)
-    from tantalus_spark.streaming.maintenance import (
-        band_refresh_batches, export_band_snapshot, load_band_index,
-        load_band_snapshot)
-
-    docs = (read_parquet(spark, "/root/testdata/sf0.001/documents.parquet")
-            .select("doc_id", "text"))
-    ix = str(tmp_path / "bands")
-    # max_segments=1: the SECOND commit must fold everything, so the
-    # compaction fallback runs deterministically over the stripped
-    # segment (size-tiered selection can't leave it out)
-    cb = band_refresh_batches(ix, op_col="op", max_segments=1)
-    add = lambda df: df.withColumn("op", F.lit("add"))  # noqa: E731
-    cb(add(docs.filter("doc_id % 4 = 0")), 0)
-    # simulate the pre-r12 maintainer: strip the derived leaf
-    _sh.rmtree(str(tmp_path / "bands" / "seg-00000000" / "postings"))
-
-    # 1) the postings read names the unmigrated segment
-    with pytest.raises(ValueError, match="seg-00000000.*no postings"):
-        load_band_index(spark, ix, layout="postings")
-    # ...while the bands layout keeps serving
-    assert load_band_index(spark, ix).count() > 0
-
-    # 2) snapshot export falls back to the per-row derive for the
-    # stripped segment: bit-identical to the explode of the band table
-    snap0 = str(tmp_path / "snap0")
-    export_band_snapshot(spark, ix, snap0)
-    want0 = sorted(map(tuple, minhash_bands(
-        docs.filter("doc_id % 4 = 0"))
-        .select(F.posexplode("bands").alias("band", "h"))
-        .dropDuplicates().collect()))
-    got0 = sorted(map(tuple, load_band_snapshot(
-        spark, snap0, layout="postings").collect()))
-    assert got0 == want0 and got0
-
-    # 3) the next commit's FULL fold backfills the leaf (no crash,
-    # no wedged replay) — with a delete masking a batch-0 document
-    # THROUGH the derive fallback
-    dels = spark.createDataFrame([(8, None, "delete")],
-                                 "doc_id long, text string, op string")
-    cb(add(docs.filter("doc_id % 4 = 1")).unionByName(dels), 1)
-    survivors = docs.filter("doc_id % 4 in (0, 1) and doc_id <> 8")
-    want = sorted(map(tuple, minhash_bands(survivors)
-                      .select(F.posexplode("bands").alias("band", "h"))
-                      .dropDuplicates().collect()))
-    live_post = load_band_index(spark, ix, layout="postings")
-    assert sorted(map(tuple,
-                      live_post.dropDuplicates().collect())) == want
-    probe = docs.filter("doc_id % 4 = 3")
-    assert sorted(map(tuple, novel_documents(
-        probe, live_post, index_layout="postings").collect())) == \
-        sorted(map(tuple, novel_documents(
-            probe, minhash_bands(survivors)).collect()))

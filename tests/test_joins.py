@@ -10,13 +10,15 @@ def test_embedding_lsh_near_dup_subset_of_exact(spark):
     from tantalus_spark.datapipe.similarity import embedding_near_dup_pairs
 
     emb = read_parquet(spark, "/root/testdata/sf0.001/embeddings.parquet")
-    exact = {(r["id_a"], r["id_b"])
+    exact = {(r["id_a"], r["id_b"]): r["cosine"]
              for r in embedding_near_dup_pairs(emb, 0.45).collect()}
-    lsh = {(r["id_a"], r["id_b"])
+    lsh = {(r["id_a"], r["id_b"]): r["cosine"]
            for r in embedding_near_dup_pairs(
                emb, 0.45, n_hyperplanes=2).collect()}
-    assert lsh <= exact                   # LSH never invents pairs
-    assert len(exact) > 0
+    assert lsh.keys() <= exact.keys()     # LSH never invents pairs
+    assert len(exact) > 0 and lsh
+    # the pairs LSH keeps carry the exact verifier's cosine values
+    assert all(cos == exact[pair] for pair, cos in lsh.items())
     # with 2 hyperplanes recall should be well above random (1/4 of pairs
     # survive bucketing at random; similar pairs survive far more often)
     assert len(lsh) >= len(exact) // 4

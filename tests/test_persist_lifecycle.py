@@ -96,8 +96,7 @@ HEADLINE = [
     "141_hybrid_serve",
     "142_group_split_clustered", "147_hybrid_serve_batch",
     "151_ann_serve_batch", "152_segmented_store_serve",
-    "159_snapshot_promote_serve", "161_snapshot_ann_serve",
-    "164_band_store_live_serve", "165_release_follow_serve",
+    "159_snapshot_promote_serve",
 ]
 
 

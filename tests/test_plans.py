@@ -798,64 +798,6 @@ def test_segmented_store_serve_pushes_terms_into_every_segment(
     assert 0 < len(rows) <= 10
 
 
-def test_maintained_ann_store_serve_partition_prunes(spark, tmp_path):
-    """The r9 perf gap closed: segments written by the STREAMING ANN
-    maintainer are hive-partitioned by ivf_list, so a maintained-store
-    serve (load_ann_index -> ivf_pq_topk_batch) partition-prunes every
-    segment scan to the probed lists' files — matching
-    test_ivfpq_serving_partition_prunes_written_index's batch
-    warehouse layout. Covers both segment kinds: the compacted fold
-    and a later delta."""
-    from pyspark.sql import functions as F
-
-    from tantalus_spark.datapipe.similarity import ivf_pq_topk_batch
-    from tantalus_spark.streaming.maintenance import (
-        ann_refresh_batches, load_ann_index)
-
-    emb = db_for(spark, SF).table("embeddings")
-    iv = (emb.filter("embedding is not null")
-             .select("vec_id",
-                     F.transform("embedding",
-                                 lambda x: F.floor(x.cast("double")
-                                                   * F.lit(32.0))
-                                 .cast("double")).alias("embedding")))
-    head = iv.filter("vec_id <= 16").orderBy("vec_id").collect()
-    by_id = {r["vec_id"]: [float(x) for x in r["embedding"]]
-             for r in head}
-    cents = [by_id[i] for i in range(8)]
-    books = [[by_id[c + 1][j * 8:(j + 1) * 8] for c in range(16)]
-             for j in range(8)]
-
-    ix = str(tmp_path / "ann")
-    cb = ann_refresh_batches(ix, cents, books, max_segments=2,
-                             keep_versions=2)
-    cb(iv.filter("vec_id < 60"), 0)
-    cb(iv.filter("vec_id >= 60 and vec_id < 120"), 1)
-    # crosses max_segments=2 -> compacted (partitioned) segment
-    cb(iv.filter("vec_id >= 120 and vec_id < 160"), 2)
-    # one more delta so the manifest is [compacted, delta]
-    cb(iv.filter("vec_id >= 160 and vec_id < 180"), 3)
-
-    idx = load_ann_index(spark, ix)
-    queries = [(1, by_id[3]), (2, by_id[9])]
-    served = ivf_pq_topk_batch(idx, cents, books, queries, k=5,
-                               nprobe=2)
-    plan = _plan(served)
-    # two segment scans, EACH partition-pruned on ivf_list
-    chunks = plan.split("PartitionFilters:")[1:]
-    pruned = [c.splitlines()[0] for c in chunks
-              if "ivf_list" in c.splitlines()[0]]
-    assert len(pruned) == 2, (len(pruned), plan[:3000])
-    # and the pruned partition count is the probed union, never all 8
-    import re
-    counts = [int(m) for m in re.findall(r"partitions read:\s*(\d+)",
-                                         plan)]
-    if counts:
-        assert all(n <= 4 for n in counts), counts
-    rows = served.collect()
-    assert 0 < len(rows) <= 10
-
-
 def test_batch_servers_df_queries_keep_pruned_scans(spark, tmp_path):
     """The DataFrame-query input (offline-eval shape) must keep the
     list path's plan contract: hybrid serving still has exactly THREE
@@ -926,43 +868,6 @@ def test_batch_servers_df_queries_keep_pruned_scans(spark, tmp_path):
         assert int(m.group(1)) <= 4, plan2[:2000]
 
 
-def test_maintained_feats_store_serve_partition_prunes(spark, tmp_path):
-    """The dense twin of the maintained-ANN pruning test: feats
-    segments written by the streaming maintainer are hive-partitioned
-    by bucket, so a hybrid serve off load_feats_index reads only the
-    query buckets' files in every segment scan."""
-    from pyspark.sql import functions as F
-
-    from tantalus_spark.datapipe.textstats import (
-        build_term_index, hybrid_serve_topk_batch)
-    from tantalus_spark.streaming.maintenance import (
-        feats_refresh_batches, load_feats_index)
-
-    docs = db_for(spark, SF).table("documents").select("doc_id", "text")
-    ix = str(tmp_path / "feats")
-    cb = feats_refresh_batches(ix, dim=64, max_segments=2)
-    # sf0.001 documents has ~600 rows; keep every batch non-empty
-    cb(docs.filter("doc_id < 150"), 0)
-    cb(docs.filter("doc_id >= 150 and doc_id < 300"), 1)
-    cb(docs.filter("doc_id >= 300 and doc_id < 450"), 2)  # compaction
-    cb(docs.filter("doc_id >= 450 and doc_id < 480"), 3)  # delta
-
-    feats = load_feats_index(spark, ix)
-    assert "norm" in feats.columns  # ENRICHED layout round-trips
-    idx, (n_docs, avgdl) = build_term_index(docs, with_stats=True)
-    served = hybrid_serve_topk_batch(
-        idx, [(1, ["customer", "hash"]), (2, ["merge"])], feats,
-        k=5, depth=10, dim=64, n_docs=n_docs, avgdl=avgdl)
-    plan = _plan(served)
-    chunks = plan.split("PartitionFilters:")[1:]
-    pruned = [c.splitlines()[0] for c in chunks
-              if "bucket" in c.splitlines()[0]]
-    # two feats segment scans (compacted + delta), both bucket-pruned
-    assert len(pruned) == 2, (len(pruned), plan[:3000])
-    rows = served.collect()
-    assert 0 < len(rows) <= 10
-
-
 def test_snapshot_serve_scans_one_artifact_no_mask_join(spark, tmp_path):
     """The promotion payoff, plan-verified: a serve off a PROMOTED
     snapshot (export_term_snapshot -> load_term_snapshot) reads ONE
@@ -1002,151 +907,3 @@ def test_snapshot_serve_scans_one_artifact_no_mask_join(spark, tmp_path):
     assert "LeftAnti" not in plan  # mask applied at export, not serve
     rows = served.collect()
     assert 0 < len(rows) <= 10
-
-
-def test_rowwise_snapshot_serves_scan_one_artifact_no_mask_join(
-        spark, tmp_path):
-    """The r11 promotion payoff for the rowwise families,
-    plan-verified: serves off PROMOTED ANN / feats snapshots read ONE
-    folded hive-partitioned artifact — exactly one ivf_list-pruned
-    scan (vs one per segment on the live store) for the IVFPQ serve,
-    exactly one bucket-pruned scan for the hybrid dense leg — and NO
-    tombstone anti-join anywhere: the export applied the mask
-    physically."""
-    from pyspark.sql import functions as F
-
-    from tantalus_spark.datapipe.similarity import ivf_pq_topk_batch
-    from tantalus_spark.datapipe.textstats import (
-        build_term_index, hybrid_serve_topk_batch)
-    from tantalus_spark.streaming.maintenance import (
-        ann_refresh_batches, export_ann_snapshot,
-        export_feats_snapshot, export_term_snapshot,
-        feats_refresh_batches, index_refresh_batches,
-        load_ann_snapshot, load_feats_snapshot, load_term_snapshot)
-
-    # --- ANN: maintained store (with a delete -> live serve would
-    # carry a mask join), promoted, served
-    emb = db_for(spark, SF).table("embeddings")
-    iv = (emb.filter("embedding is not null")
-             .select("vec_id",
-                     F.transform("embedding",
-                                 lambda x: F.floor(x.cast("double")
-                                                   * F.lit(32.0))
-                                 .cast("double")).alias("embedding")))
-    head = iv.filter("vec_id <= 16").orderBy("vec_id").collect()
-    by_id = {r["vec_id"]: [float(x) for x in r["embedding"]]
-             for r in head}
-    cents = [by_id[i] for i in range(8)]
-    books = [[by_id[c + 1][j * 8:(j + 1) * 8] for c in range(16)]
-             for j in range(8)]
-    ann_ix = str(tmp_path / "ann")
-    cb = ann_refresh_batches(ann_ix, cents, books, op_col="op",
-                             max_segments=8)
-    cb(iv.filter("vec_id < 120").withColumn("op", F.lit("add")), 0)
-    cb(iv.filter("vec_id >= 120 and vec_id < 160")
-         .withColumn("op", F.lit("add"))
-         .unionByName(spark.createDataFrame(
-             [(7, None, "delete")],
-             "vec_id long, embedding array<double>, op string")), 1)
-    ann_snap = str(tmp_path / "ann_snap")
-    export_ann_snapshot(spark, ann_ix, ann_snap)
-    served = ivf_pq_topk_batch(load_ann_snapshot(spark, ann_snap),
-                               cents, books,
-                               [(1, by_id[3]), (2, by_id[9])],
-                               k=5, nprobe=2)
-    plan = _plan(served)
-    assert "LeftAnti" not in plan
-    chunks = plan.split("PartitionFilters:")[1:]
-    pruned = [c.splitlines()[0] for c in chunks
-              if "ivf_list" in c.splitlines()[0]]
-    assert len(pruned) == 1, (len(pruned), plan[:3000])
-    assert 0 < len(served.collect()) <= 10
-
-    # --- feats + term: both stores promoted, hybrid served off the
-    # two snapshots — three pruned artifact scans, zero mask joins
-    docs = db_for(spark, SF).table("documents").select("doc_id", "text")
-    ft_ix, tm_ix = str(tmp_path / "feats"), str(tmp_path / "ix")
-    cb_ft = feats_refresh_batches(ft_ix, dim=64, op_col="op",
-                                  max_segments=8)
-    cb_tm = index_refresh_batches(tm_ix, op_col="op", max_segments=8)
-    dels = spark.createDataFrame([(3, None, "delete")],
-                                 "doc_id long, text string, op string")
-    for cb2 in (cb_ft, cb_tm):
-        cb2(docs.filter("doc_id < 200")
-                .withColumn("op", F.lit("add")), 0)
-        cb2(docs.filter("doc_id >= 200 and doc_id < 400")
-                .withColumn("op", F.lit("add")).unionByName(dels), 1)
-    ft_snap, tm_snap = str(tmp_path / "ft_snap"), str(tmp_path / "tm_snap")
-    export_feats_snapshot(spark, ft_ix, ft_snap)
-    export_term_snapshot(spark, tm_ix, tm_snap, partitions=4)
-    postings, (n, avgdl) = load_term_snapshot(spark, tm_snap)
-    hybrid = hybrid_serve_topk_batch(
-        postings, [(1, ["customer", "hash"]), (2, ["merge"])],
-        load_feats_snapshot(spark, ft_snap),
-        k=5, depth=10, dim=64, n_docs=n, avgdl=avgdl)
-    plan2 = _plan(hybrid)
-    assert "LeftAnti" not in plan2
-    tchunks = [c.splitlines()[0]
-               for c in plan2.split("PushedFilters:")[1:]]
-    assert sum("In(term" in c for c in tchunks) == 2, tchunks
-    bchunks = plan2.split("PartitionFilters:")[1:]
-    bpruned = [c.splitlines()[0] for c in bchunks
-               if "bucket" in c.splitlines()[0]]
-    assert len(bpruned) == 1, (len(bpruned), plan2[:3000])
-    assert 0 < len(hybrid.collect()) <= 10
-
-
-def test_band_snapshot_postings_serve_has_no_index_side_shuffle(
-        spark, tmp_path):
-    """r11: novelty served off the band snapshot's pre-exploded
-    DISTINCT postings leaf keeps the index side shuffle-free — exactly
-    ONE Generate (the probe batch's posexplode; the index side is a
-    plain scan) and no index-side dedup aggregate feeding the semi
-    join, vs the live-store serve whose plan re-explodes and re-dedups
-    the whole band table per query."""
-    from pyspark.sql import functions as F
-
-    from tantalus_spark.datapipe.dedup import novel_documents
-    from tantalus_spark.streaming.maintenance import (
-        band_refresh_batches, export_band_snapshot, load_band_index,
-        load_band_snapshot)
-
-    docs = db_for(spark, SF).table("documents").select("doc_id", "text")
-    ix = str(tmp_path / "bands")
-    cb = band_refresh_batches(ix)
-    cb(docs.filter("doc_id % 2 = 0"), 0)
-    snap = str(tmp_path / "snap")
-    export_band_snapshot(spark, ix, snap)
-    probe = docs.filter("doc_id % 4 = 3")
-
-    served = novel_documents(
-        probe, load_band_snapshot(spark, snap, layout="postings"))
-    plan = _plan(served)
-    assert plan.count("Generate") == 1, plan[:2500]  # probe side only
-    live_bands_plan = _plan(novel_documents(probe,
-                                            load_band_index(spark, ix)))
-    # bands-layout live serve pays both explodes (probe + index)
-    assert live_bands_plan.count("Generate") == 2
-    # r12: the LIVE store now maintains the postings leaf incrementally
-    # (O(batch) per commit), so a live postings-layout serve is as
-    # shuffle-free on the index side as the snapshot serve — exactly
-    # ONE Generate, no index-side dedup aggregate, between promotions
-    live_served = novel_documents(
-        probe, load_band_index(spark, ix, layout="postings"),
-        index_layout="postings")
-    live_plan = _plan(live_served)
-    assert live_plan.count("Generate") == 1, live_plan[:2500]
-    # r13: the EXPORT folds the stored postings leaf too (masked
-    # union, like compaction) instead of re-exploding the bands table
-    # — zero Generate in the export-side postings plan; the only
-    # export-time shuffle left is the cross-segment DISTINCT
-    from tantalus_spark.streaming.maintenance import (
-        _current_version, _read_manifest, _snapshot_postings_view)
-    export_view = _snapshot_postings_view(
-        spark, ix, _read_manifest(ix, _current_version(ix)))
-    export_plan = _plan(export_view)
-    assert "Generate" not in export_plan, export_plan[:2500]
-    rows = served.collect()
-    assert rows and all(r["is_novel"] is not None for r in rows)
-    assert sorted(map(tuple, live_served.collect())) == sorted(
-        map(tuple, rows))

@@ -94,27 +94,6 @@ def test_trained_centroids_improve_recall(spark, emb, centroids):
     assert r2 > 0                      # nearest list holds some of top-10
 
 
-def test_embedding_lsh_pairs_subset_of_exact(emb):
-    """The hyperplane-LSH path must return a SUBSET of the exact pairs
-    (identical cosine values for pairs it keeps) with non-trivial recall —
-    the q69 gated scale path vs the q51 exact verifier."""
-    exact = {
-        (r["id_a"], r["id_b"]): r["cosine"]
-        for r in sim.embedding_near_dup_pairs(emb, threshold=0.45).collect()
-    }
-    lsh = {
-        (r["id_a"], r["id_b"]): r["cosine"]
-        for r in sim.embedding_near_dup_pairs(
-            emb, threshold=0.45, n_hyperplanes=2).collect()
-    }
-    assert lsh, "LSH path returned no pairs at all"
-    for pair, cos in lsh.items():
-        assert pair in exact, f"LSH produced non-near pair {pair}"
-        assert cos == exact[pair]
-    recall = len(lsh) / len(exact)
-    assert recall >= 0.2, f"recall {recall:.2f} too low for 2 hyperplanes"
-
-
 def test_pq_exact_on_prototype_vectors(spark):
     """On a corpus whose subvectors come from a tiny prototype set, PQ
     with k >= #prototypes reconstructs losslessly: ADC scores equal the
@@ -799,85 +778,6 @@ def test_ann_index_maintenance_rebuild_equal(spark):
         spark.createDataFrame([(999999,)], "vec_id long"))) == norm(want)
 
 
-def test_ann_refresh_batches_rebuild_equal_cdc(spark, tmp_path):
-    """Streaming ANN maintenance on the segmented store: CDC batches
-    drive adds, deletes, and a delete+re-add; after replay the CURRENT
-    view is bit-identical to a rebuild over the survivors with the
-    frozen artifacts, compaction folds tombstones physically, and a
-    replayed batch id is a no-op."""
-    from pyspark.sql import functions as F
-
-    from tantalus_spark.catalog.loader import read_parquet
-    from tantalus_spark.datapipe.similarity import ivf_assign, pq_encode
-    from tantalus_spark.streaming.maintenance import (
-        ann_refresh_batches, load_ann_index)
-
-    emb = read_parquet(spark, "/root/testdata/sf0.001/embeddings.parquet")
-    iv = (emb.filter("embedding is not null")
-             .select("vec_id",
-                     F.transform("embedding",
-                                 lambda x: F.floor(x.cast("double")
-                                                   * F.lit(32.0))
-                                 .cast("double")).alias("embedding")))
-    head = iv.filter("vec_id <= 16").orderBy("vec_id").collect()
-    by_id = {r["vec_id"]: [float(x) for x in r["embedding"]]
-             for r in head}
-    cents = [by_id[i] for i in range(8)]
-    books = [[by_id[c + 1][j * 8:(j + 1) * 8] for c in range(16)]
-             for j in range(8)]
-
-    ix = str(tmp_path / "ann")
-    cb = ann_refresh_batches(ix, cents, books, op_col="op",
-                             max_segments=2, keep_versions=2)
-    b0 = iv.filter("vec_id < 100").withColumn("op", F.lit("add"))
-    # batch 1: delete some, re-add one with a DIFFERENT vector (vec of
-    # id 400 under id 50 — the re-add must win), add a new slice
-    readd = (iv.filter("vec_id = 400")
-               .select(F.lit(50).cast("long").alias("vec_id"),
-                       "embedding").withColumn("op", F.lit("add")))
-    dels = spark.createDataFrame(
-        [(7, None, "delete"), (50, None, "delete"),
-         (999999, None, "delete")],
-        "vec_id long, embedding array<double>, op string")
-    b1 = (iv.filter("vec_id >= 100 and vec_id < 140")
-            .withColumn("op", F.lit("add"))
-            .unionByName(dels).unionByName(readd))
-    # batch 2 crosses max_segments=2 -> compaction
-    b2 = (iv.filter("vec_id >= 140 and vec_id < 160")
-            .withColumn("op", F.lit("add")))
-    cb(b0, 0)
-    cb(b1, 1)
-    cb(b1, 1)  # replay: must be a no-op
-    cb(b2, 2)
-
-    got = load_ann_index(spark, ix)
-    survivors = (iv.filter(
-        "vec_id < 160 and vec_id not in (7, 50)")
-        .unionByName(readd.drop("op")))
-    want = (ivf_assign(survivors, cents).select("vec_id", "ivf_list")
-            .join(pq_encode(survivors, books), "vec_id"))
-    norm = lambda df: sorted(
-        (r["vec_id"], r["ivf_list"], tuple(r["pq_code"]))
-        for r in df.collect())
-    assert norm(got) == norm(want)
-    # compaction happened. WHICH segments folded is the size-tiered
-    # policy's call (parquet byte sizes decide full vs partial fold),
-    # so assert the policy-independent invariants: the count is back
-    # under the cap, a compacted segment exists, and every retained
-    # tombstone is LOAD-BEARING (some kept segment is older than it —
-    # commit-time pruning drops the rest, so the serve-time broadcast
-    # mask never carries dead entries).
-    import json
-    import os
-    cur = open(os.path.join(ix, "CURRENT")).read().strip()
-    with open(os.path.join(ix, cur, "manifest.json")) as f:
-        m = json.load(f)
-    assert len(m["segments"]) <= 2, m
-    assert any(s["name"].endswith("c") for s in m["segments"]), m
-    min_seq = min(int(s["seq"]) for s in m["segments"])
-    assert all(int(t["seq"]) > min_seq for t in m["tombstones"]), m
-
-
 def test_ivf_pq_topk_batch_matches_per_query(spark):
     """The batched ANN server (one job per query set) is per-query
     identical to ivf_pq_topk on the same frozen artifacts — same probe
@@ -976,83 +876,3 @@ def test_ivf_pq_topk_batch_dataframe_queries_bit_parity(spark):
                                 "query_id long, embedding array<double>")
     with _pytest.raises(ValueError, match="duplicate query ids"):
         ivf_pq_topk_batch(codes, cents, books, dup, k=5, nprobe=2)
-
-
-def test_export_ann_snapshot_promotes_and_guards(spark, tmp_path):
-    """r11 snapshot promotion for the IVFPQ family: export of the
-    maintained store's CURRENT folds the masked multi-segment view
-    into one immutable ivf_list-partitioned artifact whose codes and
-    served top-k are bit-identical to the live store's; the guards
-    hold — a duplicate vec_id (broken disjoint-ids contract) blocks
-    promotion, a non-empty dest is refused, a torn export is refused
-    by the loader, and a failed write leaves dest reusable."""
-    import os
-
-    import pytest
-    from pyspark.sql import functions as F
-
-    from tantalus_spark.catalog.loader import read_parquet
-    from tantalus_spark.datapipe.similarity import ivf_pq_topk_batch
-    from tantalus_spark.streaming.maintenance import (
-        ann_refresh_batches, export_ann_snapshot, load_ann_index,
-        load_ann_snapshot)
-
-    emb = read_parquet(spark, "/root/testdata/sf0.001/embeddings.parquet")
-    iv = (emb.filter("embedding is not null")
-             .select("vec_id",
-                     F.transform("embedding",
-                                 lambda x: F.floor(x.cast("double")
-                                                   * F.lit(32.0))
-                                 .cast("double")).alias("embedding")))
-    head = iv.filter("vec_id <= 16").orderBy("vec_id").collect()
-    by_id = {r["vec_id"]: [float(x) for x in r["embedding"]]
-             for r in head}
-    cents = [by_id[i] for i in range(8)]
-    books = [[by_id[c + 1][j * 8:(j + 1) * 8] for c in range(16)]
-             for j in range(8)]
-
-    ix = str(tmp_path / "ann")
-    cb = ann_refresh_batches(ix, cents, books, op_col="op",
-                             max_segments=2, keep_versions=2)
-    dels = spark.createDataFrame(
-        [(7, None, "delete"), (50, None, "delete")],
-        "vec_id long, embedding array<double>, op string")
-    cb(iv.filter("vec_id < 100").withColumn("op", F.lit("add")), 0)
-    cb(iv.filter("vec_id >= 100 and vec_id < 140")
-         .withColumn("op", F.lit("add")).unionByName(dels), 1)
-    cb(iv.filter("vec_id >= 140 and vec_id < 160")
-         .withColumn("op", F.lit("add")), 2)  # fold fires
-
-    snap = str(tmp_path / "snap")
-    stats = export_ann_snapshot(spark, ix, snap)
-    assert stats["source_batch_id"] == 2 and not stats["empty"]
-    norm = lambda df: sorted(  # noqa: E731
-        (r["vec_id"], r["ivf_list"], tuple(r["pq_code"]))
-        for r in df.collect())
-    live = load_ann_index(spark, ix)
-    promoted = load_ann_snapshot(spark, snap)
-    assert norm(promoted) == norm(live)
-    queries = [(1, by_id[3]), (2, by_id[9])]
-    served = [tuple(r) for r in ivf_pq_topk_batch(
-        promoted, cents, books, queries, k=5, nprobe=2).collect()]
-    want = [tuple(r) for r in ivf_pq_topk_batch(
-        live, cents, books, queries, k=5, nprobe=2).collect()]
-    assert served == want
-
-    # immutability + torn-export guards (shared rowwise path)
-    with pytest.raises(ValueError, match="not an empty directory"):
-        export_ann_snapshot(spark, ix, snap)
-    os.remove(os.path.join(snap, "snapshot.json"))
-    with pytest.raises(ValueError, match="snapshot.json"):
-        load_ann_snapshot(spark, snap)
-
-    # duplicate-key audit gate: a double-add (same vec_id in two add
-    # batches, never deleted) breaks the disjoint-ids contract; the
-    # promotion must refuse rather than ship rows that double-score
-    cb(iv.filter("vec_id >= 10 and vec_id < 20")
-         .withColumn("op", F.lit("add")), 3)
-    with pytest.raises(RuntimeError, match="disjoint-ids"):
-        export_ann_snapshot(spark, ix, str(tmp_path / "snap_dup"))
-    # verify=False is the explicit salvage override
-    export_ann_snapshot(spark, ix, str(tmp_path / "snap_dup"),
-                        verify=False)

@@ -1739,6 +1739,33 @@ def test_index_refresh_commit_writes_o_batch_bytes(spark, tmp_path):
     assert postings.select("doc_id").distinct().count() == 2005
 
 
+def test_store_commit_jobs_run_in_callers_job_group(spark, tmp_path):
+    """A commit's concurrent writes (doclens ∥ postings) run on worker
+    threads; they must carry the caller's job group, or a caller that
+    counts (perfbench's traced jobs per pass) or cancels its group
+    misses every store write."""
+    from pyspark.sql import functions as F
+
+    from tantalus_spark.streaming.maintenance import index_refresh_batches
+
+    docs = spark.range(6).select(
+        F.col("id").alias("doc_id"),
+        F.concat(F.lit("alpha beta "), F.col("id").cast("string"))
+         .alias("text"))
+    cb = index_refresh_batches(str(tmp_path / "ix"))
+    sc = spark.sparkContext
+    group = "store-commit-job-group"
+    sc.setJobGroup(group, "one store commit")
+    try:
+        cb(docs, 0)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) >= 2, jobs  # the doclens and postings writes
+
+
 def test_index_refresh_compaction_and_gc(spark, tmp_path):
     """Crossing ``max_segments`` folds the manifest into ONE compacted
     segment with tombstones cleared (physically applied), stays
@@ -2130,62 +2157,6 @@ def test_merge_canonical_map_matches_rebuild_on_ascending_ids(spark):
     assert kept[dg] == 1   # stability: first-seen canonical survives
 
 
-def test_feats_refresh_batches_rebuild_equal_and_serves(spark, tmp_path):
-    """Streaming dense-feature maintenance on the segmented store: CDC
-    adds/deletes/delete+re-add land an ENRICHED feats view bit-identical
-    to a rebuild over the survivors, a replayed batch id is a no-op,
-    and the maintained view serves the dense leg with zero norm joins
-    — identical ranks to serving from a fresh build."""
-    from pyspark.sql import functions as F
-
-    from tantalus_spark.catalog.loader import read_parquet
-    from tantalus_spark.datapipe.textstats import (
-        _dense_leg_scored, _query_hashed_features, hashed_features,
-        hashed_norms)
-    from tantalus_spark.streaming.maintenance import (
-        feats_refresh_batches, load_feats_index)
-
-    docs = read_parquet(spark, "/root/testdata/sf0.001/documents.parquet")
-    ix = str(tmp_path / "feats")
-    cb = feats_refresh_batches(ix, dim=32, op_col="op")
-    b0 = (docs.filter("doc_id < 200").select("doc_id", "text")
-              .withColumn("op", F.lit("add")))
-    readd = (docs.filter("doc_id = 300")
-                 .select(F.lit(10).cast("long").alias("doc_id"), "text")
-                 .withColumn("op", F.lit("add")))
-    dels = spark.createDataFrame(
-        [(3, None, "delete"), (10, None, "delete")],
-        "doc_id long, text string, op string")
-    b1 = (docs.filter("doc_id >= 200 and doc_id < 260")
-              .select("doc_id", "text")
-              .withColumn("op", F.lit("add"))
-              .unionByName(dels.select("doc_id", "text", "op"))
-              .unionByName(readd))
-    cb(b0.select("doc_id", "text", "op"), 0)
-    cb(b1.select("doc_id", "text", "op"), 1)
-    cb(b1.select("doc_id", "text", "op"), 1)  # replay: no-op
-
-    got = load_feats_index(spark, ix)
-    assert "norm" in got.columns  # ENRICHED layout
-    survivors = (docs.filter(
-        "doc_id < 260 and doc_id not in (3, 10)").select("doc_id", "text")
-        .unionByName(readd.drop("op")))
-    wf = hashed_features(survivors, dim=32)
-    want = wf.join(hashed_norms(wf), "doc_id")
-    norm = lambda df: sorted(map(tuple, df.select(
-        "doc_id", "bucket", "feat", "norm").collect()))
-    assert norm(got) == norm(want)
-
-    # the maintained view serves the dense leg identically to a build
-    qf = _query_hashed_features(["customer", "hash"], 32)
-    serve_got = _dense_leg_scored(got, qf, depth=10, id_col="doc_id",
-                                  norms=None)
-    serve_want = _dense_leg_scored(want, qf, depth=10, id_col="doc_id",
-                                   norms=None)
-    assert sorted(map(tuple, serve_got.collect())) == \
-        sorted(map(tuple, serve_want.collect()))
-
-
 def test_index_refresh_cdc_readd_survives_dedup_guard(spark, tmp_path):
     """Regression (r9 review): with dedup_against_current=True, a CDC
     delete+re-add in ONE batch must land the document's NEW postings —
@@ -2554,9 +2525,6 @@ def test_as_of_floor_resolution_and_retention_errors(spark, tmp_path):
         index_refresh_batches, index_versions, load_term_index)
 
     ix = str(tmp_path / "ix")
-    with pytest.raises(ValueError, match="no committed version"):
-        from tantalus_spark.streaming.maintenance import common_batch_id
-        common_batch_id(ix)
     cb = index_refresh_batches(ix, keep_versions=2)
     sch = "doc_id long, text string"
     cb(spark.createDataFrame([(1, "apple")], sch), 0)
@@ -2577,60 +2545,6 @@ def test_as_of_floor_resolution_and_retention_errors(spark, tmp_path):
     # retained points still resolve, with their own stats
     _p, (n5, _a5) = load_term_index(spark, ix, as_of=5)
     assert n5 == 2
-
-
-def test_common_batch_id_consistent_cross_store_serve(spark, tmp_path):
-    """Cross-store snapshot isolation: when the postings store runs a
-    batch AHEAD of the feats store (maintainer lag / crash between the
-    two commits), serving both at as_of=common_batch_id pins ONE
-    corpus state — the hybrid result equals a rebuild over exactly
-    the common prefix's survivors, and mixing CURRENTs would not."""
-    from tantalus_spark.datapipe.textstats import (
-        build_term_index, hashed_features, hashed_norms,
-        hybrid_serve_topk_batch)
-    from tantalus_spark.streaming.maintenance import (
-        common_batch_id, feats_refresh_batches, index_refresh_batches,
-        load_feats_index, load_term_index)
-
-    ix = str(tmp_path / "ix")
-    ft = str(tmp_path / "feats")
-    cb_ix = index_refresh_batches(ix, op_col="op", keep_versions=4)
-    cb_ft = feats_refresh_batches(ft, dim=16, op_col="op",
-                                  keep_versions=4)
-    schema = "doc_id long, text string, op string"
-    b0 = spark.createDataFrame(
-        [(1, "apple banana sort", "add"),
-         (2, "banana merge hash", "add")], schema)
-    b1 = spark.createDataFrame(
-        [(1, None, "delete"), (3, "sort hash apple", "add")], schema)
-    b2 = spark.createDataFrame([(4, "merge sort", "add")], schema)
-    cb_ix(b0, 0); cb_ft(b0, 0)
-    cb_ix(b1, 1); cb_ft(b1, 1)
-    cb_ix(b2, 2)  # postings store commits batch 2; feats store crashed
-    assert common_batch_id(ix, ft) == 1
-
-    b = common_batch_id(ix, ft)
-    postings, (n, avgdl) = load_term_index(spark, ix, as_of=b)
-    feats = load_feats_index(spark, ft, as_of=b)
-    queries = [(7, ["sort", "hash"]), (8, ["merge"])]
-    got = hybrid_serve_topk_batch(postings, queries, feats, k=5,
-                                  depth=5, dim=16, n_docs=n,
-                                  avgdl=avgdl)
-
-    survivors = spark.createDataFrame(
-        [(2, "banana merge hash"), (3, "sort hash apple")],
-        "doc_id long, text string")
-    widx, (wn, wavg) = build_term_index(survivors, with_stats=True)
-    wf = hashed_features(survivors, dim=16)
-    wfe = wf.join(hashed_norms(wf), "doc_id")
-    want = hybrid_serve_topk_batch(widx, queries, wfe, k=5, depth=5,
-                                   dim=16, n_docs=wn, avgdl=wavg)
-    assert sorted(map(tuple, got.collect())) == \
-        sorted(map(tuple, want.collect()))
-    # and the snapshot really differs from the mixed-CURRENT serve:
-    # doc 4 exists only in the postings store's CURRENT
-    cur_p, (cn, ca) = load_term_index(spark, ix)
-    assert cn == n + 1
 
 
 def test_partial_fold_prunes_dead_tombstones(spark, tmp_path):
@@ -2988,72 +2902,6 @@ def test_compaction_fold_writes_term_sorted_rowgroup_layout(
     assert got == want
 
 
-def test_export_feats_snapshot_promotes_and_guards(spark, tmp_path):
-    """r11 snapshot promotion for the dense-feature family: export of
-    the maintained store's CURRENT folds the masked multi-segment view
-    into one immutable bucket-partitioned ENRICHED artifact whose rows
-    and served hybrid top-k are bit-identical to the live store's; the
-    duplicate-(id,bucket) audit gate, immutability guard, and
-    torn-export refusal hold."""
-    import os
-
-    import pytest
-    from pyspark.sql import functions as F
-
-    from tantalus_spark.catalog.loader import read_parquet
-    from tantalus_spark.datapipe.textstats import (
-        build_term_index, hybrid_serve_topk_batch)
-    from tantalus_spark.streaming.maintenance import (
-        export_feats_snapshot, feats_refresh_batches,
-        load_feats_index, load_feats_snapshot)
-
-    docs = (read_parquet(spark, "/root/testdata/sf0.001/documents.parquet")
-            .select("doc_id", "text"))
-    ix = str(tmp_path / "feats")
-    cb = feats_refresh_batches(ix, dim=64, op_col="op",
-                               max_segments=2)
-    add = lambda df: df.withColumn("op", F.lit("add"))  # noqa: E731
-    dels = spark.createDataFrame(
-        [(7, None, "delete"), (50, None, "delete")],
-        "doc_id long, text string, op string")
-    cb(add(docs.filter("doc_id < 150")), 0)
-    cb(add(docs.filter("doc_id >= 150 and doc_id < 300"))
-       .unionByName(dels), 1)
-    cb(add(docs.filter("doc_id >= 300 and doc_id < 450")), 2)  # fold
-
-    snap = str(tmp_path / "snap")
-    stats = export_feats_snapshot(spark, ix, snap)
-    assert stats["source_batch_id"] == 2 and not stats["empty"]
-    norm = lambda df: sorted(map(tuple, df.select(  # noqa: E731
-        "doc_id", "bucket", "feat", "norm").collect()))
-    live = load_feats_index(spark, ix)
-    promoted = load_feats_snapshot(spark, snap)
-    assert norm(promoted) == norm(live)
-    idx, (n_docs, avgdl) = build_term_index(
-        docs.filter("doc_id < 450 and doc_id not in (7, 50)"),
-        with_stats=True)
-    qs = [(1, ["customer", "hash"]), (2, ["merge"])]
-    served = [tuple(r) for r in hybrid_serve_topk_batch(
-        idx, qs, promoted, k=5, depth=10, dim=64, n_docs=n_docs,
-        avgdl=avgdl).collect()]
-    want = [tuple(r) for r in hybrid_serve_topk_batch(
-        idx, qs, live, k=5, depth=10, dim=64, n_docs=n_docs,
-        avgdl=avgdl).collect()]
-    assert served == want
-
-    with pytest.raises(ValueError, match="not an empty directory"):
-        export_feats_snapshot(spark, ix, snap)
-    os.remove(os.path.join(snap, "snapshot.json"))
-    with pytest.raises(ValueError, match="snapshot.json"):
-        load_feats_snapshot(spark, snap)
-
-    # duplicate-(id,bucket) audit gate: a double-add breaks the
-    # disjoint-ids contract -> promotion refused
-    cb(add(docs.filter("doc_id >= 100 and doc_id < 120")), 3)
-    with pytest.raises(RuntimeError, match="disjoint-ids"):
-        export_feats_snapshot(spark, ix, str(tmp_path / "snap_dup"))
-
-
 def test_promote_pinned_version_after_later_folds(spark, tmp_path):
     """r11 (VERDICT #6): the q156 pin composed with the q159 export —
     commit FOUR batches (keep_versions=5 retains the whole window)
@@ -3156,223 +3004,10 @@ def test_vacuum_reclaims_torn_commit_debris(spark, tmp_path):
                       load_term_index(spark, ix)[0].collect())) == before
 
 
-def test_export_release_consistent_idempotent_and_torn(spark, tmp_path):
-    """r11 capstone: export_release cuts ONE consistent, audited,
-    immutable serving release across independently-maintained stores —
-    pinned at common_batch_id (the lagging maintainer decides), each
-    family exported with its own audit gate, release.json committed
-    before the pointer swap. Covers: the consistency pin under
-    maintainer lag, serve parity with the live as-of views, idempotent
-    re-promotion, pointer monotonicity, torn-release sweep-and-retry,
-    and as_of release loading after a newer release lands."""
-    import json
-    import os
-
-    import pytest
-    from pyspark.sql import functions as F
-
-    from tantalus_spark.catalog.loader import read_parquet
-    from tantalus_spark.datapipe.textstats import (
-        build_term_index, hybrid_serve_topk_batch)
-    from tantalus_spark.streaming.maintenance import (
-        export_release, feats_refresh_batches, index_refresh_batches,
-        load_feats_index, load_release, load_term_index)
-
-    docs = (read_parquet(spark, "/root/testdata/sf0.001/documents.parquet")
-            .select("doc_id", "text"))
-    root = str(tmp_path)
-    cb_ix = index_refresh_batches(root + "/ix", op_col="op",
-                                  keep_versions=4)
-    cb_ft = feats_refresh_batches(root + "/feats", dim=64, op_col="op",
-                                  keep_versions=4)
-    add = lambda df: df.withColumn("op", F.lit("add"))  # noqa: E731
-    b0 = add(docs.filter("doc_id < 200"))
-    b1 = add(docs.filter("doc_id >= 200 and doc_id < 400"))
-    b2 = add(docs.filter("doc_id >= 400 and doc_id < 450"))
-    cb_ix(b0, 0); cb_ft(b0, 0)  # noqa: E702
-    cb_ix(b1, 1); cb_ft(b1, 1)  # noqa: E702
-    cb_ix(b2, 2)  # term store runs a batch AHEAD (maintainer lag)
-
-    stores = {"postings": ("term", root + "/ix"),
-              "dense": ("feats", root + "/feats")}
-    rel_root = root + "/releases"
-    rel = export_release(spark, stores, rel_root)
-    assert rel["batch_id"] == 1  # the lagging maintainer pins it
-    assert open(os.path.join(rel_root, "CURRENT")).read() == "v00000001"
-
-    loaded = load_release(spark, rel_root)
-    postings, (n, avgdl) = loaded["stores"]["postings"]
-    feats = loaded["stores"]["dense"]
-    qs = [(1, ["customer", "hash"]), (2, ["merge"])]
-    got = [tuple(r) for r in hybrid_serve_topk_batch(
-        postings, qs, feats, k=5, depth=10, dim=64, n_docs=n,
-        avgdl=avgdl).collect()]
-    lp, (ln, lavg) = load_term_index(spark, root + "/ix", as_of=1)
-    lf = load_feats_index(spark, root + "/feats", as_of=1)
-    want = [tuple(r) for r in hybrid_serve_topk_batch(
-        lp, qs, lf, k=5, depth=10, dim=64, n_docs=ln,
-        avgdl=lavg).collect()]
-    assert got == want and got
-
-    # re-promoting an already-released batch is IDEMPOTENT: the
-    # committed release comes back, nothing is re-exported
-    again = export_release(spark, stores, rel_root)
-    assert again["batch_id"] == 1
-
-    # feats catches up -> next release pins batch 2
-    cb_ft(b2, 2)
-    rel2 = export_release(spark, stores, rel_root)
-    assert rel2["batch_id"] == 2
-    assert open(os.path.join(rel_root, "CURRENT")).read() == "v00000002"
-    # as_of floor still loads the retained v1 release
-    old = load_release(spark, rel_root, as_of=1)
-    assert old["batch_id"] == 1
-
-    # torn release: strip v2's release.json + regress the pointer ->
-    # the next export sweeps the debris and recommits cleanly
-    os.remove(os.path.join(rel_root, "v00000002", "release.json"))
-    with open(os.path.join(rel_root, "CURRENT"), "w") as f:
-        f.write("v00000001")
-    rel2b = export_release(spark, stores, rel_root)
-    assert rel2b["batch_id"] == 2
-    assert json.load(open(os.path.join(
-        rel_root, "v00000002", "release.json")))["batch_id"] == 2
-    assert open(os.path.join(rel_root, "CURRENT")).read() == "v00000002"
-
-    # pointer monotonicity: with the committed release REMOVED (not a
-    # torn export — a deleted one) and CURRENT already at its batch,
-    # re-exporting must refuse rather than regress the pointer
-    import shutil as _shutil
-    _shutil.rmtree(os.path.join(rel_root, "v00000002"))
-    with pytest.raises(RuntimeError, match="common batch"):
-        export_release(spark, stores, rel_root)
-
-
-def test_export_release_all_four_families(spark, tmp_path):
-    """export_release dispatches every serving family: term postings,
-    dense feats, IVFPQ codes, and LSH bands maintained to the same
-    batch, released in one call, loaded back with each family's
-    loader shape (term -> (postings, stats), rowwise -> DataFrame),
-    each bit-identical to its live view."""
-    from pyspark.sql import functions as F
-
-    from tantalus_spark.catalog.loader import read_parquet
-    from tantalus_spark.streaming.maintenance import (
-        ann_refresh_batches, band_refresh_batches, export_release,
-        feats_refresh_batches, index_refresh_batches, load_ann_index,
-        load_band_index, load_feats_index, load_release,
-        load_term_index)
-
-    docs = (read_parquet(spark, "/root/testdata/sf0.001/documents.parquet")
-            .select("doc_id", "text"))
-    emb = read_parquet(spark, "/root/testdata/sf0.001/embeddings.parquet")
-    iv = (emb.filter("embedding is not null")
-             .select("vec_id",
-                     F.transform("embedding",
-                                 lambda x: F.floor(x.cast("double")
-                                                   * F.lit(32.0))
-                                 .cast("double")).alias("embedding")))
-    head = iv.filter("vec_id <= 16").orderBy("vec_id").collect()
-    by_id = {r["vec_id"]: [float(x) for x in r["embedding"]]
-             for r in head}
-    cents = [by_id[i] for i in range(8)]
-    books = [[by_id[c + 1][j * 8:(j + 1) * 8] for c in range(16)]
-             for j in range(8)]
-
-    root = str(tmp_path)
-    cbs = {
-        "postings": index_refresh_batches(root + "/ix"),
-        "dense": feats_refresh_batches(root + "/feats", dim=64),
-        "codes": ann_refresh_batches(root + "/ann", cents, books),
-        "bands": band_refresh_batches(root + "/bands"),
-    }
-    doc_batches = [docs.filter("doc_id < 200"),
-                   docs.filter("doc_id >= 200 and doc_id < 400")]
-    vec_batches = [iv.filter("vec_id < 150"),
-                   iv.filter("vec_id >= 150 and vec_id < 300")]
-    for i in range(2):
-        for name, cb in cbs.items():
-            cb(vec_batches[i] if name == "codes" else doc_batches[i], i)
-
-    stores = {"postings": ("term", root + "/ix"),
-              "dense": ("feats", root + "/feats"),
-              "codes": ("ann", root + "/ann"),
-              "bands": ("bands", root + "/bands")}
-    rel = export_release(spark, stores, root + "/releases")
-    assert rel["batch_id"] == 1
-    loaded = load_release(spark, root + "/releases")["stores"]
-
-    sp, (sn, savg) = loaded["postings"]
-    lp, (ln, lavg) = load_term_index(spark, root + "/ix")
-    assert (sn, savg) == (ln, lavg)
-    assert sorted(map(tuple, sp.collect())) == \
-        sorted(map(tuple, lp.collect()))
-    for name, live in (
-            ("dense", load_feats_index(spark, root + "/feats")),
-            ("codes", load_ann_index(spark, root + "/ann")),
-            ("bands", load_band_index(spark, root + "/bands"))):
-        got = sorted(tuple(x if not isinstance(x, list) else tuple(x)
-                           for x in r) for r in loaded[name].collect())
-        want = sorted(tuple(x if not isinstance(x, list) else tuple(x)
-                            for x in r)
-                      for r in live.select(*loaded[name].columns)
-                      .collect())
-        assert got == want, name
-
-
-def test_gc_releases_retires_old_keeps_window_and_torn_rules(
-        spark, tmp_path):
-    """gc_releases: keeps the newest keep_releases committed releases
-    (floor 2), reclaims older ones and torn debris at/below CURRENT,
-    leaves a torn directory AHEAD of CURRENT for the next export's
-    sweep-and-retry, and the kept releases still load."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from tantalus_spark.catalog.loader import read_parquet
-    from tantalus_spark.streaming.maintenance import (
-        export_release, gc_releases, index_refresh_batches,
-        load_release)
-
-    docs = (read_parquet(spark, "/root/testdata/sf0.001/documents.parquet")
-            .select("doc_id", "text"))
-    root = str(tmp_path)
-    cb = index_refresh_batches(root + "/ix", op_col="op",
-                               keep_versions=8)
-    add = lambda df: df.withColumn("op", F.lit("add"))  # noqa: E731
-    stores = {"postings": ("term", root + "/ix")}
-    rel_root = root + "/releases"
-    for i, lo in enumerate((0, 150, 300, 450)):
-        cb(add(docs.filter(f"doc_id >= {lo} and doc_id < {lo + 150}")),
-           i)
-        export_release(spark, stores, rel_root)
-    assert open(os.path.join(rel_root, "CURRENT")).read() == "v00000003"
-
-    # torn debris: below CURRENT (reclaim) and ahead of it (leave)
-    os.makedirs(os.path.join(rel_root, "v00000002", "half"),
-                exist_ok=True)
-    os.remove(os.path.join(rel_root, "v00000002", "release.json"))
-    os.makedirs(os.path.join(rel_root, "v00000099"))
-
-    removed = gc_releases(rel_root, keep_releases=2)
-    # the keep window counts COMMITTED releases: v2 is torn (never
-    # committed), so the newest two committed are {v1, v3} — readers
-    # may legitimately have pinned v1. v0 retires, the torn v2
-    # reclaims, v99 (ahead of CURRENT) is the next export's business.
-    assert sorted(removed) == ["v00000000", "v00000002"]
-    assert os.path.isdir(os.path.join(rel_root, "v00000099"))  # ahead
-    assert load_release(spark, rel_root)["batch_id"] == 3
-    assert load_release(spark, rel_root, as_of=1)["batch_id"] == 1
-    assert load_release(spark, rel_root, as_of=99)["batch_id"] == 3
-    assert gc_releases(rel_root, keep_releases=2) == []  # idempotent
-
-
 def test_release_and_store_gc_skip_foreign_dirs(spark, tmp_path):
     """r12 hardening: only ^v\\d+$ names are version directories. A
-    foreign directory an operator drops next to the store or release
-    root (version_backup/) must be SKIPPED by every sweep — gc_releases
-    used to ValueError on int('ersion_backup'), and store GC would
+    foreign directory an operator drops next to the store
+    (version_backup/) must be SKIPPED by every sweep — store GC would
     have rmtree'd it."""
     import os
 
@@ -3380,8 +3015,7 @@ def test_release_and_store_gc_skip_foreign_dirs(spark, tmp_path):
 
     from tantalus_spark.catalog.loader import read_parquet
     from tantalus_spark.streaming.maintenance import (
-        export_release, gc_releases, index_refresh_batches,
-        vacuum_index)
+        index_refresh_batches, vacuum_index)
 
     docs = (read_parquet(spark, "/root/testdata/sf0.001/documents.parquet")
             .select("doc_id", "text"))
@@ -3389,97 +3023,17 @@ def test_release_and_store_gc_skip_foreign_dirs(spark, tmp_path):
     cb = index_refresh_batches(root + "/ix", op_col="op",
                                keep_versions=2)
     add = lambda df: df.withColumn("op", F.lit("add"))  # noqa: E731
-    stores = {"postings": ("term", root + "/ix")}
-    rel_root = root + "/releases"
-    # foreign dirs planted BEFORE the first commit: the maintainer's
-    # per-callback GC and the release sweeps must all step around them
+    # a foreign dir planted BEFORE the first commit: the maintainer's
+    # per-callback GC must step around it
     os.makedirs(os.path.join(root, "ix", "version_backup", "keep"))
-    os.makedirs(rel_root)
-    os.makedirs(os.path.join(rel_root, "version_backup", "keep"))
     for i, lo in enumerate((0, 150, 300, 450)):
         cb(add(docs.filter(f"doc_id >= {lo} and doc_id < {lo + 150}")),
            i)
-        export_release(spark, stores, rel_root)
-    removed = gc_releases(rel_root, keep_releases=2)
-    assert sorted(removed) == ["v00000000", "v00000001"]
-    assert os.path.isdir(os.path.join(rel_root, "version_backup",
-                                      "keep"))
-    # store-side sweeps too (per-callback GC already ran 4x above and
-    # left it alone; the manual vacuum must as well)
+    # per-callback GC already ran 4x above and left it alone; the
+    # manual vacuum must as well
     vacuum_index(root + "/ix", keep_versions=2)
     assert os.path.isdir(os.path.join(root, "ix", "version_backup",
                                       "keep"))
-
-
-def test_export_release_refuses_mismatched_store_set(spark, tmp_path):
-    """r12 (ADVICE): re-releasing an already-released batch with a
-    DIFFERENT store set (store added, or family remapped) must raise,
-    not silently return the committed release missing that store —
-    load_release would serve a partial artifact set."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from tantalus_spark.catalog.loader import read_parquet
-    from tantalus_spark.streaming.maintenance import (
-        export_release, feats_refresh_batches, index_refresh_batches)
-
-    docs = (read_parquet(spark, "/root/testdata/sf0.001/documents.parquet")
-            .select("doc_id", "text").filter("doc_id < 200"))
-    root = str(tmp_path)
-    cb_ix = index_refresh_batches(root + "/ix", op_col="op")
-    cb_ft = feats_refresh_batches(root + "/feats", dim=64, op_col="op")
-    b0 = docs.withColumn("op", F.lit("add"))
-    cb_ix(b0, 0)
-    cb_ft(b0, 0)
-    rel_root = root + "/releases"
-    stores = {"postings": ("term", root + "/ix")}
-    rel = export_release(spark, stores, rel_root)
-    assert rel["stores"] == {"postings": "term"}
-    # same store set: idempotent return
-    assert export_release(spark, stores, rel_root)["batch_id"] == 0
-    # added store at the same batch: refuse (immutable release)
-    with pytest.raises(RuntimeError, match="already released"):
-        export_release(
-            spark,
-            {"postings": ("term", root + "/ix"),
-             "dense": ("feats", root + "/feats")},
-            rel_root)
-    # remapped family for an existing name: refuse too
-    with pytest.raises(RuntimeError, match="already released"):
-        export_release(spark, {"postings": ("feats", root + "/feats")},
-                       rel_root)
-
-
-def test_rowwise_snapshot_audit_refuses_null_keys(spark, tmp_path):
-    """r12 (ADVICE): count_distinct drops NULL keys, so duplicate rows
-    with a NULL id would evade the disjoint-ids promotion gate and
-    double-score at serve time. The audit now refuses NULL keys
-    outright (same single aggregate)."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from tantalus_spark.catalog.loader import read_parquet
-    from tantalus_spark.streaming.maintenance import (
-        band_refresh_batches, export_band_snapshot)
-
-    docs = (read_parquet(spark, "/root/testdata/sf0.001/documents.parquet")
-            .select("doc_id", "text").filter("doc_id < 100"))
-    root = str(tmp_path)
-    cb = band_refresh_batches(root + "/bands")
-    # two NULL-id rows with distinct texts: disjoint-ids held under
-    # count_distinct (2 rows, "1" distinct non-null key... actually 0)
-    # only because NULLs vanished from the distinct count
-    poisoned = docs.unionByName(
-        docs.filter("doc_id in (2, 3)")
-            .select(F.lit(None).cast("long").alias("doc_id"), "text"))
-    cb(poisoned, 0)
-    with pytest.raises(RuntimeError, match="NULL"):
-        export_band_snapshot(spark, root + "/bands",
-                             root + "/snap")
-    # verify=False still exports (operator's explicit bypass)
-    stats = export_band_snapshot(spark, root + "/bands",
-                                 root + "/snap", verify=False)
-    assert stats["empty"] is False
 
 
 def test_snapshot_export_cleanup_covers_stats_commit(spark, tmp_path,
@@ -3500,9 +3054,7 @@ def test_snapshot_export_cleanup_covers_stats_commit(spark, tmp_path,
             .select("doc_id", "text").filter("doc_id < 100"))
     root = str(tmp_path)
     cb_ix = M.index_refresh_batches(root + "/ix")
-    cb_bd = M.band_refresh_batches(root + "/bands")
     cb_ix(docs, 0)
-    cb_bd(docs, 0)
 
     real_replace = os.replace
 
@@ -3514,116 +3066,11 @@ def test_snapshot_export_cleanup_covers_stats_commit(spark, tmp_path,
     monkeypatch.setattr(M.os, "replace", boom)
     with pytest.raises(OSError):
         M.export_term_snapshot(spark, root + "/ix", root + "/snap_t")
-    with pytest.raises(OSError):
-        M.export_band_snapshot(spark, root + "/bands", root + "/snap_b")
     monkeypatch.setattr(M.os, "replace", real_replace)
     # dest was cleaned: the immutability guard accepts a retry
     assert not os.path.exists(root + "/snap_t")
-    assert not os.path.exists(root + "/snap_b")
     assert M.export_term_snapshot(
         spark, root + "/ix", root + "/snap_t")["n_docs"] > 0
-    assert M.export_band_snapshot(
-        spark, root + "/bands", root + "/snap_b")["empty"] is False
-
-
-def test_follow_releases_reloads_only_on_pointer_swap(spark, tmp_path):
-    """r12: the serving fleet's read side of export_release. A
-    follow_releases callback re-resolves CURRENT per micro-batch,
-    reloads ONLY when the pointer moved (zero per-batch load cost on
-    a stable pointer), serves each batch bit-identically to
-    load_release + the same batch serve, and picks up a release
-    swapped mid-stream on the next batch. Driven both directly (the
-    maintainer-test pattern, deterministic mid-stream swap) and
-    through a real foreachBatch stream."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from tantalus_spark.catalog.loader import read_parquet
-    from tantalus_spark.datapipe.textstats import bm25_rank_indexed
-    from tantalus_spark.streaming.maintenance import (
-        export_release, follow_releases, index_refresh_batches,
-        load_release)
-
-    docs = (read_parquet(spark, "/root/testdata/sf0.001/documents.parquet")
-            .select("doc_id", "text"))
-    root = str(tmp_path)
-    cb_ix = index_refresh_batches(root + "/ix", op_col="op",
-                                  keep_versions=4)
-    add = lambda df: df.withColumn("op", F.lit("add"))  # noqa: E731
-    stores = {"postings": ("term", root + "/ix")}
-    rel_root = root + "/releases"
-    cb_ix(add(docs.filter("doc_id < 250")), 0)
-    export_release(spark, stores, rel_root)
-
-    terms = ["customer", "hash", "merge"]
-    served = []
-
-    def serve(release, batch_df, batch_id):
-        postings, (n, avgdl) = release["stores"]["postings"]
-        out = bm25_rank_indexed(postings, terms, k=5, n_docs=n,
-                                avgdl=avgdl)
-        served.append((batch_id, release["batch_id"],
-                       [tuple(r) for r in out.collect()]))
-
-    fol = follow_releases(rel_root, serve)
-    qb = spark.createDataFrame([(t,) for t in terms], "term string")
-    fol(qb, 0)
-    fol(qb, 1)  # pointer unchanged: NO reload
-    assert fol.state["reloads"] == 1 and fol.state["batch_id"] == 0
-
-    # release swapped mid-stream: the next batch serves the new one
-    cb_ix(add(docs.filter("doc_id >= 250 and doc_id < 400")), 1)
-    export_release(spark, stores, rel_root)
-    fol(qb, 2)
-    assert fol.state["reloads"] == 2 and fol.state["batch_id"] == 1
-
-    # every served batch is bit-identical to load_release + the same
-    # batch serve at that release
-    for _bid, rel_bid, rows in served:
-        rel = load_release(spark, rel_root, as_of=rel_bid)
-        postings, (n, avgdl) = rel["stores"]["postings"]
-        want = [tuple(r) for r in bm25_rank_indexed(
-            postings, terms, k=5, n_docs=n, avgdl=avgdl).collect()]
-        assert rows == want
-    assert served[0][1] == served[1][1] == 0 and served[2][1] == 1
-    # the swap actually changed what serves (bigger corpus)
-    assert served[0][2] != served[2][2]
-
-    # a follower started before any release refuses loudly
-    with pytest.raises(ValueError, match="no committed release"):
-        follow_releases(root + "/nowhere", serve)(qb, 0)
-
-    # real foreachBatch wiring: one file per trigger, same follower
-    # object across two stream runs with a release swap in between
-    src = root + "/qsrc"
-    ckpt = root + "/ckpt"
-    qb.coalesce(1).write.mode("append").parquet(src)
-    served.clear()
-    fol2 = follow_releases(rel_root, serve)
-
-    def _run():
-        stream = (spark.readStream.format("parquet")
-                  .schema("term string")
-                  .option("maxFilesPerTrigger", 1).load(src))
-        q = (stream.writeStream.foreachBatch(fol2)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-        assert not q.isActive
-
-    _run()
-    assert fol2.state["reloads"] == 1 and fol2.state["batch_id"] == 1
-    cb_ix(add(docs.filter("doc_id >= 400")), 2)
-    export_release(spark, stores, rel_root)
-    qb.coalesce(1).write.mode("append").parquet(src)
-    _run()  # restart from the checkpoint: only the new file serves
-    assert fol2.state["reloads"] == 2 and fol2.state["batch_id"] == 2
-    assert [s[1] for s in served] == [1, 2]
-    rel2 = load_release(spark, rel_root, as_of=2)
-    postings, (n, avgdl) = rel2["stores"]["postings"]
-    want2 = [tuple(r) for r in bm25_rank_indexed(
-        postings, terms, k=5, n_docs=n, avgdl=avgdl).collect()]
-    assert served[-1][2] == want2
 
 
 def test_sorted_folds_prune_row_groups(spark, tmp_path):
@@ -3633,11 +3080,10 @@ def test_sorted_folds_prune_row_groups(spark, tmp_path):
     effect, so this pins parquet.block.size tiny to get the
     many-row-groups-per-file layout a corpus-scale store has
     naturally, then checks the folded segment's term min/max stats:
-    the sorted store's probe-overlapping fraction must be strictly
-    smaller (measured at sf1/sf3: 57%/27% of row groups decoded vs
-    100% unsorted, serve -14/-16%, fold cost in noise — SCALING.md
-    'sorted folds'). Results are bit-identical either way; sort_folds
-    exists for write-heavy/serve-light stores."""
+    most row groups must miss the probe terms (measured at sf1/sf3:
+    57%/27% of row groups decoded vs 100% unsorted, serve -14/-16%,
+    fold cost in noise — SCALING.md 'sorted folds'). The layout
+    changes no value: the store's BM25 equals a full rebuild's."""
     import glob
     import os
 
@@ -3645,7 +3091,8 @@ def test_sorted_folds_prune_row_groups(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from tantalus_spark.catalog.loader import read_parquet
-    from tantalus_spark.datapipe.textstats import bm25_rank_indexed
+    from tantalus_spark.datapipe.textstats import (
+        bm25_rank_indexed, build_term_index)
     from tantalus_spark.streaming.maintenance import (
         index_refresh_batches, load_term_index)
 
@@ -3658,38 +3105,34 @@ def test_sorted_folds_prune_row_groups(spark, tmp_path):
     hc.setInt("parquet.block.size", 4 << 10)
     hc.setInt("parquet.page.size", 1 << 10)
     try:
-        frac, served = {}, {}
-        for label, flag in (("sorted", True), ("unsorted", False)):
-            ix = str(tmp_path / label)
-            cb = index_refresh_batches(ix, op_col="op",
-                                       max_segments=2,
-                                       sort_folds=flag)
-            add = lambda df: df.withColumn("op", F.lit("add"))  # noqa: E731,E501
-            cb(add(docs.filter("doc_id % 3 = 0")), 0)
-            cb(add(docs.filter("doc_id % 3 = 1")), 1)
-            cb(add(docs.filter("doc_id % 3 = 2")), 2)  # fold fires
-            hit = total = 0
-            for f in glob.glob(os.path.join(ix, "seg-*c", "postings",
-                                            "*.parquet")):
-                md = pq.ParquetFile(f).metadata
-                names = md.schema.to_arrow_schema().names
-                ci = names.index("term")
-                for rg in range(md.num_row_groups):
-                    st = md.row_group(rg).column(ci).statistics
-                    total += 1
-                    if (st is None or not st.has_min_max
-                            or any(st.min <= t <= st.max
-                                   for t in terms)):
-                        hit += 1
-            assert total > 10, (label, total)  # layout engaged
-            frac[label] = hit / total
-            postings, (n, avgdl) = load_term_index(spark, ix)
-            served[label] = sorted(map(tuple, bm25_rank_indexed(
-                postings, terms, k=15, n_docs=n,
-                avgdl=avgdl).collect()))
-        assert served["sorted"] == served["unsorted"]  # layout only
-        assert frac["sorted"] < frac["unsorted"], frac
-        assert frac["sorted"] < 0.8, frac  # real pruning, not a tie
+        ix = str(tmp_path / "ix")
+        cb = index_refresh_batches(ix, op_col="op", max_segments=2)
+        add = lambda df: df.withColumn("op", F.lit("add"))  # noqa: E731
+        cb(add(docs.filter("doc_id % 3 = 0")), 0)
+        cb(add(docs.filter("doc_id % 3 = 1")), 1)
+        cb(add(docs.filter("doc_id % 3 = 2")), 2)  # fold fires
+        hit = total = 0
+        for f in glob.glob(os.path.join(ix, "seg-*c", "postings",
+                                        "*.parquet")):
+            md = pq.ParquetFile(f).metadata
+            names = md.schema.to_arrow_schema().names
+            ci = names.index("term")
+            for rg in range(md.num_row_groups):
+                st = md.row_group(rg).column(ci).statistics
+                total += 1
+                if (st is None or not st.has_min_max
+                        or any(st.min <= t <= st.max for t in terms)):
+                    hit += 1
+        assert total > 10, total  # layout engaged
+        frac = hit / total
+        assert frac < 0.8, frac  # real pruning, not a tie
+        postings, (n, avgdl) = load_term_index(spark, ix)
+        served = sorted(map(tuple, bm25_rank_indexed(
+            postings, terms, k=15, n_docs=n, avgdl=avgdl).collect()))
+        rebuilt, (rn, ravgdl) = build_term_index(docs, with_stats=True)
+        assert (n, avgdl) == (rn, ravgdl)
+        assert served == sorted(map(tuple, bm25_rank_indexed(
+            rebuilt, terms, k=15, n_docs=rn, avgdl=ravgdl).collect()))
     finally:
         for key, old in (("parquet.block.size", old_block),
                          ("parquet.page.size", old_page)):
